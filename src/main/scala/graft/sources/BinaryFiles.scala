@@ -21,18 +21,9 @@ import org.apache.spark.sql.functions._
 object BinaryFiles {
 
   // per-JVM stable staging (Roundtrip's pattern): bench reps overwrite
-  // instead of accumulating; shutdown hook clears the tmpdir
-  private[graft] lazy val stageDir: java.io.File = {
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_binfiles_${java.util.UUID.randomUUID().toString.take(8)}")
-    sys.addShutdownHook {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(dir)
-    }
-    dir
-  }
+  // instead of accumulating; cleared from the tmpdir at JVM exit
+  private[graft] lazy val stageDir: java.io.File =
+    Scratch.tmpDir(s"graft_binfiles_${java.util.UUID.randomUUID().toString.take(8)}")
 
   /** One staging subtree per (corpus, cap): different-cap calls in one
     * JVM (the smoke suites run the default; SourcesSpec runs a small

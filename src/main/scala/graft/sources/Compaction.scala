@@ -51,19 +51,11 @@ object Compaction {
   }
 
   // Stable per-JVM temp base (Roundtrip's pattern): overwrite mode
-  // truncates across Bench reps instead of accumulating copies; the
-  // shutdown hook clears the (often tmpfs) tmpdir.
-  private lazy val tempBase: String = {
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_compact_${java.util.UUID.randomUUID().toString.take(8)}")
-    sys.addShutdownHook {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(dir)
-    }
-    dir.getAbsolutePath
-  }
+  // truncates across Bench reps instead of accumulating copies; cleared
+  // from the (often tmpfs) tmpdir at JVM exit.
+  private lazy val tempBase: String =
+    Scratch.tmpDir(s"graft_compact_${java.util.UUID.randomUUID().toString.take(8)}")
+      .getAbsolutePath
 
   /** The oracle query: fragment `events` into many tiny files (the
     * streaming-sink pathology, simulated), compact to a byte target,

@@ -20,22 +20,11 @@ object ParquetSink {
   def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
 
   // JVM-unique so concurrent processes can't clobber each other's files
-  // mid-read; the (single, lazy) shutdown hook keeps repeated
-  // Verify/Bench/test JVMs from accumulating full event-table copies in
-  // the (often tmpfs) tmpdir.
+  // mid-read; deleted at JVM exit so repeated Verify/Bench/test JVMs don't
+  // accumulate full event-table copies in the (often tmpfs) tmpdir.
   private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
-  private def hookedDir(name: String): String = {
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), name)
-    sys.addShutdownHook {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(dir)
-    }
-    dir.getAbsolutePath
-  }
-  private lazy val partDir: String = hookedDir(s"graft_part_$jvmTag")
-  private lazy val dimDir: String = hookedDir(s"graft_partdim_$jvmTag")
+  private lazy val partDir: String = Scratch.tmpDir(s"graft_part_$jvmTag").getAbsolutePath
+  private lazy val dimDir: String = Scratch.tmpDir(s"graft_partdim_$jvmTag").getAbsolutePath
 
   /** Engine query for the partitioned layout: write events partitioned
     * by event_type, read back filtered to ONE partition value, and

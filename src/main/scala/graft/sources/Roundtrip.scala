@@ -21,23 +21,13 @@ object Roundtrip {
   /** One directory per (JVM, format): stable within a JVM so overwrite
     * mode truncates instead of accumulating copies across repeated runs,
     * but unique across JVMs so concurrent Bench/Verify processes can't
-    * clobber each other's roundtrip files mid-read. A shutdown hook
-    * deletes the directory so repeated JVMs don't accumulate table
-    * copies in the (often tmpfs) tmpdir.
+    * clobber each other's roundtrip files mid-read. The directory is
+    * deleted at JVM exit so repeated JVMs don't accumulate table copies
+    * in the (often tmpfs) tmpdir.
     */
   private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
-  private val dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def tempDir(tag: String): String =
-    dirs.computeIfAbsent(tag, { _ => // one cleanup hook per (JVM, format)
-      val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_rt_${jvmTag}_$tag")
-      sys.addShutdownHook {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-        }
-        del(dir)
-      }
-      dir.getAbsolutePath
-    })
+    Scratch.tmpDir(s"graft_rt_${jvmTag}_$tag").getAbsolutePath
 
   /** lineitem → ORC → read → pricing-style aggregate. */
   def orcLineitem(spark: SparkSession, dir: String): DataFrame = {

@@ -29,20 +29,11 @@ object VersionedTable {
   private val builtRoots = scala.collection.mutable.Map.empty[String, String]
 
   /** Fresh per-JVM table root for cache key `key` (usually the source
-    * dir, optionally suffixed for independent fixtures); registered for
-    * shutdown cleanup.
+    * dir, optionally suffixed for independent fixtures); deleted at JVM
+    * exit.
     */
-  private[graft] def freshRoot(key: String): String = {
-    val tag = s"${jvmTag}_${Integer.toHexString(key.hashCode)}"
-    val dirF = new java.io.File(sys.props("java.io.tmpdir"), s"graft_vt_$tag")
-    sys.addShutdownHook {
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(dirF)
-    }
-    dirF.getAbsolutePath
-  }
+  private[graft] def freshRoot(key: String): String =
+    Scratch.tmpDir(s"graft_vt_${jvmTag}_${Integer.toHexString(key.hashCode)}").getAbsolutePath
 
   /** One-winner commit of a version that may be racing other writers:
     * CREATE_NEW, conflict = ConcurrentModificationException (the same

@@ -1,13 +1,14 @@
 package graft.streaming
 
-import java.util.UUID
+import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Structured Streaming surface (SURVEY §2B/§2C): tumbling / sliding /
   * session windows, watermarked late-data handling, streaming dedup,
@@ -21,32 +22,48 @@ import graft.sources.Tables
   * feeds the parquet through the streaming engine (real state store, real
   * window semantics) and stops when caught up. In production the same
   * queries run unchanged off kafka/files with a processing-time trigger.
+  *
+  * Every replay takes the same path: [[EventsSource]] reads the events
+  * files (schema inferred once per replay), [[withSentinels]] stages the
+  * far-future rows that watermark-driven replays need, and [[replay]]
+  * runs the query to completion whatever its sink.
   */
 object Streaming {
 
-  private def rawSchema(spark: SparkSession, dir: String): StructType =
-    Tables.raw(spark, dir, "events").schema
-
-  /** File-stream replay of the events table; ts arrives as stored (long
-    * nanos or native timestamp, see Tables) and is normalized to
-    * TIMESTAMP_NTZ before windowing.
+  /** The events files a replay streams: `path` holds parquet rows in the
+    * stored `schema` (ts as long nanos or native timestamp, see Tables).
     *
-    * The source path is `$dir/events.parquet` itself (the file source
-    * accepts globs): testdata ships the table as a single FILE, while
-    * Spark-written replicas (ScaleBench) are a DIRECTORY of part files —
-    * a `pathGlobFilter=events.parquet` over the parent matched only the
+    * The file source accepts a FILE or a DIRECTORY path: testdata ships
+    * the table as a single file, while Spark-written replicas (ScaleBench)
+    * and staged copies are directories of part files — a
+    * `pathGlobFilter=events.parquet` over the parent matched only the
     * file layout and silently replayed an EMPTY stream for directory
     * layouts (caught when the 10× streaming scale numbers came back
     * faster than 1×); `recursiveFileLookup` + a data-file filter covers
     * both.
     */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(rawSchema(spark, dir))
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(s"$dir/events.parquet")
-      .withColumn("ts", expr(Tables.tsNtzSql(rawSchema(spark, dir))))
+  private final case class EventsSource(session: SparkSession, path: String, schema: StructType) {
+
+    /** One file-stream source over the files, rows as stored. Each call
+      * opens a separate source (each side of a stream-stream join reads
+      * its own).
+      */
+    def stored(maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+      val reader = session.readStream
+        .schema(schema)
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet")
+      maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toLong): Unit)
+      reader.parquet(path)
+    }
+
+    /** [[stored]] with ts normalized to TIMESTAMP_NTZ before windowing. */
+    def stream: DataFrame = stored().withColumn("ts", expr(Tables.tsNtzSql(schema)))
+  }
+
+  /** `$dir/events.parquet` as a replay source of `session`. */
+  private def events(session: SparkSession, dir: String): EventsSource =
+    EventsSource(session, s"$dir/events.parquet", Tables.raw(session, dir, "events").schema)
 
   /** State-store partition count for the bounded replays. A streaming
     * query pays per-partition state-store setup every micro-batch; 8 is
@@ -68,24 +85,30 @@ object Streaming {
     *   advance is what flushes closed windows); Complete/Update replays
     *   and inner stream-stream joins emit everything in the data batch,
     *   so skipping it saves one state-store round per query.
+    * @param rocksDb use the RocksDB state store provider, which
+    *   `transformWithState` requires.
     */
-  private def replaySession(spark: SparkSession, noDataBatches: Boolean = false): SparkSession = {
+  private def replaySession(spark: SparkSession, noDataBatches: Boolean = false,
+      rocksDb: Boolean = false): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", ReplayStatePartitions)
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches.toString)
+    if (rocksDb)
+      s.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s
   }
 
-  /** Replay checkpoints are throwaway: put them on tmpfs when available
-    * so per-batch state-store snapshots don't pay ext4 fsync latency.
-    * Production streams MUST keep checkpoints on durable shared storage —
-    * this shortcut is only valid because a bounded replay is rerunnable
-    * from scratch.
+  /** Replay scratch (checkpoints, staged inputs, file-sink outputs) is
+    * throwaway: put it on tmpfs when available so per-batch state-store
+    * snapshots don't pay ext4 fsync latency. Production streams MUST keep
+    * checkpoints on durable shared storage — this shortcut is only valid
+    * because a bounded replay is rerunnable from scratch.
     */
-  private def checkpointRoot: java.io.File = {
-    val shm = new java.io.File("/dev/shm")
-    val root = if (shm.isDirectory && shm.canWrite) new java.io.File(shm, "graft_ckpt")
-               else new java.io.File(sys.props("java.io.tmpdir"), "graft_ckpt")
+  private[graft] def checkpointRoot: File = {
+    val shm = new File("/dev/shm")
+    val root = if (shm.isDirectory && shm.canWrite) new File(shm, "graft_ckpt")
+               else new File(sys.props("java.io.tmpdir"), "graft_ckpt")
     root.mkdirs()
     root
   }
@@ -105,17 +128,13 @@ object Streaming {
     */
   @volatile private[graft] var lastReplayPlan: String = ""
 
-  /** Run a bounded streaming query to completion into a memory sink and
-    * return the final table.
+  /** Run one bounded replay to completion: start `sink` (any sink —
+    * memory, file, `foreachBatch`, noop) with its checkpoint at `ckpt`
+    * and an AvailableNow trigger, wait until the source is drained, and
+    * record [[lastReplayBatchCount]] and [[lastReplayPlan]].
     */
-  private def runToTable(df: DataFrame, mode: OutputMode): DataFrame = {
-    val spark = df.sparkSession
-    val name = "graft_stream_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = new java.io.File(checkpointRoot, name)
-    val q = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
+  private def replay(sink: DataStreamWriter[Row], ckpt: File): Unit = {
+    val q = sink
       .option("checkpointLocation", ckpt.getAbsolutePath)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -126,16 +145,84 @@ object Streaming {
         Option(w.streamingQuery.lastExecution).map(_.executedPlan.toString).getOrElse("")
       case _ => ""
     }
-    if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach(p => System.err.println(
-        s"[stream-debug] $name batch=${p.batchId} rows=${p.numInputRows} ms=${p.durationMs}"))
-    // bounded replay done — the checkpoint has no further value
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+  }
+
+  /** Run a bounded streaming query to completion into a memory sink and
+    * return the final table. The checkpoint dies with the replay: the
+    * returned table lives in memory.
+    */
+  private def runToTable(df: DataFrame, mode: OutputMode): DataFrame = {
+    val name = Scratch.uniqueName("graft_stream")
+    val ckpt = new File(checkpointRoot, name)
+    Scratch.using(ckpt) {
+      replay(df.writeStream.outputMode(mode).format("memory").queryName(name), ckpt)
     }
-    rm(ckpt)
-    spark.table(name)
+    df.sparkSession.table(name)
+  }
+
+  /** Bounded-replay completeness for watermark-driven queries: stage the
+    * events table plus one far-future sentinel row per entry of `types`
+    * (event_id and user_id −1, ts = max ts + 10 days) and run `body` over
+    * a stream of the staged copy and the real max ts in micros.
+    *
+    * Outer rows, appended windows and timers only materialize when the
+    * WATERMARK proves no later row can change them; the sentinel pushes
+    * the final watermark past every real row, and the trailing no-data
+    * micro-batch (`noDataBatches = true`) flushes them. Callers scrub the
+    * sentinel from the RESULT table, never the stream: a pre-aggregation
+    * or pre-join filter on a non-event-time column is pushed BELOW the
+    * EventTimeWatermark node and the sentinel would never advance the
+    * clock. Production streams get the same completeness from ordinary
+    * event-time progress; the sentinel is the bounded-replay stand-in for
+    * "time keeps moving".
+    *
+    * The staged copy dies when `body` returns, so `body` must run its
+    * replay to completion (into a memory sink) before returning.
+    */
+  private def withSentinels[T](session: SparkSession, dir: String, types: String*)(
+      body: (EventsSource, Long) => T): T = {
+    val raw = Tables.raw(session, dir, "events")
+    // max event time as exact micro-epoch, whatever the storage layout
+    val maxTsMicros = raw.select(expr(Tables.tsMicrosSql(raw.schema)).as("us"))
+      .agg(max(col("us"))).head().getLong(0)
+    val sentinelMicros = maxTsMicros + 10L * 24 * 3600 * 1000000L
+    // sentinel ts in the STORAGE domain so unionByName keeps the schema
+    val sentinelTs =
+      if (Tables.tsIsLongNanos(raw.schema)) lit(sentinelMicros * 1000L)
+      else timestamp_micros(lit(sentinelMicros))
+    val sentinels = types.map { tpe =>
+      session.range(1).select(raw.schema.fields.toSeq.map { f =>
+        (f.name match {
+          case "event_id" | "user_id" => lit(-1L)
+          case "ts" => sentinelTs
+          case "event_type" => lit(tpe)
+          case _ => lit(null)
+        }).cast(f.dataType).as(f.name)
+      }: _*)
+    }.reduce(_.unionByName(_))
+    val staged = new File(checkpointRoot, Scratch.uniqueName("graft_stream_staged"))
+    Scratch.using(staged) {
+      raw.unionByName(sentinels).write.mode("overwrite").parquet(staged.getAbsolutePath)
+      body(EventsSource(session, staged.getAbsolutePath, raw.schema), maxTsMicros)
+    }
+  }
+
+  /** Purchases matched to same-user signups within the preceding hour,
+    * the band every stream-stream join here shares. Each side reads its
+    * own source and carries a 30-minute watermark.
+    */
+  private def purchaseSignupJoin(events: EventsSource, joinType: String): DataFrame = {
+    def side(tpe: String, prefix: String): DataFrame =
+      events.stream
+        .filter(col("event_type") === tpe) // a sentinel passes: it carries this type
+        .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
+          col("ts").cast("timestamp").as(s"${prefix}_ts"))
+        .withWatermark(s"${prefix}_ts", "30 minutes")
+    side("purchase", "p").join(side("signup", "s"),
+      col("p_user") === col("s_user") &&
+        col("s_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+        col("s_ts") <= col("p_ts"),
+      joinType)
   }
 
   /** Tumbling 5-minute windows: count + exact (decimal) value sum per
@@ -143,7 +230,7 @@ object Streaming {
     * end-of-replay — numerically identical to the batch computation.
     */
   def tumblingCounts(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventsStream(replaySession(spark), dir)
+    val agg = events(replaySession(spark), dir).stream
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(12,2)")).cast("double").as("total_value"))
@@ -162,8 +249,8 @@ object Streaming {
     * consumes those finalized rows keyed by `window_time` and closes its
     * 15-minute windows in turn — two state stores, one lineage.
     *
-    * Bounded-replay completeness uses the sentinel trick from the outer
-    * join: one staged far-future row (+10 days) drives the final
+    * Bounded-replay completeness uses the [[withSentinels]] trick: one
+    * staged far-future row (+10 days) drives the final
     * watermark past every real window so BOTH aggregation levels flush,
     * and the sentinel's own window — the only output row past the real
     * max ts — is scrubbed from the RESULT table (never the stream; a
@@ -173,55 +260,25 @@ object Streaming {
     * (5 divides 15 and both grids are epoch-aligned, so summed 5-minute
     * counts are exactly the 15-minute counts).
     */
-  def chainedWindowCounts(spark: SparkSession, dir: String): DataFrame = {
-    val session = replaySession(spark, noDataBatches = true)
-    val name = "graft_stream_chained_" + UUID.randomUUID().toString.replace("-", "")
-    val root = new java.io.File(checkpointRoot, name)
-    val staged = new java.io.File(root, "staged")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root)
+  def chainedWindowCounts(spark: SparkSession, dir: String): DataFrame =
+    withSentinels(replaySession(spark, noDataBatches = true), dir, "view") {
+      (events, maxTsMicros) =>
+        val fine = events.stream
+          // watermarks require TIMESTAMP (not NTZ); session TZ is UTC so the
+          // reinterpretation is identity
+          .withColumn("ts", col("ts").cast("timestamp"))
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+          .agg(count(lit(1)).as("n5"))
+        val coarse = fine
+          .groupBy(window(window_time(col("window")), "15 minutes"))
+          .agg(sum(col("n5")).as("n"))
+        runToTable(coarse, OutputMode.Append())
+          .filter(col("window.start") <= timestamp_micros(lit(maxTsMicros)))
+          // back to NTZ for the dump (UTC identity) so the oracle's naive
+          // time_bucket compares textually equal
+          .select(col("window.start").cast("timestamp_ntz").as("window_start"), col("n"))
     }
-    val raw = Tables.raw(spark, dir, "events")
-    val maxTsMicros = raw.select(expr(Tables.tsMicrosSql(raw.schema)).as("us"))
-      .agg(max(col("us"))).head().getLong(0)
-    val sentinelMicros = maxTsMicros + 10L * 24 * 3600 * 1000000L
-    val sentinelTsCol =
-      if (Tables.tsIsLongNanos(raw.schema)) lit(sentinelMicros * 1000L)
-      else timestamp_micros(lit(sentinelMicros))
-    val sentinel = raw.sparkSession.range(1).select(raw.schema.fields.map { f =>
-      (f.name match {
-        case "event_id" | "user_id" => lit(-1L)
-        case "ts" => sentinelTsCol
-        case "event_type" => lit("view")
-        case _ => lit(null)
-      }).cast(f.dataType).as(f.name)
-    }.toSeq: _*)
-    raw.unionByName(sentinel).write.mode("overwrite").parquet(staged.getAbsolutePath)
-
-    val src = session.readStream
-      .schema(raw.schema)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(staged.getAbsolutePath)
-      .withColumn("ts", expr(Tables.tsNtzSql(raw.schema)))
-      // watermarks require TIMESTAMP (not NTZ); session TZ is UTC so the
-      // reinterpretation is identity
-      .withColumn("ts", col("ts").cast("timestamp"))
-    val fine = src.withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n5"))
-    val coarse = fine
-      .groupBy(window(window_time(col("window")), "15 minutes"))
-      .agg(sum(col("n5")).as("n"))
-    runToTable(coarse, OutputMode.Append())
-      .filter(col("window.start") <= timestamp_micros(lit(maxTsMicros)))
-      // back to NTZ for the dump (UTC identity) so the oracle's naive
-      // time_bucket compares textually equal
-      .select(col("window.start").cast("timestamp_ntz").as("window_start"), col("n"))
-  }
 
   /** Stream–static enrichment join: the event stream joins the CUSTOMER
     * dimension read as a plain batch DataFrame — the standard streaming
@@ -238,7 +295,7 @@ object Streaming {
     val session = replaySession(spark)
     val dim = Tables(session, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val agg = eventsStream(session, dir)
+    val agg = events(session, dir).stream
       .join(dim, col("user_id") === col("c_custkey"), "left")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"),
@@ -251,7 +308,7 @@ object Streaming {
     * in 2 windows.
     */
   def slidingCounts(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventsStream(replaySession(spark), dir)
+    val agg = events(replaySession(spark), dir).stream
       .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
       .agg(count(lit(1)).as("n"))
     runToTable(agg, OutputMode.Complete())
@@ -266,7 +323,7 @@ object Streaming {
     * replay keeps the unbounded form so the oracle equality is exact.
     */
   def dedupedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventsStream(replaySession(spark), dir)
+    val agg = events(replaySession(spark), dir).stream
       .select(col("event_id"), col("event_type"))
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
@@ -283,7 +340,7 @@ object Streaming {
     * equals the batch COUNT(DISTINCT) — the oracle checks that exactly.
     */
   def dedupedCountsWithinWatermark(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventsStream(replaySession(spark), dir)
+    val agg = events(replaySession(spark), dir).stream
       // watermarks require TIMESTAMP (not NTZ); session TZ is UTC so the
       // reinterpretation is identity
       .select(col("event_id"), col("event_type"), col("ts").cast("timestamp").as("ts"))
@@ -303,12 +360,12 @@ object Streaming {
     */
   def watermarkedCounts(spark: SparkSession, dir: String): DataFrame = {
     // append emission is watermark-driven: keep the no-data batch that
-    // advances the final watermark and flushes closed windows. Measured
-    // (GRAFT_STREAM_DEBUG=1) the replay runs exactly TWO micro-batches —
-    // one data batch + the single flush batch — so the no-data machinery
-    // is already minimal; remaining cost is per-batch state-store setup,
+    // advances the final watermark and flushes closed windows. The replay
+    // runs at most TWO micro-batches — one data batch + the single flush
+    // batch (StreamingSpec pins the count) — so the no-data machinery is
+    // already minimal; remaining cost is per-batch state-store setup,
     // constant in data size.
-    val agg = eventsStream(replaySession(spark, noDataBatches = true), dir)
+    val agg = events(replaySession(spark, noDataBatches = true), dir).stream
       // watermarks require TIMESTAMP (not NTZ); session TZ is UTC so the
       // reinterpretation is identity
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -321,7 +378,7 @@ object Streaming {
 
   /** Session windows: per-user sessions closed by a 10-minute gap. */
   def sessionCounts(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventsStream(replaySession(spark), dir)
+    val agg = events(replaySession(spark), dir).stream
       .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n"))
     runToTable(agg, OutputMode.Complete())
@@ -342,7 +399,7 @@ object Streaming {
   def dynamicSessionCounts(spark: SparkSession, dir: String): DataFrame = {
     val gap = when(col("event_type") === "purchase", lit("30 minutes"))
       .otherwise(lit("10 minutes"))
-    val agg = eventsStream(replaySession(spark), dir)
+    val agg = events(replaySession(spark), dir).stream
       .groupBy(session_window(col("ts"), gap), col("user_id"))
       .agg(count(lit(1)).as("n"))
     runToTable(agg, OutputMode.Complete())
@@ -355,24 +412,32 @@ object Streaming {
     * buffers forever); on a bounded replay the inner join emits every
     * match, so the result equals the batch join — the oracle checks that.
     */
-  def purchasesWithRecentSignup(spark: SparkSession, dir: String): DataFrame = {
-    val replay = replaySession(spark) // one session: both join sides must share it
-    def side(tpe: String, prefix: String): DataFrame =
-      eventsStream(replay, dir)
-        .filter(col("event_type") === tpe)
-        .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
-          col("ts").cast("timestamp").as(s"${prefix}_ts"))
-        .withWatermark(s"${prefix}_ts", "30 minutes")
-    val purchases = side("purchase", "p")
-    val signups = side("signup", "s")
-    val joined = purchases.join(signups,
-      col("p_user") === col("s_user") &&
-        col("s_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("s_ts") <= col("p_ts"))
-    runToTable(joined, OutputMode.Append())
+  def purchasesWithRecentSignup(spark: SparkSession, dir: String): DataFrame =
+    runToTable(purchaseSignupJoin(events(replaySession(spark), dir), "inner"),
+        OutputMode.Append())
       .select(col("p_id").as("purchase_id"), col("s_id").as("signup_id"),
         col("p_user").as("user_id"))
-  }
+
+  /** LEFT OUTER stream-stream join — the unmatched-left completion of
+    * [[purchasesWithRecentSignup]]: purchases with no qualifying signup
+    * must still emit, null-extended. Outer rows can only materialize
+    * when the WATERMARK proves no future right row could match, so the
+    * replay runs over [[withSentinels]] with a sentinel pair (one per
+    * join side's type, so both watermark nodes see it): the trailing
+    * no-data micro-batch evicts all left state, emitting every outer
+    * row — making the append-mode result EXACTLY the batch left join,
+    * full oracle included.
+    */
+  def purchasesWithSignupOuter(spark: SparkSession, dir: String): DataFrame =
+    withSentinels(replaySession(spark, noDataBatches = true), dir, "purchase", "signup") {
+      (events, _) =>
+        runToTable(purchaseSignupJoin(events, "left_outer"), OutputMode.Append())
+          // the sentinel pair joins only itself; scrub it from the result
+          // table (NOT the stream — see withSentinels)
+          .filter(col("p_id") =!= -1L)
+          .select(col("p_id").as("purchase_id"), col("s_id").as("signup_id"),
+            col("p_user").as("user_id"))
+    }
 
   /** FULL OUTER stream-stream join — every purchase and every signup
     * surfaces, matched where the band condition holds, null-extended
@@ -383,60 +448,16 @@ object Streaming {
     * null-safely from the result. Completes the stream-stream join
     * family: inner / left outer / left semi / full outer.
     */
-  def purchasesWithSignupFullOuter(spark: SparkSession, dir: String): DataFrame = {
-    val session = replaySession(spark, noDataBatches = true)
-    val name = "graft_stream_fouter_" + UUID.randomUUID().toString.replace("-", "")
-    val root = new java.io.File(checkpointRoot, name)
-    val staged = new java.io.File(root, "staged")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root)
+  def purchasesWithSignupFullOuter(spark: SparkSession, dir: String): DataFrame =
+    withSentinels(replaySession(spark, noDataBatches = true), dir, "purchase", "signup") {
+      (events, _) =>
+        runToTable(purchaseSignupJoin(events, "full_outer"), OutputMode.Append())
+          // null-safe scrub: unmatched REAL rows carry NULL on the other
+          // side, only the sentinel self-pair carries -1
+          .filter(!(col("p_id") <=> lit(-1L)) && !(col("s_id") <=> lit(-1L)))
+          .select(col("p_id").as("purchase_id"), col("s_id").as("signup_id"),
+            coalesce(col("p_user"), col("s_user")).as("user_id"))
     }
-    val raw = Tables.raw(spark, dir, "events")
-    val maxTsMicros = raw.select(expr(Tables.tsMicrosSql(raw.schema)).as("us"))
-      .agg(max(col("us"))).head().getLong(0)
-    val sentinelMicros = maxTsMicros + 10L * 24 * 3600 * 1000000L
-    val sentinelTsCol =
-      if (Tables.tsIsLongNanos(raw.schema)) lit(sentinelMicros * 1000L)
-      else timestamp_micros(lit(sentinelMicros))
-    val sentinels = Seq("purchase", "signup").map { tpe =>
-      raw.sparkSession.range(1).select(raw.schema.fields.map { f =>
-        (f.name match {
-          case "event_id" | "user_id" => lit(-1L)
-          case "ts" => sentinelTsCol
-          case "event_type" => lit(tpe)
-          case _ => lit(null)
-        }).cast(f.dataType).as(f.name)
-      }.toSeq: _*)
-    }.reduce(_.unionByName(_))
-    raw.unionByName(sentinels).write.mode("overwrite").parquet(staged.getAbsolutePath)
-
-    def side(tpe: String, prefix: String): DataFrame =
-      session.readStream
-        .schema(raw.schema)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(staged.getAbsolutePath)
-        .withColumn("ts", expr(Tables.tsNtzSql(raw.schema)))
-        .filter(col("event_type") === tpe)
-        .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
-          col("ts").cast("timestamp").as(s"${prefix}_ts"))
-        .withWatermark(s"${prefix}_ts", "30 minutes")
-
-    val joined = side("purchase", "p").join(side("signup", "s"),
-      col("p_user") === col("s_user") &&
-        col("s_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("s_ts") <= col("p_ts"),
-      "full_outer")
-    runToTable(joined, OutputMode.Append())
-      // null-safe scrub: unmatched REAL rows carry NULL on the other
-      // side, only the sentinel self-pair carries -1
-      .filter(!(col("p_id") <=> lit(-1L)) && !(col("s_id") <=> lit(-1L)))
-      .select(col("p_id").as("purchase_id"), col("s_id").as("signup_id"),
-        coalesce(col("p_user"), col("s_user")).as("user_id"))
-  }
 
   /** LEFT SEMI stream-stream join — "purchases that HAD a recent
     * signup", each purchase emitted AT MOST ONCE however many signups
@@ -449,22 +470,10 @@ object Streaming {
     * ([[purchasesWithRecentSignup]]), left outer
     * ([[purchasesWithSignupOuter]]), left semi (this).
     */
-  def purchasesWithSignupSemi(spark: SparkSession, dir: String): DataFrame = {
-    val replay = replaySession(spark)
-    def side(tpe: String, prefix: String): DataFrame =
-      eventsStream(replay, dir)
-        .filter(col("event_type") === tpe)
-        .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
-          col("ts").cast("timestamp").as(s"${prefix}_ts"))
-        .withWatermark(s"${prefix}_ts", "30 minutes")
-    val joined = side("purchase", "p").join(side("signup", "s"),
-      col("p_user") === col("s_user") &&
-        col("s_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("s_ts") <= col("p_ts"),
-      "left_semi")
-    runToTable(joined, OutputMode.Append())
+  def purchasesWithSignupSemi(spark: SparkSession, dir: String): DataFrame =
+    runToTable(purchaseSignupJoin(events(replaySession(spark), dir), "left_semi"),
+        OutputMode.Append())
       .select(col("p_id").as("purchase_id"), col("p_user").as("user_id"))
-  }
 
   /** Custom keyed state via `mapGroupsWithState`: a per-user running
     * engagement accumulator (event count + exact cent-denominated value
@@ -473,7 +482,7 @@ object Streaming {
     */
   def statefulUserTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val src = eventsStream(replaySession(spark), dir)
+    val src = events(replaySession(spark), dir).stream
       .select(col("user_id"), round(col("value") * 100).cast("long").as("cents"))
       .as[(Long, Long)]
     val updated = src
@@ -518,17 +527,10 @@ object Streaming {
   def streamCusum(spark: SparkSession, dir: String, calHours: Int = 72,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val replay = replaySession(spark)
-    val schema = rawSchema(spark, dir)
-    val reader = replay.readStream
-      .schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n): Unit)
-    val src = reader
-      .parquet(s"$dir/events.parquet")
+    val ev = events(replaySession(spark), dir)
+    val src = ev.stored(maxFilesPerTrigger)
       .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(schema)}) div 3600000000").as("hr"))
+        expr(s"(${Tables.tsMicrosSql(ev.schema)}) div 3600000000").as("hr"))
       .as[(String, Long)]
     val out = src.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
@@ -590,10 +592,7 @@ object Streaming {
     */
   def twsUserTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val replay = replaySession(spark)
-    replay.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val src = eventsStream(replay, dir)
+    val src = events(replaySession(spark, rocksDb = true), dir).stream
       .select(col("user_id"), round(col("value") * 100).cast("long").as("cents"))
       .as[(Long, Long)]
     val updated = src
@@ -649,10 +648,7 @@ object Streaming {
     */
   def streamKllQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val replay = replaySession(spark)
-    replay.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val src = eventsStream(replay, dir)
+    val src = events(replaySession(spark, rocksDb = true), dir).stream
       .filter(col("value").isNotNull)
       .select(col("event_type"), col("value"))
       .as[(String, Double)]
@@ -765,19 +761,10 @@ object Streaming {
   def streamTopK(spark: SparkSession, dir: String, k: Int = 8,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val replay = replaySession(spark)
-    replay.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val schema = rawSchema(spark, dir)
-    val reader = replay.readStream
-      .schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n): Unit)
-    val src = reader
-      .parquet(s"$dir/events.parquet")
+    val ev = events(replaySession(spark, rocksDb = true), dir)
+    val src = ev.stored(maxFilesPerTrigger)
       .select(col("event_type"), col("user_id"),
-        expr(Tables.tsMicrosSql(schema)).as("us"), col("event_id"))
+        expr(Tables.tsMicrosSql(ev.schema)).as("us"), col("event_id"))
       .as[(String, Long, Long, Long)]
     val updated = src
       .groupByKey(_._1)
@@ -791,7 +778,7 @@ object Streaming {
     // window over the sink table (batches × types × k rows — tiny; a
     // self-join of the memory-sink view trips a conflicting-reference
     // resolver bug in Spark 4.1)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
+    val w = Window.partitionBy(col("event_type"))
     all.withColumn("n_latest", max(col("n_events")).over(w))
       .filter(col("n_events") === col("n_latest"))
       .select(col("event_type"), col("user_id"), col("mg_count"), col("n_events"))
@@ -805,10 +792,7 @@ object Streaming {
     */
   def streamHllDistinct(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val replay = replaySession(spark)
-    replay.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val src = eventsStream(replay, dir)
+    val src = events(replaySession(spark, rocksDb = true), dir).stream
       .select(col("event_type"), col("user_id"))
       .as[(String, Long)]
     val updated = src
@@ -820,18 +804,6 @@ object Streaming {
         max_by(col("est"), col("n")).as("est_users"))
   }
 
-  /** Inactivity-timeout session processor for [[timerSessionCounts]] —
-    * the EVENT-TIME TIMER side of `transformWithState` (the one
-    * arbitrary-state feature the totals/KLL processors don't touch):
-    * sessions closed by an in-batch gap emit immediately (the gap is
-    * proven by data), the open tail instead registers a timer at
-    * `last + gap`, and [[handleExpiredTimer]] emits it when the
-    * WATERMARK — not another record — crosses that instant. That is the
-    * production contract for "close the session when the user goes
-    * quiet": without timers, a user who never returns never emits.
-    * One timer per key: each batch deletes the tail's previous timer
-    * before registering the moved one.
-    */
   /** Merge one sorted micro-batch of event times into an open session
     * tail `(start, last, n)` (`(-1, -1, 0)` = none). Micro-batches are
     * NOT ordered by event time across batches: a later batch may carry
@@ -876,6 +848,18 @@ object Streaming {
     ((start, last, n), out.result())
   }
 
+  /** Inactivity-timeout session processor for [[timerSessionCounts]] —
+    * the EVENT-TIME TIMER side of `transformWithState` (the one
+    * arbitrary-state feature the totals/KLL processors don't touch):
+    * sessions closed by an in-batch gap emit immediately (the gap is
+    * proven by data), the open tail instead registers a timer at
+    * `last + gap`, and [[handleExpiredTimer]] emits it when the
+    * WATERMARK — not another record — crosses that instant. That is the
+    * production contract for "close the session when the user goes
+    * quiet": without timers, a user who never returns never emits.
+    * One timer per key: each batch deletes the tail's previous timer
+    * before registering the moved one.
+    */
   private class TimerSessionProcessor(gapMicros: Long)
     extends StatefulProcessor[Long, (Long, Long), (Long, Long, Long)] {
     private val gapMs = gapMicros / 1000
@@ -929,53 +913,22 @@ object Streaming {
   def timerSessionCounts(spark: SparkSession, dir: String, gapMinutes: Int = 10): DataFrame = {
     import spark.implicits._
     val gapMicros = gapMinutes * 60L * 1000000L
-    val session = replaySession(spark, noDataBatches = true)
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val name = "graft_stream_timer_" + UUID.randomUUID().toString.replace("-", "")
-    val root = new java.io.File(checkpointRoot, name)
-    val staged = new java.io.File(root, "staged")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root)
+    val session = replaySession(spark, noDataBatches = true, rocksDb = true)
+    withSentinels(session, dir, "view") { (events, _) =>
+      val src = events.stream
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "10 minutes")
+        .select(col("user_id"), unix_micros(col("ts")).as("us"))
+        .as[(Long, Long)]
+      val sessions = src
+        .groupByKey(_._1)
+        .transformWithState(new TimerSessionProcessor(gapMicros),
+          TimeMode.EventTime(), OutputMode.Append())
+      runToTable(sessions.toDF("user_id", "start_us", "n"), OutputMode.Append())
+        .filter(col("user_id") =!= -1L)
+        .select(timestamp_micros(col("start_us")).cast("timestamp_ntz").as("session_start"),
+          col("user_id"), col("n"))
     }
-    val raw = Tables.raw(spark, dir, "events")
-    val maxTsMicros = raw.select(expr(Tables.tsMicrosSql(raw.schema)).as("us"))
-      .agg(max(col("us"))).head().getLong(0)
-    val sentinelMicros = maxTsMicros + 10L * 24 * 3600 * 1000000L
-    val sentinelTsCol =
-      if (Tables.tsIsLongNanos(raw.schema)) lit(sentinelMicros * 1000L)
-      else timestamp_micros(lit(sentinelMicros))
-    val sentinel = raw.sparkSession.range(1).select(raw.schema.fields.map { f =>
-      (f.name match {
-        case "event_id" | "user_id" => lit(-1L)
-        case "ts" => sentinelTsCol
-        case "event_type" => lit("view")
-        case _ => lit(null)
-      }).cast(f.dataType).as(f.name)
-    }.toSeq: _*)
-    raw.unionByName(sentinel).write.mode("overwrite").parquet(staged.getAbsolutePath)
-
-    val src = session.readStream
-      .schema(raw.schema)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(staged.getAbsolutePath)
-      .withColumn("ts", expr(Tables.tsNtzSql(raw.schema)))
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "10 minutes")
-      .select(col("user_id"), unix_micros(col("ts")).as("us"))
-      .as[(Long, Long)]
-    val sessions = src
-      .groupByKey(_._1)
-      .transformWithState(new TimerSessionProcessor(gapMicros),
-        TimeMode.EventTime(), OutputMode.Append())
-    runToTable(sessions.toDF("user_id", "start_us", "n"), OutputMode.Append())
-      .filter(col("user_id") =!= -1L)
-      .select(timestamp_micros(col("start_us")).cast("timestamp_ntz").as("session_start"),
-        col("user_id"), col("n"))
   }
 
   /** Custom sessionization via `flatMapGroupsWithState` — the API for
@@ -996,7 +949,7 @@ object Streaming {
   def customSessionCounts(spark: SparkSession, dir: String, gapMinutes: Int = 10): DataFrame = {
     import spark.implicits._
     val gapMicros = gapMinutes * 60L * 1000000L
-    val src = eventsStream(replaySession(spark), dir)
+    val src = events(replaySession(spark), dir).stream
       .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("us"))
       .as[(Long, Long)]
     val sessions = src
@@ -1031,33 +984,58 @@ object Streaming {
     * log (the read back only sees committed files, so a crashed batch
     * can never surface partial output). Stateless append emits every
     * row, so the result is exactly batch-equivalent → full hash oracle.
-    * Output and checkpoint are replay-throwaway (tmpfs + shutdown-hook
-    * cleanup); a production stream points both at durable storage and
-    * swaps the trigger — the query is otherwise unchanged.
+    * Output and checkpoint are replay-throwaway on tmpfs (the checkpoint
+    * dies with the replay, the output at JVM exit); a production stream
+    * points both at durable storage and swaps the trigger — the query is
+    * otherwise unchanged.
     */
   def fileSinkPurchases(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_fsink_" + UUID.randomUUID().toString.replace("-", "")
-    val outDir = new java.io.File(checkpointRoot, name + "_out")
-    val ckpt = new java.io.File(checkpointRoot, name + "_ckpt")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(outDir); rm(ckpt)
+    val name = Scratch.uniqueName("graft_stream_fsink")
+    val outDir = Scratch.deleteAtExit(new File(checkpointRoot, name + "_out"))
+    val ckpt = new File(checkpointRoot, name + "_ckpt")
+    Scratch.using(ckpt) {
+      replay(events(replaySession(spark), dir).stream
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), col("value"))
+        .writeStream
+        .format("parquet")
+        .option("path", outDir.getAbsolutePath)
+        .outputMode(OutputMode.Append()), ckpt)
     }
-    val q = eventsStream(replaySession(spark), dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("value"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir.getAbsolutePath)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     spark.read.parquet(outDir.getAbsolutePath)
   }
+
+  /** The keyed sinks' input: the events replay staged into `staged` as
+    * three files (event_id mod 3 — deliberately NOT time-ordered: the
+    * merge must not care), streamed as stored, one file per micro-batch.
+    */
+  private def stagedThirds(session: SparkSession, dir: String, staged: File): DataFrame = {
+    val raw = Tables.raw(session, dir, "events")
+    (0 until 3).foreach { i =>
+      raw.filter(pmod(col("event_id"), lit(3)) === i)
+        .write.mode("overwrite").parquet(new File(staged, s"part$i").getAbsolutePath)
+    }
+    EventsSource(session, staged.getAbsolutePath, raw.schema)
+      .stored(maxFilesPerTrigger = Some(1))
+  }
+
+  /** The keyed sinks' row per user: the max-(__ts, last_event_id) row
+    * of `rows` (keyed-table rows, a batch's [[latestPerUser]] rows, or
+    * both unioned).
+    */
+  private def keepLatest(rows: DataFrame): DataFrame =
+    rows.withColumn("__rn", row_number().over(Window.partitionBy(col("user_id"))
+        .orderBy(col("__ts").desc, col("last_event_id").desc)))
+      .filter(col("__rn") === 1).drop("__rn")
+
+  /** One micro-batch reduced to its latest row per user. The keyed table
+    * keeps the raw ordering column (__ts, whatever the storage type —
+    * ordering is identical) so rows re-enter later merges with their
+    * original revision order.
+    */
+  private def latestPerUser(batch: DataFrame): DataFrame =
+    keepLatest(batch.select(col("user_id"), col("event_id").as("last_event_id"),
+      col("value").as("last_value"), col("ts").as("__ts")))
 
   /** Streaming keyed upsert sink — the CDC-apply / materialized-view
     * maintenance pattern: `foreachBatch` merges every micro-batch into a
@@ -1082,153 +1060,38 @@ object Streaming {
     * rewrites only touched partitions (the Compaction/Upsert machinery
     * in this repo), but the merge semantics are exactly these.
     */
-  /** LEFT OUTER stream-stream join — the unmatched-left completion of
-    * [[purchasesWithRecentSignup]]: purchases with no qualifying signup
-    * must still emit, null-extended. Outer rows can only materialize
-    * when the WATERMARK proves no future right row could match, so the
-    * replay stages the events alongside a far-future sentinel pair
-    * (user_id −1, one per join side's type so both watermark nodes see
-    * it; scrubbed from the RESULT table after the replay — a pre-join
-    * filter on user_id would be pushed BELOW the EventTimeWatermark
-    * node, since it touches a non-event-time column, and the sentinel
-    * would never advance the clock: the 2-row gap that debugging this
-    * found). The sentinel pushes the final watermark
-    * past every real row and the trailing no-data micro-batch
-    * (`noDataBatches = true`) evicts all left state, emitting every
-    * outer row — making the append-mode result EXACTLY the batch left
-    * join, full oracle included. Production streams get the same
-    * completeness from ordinary event-time progress; the sentinel is the
-    * bounded-replay stand-in for "time keeps moving".
-    */
-  def purchasesWithSignupOuter(spark: SparkSession, dir: String): DataFrame = {
-    val session = replaySession(spark, noDataBatches = true)
-    val name = "graft_stream_outer_" + UUID.randomUUID().toString.replace("-", "")
-    val root = new java.io.File(checkpointRoot, name)
-    val staged = new java.io.File(root, "staged")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root)
-    }
-    val raw = Tables.raw(spark, dir, "events")
-    // max event time as exact micro-epoch, whatever the storage layout
-    val maxTsMicros = raw.select(expr(Tables.tsMicrosSql(raw.schema)).as("us"))
-      .agg(max(col("us"))).head().getLong(0)
-    val sentinelMicros = maxTsMicros + 10L * 24 * 3600 * 1000000L // +10 days
-    // sentinel ts in the STORAGE domain so unionByName keeps the schema
-    val sentinelTsCol =
-      if (Tables.tsIsLongNanos(raw.schema)) lit(sentinelMicros * 1000L)
-      else timestamp_micros(lit(sentinelMicros))
-    val sentinels = Seq("purchase", "signup").map { tpe =>
-      raw.sparkSession.range(1).select(raw.schema.fields.map { f =>
-        (f.name match {
-          case "event_id" | "user_id" => lit(-1L)
-          case "ts" => sentinelTsCol
-          case "event_type" => lit(tpe)
-          case _ => lit(null)
-        }).cast(f.dataType).as(f.name)
-      }.toSeq: _*)
-    }.reduce(_.unionByName(_))
-    raw.unionByName(sentinels).write.mode("overwrite").parquet(staged.getAbsolutePath)
-
-    def side(tpe: String, prefix: String): DataFrame =
-      session.readStream
-        .schema(raw.schema)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(staged.getAbsolutePath)
-        .withColumn("ts", expr(Tables.tsNtzSql(raw.schema)))
-        .filter(col("event_type") === tpe) // sentinel passes: it carries this type
-        .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
-          col("ts").cast("timestamp").as(s"${prefix}_ts"))
-        .withWatermark(s"${prefix}_ts", "30 minutes")
-
-    val joined = side("purchase", "p").join(side("signup", "s"),
-      col("p_user") === col("s_user") &&
-        col("s_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("s_ts") <= col("p_ts"),
-      "left_outer")
-    runToTable(joined, OutputMode.Append())
-      // the sentinel pair joins only itself; scrub it from the result
-      // table (NOT the stream — see the Scaladoc's pushdown trap)
-      .filter(col("p_id") =!= -1L)
-      .select(col("p_id").as("purchase_id"), col("s_id").as("signup_id"),
-        col("p_user").as("user_id"))
-  }
-
   def upsertSinkLatestEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val session = replaySession(spark)
-    val name = "graft_stream_upsert_" + UUID.randomUUID().toString.replace("-", "")
-    val root = new java.io.File(checkpointRoot, name)
-    val staged = new java.io.File(root, "staged")
-    val tableDir = new java.io.File(root, "table")
-    val ckpt = new java.io.File(root, "ckpt")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root)
+    val root = Scratch.deleteAtExit(
+      new File(checkpointRoot, Scratch.uniqueName("graft_stream_upsert")))
+    val staged = new File(root, "staged")
+    val tableDir = new File(root, "table")
+    val ckpt = new File(root, "ckpt")
+    Scratch.using(staged, ckpt) {
+      replay(stagedThirds(session, dir, staged).writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val s = batch.sparkSession
+          val batchLatest = latestPerUser(batch)
+          val merged =
+            if (!tableDir.exists()) batchLatest
+            else keepLatest(s.read.parquet(tableDir.getAbsolutePath).unionByName(batchLatest))
+          val next = new File(root, s"table_next_$batchId")
+          merged.write.mode("overwrite").parquet(next.getAbsolutePath)
+          // swap by renaming the live table ASIDE first: if either rename
+          // fails the previous state is restored/intact, whereas a plain
+          // delete-then-rename destroys every earlier batch's merge the
+          // moment the rename refuses (r7 review). Bounded replay runs
+          // batches sequentially; a production apply uses a table format.
+          val prev = new File(root, s"table_prev_$batchId")
+          if (tableDir.exists() && !tableDir.renameTo(prev))
+            throw new IllegalStateException(s"could not set aside table for batch $batchId")
+          if (!next.renameTo(tableDir)) {
+            prev.renameTo(tableDir)
+            throw new IllegalStateException(s"swap failed for batch $batchId")
+          }
+          Scratch.delete(prev)
+        }, ckpt)
     }
-    // stage the replay as 3 files (event_id mod 3 — deliberately NOT
-    // time-ordered: the merge must not care), one file per micro-batch
-    val raw = Tables.raw(spark, dir, "events")
-    (0 until 3).foreach { i =>
-      raw.filter(pmod(col("event_id"), lit(3)) === i)
-        .write.mode("overwrite").parquet(new java.io.File(staged, s"part$i").getAbsolutePath)
-    }
-    // the table keeps the raw ordering column (__ts, whatever the storage
-    // type — ordering is identical) so rows re-enter later merges with
-    // their original revision order
-    def latestPerUser(df: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("value").as("last_value"), col("ts").as("__ts"))
-    }
-    val src = session.readStream
-      .schema(raw.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true")
-      .parquet(staged.getAbsolutePath)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val batchLatest = latestPerUser(batch)
-        val merged =
-          if (!tableDir.exists()) batchLatest
-          else s.read.parquet(tableDir.getAbsolutePath).unionByName(batchLatest)
-            .withColumn("__rn", row_number().over(
-              Window.partitionBy(col("user_id"))
-                .orderBy(col("__ts").desc, col("last_event_id").desc)))
-            .filter(col("__rn") === 1).drop("__rn")
-        val next = new java.io.File(root, s"table_next_$batchId")
-        merged.write.mode("overwrite").parquet(next.getAbsolutePath)
-        // swap by renaming the live table ASIDE first: if either rename
-        // fails the previous state is restored/intact, whereas a plain
-        // delete-then-rename destroys every earlier batch's merge the
-        // moment the rename refuses (r7 review). Bounded replay runs
-        // batches sequentially; a production apply uses a table format.
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        val prev = new java.io.File(root, s"table_prev_$batchId")
-        if (tableDir.exists() && !tableDir.renameTo(prev))
-          throw new IllegalStateException(s"could not set aside table for batch $batchId")
-        if (!next.renameTo(tableDir)) {
-          prev.renameTo(tableDir)
-          throw new IllegalStateException(s"swap failed for batch $batchId")
-        }
-        rm(prev)
-        ()
-      }
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastReplayBatchCount = q.recentProgress.length
     spark.read.parquet(tableDir.getAbsolutePath)
       .select(col("user_id"), col("last_event_id"), col("last_value"))
   }
@@ -1251,18 +1114,13 @@ object Streaming {
     */
   private[graft] def commitBatchToVt(root: String, batchLatest: DataFrame,
       batchId: Long): Boolean = {
-    import org.apache.spark.sql.expressions.Window
     val version = batchId.toInt + 1
-    if (new java.io.File(root, s"_manifest_v$version.txt").exists()) return false
+    if (new File(root, s"_manifest_v$version.txt").exists()) return false
     val spark = batchLatest.sparkSession
     val current =
       if (version == 1) batchLatest
-      else graft.sources.VersionedTable.readVersion(spark, root, version - 1)
-        .unionByName(batchLatest)
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("user_id"))
-            .orderBy(col("__ts").desc, col("last_event_id").desc)))
-        .filter(col("__rn") === 1).drop("__rn")
+      else keepLatest(graft.sources.VersionedTable.readVersion(spark, root, version - 1)
+        .unionByName(batchLatest))
     val groupRel = s"files/merge_v$version"
     current.write.mode("overwrite").parquet(s"$root/$groupRel")
     graft.sources.VersionedTable.writeManifest(root, version, Seq(groupRel))
@@ -1284,46 +1142,19 @@ object Streaming {
     * replay's versions stay inspectable.
     */
   def vtSinkLatestEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val session = replaySession(spark)
-    val name = "graft_stream_vtsink_" + UUID.randomUUID().toString.replace("-", "")
-    val root = new java.io.File(checkpointRoot, name)
-    val staged = new java.io.File(root, "staged")
-    val tableRoot = new java.io.File(root, "vt")
-    val ckpt = new java.io.File(root, "ckpt")
+    val root = Scratch.deleteAtExit(
+      new File(checkpointRoot, Scratch.uniqueName("graft_stream_vtsink")))
+    val staged = new File(root, "staged")
+    val tableRoot = new File(root, "vt")
+    val ckpt = new File(root, "ckpt")
     tableRoot.mkdirs()
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root)
+    Scratch.using(staged, ckpt) {
+      replay(stagedThirds(session, dir, staged).writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          commitBatchToVt(tableRoot.getAbsolutePath, latestPerUser(batch), batchId): Unit
+        }, ckpt)
     }
-    val raw = Tables.raw(spark, dir, "events")
-    (0 until 3).foreach { i =>
-      raw.filter(pmod(col("event_id"), lit(3)) === i)
-        .write.mode("overwrite").parquet(new java.io.File(staged, s"part$i").getAbsolutePath)
-    }
-    def latestPerUser(df: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("value").as("last_value"), col("ts").as("__ts"))
-    }
-    val src = session.readStream
-      .schema(raw.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true")
-      .parquet(staged.getAbsolutePath)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitBatchToVt(tableRoot.getAbsolutePath, latestPerUser(batch), batchId): Unit
-      }
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastReplayBatchCount = q.recentProgress.length
     // read the final state back through the SQL face of the table format
     val finalSchema = graft.sources.VersionedTable.readVersion(
       spark, tableRoot.getAbsolutePath,
@@ -1347,26 +1178,14 @@ object Streaming {
     * like any other source: one task per state-store partition.
     */
   def stateStoreReader(spark: SparkSession, dir: String): DataFrame = {
-    val session = replaySession(spark)
-    val name = "graft_stream_state_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = new java.io.File(checkpointRoot, name)
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(ckpt)
-    }
-    val agg = eventsStream(session, dir)
+    // the returned DataFrame reads this checkpoint: it lives until JVM exit
+    val ckpt = Scratch.deleteAtExit(
+      new File(checkpointRoot, Scratch.uniqueName("graft_stream_state")))
+    val agg = events(replaySession(spark), dir).stream
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(12,2)")).cast("double").as("total_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Update())
-      .format("noop")
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(agg.writeStream.outputMode(OutputMode.Update()).format("noop"), ckpt)
     // state rows carry the AGGREGATION BUFFER, not the output projection:
     // (count, sum, isEmpty) for count+decimal-sum — reading state means
     // reading the operator's internal representation, which is the point
@@ -1391,7 +1210,7 @@ object Streaming {
     val base = graft.sources.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     val root = graft.sources.VersionedTable.freshRoot(s"$dir#vtsource")
-    if (!new java.io.File(s"$root/_manifest_v3.txt").exists()) {
+    if (!new File(s"$root/_manifest_v3.txt").exists()) {
       // append-only chain: v1 ⊂ v2 ⊂ v3, union = the whole corpus
       (0 until 3).foreach { i =>
         base.filter(pmod(col("doc_id"), lit(3)) === i)

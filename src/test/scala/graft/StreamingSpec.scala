@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -87,6 +87,39 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("user_id"), col("event_id"), col("value")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == expect, "cross-batch merge must equal the batch latest-per-user")
+  }
+
+  test("every sink shape records its own replay stats") {
+    // each replay overwrites both stats, whatever its sink: the 3-batch
+    // foreachBatch upsert must not leave its count to the file sink or
+    // the noop sink after it
+    def statsOf(run: => DataFrame): (Int, String) = {
+      Streaming.lastReplayBatchCount = -1
+      Streaming.lastReplayPlan = ""
+      val _ = run
+      (Streaming.lastReplayBatchCount, Streaming.lastReplayPlan)
+    }
+    Seq(
+      "upsert sink" -> (3, statsOf(Streaming.upsertSinkLatestEvents(spark, sf))),
+      "file sink" -> (1, statsOf(Streaming.fileSinkPurchases(spark, sf))),
+      "noop sink" -> (1, statsOf(Streaming.stateStoreReader(spark, sf)))
+    ).foreach { case (label, (expected, (batches, plan))) =>
+      assert(batches == expected, s"$label: recorded $batches micro-batches, expected $expected")
+      assert(plan.nonEmpty, s"$label: no plan recorded")
+    }
+  }
+
+  test("sentinel replays leave no staged copy behind") {
+    val root = Streaming.checkpointRoot
+    def entries: Set[String] = Option(root.list()).map(_.toSet).getOrElse(Set.empty)
+    val before = entries
+    Seq[(SparkSession, String) => DataFrame](
+      Streaming.chainedWindowCounts, Streaming.timerSessionCounts(_, _),
+      Streaming.purchasesWithSignupOuter, Streaming.purchasesWithSignupFullOuter)
+      .foreach(q => assert(q(spark, sf).collect().nonEmpty))
+    val leaked = entries -- before
+    assert(leaked.isEmpty,
+      s"replays left scratch under $root: ${leaked.toSeq.sorted.mkString(", ")}")
   }
 
   test("left-outer stream-stream join == COMPLETE batch left join (outer rows flushed)") {
