@@ -12,7 +12,10 @@ import graft.sources.CountryLut
   * RaceID normalization → broadcast left-outer enrichment join against the
   * country LUT → fixed 8-field projection with a nested `LocationData`
   * struct. The whole thing is a single narrow stage after the broadcast —
-  * no shuffle — so it scales linearly with input splits on a cluster.
+  * no shuffle — so it scales linearly with input splits on a cluster, and
+  * that includes the sink: every split is encoded and written by its own
+  * task, and the reference's one output shard is assembled from those part
+  * files afterwards ([[graft.sources.JsonlSink]]).
   */
 object FanPipeline {
 
@@ -101,7 +104,10 @@ object FanPipeline {
         col("MerchandisingClicked"), col("LocationData"))
   }
 
-  /** End-to-end run mirroring `run(argv)` (`/root/reference/src/pipeline.py:262-296`). */
+  /** End-to-end run mirroring the reference's `run(argv)` (`src/pipeline.py:262-296`):
+    * a parallel write, then the one `{outputPrefix}-00000-of-00001.jsonl`
+    * shard in `outputDir` joined from its parts in partition order.
+    */
   def run(
       spark: SparkSession,
       jsonGlob: String,

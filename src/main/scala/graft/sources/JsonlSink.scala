@@ -1,6 +1,10 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.io.File
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
@@ -11,10 +15,15 @@ import org.apache.spark.sql.types._
   *
   * Rows are serialized with `to_json` over the full row struct with
   * `ignoreNullFields=false`, matching `json.dumps(..., ensure_ascii=False)`
-  * (`/root/reference/src/pipeline.py:200`): raw UTF-8, nulls kept. The
-  * `coalesce(1)` mirrors `num_shards=1` — a deliberate single-writer
-  * collection point, only sane because the reference contract demands one
-  * file; the multi-shard path is just `df.write.json(dir)`.
+  * (the reference's `src/pipeline.py:200`): raw UTF-8, nulls kept.
+  *
+  * `num_shards=1` fixes the output layout, not the parallelism: like
+  * Beam's file sink, which writes temporary shards in parallel and renames
+  * them in a finalize step, every input partition is serialized and
+  * written by its own task into a hidden scratch dir under `outputDir`.
+  * The driver then joins those part files in ascending partition index
+  * (the order a single-task collection of the partitions would walk, so
+  * the bytes are the same) and publishes the shard with one atomic rename.
   */
 object JsonlSink {
 
@@ -67,12 +76,31 @@ object JsonlSink {
     sb.append('"').toString
   }
 
-  /** @param pythonStyle reproduce Python `json.dumps` byte layout
+  /** Spark's text output file name: `part-<partition>-<job>-c<file>.txt`. */
+  private val PartFile = """part-(\d+)-.*-c(\d+)\.txt""".r
+
+  /** The part files under `dir`, in partition order (numeric, so
+    * `part-100000` follows `part-99999`). Fails on a part file it cannot
+    * place rather than leave it out of the shard.
+    */
+  private[graft] def partsInOrder(dir: Path): Seq[Path] =
+    scala.util.Using.resource(Files.list(dir))(_.iterator.asScala.toList)
+      .filter(_.getFileName.toString.startsWith("part-")).map { p =>
+        p.getFileName.toString match {
+          case PartFile(partition, file) => ((partition.toLong, file.toLong), p)
+          case name => throw new IllegalStateException(s"unexpected part file $name in $dir")
+        }
+      }.sortBy(_._1).map(_._2)
+
+  /** Write `df` as `{prefix}-00000-of-00001.jsonl` in `outputDir` and
+    * return its path. Empty input gives a 0-byte shard. A failed write
+    * leaves no shard (an existing one stays as it was) and no scratch dir.
+    *
+    * @param pythonStyle reproduce Python `json.dumps` byte layout
     *   (golden-parity mode) instead of Spark's compact `to_json`.
     */
   def write(df: DataFrame, outputDir: String, prefix: String,
             pythonStyle: Boolean = false): String = {
-    val tmp = Files.createTempDirectory("graft-jsonl-").toString
     val serialized =
       if (pythonStyle) {
         val schema = df.schema
@@ -80,18 +108,27 @@ object JsonlSink {
       } else df.select(
         to_json(struct(df.columns.map(c => col(s"`$c`")): _*),
           Map("ignoreNullFields" -> "false")).as("value"))
-    serialized.coalesce(1).write.mode("overwrite").text(tmp)
-
-    val part = scala.util.Using.resource(Files.list(Paths.get(tmp)))(
-      _.filter(p => p.getFileName.toString.startsWith("part-")).findFirst()
-        .orElseThrow(() => new IllegalStateException(s"no part file in $tmp")))
     Files.createDirectories(Paths.get(outputDir))
     val dest = Paths.get(outputDir, s"$prefix-00000-of-00001.jsonl")
-    Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-    // best-effort cleanup of the temp dir (walk closed — it holds fds)
-    scala.util.Using.resource(Files.walk(Paths.get(tmp)))(
-      _.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p)))
+    // hidden, so Spark readers of outputDir skip it; same file system as
+    // dest, so the publish below is a rename
+    val scratch = new File(outputDir, Scratch.uniqueName(s".$prefix-parts"))
+    Scratch.using(scratch) {
+      serialized.write.text(scratch.toString)
+      val staged = scratch.toPath.resolve(dest.getFileName)
+      scala.util.Using.resource(FileChannel.open(staged,
+          StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)) { out =>
+        partsInOrder(scratch.toPath).foreach { part =>
+          scala.util.Using.resource(FileChannel.open(part, StandardOpenOption.READ)) { in =>
+            val size = in.size
+            var pos = 0L
+            while (pos < size) pos += in.transferTo(pos, size - pos, out)
+          }
+        }
+      }
+      Files.move(staged, dest,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }
     dest.toString
   }
 }

@@ -11,8 +11,8 @@ import java.io.File
   *    through a single shutdown hook; registering the same directory again
   *    is a no-op, so per-call registration cannot pile up hooks.
   *  - [[using]]: only the call itself reads it (a replay's staged input or
-  *    checkpoint), so it is deleted as soon as the call's body returns or
-  *    throws.
+  *    checkpoint, the JSONL sink's part files), so it is deleted as soon as
+  *    the call's body returns or throws.
   */
 private[graft] object Scratch {
 

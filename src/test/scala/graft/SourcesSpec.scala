@@ -1,12 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.FanPipeline
-import graft.sources.{CsvSource, ParquetSink, Tables}
+import graft.sources.{CsvSource, JsonlSink, ParquetSink, Scratch, Tables}
 
 /** Source/sink edge cases (FIXTURES §A4): permissive JSON drop semantics,
   * filter whitespace handling, missing-field behavior, sniffing CSV reads
@@ -84,6 +88,90 @@ class SourcesSpec extends AnyFunSuite {
     assert(lines.size() == 2)
     assert(lines.stream().anyMatch(_.contains("\"v\":null")))
   }
+
+  /** The lines a single task walking `df`'s partitions in order would write. */
+  private def serializedLines(df: DataFrame, pythonStyle: Boolean): Seq[String] =
+    if (pythonStyle) df.collect().toSeq.map(JsonlSink.pythonJson(_, df.schema))
+    else df.select(to_json(struct(df.columns.map(col): _*),
+      Map("ignoreNullFields" -> "false"))).collect().toSeq.map(_.getString(0))
+
+  test("JSONL sink joins a 16-partition write into one shard in partition order") {
+    val df = spark.range(0, 10000, 1, 16)
+      .withColumn("s", concat(lit("row-"), col("id").cast("string")))
+    for (pythonStyle <- Seq(false, true)) {
+      val out = Files.createTempDirectory("graft-jsonl-order-").toFile
+      val path = JsonlSink.write(df, out.toString, "t", pythonStyle)
+      val expected = serializedLines(df, pythonStyle).mkString("", "\n", "\n")
+      assert(new String(Files.readAllBytes(Paths.get(path)), UTF_8) == expected,
+        s"pythonStyle=$pythonStyle")
+      // the scratch dir holding the part files is gone
+      assert(out.list().toSeq == Seq("t-00000-of-00001.jsonl"))
+    }
+  }
+
+  test("JSONL sink orders part files by numeric partition, then file, index") {
+    val dir = Files.createTempDirectory("graft-jsonl-names-")
+    val names = Seq("part-100000-j-c000.txt", "part-99999-j-c000.txt",
+      "part-00002-j-c010.txt", "part-00002-j-c009.txt", "_SUCCESS", ".part-00002-j-c009.txt.crc")
+    names.foreach(n => Files.createFile(dir.resolve(n)))
+    assert(JsonlSink.partsInOrder(dir).map(_.getFileName.toString) == Seq(
+      "part-00002-j-c009.txt", "part-00002-j-c010.txt", "part-99999-j-c000.txt",
+      "part-100000-j-c000.txt"))
+    // a part file the sink cannot place fails the write instead of going missing
+    Files.createFile(dir.resolve("part-00003-j-c000.txt.gz"))
+    intercept[IllegalStateException](JsonlSink.partsInOrder(dir))
+  }
+
+  test("JSONL sink: empty input gives a 0-byte shard") {
+    // four empty partitions, and a plan with no partitions at all
+    for (empty <- Seq(spark.range(0, 0, 1, 4).toDF(), spark.range(10).limit(0).toDF())) {
+      val out = Files.createTempDirectory("graft-jsonl-empty-").toFile
+      val path = Paths.get(JsonlSink.write(empty, out.toString, "t"))
+      assert(path == Paths.get(out.toString, "t-00000-of-00001.jsonl"))
+      assert(Files.size(path) == 0)
+      assert(out.list().toSeq == Seq("t-00000-of-00001.jsonl"))
+    }
+  }
+
+  test("JSONL sink: a write failing in a task leaves no shard and no scratch dir") {
+    val out = Files.createTempDirectory("graft-jsonl-fail-").toFile
+    val bad = spark.range(0, 100, 1, 1)
+      .select(when(col("id") === 50, raise_error(lit("boom"))).otherwise(col("id")).as("v"))
+    intercept[Exception](JsonlSink.write(bad, out.toString, "t"))
+    assert(out.list().isEmpty, out.list().mkString(", "))
+  }
+
+  test("JSONL sink writes each input partition in its own task") {
+    val sc = spark.sparkContext
+    val group = Scratch.uniqueName("jsonl-parallel")
+    val jobs, stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobsEnded, tasks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          e.stageIds.foreach(stages.add)
+          jobs.add(e.jobId)
+        }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (jobs.contains(e.jobId)) jobsEnded.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val df = spark.range(0, 1000, 1, 4).withColumn("s", col("id").cast("string"))
+      sc.setJobGroup(group, "JSONL sink parallel write")
+      try JsonlSink.write(df, Files.createTempDirectory("graft-jsonl-par-").toString, "t")
+      finally sc.clearJobGroup()
+      // listener events arrive asynchronously; a job's task events precede its end
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while ((jobs.isEmpty || jobsEnded.get < jobs.size) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobs.size == 1)
+      assert(tasks.get == 4)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("binaryFile ingestion: glob prunes at listing, metadata length is exact") {
     import org.apache.spark.sql.functions.col
     val rows = graft.sources.BinaryFiles.ingestDocs(spark, TestSpark.sf0001, docCap = 20)
