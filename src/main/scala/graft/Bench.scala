@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
 
 /** Driver-run benchmark: times every `SparkEntry.queries` entry at
   * `SPARK_GRAFT_SF_DIR` and prints two bare JSON lines on stdout
@@ -41,15 +42,21 @@ import org.apache.spark.sql.SparkSession
   * constant in data size (`stream_wall_bound: true`) — so
   * `norm_ratio_batch` is the scan-path adjudication number and stream
   * spikes can no longer contaminate it.
+  *
+  * The harness helpers below (`force`, `median`, the calibration timing,
+  * the warm-up, the failure text and the `SPARK_GRAFT_ONLY` subset
+  * filter) are the one copy Verify, ScaleBench and Explain share.
   */
 object Bench {
   import JsonText.{quote => jstr}
 
-  private def median(xs: Seq[Double]): Double = {
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.length
     if (n == 0) -1.0 else if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
+
+  private[graft] def r4(x: Double): Double = math.rint(x * 10000) / 10000
 
   /** Force a full materialization of every output column through the
     * noop sink. `.count()` is NOT a valid benchmark driver: Catalyst
@@ -61,7 +68,7 @@ object Bench {
     * consumes every row with all output columns and discards them —
     * full execution, no driver transfer, no disk.
     */
-  private def force(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def force(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
   /** The calibration probe: one wide parquet scan + hash aggregate over
@@ -69,10 +76,7 @@ object Bench {
     * CHANGE IT — cross-round comparability of `norm_ratio` depends on
     * this workload staying byte-identical.
     */
-  private[graft] def calibrationProbe(spark: SparkSession, sfDir: String): Unit =
-    calibration(spark, sfDir)
-
-  private def calibration(spark: SparkSession, sfDir: String): Unit = {
+  private[graft] def calibrationProbe(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
     force(spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -80,73 +84,95 @@ object Bench {
         avg(col("l_discount")).as("d"), count(lit(1)).as("n")))
   }
 
+  /** Times one [[calibrationProbe]] into `times`; a failed probe adds no
+    * time, so the calibration median sees only completed probes.
+    */
+  private[graft] def runCalib(spark: SparkSession, sfDir: String, times: mutable.Buffer[Double]): Unit = {
+    val t0 = System.nanoTime()
+    try { calibrationProbe(spark, sfDir); times += (System.nanoTime() - t0) / 1e9 }
+    catch { case _: Throwable => () }
+  }
+
+  /** JIT/codegen warm-up so startup cost isn't billed to the first
+    * timed query.
+    */
+  private[graft] def warmUp(spark: SparkSession): Unit =
+    try force(SparkEntry.entry(spark)) catch { case _: Throwable => () }
+
+  /** How a failed query is reported: exception class and message, capped
+    * at `max` chars because the texts land in one-line JSON.
+    */
+  private[graft] def failure(e: Throwable, max: Int = 300): String =
+    s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(max)
+
+  /** Wall seconds of up to `reps` forced runs of `build`. The first
+    * failure goes into `errors` and ends the runs, and a name already in
+    * `errors` is not run again: a failed query is reported (as -1 by the
+    * callers), never timed as a fast pass.
+    */
+  private[graft] def timeReps(name: String, reps: Int, errors: mutable.Map[String, String])
+      (build: => DataFrame): Seq[Double] =
+    (1 to reps).flatMap { _ =>
+      if (errors.contains(name)) None
+      else {
+        val t0 = System.nanoTime()
+        try { force(build); Some((System.nanoTime() - t0) / 1e9) }
+        catch {
+          case e: Throwable =>
+            errors(name) = failure(e)
+            System.err.println(s"[bench] $name FAILED")
+            e.printStackTrace()
+            None
+        }
+      }
+    }
+
+  /** The subset of `universe` a run asks for, in `universe` order, or
+    * None when it asks for none. Verify, Bench and ScaleBench take it
+    * from `SPARK_GRAFT_ONLY=q_a,q_b` (a dev-loop knob: the full surface
+    * runs when it is unset); Explain from its arguments. A name outside
+    * `universe` fails the run before any work: a typo'd subset would
+    * otherwise run nothing and exit green (ADVICE r08).
+    */
+  private[graft] def only(universe: Seq[String],
+      requested: Option[Seq[String]] = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq))
+      : Option[Seq[String]] = requested.map { names =>
+    val unknown = names.toSet -- universe
+    require(unknown.isEmpty,
+      s"names not among this run's queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    universe.filter(names.toSet)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    // one shared config surface (GraftSession.tune); explicit partition
-    // count override so local[N] and shuffle partitions stay in lockstep
-    val spark = GraftSession.tune(SparkSession.builder().master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // JIT/codegen warmup so startup cost isn't billed to the first query
-    // (also warms the calibration probe's codegen)
-    try force(SparkEntry.entry(spark)) catch { case _: Throwable => () }
-    try calibration(spark, sfDir) catch { case _: Throwable => () }
-    val calibTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def runCalib(): Unit = {
-      val t0 = System.nanoTime()
-      try { calibration(spark, sfDir); calibTimes += (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => () }
-    }
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // dev loop only: SPARK_GRAFT_ONLY=q_a,q_b times a subset (same env
-    // contract as Verify); the driver sets no env → full surface
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // fail fast on a typo'd name: a silent no-match sweep would print a
-    // zero-query green total (ADVICE r08)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val qseq = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val queries = SparkEntry.queries
+    val names = only(queries.keys.toSeq).getOrElse(queries.keys.toSeq)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    warmUp(spark)
+    // also warm the calibration probe's codegen
+    try calibrationProbe(spark, sfDir) catch { case _: Throwable => () }
+    val calibTimes = mutable.ArrayBuffer.empty[Double]
+    val errors = mutable.LinkedHashMap.empty[String, String]
     // TIER ISOLATION (VERDICT r13 #2): the ~25 q_stream_* queries are
     // trigger-clocked micro-batch machinery — constant in data size,
     // wall-clock-bound — and have contaminated batch adjudication in
     // three consecutive driver benches. Run ALL batch queries first,
     // then the stream tier as a dedicated tail pass, each tier with its
     // own calibration probes and its own norm line in the summary.
-    val (streamQs, batchQs) = qseq.partition(_._1.startsWith("q_stream"))
+    val (streamQs, batchQs) = names.partition(_.startsWith("q_stream"))
     // probe host speed every ~16 queries (the probe costs ~0.4 s) so a
     // load spike hitting one query's reps is visible in calib_runs and
     // the calibration median sees the sweep's whole load profile — one
     // start/middle/end triple proved too sparse to attribute per-query
     // anomalies (VERDICT r6 on q_range_join)
-    def sweep(tier: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-        : (Seq[(String, Seq[Double])], Seq[Double]) = {
+    def sweep(tier: Seq[String]): (Seq[(String, Seq[Double])], Seq[Double]) = {
       val probesBefore = calibTimes.length
-      val raw = tier.zipWithIndex.map { case ((name, fn), i) =>
-        if (i % 16 == 0) runCalib()
-        val times = (1 to reps).flatMap { _ =>
-          if (errors.contains(name)) None // don't re-run a query that already failed
-          else {
-            val t0 = System.nanoTime()
-            try { force(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-            catch {
-              case e: Throwable =>
-                errors(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(300)
-                System.err.println(s"[bench] $name FAILED")
-                e.printStackTrace()
-                None
-            }
-          }
-        }
-        name -> times
+      val raw = tier.zipWithIndex.map { case (name, i) =>
+        if (i % 16 == 0) runCalib(spark, sfDir, calibTimes)
+        name -> timeReps(name, reps, errors)(queries(name)(spark, sfDir))
       }
-      runCalib()
+      runCalib(spark, sfDir, calibTimes)
       (raw, calibTimes.drop(probesBefore).toSeq)
     }
     val (batchRaw, batchProbes) = sweep(batchQs)
@@ -163,7 +189,6 @@ object Bench {
     val calib = median(calibTimes.toSeq)
     val normRatio = if (calib > 0) total / calib else -1.0
     val errJson = errors.map { case (k, m) => s"${jstr(k)}:${jstr(m)}" }.mkString("{", ",", "}")
-    def r4(x: Double): Double = math.rint(x * 10000) / 10000
     // per-rep [min,max] for the 10 slowest queries: a load spike shows as
     // one wild rep around a normal min; a real regression moves the min
     val spreadJson = ok.sortBy(-_._2).take(10).map { case (k, _) =>
@@ -201,7 +226,7 @@ object Bench {
     println(s"""{"metric":"detail","reps":$reps,"queries":$qs,"errors":$errJson,"norm_q":$normQJson,"spread_10_slowest":$spreadJson,"calib_runs":${calibTimes.map(r4).mkString("[", ",", "]")},"sf":${jstr(sfDir)}}""")
     // ...short machine line LAST so tail truncation can't eat it.
     // norm_ratio = total / calib is the load-invariant cross-round trend
-    // (the calibration workload is pinned — see `calibration` above).
+    // (the calibration workload is pinned — see `calibrationProbe` above).
     // Per-tier norm lines (VERDICT r13 #2): norm_ratio_batch is THE
     // scan-path adjudication number; the stream tier is trigger-clocked
     // (wall-clock-bound, constant in data) and carries its own

@@ -1,24 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan for the
-  * named queries (or all) against a given sf dir. Used to audit that scans
-  * prune/push down, dimension joins broadcast, and operators stay inside
-  * whole-stage codegen — the "is this the plan you'd want at 100 TB"
-  * review from SURVEY §7.
+  * named queries (or all), in name order, against a given sf dir. Used
+  * to audit that scans prune/push down, dimension joins broadcast, and
+  * operators stay inside whole-stage codegen — the "is this the plan
+  * you'd want at 100 TB" review from SURVEY §7.
   *
-  * Usage: runMain graft.Explain <sfDir> [queryName ...]
+  * Usage: runMain graft.Explain <sfDir> [queryName ...]; an unknown
+  * name fails the run before any plan prints.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    val names = Bench.only(all, Option.when(args.length > 1)(args.tail.toSeq)).getOrElse(all)
     // shared config surface so the audited plans are the ones Bench runs
-    val spark = GraftSession.tune(SparkSession.builder().master("local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     names.foreach { name =>
       println(s"\n===================== $name =====================")
       try println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(

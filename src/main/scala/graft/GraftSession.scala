@@ -28,11 +28,18 @@ object GraftSession {
     .config("spark.sql.parquet.compression.codec", "zstd")
     .config("spark.ui.enabled", "false")
 
+  /** The one local-mode session factory, used by every local driver main
+    * (Bench, Verify, ScaleBench, Explain, plans.EdgeBuildProbe) and the
+    * test session: [[tune]] on `local[cores]`, shuffle partitions pinned
+    * to `cores` so both stay in lockstep, ERROR logging, and graft's
+    * functions registered. `pipeline.Main` builds its own session because
+    * it accepts any `--master`.
+    */
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = tune(
-      SparkSession.builder().master(s"local[$cores]").appName(appName)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = tune(SparkSession.builder().master(s"local[$cores]").appName(appName))
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
     register(spark)
     spark
   }

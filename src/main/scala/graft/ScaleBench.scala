@@ -1,18 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-
-import graft.operators.{Analytics, Dedup, Relational, Similarity, Stats, TextAnalysis}
 
 /** Data-dominated scale proof (VERDICT r6 #1): the sf0.1 bench measures
   * mostly per-query fixed cost (scheduling, codegen, micro-batch
   * machinery), so it cannot distinguish "scales linearly" from "constant
   * overhead". This main self-replicates the sf0.1 tables `factor`× into a
-  * work dir and times the 10 data-dominated queries at 1× and factor×,
-  * interleaved pairwise with the same pinned calibration probe Bench
-  * uses, printing per-query ratios. ~`factor`× growth (or less, as fixed
-  * cost amortizes) on rising data is the empirical evidence behind
+  * work dir and times the data-dominated queries in [[targets]] at 1× and
+  * factor×, interleaved pairwise with the same pinned calibration probe
+  * Bench uses, printing per-query ratios. ~`factor`× growth (or less, as
+  * fixed cost amortizes) on rising data is the empirical evidence behind
   * PLANS.md's 100 TB projections.
   *
   * Replication must not manufacture pathological self-similarity — 10
@@ -35,23 +33,19 @@ import graft.operators.{Analytics, Dedup, Relational, Similarity, Stats, TextAna
   *    users, so per-user session/funnel structure is preserved while
   *    user-partition fan-out grows with the factor.
   *
-  * q_ann_selfjoin additionally follows its own documented scale path:
-  * `bitsPerTable` grows with log2(corpus) so LSH bucket occupancy stays
-  * constant — the knob a real deployment turns as the corpus grows
-  * (see `Similarity.annSelfJoin`). Every other query runs unmodified.
+  * Every target runs its `SparkEntry.queries` entry unmodified.
+  * q_ann_selfjoin and q_knn_graph follow their own documented scale
+  * path there: `bitsPerTable` grows with log2(corpus) so LSH bucket
+  * occupancy stays constant — the knob a real deployment turns as the
+  * corpus grows (see `Similarity.annSelfJoin`).
+  *
+  * `SPARK_GRAFT_ONLY=q_a,q_b` restricts the sweep to those targets, as
+  * for Bench and Verify. A failed query is reported as -1 and listed in
+  * `errors`, and fails the run once the `scale` line has printed.
   */
 object ScaleBench {
+  import Bench.{median, r4}
   import JsonText.{quote => jstr}
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.isEmpty) -1.0
-    else if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-  }
-
-  private def force(df: DataFrame): Unit =
-    df.write.mode("overwrite").format("noop").save()
 
   /** Decorrelated `factor`× replication of the four tables the
     * data-dominated queries read. Idempotent via a marker file (version
@@ -180,28 +174,29 @@ object ScaleBench {
     ()
   }
 
-  /** The data-dominated queries (each reads only the dir it is given —
-    * q_ann_selfjoin self-scales its bits knob from the corpus it sees).
+  /** The data-dominated queries, timed as their `SparkEntry.queries`
+    * entries (each reads only the dir it is given — q_ann_selfjoin and
+    * q_knn_graph self-scale their bits knob from the corpus they see).
     */
-  private def targets: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "q_pricing_summary" -> ((s, d) => Relational.pricingSummary(s, d)),
-    "q_filter_project" -> ((s, d) => Relational.filterProject(s, d)),
-    "q_global_sort" -> ((s, d) => Relational.globalSortLineitems(s, d)),
-    "q_dedup_survivors" -> ((s, d) => Dedup.exactDedupSurvivors(s, d)),
-    "q_byte_entropy" -> ((s, d) => TextAnalysis.byteEntropy(s, d)),
-    "q_minhash_neardups" -> ((s, d) => Dedup.minhashNearDups(s, d)),
-    "q_split_assign" -> ((s, d) => TextAnalysis.deterministicSplit(s, d)),
+  private[graft] val targets: Seq[String] = Seq(
+    "q_pricing_summary",
+    "q_filter_project",
+    "q_global_sort",
+    "q_dedup_survivors",
+    "q_byte_entropy",
+    "q_minhash_neardups",
+    "q_split_assign",
     // window-function + user-keyed-join families (r7 analytics adds):
     // sort/state per user partition, joins exchanging |users| rows
-    "q_sessionize" -> ((s, d) => Analytics.sessionize(s, d)),
-    "q_funnel" -> ((s, d) => Analytics.funnelConversion(s, d)),
+    "q_sessionize",
+    "q_funnel",
     // temporal/screening verbs (late r7): scd2 is the one-exchange
     // lag-filter-lead stack; gap_fill's spine grows with |users × span
     // hours| (replicas add users, so the spine scales linearly); winsorize
     // is the bounded-state quantile core + a broadcast clip pass
-    "q_scd2" -> ((s, d) => Analytics.scd2UserState(s, d)),
-    "q_gap_fill" -> ((s, d) => Analytics.gapFillHourly(s, d)),
-    "q_winsorize" -> ((s, d) => Relational.winsorizedEvents(s, d)),
+    "q_scd2",
+    "q_gap_fill",
+    "q_winsorize",
     // corpus-hygiene family (late r7 adds): decontaminate is a per-doc
     // distinct + broadcast digest probe (Caesar-rotated replicas keep the
     // per-replica contamination rate constant); heavy hitters is the O(k)
@@ -212,8 +207,8 @@ object ScaleBench {
     // holds each group's whole multiset in one reducer, the distributed
     // form holds one range slice per task — same numbers, different
     // memory story as groups grow
-    "q_percentiles" -> ((s, d) => Relational.percentiles(s, d)),
-    "q_percentiles_dist" -> ((s, d) => Relational.distributedPercentiles(s, d)),
+    "q_percentiles",
+    "q_percentiles_dist",
     // retrieval/association/sequence verbs (this round): bm25's term
     // filter sits under its agg, so the 100× scan feeds a ~1×-sized tf
     // relation (replica ciphers rotate the vocab away from the query
@@ -223,29 +218,29 @@ object ScaleBench {
     // narrow rows through one count + semi join; mad_outliers is two
     // bounded-state quantile passes; weighted_sample and markov ride
     // the WindowGroupLimit / user-keyed-window shapes already proven
-    "q_bm25" -> ((s, d) => TextAnalysis.bm25(s, d)),
-    "q_cooccurrence" -> ((s, d) => TextAnalysis.cooccurrencePmi(s, d)),
-    "q_ngram_novelty" -> ((s, d) => TextAnalysis.ngramNovelty(s, d)),
-    "q_substring_dupes" -> ((s, d) => TextAnalysis.substringDupes(s, d)),
-    "q_mad_outliers" -> ((s, d) => Relational.madOutlierEvents(s, d)),
-    "q_weighted_sample" -> ((s, d) => graft.operators.Sampling.weightedSample(s, d)),
-    "q_markov" -> ((s, d) => Analytics.markovTransitions(s, d)),
+    "q_bm25",
+    "q_cooccurrence",
+    "q_ngram_novelty",
+    "q_substring_dupes",
+    "q_mad_outliers",
+    "q_weighted_sample",
+    "q_markov",
     // the typed-path sequential fold: per-group buffer is one user's
     // history; replicas add USERS, so groups multiply, sizes don't
-    "q_ewma" -> ((s, d) => Analytics.ewmaUserValues(s, d)),
+    "q_ewma",
     // PIT join: both sides grow with the factor, the join stays
     // user-keyed (q_profile reads orders, which the replica set does
     // not carry — its one-Expand-pass shape needs no sweep)
-    "q_pit_join" -> ((s, d) => Analytics.pitEnrichedPurchases(s, d)),
-    "q_decontaminate" -> ((s, d) => TextAnalysis.decontaminate(s, d)),
-    "q_heavy_hitters" -> ((s, d) => graft.functions.MisraGries.heavyHitters(s, d)),
-    "q_zorder" -> ((s, d) => graft.operators.ZOrder.zValuedEvents(s, d)),
+    "q_pit_join",
+    "q_decontaminate",
+    "q_heavy_hitters",
+    "q_zorder",
     // streaming replays: the events replica multiplies USERS (new ids per
     // replica), so windowed-aggregate and per-user state-store volume both
     // grow with the factor — this measures the state path, not just the
     // scan (micro-batch machinery is the constant term)
-    "q_stream_tumbling" -> ((s, d) => graft.streaming.Streaming.tumblingCounts(s, d)),
-    "q_stream_stateful" -> ((s, d) => graft.streaming.Streaming.statefulUserTotals(s, d)),
+    "q_stream_tumbling",
+    "q_stream_stateful",
     // round-8 verbs: the native as-of join (key exchanges + one merge
     // pass; replicas add users so partitions multiply, per-key state
     // stays O(1)); graph analytics over the replicated fact tables
@@ -257,13 +252,13 @@ object ScaleBench {
     // the quantile-core decile table; and the bounded-state sketch
     // passes (theta distinct algebra, KLL quantile rollup) which
     // should ride the scan near-linearly
-    "q_asof_native" -> ((s, d) => Relational.purchaseAfterSignupNative(s, d)),
-    "q_triangles" -> ((s, d) => Analytics.triangleCounts(s, d)),
-    "q_pagerank" -> ((s, d) => Analytics.pagerankEventTypes(s, d)),
-    "q_decile_stats" -> ((s, d) => Relational.decileStats(s, d)),
-    "q_epoch_shuffle" -> ((s, d) => graft.operators.Sampling.epochShuffle(s, d)),
-    "q_theta_overlap" -> ((s, d) => Relational.thetaSegmentOverlap(s, d)),
-    "q_kll_quantiles" -> ((s, d) => Relational.kllQuantileRollup(s, d)),
+    "q_asof_native",
+    "q_triangles",
+    "q_pagerank",
+    "q_decile_stats",
+    "q_epoch_shuffle",
+    "q_theta_overlap",
+    "q_kll_quantiles",
     // statistics tier (this session): spearman's rank histograms grow
     // with |distinct values| (price ≈ rows, so the two-phase prefix sum
     // is the measured path); ohlc is one O(1)-state aggregate over the
@@ -271,25 +266,23 @@ object ScaleBench {
     // sums; cogroup co-partitions two growing inputs; assoc_rules'
     // pair join grows with Σ basket² over the replicated orders — the
     // superlinear-risk one worth watching (Apriori pruning is the cap)
-    "q_spearman" -> ((s, d) => Stats.spearmanQuantityPrice(s, d)),
-    "q_ohlc" -> ((s, d) => Analytics.ohlcBars(s, d)),
-    "q_rolling_autocorr" -> ((s, d) => Stats.rollingAutocorr(s, d)),
-    "q_rolling_autocorr_dist" -> ((s, d) => Stats.rollingAutocorrDist(s, d)),
+    "q_spearman",
+    "q_ohlc",
+    "q_rolling_autocorr",
+    "q_rolling_autocorr_dist",
     // r14 session-2 restructures (the re-sweep-after-restructure rule):
     // the KM signature pass (one md5 per shingle, no distinct), the
     // portable bloom (filter size grows with the benchmark slice), the
     // quantile grid, and full-corpus LSH clusters (touched-node CC loop)
-    "q_minhash_sig" -> ((s, d) => Dedup.minhashSigExact(s, d)),
-    "q_decontaminate_bloom" -> ((s, d) => TextAnalysis.decontaminateBloom(s, d)),
-    "q_quantile_grid" -> ((s, d) => Relational.quantileGrid(s, d)),
-    "q_dedup_clusters_lsh" -> ((s, d) => Dedup.dupClustersLsh(s, d)),
-    "q_cogroup" -> ((s, d) => Analytics.cogroupCustomerActivity(s, d)),
-    "q_assoc_rules" -> ((s, d) => Analytics.associationRules(s, d)),
-    // default -1 = the operator's own self-scaling bits (log2 of corpus
-    // count, constant occupancy) — the production path; SCALE_ANN_BITS
-    // overrides for occupancy-vs-cost experiments
-    "q_ann_selfjoin" -> ((s, d) => Similarity.annSelfJoin(s, d,
-      bitsPerTable = sys.env.get("SCALE_ANN_BITS").map(_.toInt).getOrElse(-1))),
+    "q_minhash_sig",
+    "q_decontaminate_bloom",
+    "q_quantile_grid",
+    "q_dedup_clusters_lsh",
+    "q_cogroup",
+    "q_assoc_rules",
+    // the operator's own self-scaling bits (log2 of corpus count,
+    // constant occupancy) — the production path
+    "q_ann_selfjoin",
     // drift/fit tier (r8 driver session): psi/jsd are one grouped-count
     // pass over events plus O(|types|×bins) term arithmetic; chi2 is
     // three marginal scans over documents; linreg is the
@@ -297,22 +290,22 @@ object ScaleBench {
     // their scan near-linearly. feature_hash shuffles |doc × distinct
     // bucket| rows (≤ 64/doc); rand_proj is the per-row HOF loop —
     // the one with real per-row arithmetic (8×64 mults) worth watching
-    "q_psi_drift" -> ((s, d) => graft.operators.Drift.psiDrift(s, d)),
-    "q_js_divergence" -> ((s, d) => graft.operators.Drift.jsDivergence(s, d)),
-    "q_chi2" -> ((s, d) => graft.operators.Drift.chi2Independence(s, d)),
-    "q_linreg" -> ((s, d) => Stats.olsRegression(s, d)),
-    "q_feature_hash" -> ((s, d) => TextAnalysis.featureHash(s, d)),
-    "q_rand_proj" -> ((s, d) => graft.operators.Quantization.randomProjection(s, d)),
+    "q_psi_drift",
+    "q_js_divergence",
+    "q_chi2",
+    "q_linreg",
+    "q_feature_hash",
+    "q_rand_proj",
     // round-8 vector-layout verbs: quantized_knn broadcasts 10 query
     // code vectors against a factor× corpus scan (map-side top-k);
     // ann_pq's codebook training samples a bounded set but encoding
     // touches every vector; semantic_dedup rides the banded self-join's
     // occupancy model like ann_selfjoin; countmin's shuffle is the
     // constant d×w grid regardless of input rows
-    "q_quantized_knn" -> ((s, d) => graft.operators.Quantization.quantizedKnn(s, d)),
-    "q_ann_pq" -> ((s, d) => Similarity.pqCosine(s, d)),
-    "q_semantic_dedup" -> ((s, d) => Dedup.semanticDedup(s, d)),
-    "q_countmin" -> ((s, d) => graft.operators.CountMin.heavyKeys(s, d)),
+    "q_quantized_knn",
+    "q_ann_pq",
+    "q_semantic_dedup",
+    "q_countmin",
     // this session's verbs: ks/mwu ride the distinct-value histogram
     // (replica price/value decorrelation grows it realistically) through
     // the sliced prefix-sum core; row_ids is the two-phase numbering
@@ -325,30 +318,30 @@ object ScaleBench {
     // bounded top-100 arms over growing corpora; semantic_decontam the
     // broadcast eval screen (eval slice grows with the corpus here, so
     // watch it — production pins |eval| constant)
-    "q_ks_test" -> ((s, d) => Stats.ksTest(s, d)),
-    "q_mwu" -> ((s, d) => Stats.mannWhitneyU(s, d)),
-    "q_row_ids" -> ((s, d) => Relational.globalRowIds(s, d)),
-    "q_interval_join" -> ((s, d) => Analytics.intervalOverlapJoin(s, d)),
-    "q_bloom_join" -> ((s, d) => Relational.bloomPrunedJoin(s, d)),
-    "q_seasonal" -> ((s, d) => Stats.seasonalProfile(s, d)),
-    "q_phash" -> ((s, d) => graft.operators.Multimodal.imagePhash(s, d)),
-    "q_rrf" -> ((s, d) => TextAnalysis.rrfHybrid(s, d)),
-    "q_semantic_decontam" -> ((s, d) => Similarity.semanticDecontaminate(s, d)),
+    "q_ks_test",
+    "q_mwu",
+    "q_row_ids",
+    "q_interval_join",
+    "q_bloom_join",
+    "q_seasonal",
+    "q_phash",
+    "q_rrf",
+    "q_semantic_decontam",
     // lm_score: two model count passes + a broadcast scoring join, all
     // riding the pair-stream scan; session_window: the native session
     // aggregate, one user-keyed exchange over factor× users; bpe_train:
     // the word-count pass grows with the corpus, every merge round runs
     // on the (constant-vocabulary) word relation
-    "q_lm_score" -> ((s, d) => TextAnalysis.lmScore(s, d)),
-    "q_session_window" -> ((s, d) => Analytics.sessionWindowCounts(s, d)),
-    "q_bpe_train" -> ((s, d) => TextAnalysis.bpeTrain(s, d)),
+    "q_lm_score",
+    "q_session_window",
+    "q_bpe_train",
     // training loops: logreg = iters × (scan + k-column aggregate) —
     // should ride the scan; bpe_apply = retrain + broadcast-rule
     // map-side segmentation over factor× documents
-    "q_logreg" -> ((s, d) => graft.operators.LogReg.trainEnClassifier(s, d)),
-    "q_bpe_apply" -> ((s, d) => TextAnalysis.bpeApply(s, d)),
+    "q_logreg",
+    "q_bpe_apply",
     // cell moments broadcast over the growing stream; flags filter map-side
-    "q_seasonal_anomaly" -> ((s, d) => Stats.seasonalAnomalies(s, d)),
+    "q_seasonal_anomaly",
     // round-10 table-format verbs: the COW DML pair is the one whose
     // cost is the REWRITE itself (one scan + one ordered write of
     // factor× documents — the table build on first touch is part of the
@@ -356,40 +349,40 @@ object ScaleBench {
     // update to a range scan whose file pruning should hold the READ
     // side near-constant; dsir is two bucket-count passes + a broadcast
     // scoring join riding the token stream like lm_score
-    "q_sql_update" -> ((s, d) => graft.operators.SqlDml.sqlUpdate(s, d)),
-    "q_sql_merge" -> ((s, d) => graft.operators.SqlDml.sqlMerge(s, d)),
-    "q_zonemap_scan" -> ((s, d) => graft.operators.SqlDml.sqlZonedTable(s, d)),
+    "q_sql_update",
+    "q_sql_merge",
+    "q_zonemap_scan",
     // narrowed COW: a FIXED key-range update + range read on the
     // clustered table — the verb whose cost must NOT ride the factor
     // (zone maps bind O(matching files) on both the rewrite and the
     // read regardless of corpus size; only the first-touch table build
     // is data-sized)
-    "q_cow_narrow" -> ((s, d) => graft.operators.SqlDml.sqlNarrowUpdate(s, d)),
+    "q_cow_narrow",
     // incremental dedup rides two digest scans + one anti-join shuffle
     // (both sides grow with the factor — expect ~linear); the SPJ join
     // is the shuffle-free fact⋈fact (first touch builds both bucketed
     // tables; steady-state reps measure the aligned merge itself)
-    "q_incremental_dedup" -> ((s, d) => graft.operators.Dedup.incrementalDedup(s, d)),
-    "q_spj_join" -> ((s, d) => graft.operators.SqlDml.sqlSpjJoin(s, d)),
-    "q_dsir_resample" -> ((s, d) => TextAnalysis.dsirResample(s, d)),
+    "q_incremental_dedup",
+    "q_spj_join",
+    "q_dsir_resample",
     // scan-side metadata answers (round-10 final session): agg_pushdown
     // must be ~CONSTANT at any factor (a one-row LocalScan from the
     // sidecar; only the first-touch table build is data-sized);
     // runtime_prune joins a fixed key band, so the pruned fact read is
     // O(band) files while the dim scan grows linearly — the ratio
     // should sit well under the factor
-    "q_agg_pushdown" -> ((s, d) => graft.operators.SqlDml.sqlAggPushdown(s, d)),
-    "q_runtime_prune" -> ((s, d) => graft.operators.SqlDml.sqlRuntimePrune(s, d)),
+    "q_agg_pushdown",
+    "q_runtime_prune",
     // z-ordered 2-D box: the box is RANGE-RELATIVE (~6% of rows at any
     // SF), so the read grows with the corpus but tile pruning holds the
     // bound FILE FRACTION constant — expect well under the factor, not
     // constant (first touch builds the Morton layout)
-    "q_zorder_table" -> ((s, d) => graft.operators.SqlDml.sqlZOrderTable(s, d)),
+    "q_zorder_table",
     // bloom-sidecar point lookup: 3 fixed keys on a hash layout — the
     // probe binds O(keys) files at any corpus size (only the
     // first-touch table build and the per-file sidecar pass are
     // data-sized)
-    "q_bloom_skip" -> ((s, d) => graft.operators.SqlDml.sqlBloomSkip(s, d)),
+    "q_bloom_skip",
     // round-10 final-session verbs: the inverted index is two map-side-
     // combined aggregations whose shuffles are (token,doc)- then
     // |vocab|-sized — replicas share a vocabulary, so expect sublinear;
@@ -399,11 +392,11 @@ object ScaleBench {
     // collapses to (word,count) once and runs EM on the vocabulary —
     // the factor should barely show; binary kNN is a broadcast
     // 10-query × corpus scan over two packed words per row
-    "q_inverted_index" -> ((s, d) => TextAnalysis.invertedIndex(s, d)),
-    "q_readability" -> ((s, d) => TextAnalysis.readability(s, d)),
-    "q_bootstrap_ci" -> ((s, d) => Stats.bootstrapMeans(s, d)),
-    "q_unigram_train" -> ((s, d) => TextAnalysis.unigramTrain(s, d)),
-    "q_binary_knn" -> ((s, d) => graft.operators.Quantization.binaryKnn(s, d)),
+    "q_inverted_index",
+    "q_readability",
+    "q_bootstrap_ci",
+    "q_unigram_train",
+    "q_binary_knn",
     // round-10 analytics verbs over the replicated tables (rfm reads
     // orders only; gini/delta_join_view read orders+customer — none of
     // which the replica set carries — their shapes are the proven broadcast-join + two-phase
@@ -415,29 +408,29 @@ object ScaleBench {
     // aggregates into 2-row sufficient stats; the graph pair rides the
     // densifying co-order front like q_triangles (factor× orders over
     // the same part catalog), k-core with a per-round localCheckpoint
-    "q_attribution_position" -> ((s, d) => Analytics.positionAttribution(s, d)),
+    "q_attribution_position",
     // LOO target encode after the r10-verdict fix: groupBy to a
     // handful of category rows + broadcast join back — the scan term
     // rides the factor, the join adds no shuffle of the log
-    "q_target_encode" -> ((s, d) => Stats.targetEncode(s, d)),
-    "q_kaplan_meier" -> ((s, d) => Stats.kaplanMeier(s, d)),
-    "q_cuped" -> ((s, d) => Stats.cupedAdjustment(s, d)),
-    "q_clustering_coeff" -> ((s, d) => Analytics.clusteringCoefficient(s, d)),
-    "q_kcore" -> ((s, d) => Analytics.kcore(s, d)),
+    "q_target_encode",
+    "q_kaplan_meier",
+    "q_cuped",
+    "q_clustering_coeff",
+    "q_kcore",
     // k-hop BFS over the densifying co-order graph — the remaining
     // graph-tier verb with no 100× datapoint before r14 (frontier joins
     // ride the |edges| front like kcore's rounds)
-    "q_khop" -> ((s, d) => Analytics.khopDistances(s, d)),
+    "q_khop",
     // the closing session-4 verbs: Holt (and its backtest) fold over
     // the CALENDAR-bounded per-type hourly axis — replicas add users,
     // not hours, so only the first aggregate rides the factor; AUC is
     // the |distinct scores| histogram through the sliced prefix sum;
     // the windowed funnel is the q_funnel join ladder plus one pushed
     // predicate per stage
-    "q_holt_linear" -> ((s, d) => Stats.holtLinear(s, d)),
-    "q_holt_backtest" -> ((s, d) => Stats.holtBacktest(s, d)),
-    "q_auc" -> ((s, d) => Stats.aucValuePurchase(s, d)),
-    "q_funnel_window" -> ((s, d) => Analytics.funnelWindowed(s, d)),
+    "q_holt_linear",
+    "q_holt_backtest",
+    "q_auc",
+    "q_funnel_window",
     // round-11 verbs: log-rank/MK/Theil–Sen fold the log to per-user or
     // per-(type,hour) rows first — the hour axis is calendar-bounded,
     // so pair joins and suffix windows are FIXED-size at any factor and
@@ -445,27 +438,27 @@ object ScaleBench {
     // explode → vocab-sized shuffle → broadcast join (one scan term);
     // q_sql_cdc reads only the commit's churn (files diff), so the
     // factor shows in the one-time fixture build + merge, not the feed
-    "q_logrank" -> ((s, d) => Stats.logRank(s, d)),
-    "q_mann_kendall" -> ((s, d) => Stats.mannKendall(s, d)),
-    "q_theil_sen" -> ((s, d) => Stats.theilSen(s, d)),
-    "q_vocab_coverage" -> ((s, d) => TextAnalysis.vocabCoverage(s, d)),
+    "q_logrank",
+    "q_mann_kendall",
+    "q_theil_sen",
+    "q_vocab_coverage",
     // Holt-Winters folds the same bounded axis as holt_linear; CCF/tau
     // and the z-test collapse to bounded sufficient stats; lexical
     // diversity is the vocab-bounded two-level aggregation
-    "q_holt_winters" -> ((s, d) => Stats.holtWinters(s, d)),
-    "q_cross_correlation" -> ((s, d) => Stats.crossCorrelation(s, d)),
-    "q_kendall_tau" -> ((s, d) => Stats.kendallTau(s, d)),
-    "q_two_proportion_z" -> ((s, d) => Stats.twoProportionZ(s, d)),
-    "q_lexical_diversity" -> ((s, d) => TextAnalysis.lexicalDiversity(s, d)),
-    "q_sql_cdc" -> ((s, d) => graft.operators.SqlDml.sqlCdc(s, d)),
+    "q_holt_winters",
+    "q_cross_correlation",
+    "q_kendall_tau",
+    "q_two_proportion_z",
+    "q_lexical_diversity",
+    "q_sql_cdc",
     // gopher rules are a pure codegen'd scan (linear at worst); the
     // source-overlap pair join is bounded by the shared-shingle front
     // (distinct (shingle, source) rows — replicas decorrelate shingles,
     // so the front grows far slower than the corpus); audio features
     // are executor-local per-row codec work
-    "q_gopher_rules" -> ((s, d) => TextAnalysis.gopherRules(s, d)),
-    "q_source_overlap" -> ((s, d) => TextAnalysis.sourceOverlap(s, d)),
-    "q_audio_features" -> ((s, d) => graft.operators.Multimodal.audioFeatures(s, d)),
+    "q_gopher_rules",
+    "q_source_overlap",
+    "q_audio_features",
     // r11-verdict backfill: matryoshka is the twice-scored knn_brute
     // broadcast shape — post-fix it ranks via the bounded aggregator, so
     // the factor should show only in the scan/score term (the one
@@ -473,161 +466,143 @@ object ScaleBench {
     // table-format verbs are METADATA-bounded (fixture build + a
     // files-diff / stats read) — swept to prove the flat ratio, not to
     // watch a data term
-    "q_matryoshka_eval" -> ((s, d) => Similarity.matryoshkaEval(s, d)),
+    "q_matryoshka_eval",
     // r12 verbs: the spectral fold is executor-local per-row codec +
     // O(bins·frame) integer work (same shape as audio_features); the
     // kNN graph rides the self-join's occupancy model plus one |V|k
     // equi-join for the mutual flag
-    "q_audio_spectrum" -> ((s, d) => graft.operators.Multimodal.audioSpectrum(s, d)),
-    "q_knn_graph" -> ((s, d) => Similarity.knnGraph(s, d,
-      bitsPerTable = sys.env.get("SCALE_ANN_BITS").map(_.toInt).getOrElse(-1))),
-    "q_sql_merge_evolve" -> ((s, d) => graft.operators.SqlDml.sqlMergeEvolve(s, d)),
-    "q_branch_mor" -> ((s, d) => graft.operators.SqlDml.sqlBranchMor(s, d)),
-    "q_cbo_native" -> ((s, d) => graft.operators.Cbo.cboNativeVt(s, d)),
-    "q_time_to_convert" -> ((s, d) => Analytics.timeToConvert(s, d)),
+    "q_audio_spectrum",
+    "q_knn_graph",
+    "q_sql_merge_evolve",
+    "q_branch_mor",
+    "q_cbo_native",
+    "q_time_to_convert",
     // n-gram repetition shuffles distinct (doc, gram) rows — ≤ token
     // count, corpus-linear with map-side combine
-    "q_ngram_repetition" -> ((s, d) => TextAnalysis.ngramRepetition(s, d)),
+    "q_ngram_repetition",
     // net-change classification and partition evolution are
     // METADATA-bounded like q_sql_cdc (fixture build + changed-file
     // diffs / pruned reads) — swept to prove the flat ratio
-    "q_cdc_net" -> ((s, d) => graft.operators.SqlDml.sqlCdcNet(s, d)),
-    "q_partition_evolve" -> ((s, d) => graft.operators.SqlDml.sqlPartitionEvolve(s, d)),
+    "q_cdc_net",
+    "q_partition_evolve",
     // PCA is one sufficient-stats scan + one broadcast projection pass
-    "q_pca_project" -> ((s, d) => Similarity.pcaProject(s, d)),
+    "q_pca_project",
     // MAD rides two histogram passes; paths one user-keyed shuffle;
     // deflate is executor-local CPU-bound per-row codec work
-    "q_mad_summary" -> ((s, d) => Stats.madOutliers(s, d)),
-    "q_user_paths" -> ((s, d) => Analytics.userPaths(s, d)),
-    "q_compression_ratio" -> ((s, d) => TextAnalysis.compressionRatio(s, d)),
+    "q_mad_summary",
+    "q_user_paths",
+    "q_compression_ratio",
     // wilcoxon folds to a per-user groupBy + |d|-histogram window;
     // zipf/nb are token-explode corpus verbs with vocab-bounded shuffles
-    "q_wilcoxon_sr" -> ((s, d) => Stats.wilcoxonSignedRank(s, d)),
-    "q_zipf_fit" -> ((s, d) => TextAnalysis.zipfFit(s, d)),
-    "q_nb_confusion" -> ((s, d) => TextAnalysis.nbLangClassify(s, d)),
+    "q_wilcoxon_sr",
+    "q_zipf_fit",
+    "q_nb_confusion",
     // changepoint is one scan + bounded-axis windows; the validity
     // indices are corpus × |labels| broadcast-centroid scans
-    "q_changepoint" -> ((s, d) => Stats.changepoint(s, d)),
-    "q_silhouette" -> ((s, d) => Similarity.silhouetteByLabel(s, d)),
-    "q_calinski" -> ((s, d) => Similarity.calinskiHarabasz(s, d)),
+    "q_changepoint",
+    "q_silhouette",
+    "q_calinski",
     // burstiness lags within (user,type) partitions; entropy rate is
     // the same transition stream folded to a |types|² term grid
-    "q_burstiness" -> ((s, d) => Stats.burstiness(s, d)),
-    "q_entropy_rate" -> ((s, d) => Analytics.entropyRate(s, d)),
+    "q_burstiness",
+    "q_entropy_rate",
     // effect size is one arm-split scan; stream_cusum replays the
     // corpus through bounded per-type hourly state
-    "q_effect_size" -> ((s, d) => Stats.effectSize(s, d)),
-    "q_stream_cusum" -> ((s, d) => graft.streaming.Streaming.streamCusum(s, d)),
+    "q_effect_size",
+    "q_stream_cusum",
     // stickiness's ×30 presence projection and the process graph's
     // per-edge gap histograms are the event-scan class
-    "q_stickiness" -> ((s, d) => Analytics.stickiness(s, d)),
-    "q_process_edges" -> ((s, d) => Analytics.processEdges(s, d)),
+    "q_stickiness",
+    "q_process_edges",
     // round-12 second-session batch: durbin/icc/friedman/cronbach/
     // decision_stump are one-or-two-scan sufficient-statistic verbs;
     // assortativity adds two |edges|-row degree joins over the distinct
     // incidence; item_cosine is the assoc_rules pair-join class (the
     // superlinear-risk one to watch); hits is a scan plus 16 fixed
     // |types|-sized half-steps
-    "q_durbin_watson" -> ((s, d) => Stats.durbinWatson(s, d)),
-    "q_icc" -> ((s, d) => Stats.iccOneWay(s, d)),
-    "q_friedman" -> ((s, d) => Stats.friedmanTest(s, d)),
-    "q_cronbach" -> ((s, d) => Stats.cronbachAlpha(s, d)),
-    "q_decision_stump" -> ((s, d) => Stats.decisionStump(s, d)),
-    "q_assortativity" -> ((s, d) => Analytics.degreeAssortativity(s, d)),
-    "q_item_cosine" -> ((s, d) => Analytics.itemCosine(s, d)),
-    "q_hits" -> ((s, d) => Analytics.hitsEventTypes(s, d)),
+    "q_durbin_watson",
+    "q_icc",
+    "q_friedman",
+    "q_cronbach",
+    "q_decision_stump",
+    "q_assortativity",
+    "q_item_cosine",
+    "q_hits",
     // fifth wave: fisher's F table + t-range are corpus-linear; hurst/
     // pacf/runs ride the calendar-bounded hourly axis; mood pays one
     // histogram + one classification scan; fertility is the token
     // explode (data-dominated); stream_topk replays the corpus through
     // O(k) per-type state
-    "q_fisher_exact" -> ((s, d) => Stats.fisherExact(s, d)),
-    "q_hurst" -> ((s, d) => Stats.hurstExponent(s, d)),
-    "q_pacf" -> ((s, d) => Stats.pacf(s, d)),
-    "q_mood_median" -> ((s, d) => Stats.moodMedian(s, d)),
-    "q_bartlett" -> ((s, d) => Stats.bartlett(s, d)),
-    "q_runs_test" -> ((s, d) => Stats.runsTest(s, d)),
-    "q_fertility" -> ((s, d) => TextAnalysis.tokenizerFertility(s, d)),
-    "q_stream_topk" -> ((s, d) => graft.streaming.Streaming.streamTopK(s, d)),
+    "q_fisher_exact",
+    "q_hurst",
+    "q_pacf",
+    "q_mood_median",
+    "q_bartlett",
+    "q_runs_test",
+    "q_fertility",
+    "q_stream_topk",
     // sixth wave: kruskal pays a value-domain histogram + a (group,
     // value) aggregate; jarque/grubbs are scan-dominated moment verbs
-    "q_kruskal_wallis" -> ((s, d) => Stats.kruskalWallis(s, d)),
-    "q_jarque_bera" -> ((s, d) => Stats.jarqueBera(s, d)),
-    "q_grubbs" -> ((s, d) => Stats.grubbs(s, d)),
-    "q_welch_anova" -> ((s, d) => Stats.welchAnova(s, d)),
+    "q_kruskal_wallis",
+    "q_jarque_bera",
+    "q_grubbs",
+    "q_welch_anova",
     // seventh wave: the image near-dup join pays one decode scan plus
     // band-bucket collisions (the simhash contract on media);
     // theil_u rides the calendar-bounded Holt core
-    "q_image_neardups" -> ((s, d) => graft.operators.Multimodal.imageNearDups(s, d)),
-    "q_theil_u" -> ((s, d) => Stats.theilU(s, d)),
+    "q_image_neardups",
+    "q_theil_u",
     // eighth wave: exact_rate pays one events scan + a purchase-count-
     // sized outcome axis (corpus-linear in the conditioned total);
     // jpeg_decode is the executor-local encode+decode scan shape;
     // simhash rides the md5-packed portable token hashes since r13
-    "q_exact_rate" -> ((s, d) => Stats.exactRateTest(s, d)),
-    "q_jpeg_decode" -> ((s, d) => graft.operators.Multimodal.jpegDecode(s, d)),
+    "q_exact_rate",
+    "q_jpeg_decode",
     // the AC-carrying twin (r14): same executor-local scan shape, plus
     // the separable-IDCT sparse path this sweep exists to keep honest
-    "q_jpeg_ac_decode" -> ((s, d) => graft.operators.Multimodal.jpegAcDecode(s, d)),
-    "q_simhash_neardups" -> ((s, d) => Dedup.simhashNearDups(s, d)))
+    "q_jpeg_ac_decode",
+    "q_simhash_neardups")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse("/tmp/graft-scale")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder().master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.register(spark)
+    // q_percentiles (the buffering twin) is MEASURED to OOM the JVM at
+    // 100× (BASELINE.md) — that demonstration is q_percentiles_dist's
+    // reason to exist, but it must not kill an unattended full sweep;
+    // an explicit SPARK_GRAFT_ONLY still runs it at any factor
+    val skipAtScale = if (factor > 10) Set("q_percentiles") else Set.empty[String]
+    val names = Bench.only(targets).getOrElse(targets.filterNot(skipAtScale))
+    val queries = SparkEntry.queries
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     replicate(spark, sfDir, workDir, factor)
 
     // warm JIT/codegen paths on the small side before timing anything
-    try force(SparkEntry.entry(spark)) catch { case _: Throwable => () }
+    Bench.warmUp(spark)
 
     val calibTimes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def runCalib(): Unit = {
-      val t0 = System.nanoTime()
-      // same pinned probe as Bench (same code path, via SparkEntry's q1
-      // shape would drift — call Bench's own impl)
-      try { Bench.calibrationProbe(spark, sfDir); calibTimes += (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => () }
-    }
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def time(name: String, dir: String): Double =
+      median(Bench.timeReps(name, reps, errors)(queries(name)(spark, dir)))
 
-    def time(fn: (SparkSession, String) => DataFrame, dir: String): Double =
-      median((1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        force(fn(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      })
-
-    def r4(x: Double): Double = math.rint(x * 10000) / 10000
-    // SCALE_ONLY=q_a,q_b restricts the sweep; SCALE_ANN_BITS overrides
-    // the ANN bits knob — for occupancy-vs-cost experiments
-    val only = sys.env.get("SCALE_ONLY").map(_.split(",").toSet)
-    // q_percentiles (the buffering twin) is MEASURED to OOM the JVM at
-    // 100× (BASELINE.md) — that demonstration is q_percentiles_dist's
-    // reason to exist, but it must not kill an unattended full sweep;
-    // an explicit SCALE_ONLY still runs it at any factor
-    val skipAtScale = if (factor > 10) Set("q_percentiles") else Set.empty[String]
-    val rows = targets
-      .filter(t => only.map(_(t._1)).getOrElse(!skipAtScale(t._1)))
-      .map { case (name, fn) =>
-      runCalib()
-      val t1 = time(fn, sfDir)
-      val tN = time(fn, workDir)
+    val rows = names.map { name =>
+      Bench.runCalib(spark, sfDir, calibTimes)
+      val t1 = time(name, sfDir)
+      val tN = time(name, workDir)
       (name, t1, tN)
     }
-    runCalib()
+    Bench.runCalib(spark, sfDir, calibTimes)
     val oneX = rows.map { case (n, t1, _) => s"${jstr(n)}:${r4(t1)}" }.mkString("{", ",", "}")
     val nX = rows.map { case (n, _, tN) => s"${jstr(n)}:${r4(tN)}" }.mkString("{", ",", "}")
     val ratio = rows.map { case (n, t1, tN) =>
-      s"${jstr(n)}:${r4(if (t1 > 0) tN / t1 else -1)}"
+      s"${jstr(n)}:${r4(if (t1 > 0 && tN > 0) tN / t1 else -1)}"
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale","factor":$factor,"reps":$reps,"t_1x":$oneX,"t_${factor}x":$nX,"ratio":$ratio,"calib_runs":${calibTimes.map(r4).mkString("[", ",", "]")},"calib":${r4(median(calibTimes.toSeq))},"sf":${jstr(sfDir)}}""")
+    val errJson = errors.map { case (k, m) => s"${jstr(k)}:${jstr(m)}" }.mkString("{", ",", "}")
+    println(s"""{"metric":"scale","factor":$factor,"reps":$reps,"t_1x":$oneX,"t_${factor}x":$nX,"ratio":$ratio,"errors":$errJson,"calib_runs":${calibTimes.map(r4).mkString("[", ",", "]")},"calib":${r4(median(calibTimes.toSeq))},"sf":${jstr(sfDir)}}""")
     spark.stop()
+    // like Bench: a failed query fails the run, after the line prints
+    if (errors.nonEmpty) sys.exit(1)
   }
 }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, to_json}
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 import java.nio.file.{Files, Paths}
@@ -30,45 +30,29 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // one shared config surface (GraftSession.tune); explicit partition
-    // count override so local[N] and shuffle partitions stay in lockstep
-    val spark = GraftSession.tune(SparkSession.builder().master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = SparkEntry.queries
+    val names = Bench.only(queries.keys.toSeq).getOrElse(queries.keys.toSeq)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // dev loop only: SPARK_GRAFT_ONLY=q_a,q_b dumps a subset; the driver
-    // sets no env so it always gets the full surface
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // fail fast on a typo'd name: a silent no-match sweep would exit
-    // green with zero dumps and read as a pass (ADVICE r08)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try flattenNested(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try flattenNested(queries(name)(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        failures(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}".take(500)
+        failures(name) = Bench.failure(e, max = 500)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
     // the manifest and oracle set honor the same filter as the dumps —
     // otherwise a SPARK_GRAFT_ONLY dev run declares the full surface and
     // compare_oracle.py drowns the one result in MISSING-DUMP failures
+    val selected = names.toSet
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.filter(k => only.forall(_.contains(k)))
-        .toSeq.sorted.map(q).mkString("[", ",", "]"))
+      names.sorted.map(q).mkString("[", ",", "]"))
     Files.writeString(Paths.get(s"$outDir/_failures.json"),
       failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     // cautionary-plan tags: which queries are kept as measurable

@@ -196,7 +196,7 @@ object Similarity {
     * the occupancy the recall numbers below are calibrated against;
     * p≈0.6/bit → p^4≈0.13/table, 1−(1−0.13)^8 ≈ 0.67 recall@5 on the
     * synthetic near-cosine-0.3 neighbors), while the 100× ScaleBench
-    * corpus (n=200k) wants ≈24/bucket — the SCALE_ANN_BITS sweep showed
+    * corpus (n=200k) wants ≈24/bucket — a manual bitsPerTable sweep showed
     * occupancy 98 → 24 (11 → 13 bits) cutting the self-join 267 s →
     * 134.6 s. Constant occupancy would hold time ∝ n × occ but leave
     * that 2× on the table: candidate scoring outweighs the linear

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.sources.Tables
@@ -17,10 +16,7 @@ import graft.sources.Tables
 object EdgeBuildProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.tune(SparkSession.builder().master("local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
     val old = li.as("x").join(li.as("y"),

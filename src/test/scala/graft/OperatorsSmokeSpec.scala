@@ -32,6 +32,16 @@ class OperatorsSmokeSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracleSql without query: $missing")
   }
 
+  test("every cautionary twin pair is registered and shares one oracle") {
+    SparkEntry.cautionary.foreach { case (cautionary, twin) =>
+      assert(SparkEntry.queries.contains(cautionary), s"$cautionary is not a query")
+      assert(SparkEntry.queries.contains(twin), s"$twin is not a query")
+      val oracle = SparkEntry.oracleSql.get(cautionary)
+      assert(oracle.isDefined, s"$cautionary has no oracle")
+      assert(oracle == SparkEntry.oracleSql.get(twin), s"$cautionary and $twin oracles differ")
+    }
+  }
+
   test("approx_count_distinct within 5% of exact") {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
