@@ -7,7 +7,9 @@ package graft
   * you'd want at 100 TB" review from SURVEY §7.
   *
   * Usage: runMain graft.Explain <sfDir> [queryName ...]; an unknown
-  * name fails the run before any plan prints.
+  * name fails the run before any plan prints. A query whose plan fails
+  * to build prints `EXPLAIN FAILED`, and the run exits 1 once every name
+  * has printed.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -16,12 +18,15 @@ object Explain {
     val names = Bench.only(all, Option.when(args.length > 1)(args.tail.toSeq)).getOrElse(all)
     // shared config surface so the audited plans are the ones Bench runs
     val spark = GraftSession.local(4)
-    names.foreach { name =>
+    val failed = names.count { name =>
       println(s"\n===================== $name =====================")
-      try println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+      try {
+        println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+        false
+      } catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}"); true }
     }
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

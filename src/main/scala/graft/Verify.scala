@@ -7,7 +7,8 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. Also writes
   * queries.json (the declared query manifest) and _failures.json so a
   * query that throws shows up as a FAIL instead of silently vanishing
-  * from the dump set (ADVICE r01).
+  * from the dump set (ADVICE r01). A non-empty _failures.json makes the
+  * run exit 1, after all four manifests are written.
   */
 object Verify {
   import JsonText.{quote => q}
@@ -63,5 +64,6 @@ object Verify {
           s"${q(k)}: {${q("cautionary")}: true, ${q("production_twin")}: ${q(twin)}}" }
         .mkString("{", ",", "}"))
     spark.stop()
+    if (failures.nonEmpty) sys.exit(1)
   }
 }

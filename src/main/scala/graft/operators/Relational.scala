@@ -1708,30 +1708,40 @@ object Relational {
   }
 
   /** Audience overlap by theta sketches — the set-ALGEBRA extension of
-    * [[hllMergedDistinct]]: per-segment distinct-user sketches built in
-    * one pass, then INTERSECTED ("users who did both") and unioned
-    * ("either") by re-aggregating the stored sketch bytes
-    * ([[graft.functions.ThetaSketch]]). HLL can only union; computing
-    * the overlap exactly would shuffle the full id universe per segment
-    * pair — the theta path moves ≤ 4096 hashes per segment instead, at
-    * any scale. Below that threshold the sketch is exact, so the DuckDB
-    * oracle (COUNT DISTINCT / INTERSECT) hash-matches at verify scale;
-    * the estimation-regime error bound is pinned in
-    * `SketchPropertiesSpec`.
+    * [[hllMergedDistinct]]: one pass builds a distinct-user sketch per
+    * segment, and the overlap ("users who did both") and reach
+    * ("either") come from intersecting and unioning those sketches
+    * instead of shuffling the full id universe per segment pair.
+    *
+    * Scale contract: each sketch is bounded (lgNomEntries = 12, so at
+    * most 4096 retained hashes, ~32 KiB worst case), map-side partial
+    * aggregation applies, and the sketch bytes re-aggregate later with
+    * `theta_union_agg` / `theta_intersection_agg`. Below ~4096 distincts
+    * the sketch is in exact mode and the estimates ARE the exact counts,
+    * so the DuckDB oracle (COUNT DISTINCT / INTERSECT) hash-matches at
+    * verify scale; `SketchPropertiesSpec` pins the estimation regime's
+    * error bound.
+    *
+    * Both sketches come from one global aggregate, so a segment with no
+    * rows still has an (empty) sketch and its overlap is 0; a group-by
+    * per segment would drop its row and leave the other to intersect
+    * with itself. The scalar `theta_intersection` also answers 0 over
+    * no input at all, where `theta_intersection_agg` throws. The
+    * built-in estimate is a BIGINT; the cast keeps the DOUBLE schema.
     */
   def thetaSegmentOverlap(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.ThetaSketch
-    val perType = Tables(spark, dir, "events")
+    def users(eventType: String) =
+      theta_sketch_agg(when(col("event_type") === eventType, col("user_id")))
+    def est(sk: Column) = theta_sketch_estimate(sk).cast("double")
+    Tables(spark, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
-      .groupBy(col("event_type"))
-      .agg(ThetaSketch.agg(col("user_id")).as("sk"))
-    val perScope = perType.select(col("event_type").as("scope"),
-      ThetaSketch.estimate(col("sk")).as("est_users"))
-    val both = perType.agg(ThetaSketch.intersectAgg(col("sk")).as("sk"))
-      .select(lit("both").as("scope"), ThetaSketch.estimate(col("sk")).as("est_users"))
-    val either = perType.agg(ThetaSketch.unionAgg(col("sk")).as("sk"))
-      .select(lit("either").as("scope"), ThetaSketch.estimate(col("sk")).as("est_users"))
-    perScope.unionByName(both).unionByName(either)
+      .agg(users("purchase").as("p"), users("click").as("c"))
+      .select(stack(lit(4),
+        lit("purchase"), est(col("p")),
+        lit("click"), est(col("c")),
+        lit("both"), est(theta_intersection(col("p"), col("c"))),
+        lit("either"), est(theta_union(col("p"), col("c"))))
+        .as(Seq("scope", "est_users")))
   }
 
   /** Mergeable quantile rollup on KLL sketches — the rank-query member
@@ -1740,24 +1750,33 @@ object Relational {
     * sketch per event_type; the global p50/p90/p99 then comes from
     * MERGING those per-group sketch bytes, never re-touching raw values
     * — the persistable-state pattern that answers "p99 over any union
-    * of segments/days" at 100 TB from stored kilobytes. Estimates
-    * carry KLL's randomized-compaction nondeterminism, so correctness
-    * is the rows-only tier + `KllPropertiesSpec` (rank-error bound,
-    * merge-vs-direct consistency, serialization round-trip).
+    * of segments/days" at 100 TB from stored kilobytes. Neither the
+    * exact two-pass quantile core ([[distributedPercentilesOf]]) nor
+    * `approx_percentile` (not re-mergeable from stored state) can.
+    * `q_stream_kll` keeps the same sketch bytes as its streaming state.
+    *
+    * Accuracy contract: KLL at k = 200 (the built-in default) carries
+    * ≤ ~1.65 % rank error at 99 % confidence, quantiles use the
+    * INCLUSIVE criterion, and compaction is RANDOMIZED — estimates are
+    * not run-deterministic, so the query is rows-only and
+    * `KllPropertiesSpec` pins the rank-error bound, merge consistency
+    * and the byte format. A sketch that saw no value answers null.
     */
   def kllQuantileRollup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.KllQuantiles
     val perType = Tables(spark, dir, "events")
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"))
-      .agg(KllQuantiles.agg(col("value")).as("sk"))
-    def qs(scope: org.apache.spark.sql.Column, sk: org.apache.spark.sql.Column) = Seq(
+      .agg(kll_sketch_agg_double(col("value")).as("sk"))
+    // the built-in quantile reader throws on an empty sketch
+    def quantile(sk: Column, q: Double) =
+      when(kll_sketch_get_n_double(sk) > 0, kll_sketch_get_quantile_double(sk, lit(q)))
+    def qs(scope: Column, sk: Column) = Seq(
       scope.as("scope"),
-      KllQuantiles.quantile(sk, 0.5).as("p50"),
-      KllQuantiles.quantile(sk, 0.9).as("p90"),
-      KllQuantiles.quantile(sk, 0.99).as("p99"))
+      quantile(sk, 0.5).as("p50"),
+      quantile(sk, 0.9).as("p90"),
+      quantile(sk, 0.99).as("p99"))
     val perScope = perType.select(qs(col("event_type"), col("sk")): _*)
-    val global = perType.agg(KllQuantiles.mergeAgg(col("sk")).as("sk"))
+    val global = perType.agg(kll_merge_agg_double(col("sk")).as("sk"))
       .select(qs(lit("all"), col("sk")): _*)
     perScope.unionByName(global)
   }

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
 /** Count-min sketch as a RELATION — the frequency-sketch complement to
-  * the typed-aggregator tier (theta/HLL/KLL/Misra-Gries in
-  * `graft.functions`): a (depth × width) grid of counters that answers
-  * point frequency queries with one-sided error (`est ≥ true`,
-  * `est ≤ true + ε·N` w.h.p., ε = e/width).
+  * the other sketch families (Spark's built-in theta/HLL/KLL, and
+  * `graft.functions`' portable HLL and Misra-Gries): a (depth × width)
+  * grid of counters that answers point frequency queries with one-sided
+  * error (`est ≥ true`, `est ≤ true + ε·N` w.h.p., ε = e/width).
   *
   * The sketch here is d×w ROWS, not an opaque binary blob, which buys
   * three things at scale: (1) the build is one map-side-combined

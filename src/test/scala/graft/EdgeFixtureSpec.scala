@@ -206,6 +206,48 @@ class EdgeFixtureSpec extends AnyFunSuite {
     assert(r.isNullAt(r.fieldIndex("rate_ratio")))
   }
 
+  /** q_theta_overlap's answer as scope -> est_users, next to Spark's
+    * exact COUNT(DISTINCT) / INTERSECT / UNION answer over the same dir.
+    */
+  private def thetaVsExact(dir: String): (Map[String, Double], Map[String, Double]) = {
+    val got = Relational.thetaSegmentOverlap(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val ev = graft.sources.Tables(spark, dir, "events")
+    def users(t: String) = ev.filter(col("event_type") === t).select("user_id").distinct()
+    val (p, c) = (users("purchase"), users("click"))
+    val exact = Map("purchase" -> p.count(), "click" -> c.count(),
+      "both" -> p.intersect(c).count(), "either" -> p.union(c).distinct().count())
+    (got, exact.map { case (k, v) => k -> v.toDouble })
+  }
+
+  test("theta overlap: purchases and no clicks give click = 0 and both = 0") {
+    val t0 = 1700000000L * 1000000000L
+    // 4 purchasing users (one buys twice) plus a viewer who never clicks
+    val oneSided = writeEvents(Seq(1L, 2L, 3L, 4L, 2L, 9L).zipWithIndex.map { case (u, i) =>
+      (i.toLong + 1, t0 + i, u, if (u == 9L) "view" else "purchase", Some(1.0), "{}") })
+    val (got, exact) = thetaVsExact(oneSided)
+    assert(got == Map("purchase" -> 4.0, "click" -> 0.0, "both" -> 0.0, "either" -> 4.0))
+    assert(got == exact)
+  }
+
+  test("theta overlap: no purchase or click rows give four 0.0 rows, not an error") {
+    val t0 = 1700000000L * 1000000000L
+    val viewsOnly = writeEvents(Seq(1L, 2L).zipWithIndex.map { case (u, i) =>
+      (i.toLong + 1, t0 + i, u, "view", Some(1.0), "{}") })
+    val (got, exact) = thetaVsExact(viewsOnly)
+    assert(got == Map("purchase" -> 0.0, "click" -> 0.0, "both" -> 0.0, "either" -> 0.0))
+    assert(got == exact)
+  }
+
+  test("kll quantiles: all-null values give one global row with null quantiles") {
+    val t0 = 1700000000L * 1000000000L
+    val noValues = writeEvents(Seq("view", "click", "purchase").zipWithIndex.map { case (t, i) =>
+      (i.toLong + 1, t0 + i, i.toLong + 1, t, None, "{}") })
+    val rows = Relational.kllQuantileRollup(spark, noValues).collect()
+    assert(rows.length == 1, rows.toSeq)
+    assert(rows.head.getString(0) == "all" && (1 to 3).forall(rows.head.isNullAt))
+  }
+
   test("pca: a degenerate (constant-embedding) corpus fails loudly, not with NaNs") {
     val s = spark
     import s.implicits._

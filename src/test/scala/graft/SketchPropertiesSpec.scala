@@ -145,21 +145,27 @@ class SketchPropertiesSpec extends AnyFunSuite {
 
   test("theta: exact below nominal entries; intersection/union within 3% beyond it") {
     import org.apache.spark.sql.functions._
-    import graft.functions.ThetaSketch
     val spark = TestSpark.spark
     import spark.implicits._
+    // intersection and union of the per-group sketches, re-aggregated
+    // from their bytes by Spark's built-in theta functions
+    def setOps(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = df.groupBy($"g").agg(theta_sketch_agg($"k").as("sk"))
+        .agg(theta_sketch_estimate(theta_intersection_agg($"sk")),
+          theta_sketch_estimate(theta_union_agg($"sk")))
+        .head()
+      (r.getLong(0), r.getLong(1))
+    }
     // exact regime: estimates ARE the exact set-algebra answers — the
     // property q_theta_overlap's full hash oracle relies on
     val small = spark.range(0, 3000).select(
       (col("id") % 1000).as("k"),
       when(col("id") % 2 === 0, "a").otherwise("b").as("g"))
-    val sk = small.groupBy($"g").agg(ThetaSketch.agg($"k").as("sk"))
-    val inter = sk.agg(ThetaSketch.estimate(ThetaSketch.intersectAgg($"sk"))).head.getDouble(0)
-    val union = sk.agg(ThetaSketch.estimate(ThetaSketch.unionAgg($"sk"))).head.getDouble(0)
+    val (inter, union) = setOps(small)
     val both = small.filter($"g" === "a").select($"k")
       .intersect(small.filter($"g" === "b").select($"k")).count()
     val either = small.select($"k").distinct().count()
-    assert(inter == both.toDouble && union == either.toDouble,
+    assert(inter == both && union == either,
       s"exact-mode estimates ($inter, $union) != exact ($both, $either)")
     // estimation regime: 200k keys per side, 100k overlap — way past the
     // 4096 retained hashes; set-op estimates must stay within 3%
@@ -168,9 +174,7 @@ class SketchPropertiesSpec extends AnyFunSuite {
       when(col("id") < 200000, "a").otherwise("b").as("g")) // a: [0,200k)
       .union(spark.range(100000, 300000).select(col("id").as("k"), lit("b")))
     // b side: [100k,300k) → overlap [100k,200k) = 100k, union 300k
-    val skBig = big.groupBy($"g").agg(ThetaSketch.agg($"k").as("sk"))
-    val interBig = skBig.agg(ThetaSketch.estimate(ThetaSketch.intersectAgg($"sk"))).head.getDouble(0)
-    val unionBig = skBig.agg(ThetaSketch.estimate(ThetaSketch.unionAgg($"sk"))).head.getDouble(0)
+    val (interBig, unionBig) = setOps(big)
     assert(math.abs(interBig - 100000) / 100000.0 <= 0.03, s"intersection est $interBig")
     assert(math.abs(unionBig - 300000) / 300000.0 <= 0.03, s"union est $unionBig")
   }
