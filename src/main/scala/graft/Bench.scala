@@ -147,7 +147,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     val queries = SparkEntry.queries
-    val names = only(queries.keys.toSeq).getOrElse(queries.keys.toSeq)
+    val all = SparkEntry.registry.map(_.name)
+    val names = only(all).getOrElse(all)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     warmUp(spark)
     // also warm the calibration probe's codegen
@@ -160,7 +161,7 @@ object Bench {
     // three consecutive driver benches. Run ALL batch queries first,
     // then the stream tier as a dedicated tail pass, each tier with its
     // own calibration probes and its own norm line in the summary.
-    val (streamQs, batchQs) = names.partition(_.startsWith("q_stream"))
+    val (streamQs, batchQs) = names.partition(SparkEntry.streamTier)
     // probe host speed every ~16 queries (the probe costs ~0.4 s) so a
     // load spike hitting one query's reps is visible in calib_runs and
     // the calibration median sees the sweep's whole load profile — one
@@ -184,7 +185,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val ok = results.filter { case (k, _) => !errors.contains(k) }
     val total = ok.map(_._2).sum
-    val streamSub = ok.collect { case (k, v) if k.startsWith("q_stream") => v }.sum
+    val streamSub = ok.collect { case (k, v) if streamQs.contains(k) => v }.sum
     val batchSub = total - streamSub
     val calib = median(calibTimes.toSeq)
     val normRatio = if (calib > 0) total / calib else -1.0

@@ -14,7 +14,7 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val all = SparkEntry.queries.keys.toSeq.sorted
+    val all = SparkEntry.registry.map(_.name).sorted
     val names = Bench.only(all, Option.when(args.length > 1)(args.tail.toSeq)).getOrElse(all)
     // shared config surface so the audited plans are the ones Bench runs
     val spark = GraftSession.local(4)

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * mostly per-query fixed cost (scheduling, codegen, micro-batch
   * machinery), so it cannot distinguish "scales linearly" from "constant
   * overhead". This main self-replicates the sf0.1 tables `factor`× into a
-  * work dir and times the data-dominated queries in [[targets]] at 1× and
-  * factor×, interleaved pairwise with the same pinned calibration probe
-  * Bench uses, printing per-query ratios. ~`factor`× growth (or less, as
+  * work dir and times the data-dominated queries (the registry's `scale`
+  * entries, each with its reason) at 1× and factor×, interleaved pairwise
+  * with the same pinned calibration probe Bench uses, printing per-query
+  * ratios. ~`factor`× growth (or less, as
   * fixed cost amortizes) on rising data is the empirical evidence behind
   * PLANS.md's 100 TB projections.
   *
@@ -174,395 +175,6 @@ object ScaleBench {
     ()
   }
 
-  /** The data-dominated queries, timed as their `SparkEntry.queries`
-    * entries (each reads only the dir it is given — q_ann_selfjoin and
-    * q_knn_graph self-scale their bits knob from the corpus they see).
-    */
-  private[graft] val targets: Seq[String] = Seq(
-    "q_pricing_summary",
-    "q_filter_project",
-    "q_global_sort",
-    "q_dedup_survivors",
-    "q_byte_entropy",
-    "q_minhash_neardups",
-    "q_split_assign",
-    // window-function + user-keyed-join families (r7 analytics adds):
-    // sort/state per user partition, joins exchanging |users| rows
-    "q_sessionize",
-    "q_funnel",
-    // temporal/screening verbs (late r7): scd2 is the one-exchange
-    // lag-filter-lead stack; gap_fill's spine grows with |users × span
-    // hours| (replicas add users, so the spine scales linearly); winsorize
-    // is the bounded-state quantile core + a broadcast clip pass
-    "q_scd2",
-    "q_gap_fill",
-    "q_winsorize",
-    // corpus-hygiene family (late r7 adds): decontaminate is a per-doc
-    // distinct + broadcast digest probe (Caesar-rotated replicas keep the
-    // per-replica contamination rate constant); heavy hitters is the O(k)
-    // sketch scan + bounded re-count (rotation disjoins replica vocabs, so
-    // the n/(k+1) bar rises with n — the timed work is the two scans);
-    // zorder is the 1-row bounds pass + a pure codegen'd projection
-    // the buffering-vs-bounded-state exact-quantile pair: percentile_cont
-    // holds each group's whole multiset in one reducer, the distributed
-    // form holds one range slice per task — same numbers, different
-    // memory story as groups grow
-    "q_percentiles",
-    "q_percentiles_dist",
-    // retrieval/association/sequence verbs (this round): bm25's term
-    // filter sits under its agg, so the 100× scan feeds a ~1×-sized tf
-    // relation (replica ciphers rotate the vocab away from the query
-    // terms — exactly the selective-retrieval shape); cooccurrence's
-    // pair relation is narrow zip_with arithmetic, counts shuffle
-    // |replica vocab²|; substring_dupes' window relation is Σ tokens
-    // narrow rows through one count + semi join; mad_outliers is two
-    // bounded-state quantile passes; weighted_sample and markov ride
-    // the WindowGroupLimit / user-keyed-window shapes already proven
-    "q_bm25",
-    "q_cooccurrence",
-    "q_ngram_novelty",
-    "q_substring_dupes",
-    "q_mad_outliers",
-    "q_weighted_sample",
-    "q_markov",
-    // the typed-path sequential fold: per-group buffer is one user's
-    // history; replicas add USERS, so groups multiply, sizes don't
-    "q_ewma",
-    // PIT join: both sides grow with the factor, the join stays
-    // user-keyed (q_profile reads orders, which the replica set does
-    // not carry — its one-Expand-pass shape needs no sweep)
-    "q_pit_join",
-    "q_decontaminate",
-    "q_heavy_hitters",
-    "q_zorder",
-    // streaming replays: the events replica multiplies USERS (new ids per
-    // replica), so windowed-aggregate and per-user state-store volume both
-    // grow with the factor — this measures the state path, not just the
-    // scan (micro-batch machinery is the constant term)
-    "q_stream_tumbling",
-    "q_stream_stateful",
-    // round-8 verbs: the native as-of join (key exchanges + one merge
-    // pass; replicas add users so partitions multiply, per-key state
-    // stays O(1)); graph analytics over the replicated fact tables
-    // (triangles: factor× more orders over the same part catalog —
-    // the distinct+self-join front grows with data, the oriented graph
-    // densifies; pagerank: the scan grows, the type-level graph stays
-    // constant — measures the aggregation front); the deterministic
-    // epoch permutation (one bucketed window sort over factor× docs);
-    // the quantile-core decile table; and the bounded-state sketch
-    // passes (theta distinct algebra, KLL quantile rollup) which
-    // should ride the scan near-linearly
-    "q_asof_native",
-    "q_triangles",
-    "q_pagerank",
-    "q_decile_stats",
-    "q_epoch_shuffle",
-    "q_theta_overlap",
-    "q_kll_quantiles",
-    // statistics tier (this session): spearman's rank histograms grow
-    // with |distinct values| (price ≈ rows, so the two-phase prefix sum
-    // is the measured path); ohlc is one O(1)-state aggregate over the
-    // scan; rolling_autocorr is a per-type window with decimal frame
-    // sums; cogroup co-partitions two growing inputs; assoc_rules'
-    // pair join grows with Σ basket² over the replicated orders — the
-    // superlinear-risk one worth watching (Apriori pruning is the cap)
-    "q_spearman",
-    "q_ohlc",
-    "q_rolling_autocorr",
-    "q_rolling_autocorr_dist",
-    // r14 session-2 restructures (the re-sweep-after-restructure rule):
-    // the KM signature pass (one md5 per shingle, no distinct), the
-    // portable bloom (filter size grows with the benchmark slice), the
-    // quantile grid, and full-corpus LSH clusters (touched-node CC loop)
-    "q_minhash_sig",
-    "q_decontaminate_bloom",
-    "q_quantile_grid",
-    "q_dedup_clusters_lsh",
-    "q_cogroup",
-    "q_assoc_rules",
-    // the operator's own self-scaling bits (log2 of corpus count,
-    // constant occupancy) — the production path
-    "q_ann_selfjoin",
-    // drift/fit tier (r8 driver session): psi/jsd are one grouped-count
-    // pass over events plus O(|types|×bins) term arithmetic; chi2 is
-    // three marginal scans over documents; linreg is the
-    // sufficient-statistics aggregate over lineitem — all should ride
-    // their scan near-linearly. feature_hash shuffles |doc × distinct
-    // bucket| rows (≤ 64/doc); rand_proj is the per-row HOF loop —
-    // the one with real per-row arithmetic (8×64 mults) worth watching
-    "q_psi_drift",
-    "q_js_divergence",
-    "q_chi2",
-    "q_linreg",
-    "q_feature_hash",
-    "q_rand_proj",
-    // round-8 vector-layout verbs: quantized_knn broadcasts 10 query
-    // code vectors against a factor× corpus scan (map-side top-k);
-    // ann_pq's codebook training samples a bounded set but encoding
-    // touches every vector; semantic_dedup rides the banded self-join's
-    // occupancy model like ann_selfjoin; countmin's shuffle is the
-    // constant d×w grid regardless of input rows
-    "q_quantized_knn",
-    "q_ann_pq",
-    "q_semantic_dedup",
-    "q_countmin",
-    // this session's verbs: ks/mwu ride the distinct-value histogram
-    // (replica price/value decorrelation grows it realistically) through
-    // the sliced prefix-sum core; row_ids is the two-phase numbering
-    // (local windows over ~4096-key buckets + a |buckets| base join);
-    // interval_join explodes ≤2 cells/interval into a (user, cell)
-    // equi-join — candidates grow with per-user density, not corpus²;
-    // bloom_join is the probe-then-join path (the probe should keep the
-    // fact exchange ~constant as the dim stays selective); seasonal is
-    // one grouped-aggregate scan; phash the codec map pass; rrf two
-    // bounded top-100 arms over growing corpora; semantic_decontam the
-    // broadcast eval screen (eval slice grows with the corpus here, so
-    // watch it — production pins |eval| constant)
-    "q_ks_test",
-    "q_mwu",
-    "q_row_ids",
-    "q_interval_join",
-    "q_bloom_join",
-    "q_seasonal",
-    "q_phash",
-    "q_rrf",
-    "q_semantic_decontam",
-    // lm_score: two model count passes + a broadcast scoring join, all
-    // riding the pair-stream scan; session_window: the native session
-    // aggregate, one user-keyed exchange over factor× users; bpe_train:
-    // the word-count pass grows with the corpus, every merge round runs
-    // on the (constant-vocabulary) word relation
-    "q_lm_score",
-    "q_session_window",
-    "q_bpe_train",
-    // training loops: logreg = iters × (scan + k-column aggregate) —
-    // should ride the scan; bpe_apply = retrain + broadcast-rule
-    // map-side segmentation over factor× documents
-    "q_logreg",
-    "q_bpe_apply",
-    // cell moments broadcast over the growing stream; flags filter map-side
-    "q_seasonal_anomaly",
-    // round-10 table-format verbs: the COW DML pair is the one whose
-    // cost is the REWRITE itself (one scan + one ordered write of
-    // factor× documents — the table build on first touch is part of the
-    // same data-dominated path); zonemap_scan couples a clustered COW
-    // update to a range scan whose file pruning should hold the READ
-    // side near-constant; dsir is two bucket-count passes + a broadcast
-    // scoring join riding the token stream like lm_score
-    "q_sql_update",
-    "q_sql_merge",
-    "q_zonemap_scan",
-    // narrowed COW: a FIXED key-range update + range read on the
-    // clustered table — the verb whose cost must NOT ride the factor
-    // (zone maps bind O(matching files) on both the rewrite and the
-    // read regardless of corpus size; only the first-touch table build
-    // is data-sized)
-    "q_cow_narrow",
-    // incremental dedup rides two digest scans + one anti-join shuffle
-    // (both sides grow with the factor — expect ~linear); the SPJ join
-    // is the shuffle-free fact⋈fact (first touch builds both bucketed
-    // tables; steady-state reps measure the aligned merge itself)
-    "q_incremental_dedup",
-    "q_spj_join",
-    "q_dsir_resample",
-    // scan-side metadata answers (round-10 final session): agg_pushdown
-    // must be ~CONSTANT at any factor (a one-row LocalScan from the
-    // sidecar; only the first-touch table build is data-sized);
-    // runtime_prune joins a fixed key band, so the pruned fact read is
-    // O(band) files while the dim scan grows linearly — the ratio
-    // should sit well under the factor
-    "q_agg_pushdown",
-    "q_runtime_prune",
-    // z-ordered 2-D box: the box is RANGE-RELATIVE (~6% of rows at any
-    // SF), so the read grows with the corpus but tile pruning holds the
-    // bound FILE FRACTION constant — expect well under the factor, not
-    // constant (first touch builds the Morton layout)
-    "q_zorder_table",
-    // bloom-sidecar point lookup: 3 fixed keys on a hash layout — the
-    // probe binds O(keys) files at any corpus size (only the
-    // first-touch table build and the per-file sidecar pass are
-    // data-sized)
-    "q_bloom_skip",
-    // round-10 final-session verbs: the inverted index is two map-side-
-    // combined aggregations whose shuffles are (token,doc)- then
-    // |vocab|-sized — replicas share a vocabulary, so expect sublinear;
-    // readability is a pure codegen'd scan (linear at worst); the
-    // Poisson bootstrap explodes ×50 replicas but combines map-side to
-    // 50 groups, so it should ride the scan term; unigram training
-    // collapses to (word,count) once and runs EM on the vocabulary —
-    // the factor should barely show; binary kNN is a broadcast
-    // 10-query × corpus scan over two packed words per row
-    "q_inverted_index",
-    "q_readability",
-    "q_bootstrap_ci",
-    "q_unigram_train",
-    "q_binary_knn",
-    // round-10 analytics verbs over the replicated tables (rfm reads
-    // orders only; gini/delta_join_view read orders+customer — none of
-    // which the replica set carries — their shapes are the proven broadcast-join + two-phase
-    // rank cores): position attribution is two user-keyed window stacks
-    // + a (user, journey) join — replicas add users, so partitions
-    // multiply and per-user state stays bounded; Kaplan–Meier collapses
-    // the log to one row per user then a CALENDAR-bounded time axis, so
-    // only the first aggregate rides the factor; CUPED is two user-keyed
-    // aggregates into 2-row sufficient stats; the graph pair rides the
-    // densifying co-order front like q_triangles (factor× orders over
-    // the same part catalog), k-core with a per-round localCheckpoint
-    "q_attribution_position",
-    // LOO target encode after the r10-verdict fix: groupBy to a
-    // handful of category rows + broadcast join back — the scan term
-    // rides the factor, the join adds no shuffle of the log
-    "q_target_encode",
-    "q_kaplan_meier",
-    "q_cuped",
-    "q_clustering_coeff",
-    "q_kcore",
-    // k-hop BFS over the densifying co-order graph — the remaining
-    // graph-tier verb with no 100× datapoint before r14 (frontier joins
-    // ride the |edges| front like kcore's rounds)
-    "q_khop",
-    // the closing session-4 verbs: Holt (and its backtest) fold over
-    // the CALENDAR-bounded per-type hourly axis — replicas add users,
-    // not hours, so only the first aggregate rides the factor; AUC is
-    // the |distinct scores| histogram through the sliced prefix sum;
-    // the windowed funnel is the q_funnel join ladder plus one pushed
-    // predicate per stage
-    "q_holt_linear",
-    "q_holt_backtest",
-    "q_auc",
-    "q_funnel_window",
-    // round-11 verbs: log-rank/MK/Theil–Sen fold the log to per-user or
-    // per-(type,hour) rows first — the hour axis is calendar-bounded,
-    // so pair joins and suffix windows are FIXED-size at any factor and
-    // only the first aggregate rides the data; vocab coverage is
-    // explode → vocab-sized shuffle → broadcast join (one scan term);
-    // q_sql_cdc reads only the commit's churn (files diff), so the
-    // factor shows in the one-time fixture build + merge, not the feed
-    "q_logrank",
-    "q_mann_kendall",
-    "q_theil_sen",
-    "q_vocab_coverage",
-    // Holt-Winters folds the same bounded axis as holt_linear; CCF/tau
-    // and the z-test collapse to bounded sufficient stats; lexical
-    // diversity is the vocab-bounded two-level aggregation
-    "q_holt_winters",
-    "q_cross_correlation",
-    "q_kendall_tau",
-    "q_two_proportion_z",
-    "q_lexical_diversity",
-    "q_sql_cdc",
-    // gopher rules are a pure codegen'd scan (linear at worst); the
-    // source-overlap pair join is bounded by the shared-shingle front
-    // (distinct (shingle, source) rows — replicas decorrelate shingles,
-    // so the front grows far slower than the corpus); audio features
-    // are executor-local per-row codec work
-    "q_gopher_rules",
-    "q_source_overlap",
-    "q_audio_features",
-    // r11-verdict backfill: matryoshka is the twice-scored knn_brute
-    // broadcast shape — post-fix it ranks via the bounded aggregator, so
-    // the factor should show only in the scan/score term (the one
-    // data-dominated r11 verb the r11 sweep missed); the three
-    // table-format verbs are METADATA-bounded (fixture build + a
-    // files-diff / stats read) — swept to prove the flat ratio, not to
-    // watch a data term
-    "q_matryoshka_eval",
-    // r12 verbs: the spectral fold is executor-local per-row codec +
-    // O(bins·frame) integer work (same shape as audio_features); the
-    // kNN graph rides the self-join's occupancy model plus one |V|k
-    // equi-join for the mutual flag
-    "q_audio_spectrum",
-    "q_knn_graph",
-    "q_sql_merge_evolve",
-    "q_branch_mor",
-    "q_cbo_native",
-    "q_time_to_convert",
-    // n-gram repetition shuffles distinct (doc, gram) rows — ≤ token
-    // count, corpus-linear with map-side combine
-    "q_ngram_repetition",
-    // net-change classification and partition evolution are
-    // METADATA-bounded like q_sql_cdc (fixture build + changed-file
-    // diffs / pruned reads) — swept to prove the flat ratio
-    "q_cdc_net",
-    "q_partition_evolve",
-    // PCA is one sufficient-stats scan + one broadcast projection pass
-    "q_pca_project",
-    // MAD rides two histogram passes; paths one user-keyed shuffle;
-    // deflate is executor-local CPU-bound per-row codec work
-    "q_mad_summary",
-    "q_user_paths",
-    "q_compression_ratio",
-    // wilcoxon folds to a per-user groupBy + |d|-histogram window;
-    // zipf/nb are token-explode corpus verbs with vocab-bounded shuffles
-    "q_wilcoxon_sr",
-    "q_zipf_fit",
-    "q_nb_confusion",
-    // changepoint is one scan + bounded-axis windows; the validity
-    // indices are corpus × |labels| broadcast-centroid scans
-    "q_changepoint",
-    "q_silhouette",
-    "q_calinski",
-    // burstiness lags within (user,type) partitions; entropy rate is
-    // the same transition stream folded to a |types|² term grid
-    "q_burstiness",
-    "q_entropy_rate",
-    // effect size is one arm-split scan; stream_cusum replays the
-    // corpus through bounded per-type hourly state
-    "q_effect_size",
-    "q_stream_cusum",
-    // stickiness's ×30 presence projection and the process graph's
-    // per-edge gap histograms are the event-scan class
-    "q_stickiness",
-    "q_process_edges",
-    // round-12 second-session batch: durbin/icc/friedman/cronbach/
-    // decision_stump are one-or-two-scan sufficient-statistic verbs;
-    // assortativity adds two |edges|-row degree joins over the distinct
-    // incidence; item_cosine is the assoc_rules pair-join class (the
-    // superlinear-risk one to watch); hits is a scan plus 16 fixed
-    // |types|-sized half-steps
-    "q_durbin_watson",
-    "q_icc",
-    "q_friedman",
-    "q_cronbach",
-    "q_decision_stump",
-    "q_assortativity",
-    "q_item_cosine",
-    "q_hits",
-    // fifth wave: fisher's F table + t-range are corpus-linear; hurst/
-    // pacf/runs ride the calendar-bounded hourly axis; mood pays one
-    // histogram + one classification scan; fertility is the token
-    // explode (data-dominated); stream_topk replays the corpus through
-    // O(k) per-type state
-    "q_fisher_exact",
-    "q_hurst",
-    "q_pacf",
-    "q_mood_median",
-    "q_bartlett",
-    "q_runs_test",
-    "q_fertility",
-    "q_stream_topk",
-    // sixth wave: kruskal pays a value-domain histogram + a (group,
-    // value) aggregate; jarque/grubbs are scan-dominated moment verbs
-    "q_kruskal_wallis",
-    "q_jarque_bera",
-    "q_grubbs",
-    "q_welch_anova",
-    // seventh wave: the image near-dup join pays one decode scan plus
-    // band-bucket collisions (the simhash contract on media);
-    // theil_u rides the calendar-bounded Holt core
-    "q_image_neardups",
-    "q_theil_u",
-    // eighth wave: exact_rate pays one events scan + a purchase-count-
-    // sized outcome axis (corpus-linear in the conditioned total);
-    // jpeg_decode is the executor-local encode+decode scan shape;
-    // simhash rides the md5-packed portable token hashes since r13
-    "q_exact_rate",
-    "q_jpeg_decode",
-    // the AC-carrying twin (r14): same executor-local scan shape, plus
-    // the separable-IDCT sparse path this sweep exists to keep honest
-    "q_jpeg_ac_decode",
-    "q_simhash_neardups")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse("/tmp/graft-scale")
@@ -573,6 +185,7 @@ object ScaleBench {
     // reason to exist, but it must not kill an unattended full sweep;
     // an explicit SPARK_GRAFT_ONLY still runs it at any factor
     val skipAtScale = if (factor > 10) Set("q_percentiles") else Set.empty[String]
+    val targets = SparkEntry.registry.filter(_.scale).map(_.name)
     val names = Bench.only(targets).getOrElse(targets.filterNot(skipAtScale))
     val queries = SparkEntry.queries
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)

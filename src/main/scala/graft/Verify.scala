@@ -31,13 +31,13 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val queries = SparkEntry.queries
-    val names = Bench.only(queries.keys.toSeq).getOrElse(queries.keys.toSeq)
+    val all = SparkEntry.registry.map(_.name)
+    val names = Bench.only(all).getOrElse(all)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     names.foreach { name =>
-      try flattenNested(queries(name)(spark, sfDir)).coalesce(1).write.mode("overwrite")
+      try flattenNested(SparkEntry.queries(name)(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         failures(name) = Bench.failure(e, max = 500)
@@ -59,9 +59,9 @@ object Verify {
     // cautionary-plan tags: which queries are kept as measurable
     // scale-antipattern twins, and which sibling is the production plan
     Files.writeString(Paths.get(s"$outDir/query_meta.json"),
-      SparkEntry.cautionary
-        .map { case (k, twin) =>
-          s"${q(k)}: {${q("cautionary")}: true, ${q("production_twin")}: ${q(twin)}}" }
+      SparkEntry.registry
+        .flatMap(spec => spec.cautionaryTwin.map(twin =>
+          s"${q(spec.name)}: {${q("cautionary")}: true, ${q("production_twin")}: ${q(twin)}}"))
         .mkString("{", ",", "}"))
     spark.stop()
     if (failures.nonEmpty) sys.exit(1)

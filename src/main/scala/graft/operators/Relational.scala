@@ -1775,9 +1775,17 @@ object Relational {
       quantile(sk, 0.5).as("p50"),
       quantile(sk, 0.9).as("p90"),
       quantile(sk, 0.99).as("p99"))
-    val perScope = perType.select(qs(col("event_type"), col("sk")): _*)
-    val global = perType.agg(kll_merge_agg_double(col("sk")).as("sk"))
-      .select(qs(lit("all"), col("sk")): _*)
-    perScope.unionByName(global)
+    // one global aggregate over the per-type sketches keeps each of them
+    // and merges the same ones into `all`: events is scanned once, and the
+    // `all` row is the merge of exactly the sketches printed beside it. A
+    // global aggregate answers one row on no input, so a table without
+    // values still gives the `all` row, and a null event_type stays a null
+    // scope instead of posing as `all`
+    val merged = struct(lit("all").as("scope"), col("all").as("sk"))
+    perType
+      .agg(collect_list(struct(col("event_type").as("scope"), col("sk"))).as("per"),
+        kll_merge_agg_double(col("sk")).as("all"))
+      .select(explode(concat(col("per"), array(merged))).as("s"))
+      .select(qs(col("s.scope"), col("s.sk")): _*)
   }
 }

@@ -4,6 +4,10 @@ import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,7 +22,7 @@ import graft.operators.Relational
   * Every sketch is built and read through Spark's built-in
   * `kll_*_double` functions, as the query builds them.
   */
-class KllPropertiesSpec extends AnyFunSuite {
+class KllPropertiesSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def spark = TestSpark.spark
 
   private def rankOf(sorted: Array[Double], v: Double): Double = {
@@ -123,5 +127,20 @@ class KllPropertiesSpec extends AnyFunSuite {
     val all = rows.find(_.getString(0) == "all").get
     assert(all.getDouble(3) <= per.map(_.getDouble(3)).max + 1e-9)
     assert(all.getDouble(1) >= per.map(_.getDouble(1)).min - 1e-9)
+  }
+
+  test("q_kll_quantiles scans events once: `all` merges the per-type rows' own sketches") {
+    val df = Relational.kllQuantileRollup(spark, TestSpark.sf0001)
+    def plan = df.queryExecution.executedPlan
+    val scans = collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"expected one events scan:\n$plan")
+    // once run, AQE's stage reuse can share a twice-planned scan, but not a
+    // second evaluation of the per-type sketches above the shared shuffle
+    df.collect()
+    val perTypeSketches = collect(plan) {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+        e.mode == Final && e.aggregateFunction.prettyName == "kll_sketch_agg_double") => a
+    }
+    assert(perTypeSketches.size == 1, s"per-type sketches built more than once:\n$plan")
   }
 }

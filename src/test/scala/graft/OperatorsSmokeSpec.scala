@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every declared query runs and returns rows at sf0.001 (the DuckDB
@@ -8,18 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OperatorsSmokeSpec extends AnyFunSuite {
 
-  // anti/except can be legitimately small but must not throw; all others
-  // must be non-empty at sf0.001. q_runs_test drops values EQUAL to the
-  // per-type median (the standard treatment) — at sf0.001 the sparse
-  // hourly series is almost all 1s, every sign ties out, and an empty
-  // result is the CORRECT answer (the oracle agrees: 0 == 0 rows).
-  private val mayBeEmpty = Set("q_dedup_exact_groups", "q_embedding_neardups",
-    "q_minhash_neardups", "q_ngram_jaccard", "q_runs_test")
-
-  SparkEntry.queries.foreach { case (name, fn) =>
-    test(s"$name runs at sf0.001") {
-      val n = fn(TestSpark.spark, TestSpark.sf0001).count()
-      if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows")
+  // every output column executes (Bench.force, not .count(), which
+  // Catalyst would prune down to a bare scan); the rows are counted by an
+  // Observation on that same run
+  SparkEntry.registry.foreach { q =>
+    test(s"${q.name} runs at sf0.001") {
+      val rows = Observation()
+      Bench.force(q.build(TestSpark.spark, TestSpark.sf0001).observe(rows, count(lit(1)).as("n")))
+      val n = rows.get("n").asInstanceOf[Long]
+      if (!q.mayBeEmpty) assert(n > 0, s"${q.name} returned 0 rows")
     }
   }
 
@@ -27,19 +26,31 @@ class OperatorsSmokeSpec extends AnyFunSuite {
     assert(SparkEntry.entry(TestSpark.spark).count() > 0)
   }
 
-  test("every oracleSql key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without query: $missing")
+  test("every cautionary twin pair is registered and shares one oracle") {
+    val cautionary = SparkEntry.registry.filter(_.cautionaryTwin.isDefined)
+    assert(cautionary.nonEmpty)
+    cautionary.foreach { q =>
+      val twin = q.cautionaryTwin.get
+      assert(SparkEntry.queries.contains(twin), s"$twin is not a query")
+      assert(q.oracle.isDefined, s"${q.name} has no oracle")
+      assert(q.oracle == SparkEntry.oracleSql.get(twin), s"${q.name} and $twin oracles differ")
+    }
   }
 
-  test("every cautionary twin pair is registered and shares one oracle") {
-    SparkEntry.cautionary.foreach { case (cautionary, twin) =>
-      assert(SparkEntry.queries.contains(cautionary), s"$cautionary is not a query")
-      assert(SparkEntry.queries.contains(twin), s"$twin is not a query")
-      val oracle = SparkEntry.oracleSql.get(cautionary)
-      assert(oracle.isDefined, s"$cautionary has no oracle")
-      assert(oracle == SparkEntry.oracleSql.get(twin), s"$cautionary and $twin oracles differ")
+  test("the rows-only queries are exactly the nine without a SQL replay") {
+    // an oracle lost in an edit would otherwise read as one more rows-only
+    // PASS in compare_oracle.py
+    assert(SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name).toSet == Set(
+      "q_approx_distinct", "q_approx_percentiles", "q_compression_ratio", "q_hll_merge",
+      "q_kll_quantiles", "q_stream_hll", "q_stream_kll", "q_stream_topk", "q_stream_watermarked"))
+  }
+
+  test("a name registered twice fails the registry and is named") {
+    val q = SparkEntry.registry.head
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.validated(Seq(q, q.copy(oracle = None)))
     }
+    assert(e.getMessage.contains(q.name), e.getMessage)
   }
 
   test("approx_count_distinct within 5% of exact") {

@@ -10,75 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanShapeSpec extends AnyFunSuite {
 
-  // executed-on-build queries (streaming replays, roundtrip writes,
-  // iterative clustering, driver-trained IVF) are covered by their own
-  // suites; this spec audits every lazily-planned query.
-  private val skip: String => Boolean = name =>
-    name.startsWith("q_stream") || name.endsWith("_roundtrip") ||
-      name == "q_dedup_clusters" || name == "q_ann_ivf" || name == "q_pipeline_parity" ||
-      name == "q_ann_pq" || name == "q_semantic_dedup" || // driver-trained codebooks / iterative CC
-      name == "q_bpe_train" || name == "q_bpe_apply" || // iterative merge training executes on build
-      name == "q_logreg" // gradient-descent loop executes on build
-
-  // designed broadcast-nested-loop shapes: a handful of broadcast rows
-  // (query vectors / the 1-row corpus count) against the corpus scan
-  // q_zorder joins a broadcast single-row min/max bounds relation (the
-  // same 1-row-stats crossJoin shape as q_tfidf's corpus count);
-  // q_bm25 broadcasts the 1-row (N, avgdl) stats, q_cooccurrence the
-  // two 1-row corpus totals; q_histogram the 1-row min/max edges,
-  // q_assoc_rules the 1-row order count, q_ab_test joins its two 1-row
-  // arm summaries
-  private val bnljAllowed = Set("q_knn_brute", "q_embedding_neardups", "q_tfidf",
-    "q_zorder", "q_bm25", "q_cooccurrence", "q_histogram", "q_assoc_rules",
-    "q_ab_test", "q_quantile_grid",
-    "q_quantized_knn", // same tiny-query-set × corpus shape as q_knn_brute, on int8 codes
-    "q_binary_knn", // same shape again, on two packed sign words per vector
-    "q_benford", // 1-row digit-count total against the 9-row digit relation
-    "q_kmeans_assign", // 8 broadcast centroids × corpus — the knn_brute shape
-    "q_semantic_decontam", // bounded broadcast eval set × corpus (decontaminate contract)
-    "q_psi_drift", // 1-row broadcast time midpoint against the log
-    "q_js_divergence", "q_chi2", "q_cramers_v", // 1-row totals / tiny marginals grid
-    "q_key_skew", // 1-row corpus total against the per-key counts
-    "q_ks_test", "q_mwu", // 1-row min/max bounds + 1-row arm totals
-    "q_rrf", // 1-row bm25 stats + 1-row query vector
-    "q_lm_score", // 1-row vocabulary count into the smoothing denominator
-    "q_dsir_resample", // 1-row (nt, nr) totals into the smoothed bucket ratios
-    "q_retrieval_eval", // bounded broadcast query set × candidate pool (eval contract)
-    "q_rfm", // 1-row broadcast |customers| count into the quintile formula
-    "q_cuped", // 1-row broadcast pooled sufficient stats against the 2-row arms
-    "q_auc", // 1-row broadcast score bounds into the rank histogram slicing
-    "q_time_to_convert", // 1-row total + 3 quantile rows against the tiny gap histogram
-    "q_cross_correlation", // 13 broadcast lag rows against the bounded hourly axis
-    "q_two_proportion_z", // 1-row arm A summary × 1-row arm B summary
-    "q_matryoshka_eval", // the q_knn_brute broadcast query-set × corpus shape, twice-scored
-    "q_tukey_hsd", // |types|² pair grid: k-row self-join under an inequality key
-    "q_bh_fdr", // 1-row arm totals against the per-type sufficient stats
-    "q_wilson_ci", // 1-row distinct-user total against the per-type counts
-    "q_wilcoxon_sr", // 1-row broadcast window midpoint against the per-user counts
-    "q_mcnemar", // 1-row broadcast day-zero against the log
-    "q_nb_confusion", // |vocab| × |langs| broadcast model grid
-    "q_changepoint", // 1-row broadcast totals against the bounded hourly axis
-    "q_silhouette", // |labels| broadcast centroids × corpus — the kmeans_assign shape
-    "q_calinski", // |labels| centroid rows × 1-row global centroid / totals
-    "q_entropy_rate", // 1-row transition total against the |types|² term grid
-    "q_process_edges", // 1-row grand total against the |types|² edge medians
-    "q_quantile_norm", // value-domain-bounded pooled histogram interval lookup
-    "q_mutual_info", // 1-row N + three 1-row entropy/MI sums against the grid
-    "q_woe_iv", // 1-row good/bad totals + 1-row IV against the 6 slot rows
-    "q_friedman", // 1-row treatment count against the per-(user,type) cells
-    "q_fisher_exact", // 1-row margins/lnC/obs terms against the t-range
-    "q_mood_median", // 1-row grand median + margins against the k cells
-    "q_kruskal_wallis", // 1-row tie-correction total against the k terms
-    "q_welch_anova", // 1-row weighted-total row against the k group rows
-    "q_exact_rate") // 1-row margins + 1-row observed mass against the outcome axis
-
-  SparkEntry.queries.filterNot { case (n, _) => skip(n) }.foreach { case (name, fn) =>
-    test(s"$name plans without cartesian products") {
-      val plan = fn(TestSpark.spark, TestSpark.sf0001).queryExecution.sparkPlan.toString
-      assert(!plan.contains("CartesianProduct"), s"$name plans a CartesianProduct")
-      if (!bnljAllowed(name))
+  // a build that runs Spark jobs (stream replays, roundtrip writes,
+  // iterative training) is covered by its query's own suite; this spec
+  // audits every lazily-planned query
+  SparkEntry.registry.filterNot(q => q.eager || SparkEntry.streamTier(q.name)).foreach { q =>
+    test(s"${q.name} plans without cartesian products") {
+      val plan = q.build(TestSpark.spark, TestSpark.sf0001).queryExecution.sparkPlan.toString
+      assert(!plan.contains("CartesianProduct"), s"${q.name} plans a CartesianProduct")
+      if (!q.bnlj)
         assert(!plan.contains("BroadcastNestedLoopJoin"),
-          s"$name plans an unexpected BroadcastNestedLoopJoin")
+          s"${q.name} plans an unexpected BroadcastNestedLoopJoin")
     }
   }
 

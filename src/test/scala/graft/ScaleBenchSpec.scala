@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * boundaries (factor 26 for documents' substitution cipher, factor 64
   * = dim for embeddings' circular shift), and the ready-marker must be
   * exclusive per work dir so switching factors regenerates instead of
-  * silently timing the other factor's tables. The sweep times targets
-  * by name, so every target must be a registered query.
+  * silently timing the other factor's tables.
   */
 class ScaleBenchSpec extends AnyFunSuite {
   private def freshDir(): java.io.File = {
@@ -73,12 +72,6 @@ class ScaleBenchSpec extends AnyFunSuite {
     val before = new java.io.File(out, "documents.parquet").lastModified()
     ScaleBench.replicate(spark, TestSpark.sf0001, out.getAbsolutePath, 3)
     assert(new java.io.File(out, "documents.parquet").lastModified() == before)
-  }
-
-  test("every scale target is a registered query, listed once") {
-    val missing = ScaleBench.targets.filterNot(SparkEntry.queries.contains)
-    assert(missing.isEmpty, s"scale targets not in SparkEntry.queries: $missing")
-    assert(ScaleBench.targets.distinct == ScaleBench.targets)
   }
 
   test("replication refuses factors beyond the cipher's distinctness bound") {
