@@ -94,6 +94,14 @@ object SparkEntry {
     specs
   }
 
+  /** The committed fan-engagement fixture (FIXTURES.md §A5), resolved once
+    * against the working directory (the checkout, under sbt) to an absolute
+    * path, so q_pipeline_parity's oracle SQL reads the same files wherever
+    * `tools/compare_oracle.py` runs.
+    */
+  private[graft] lazy val fanFixture: String =
+    java.nio.file.Paths.get("fixtures/fan").toAbsolutePath.toString
+
   // Shared SQL fragments for the oracle side (DuckDB dialect).
   private val discPriceSql =
     "CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2))) AS DECIMAL(18,4))"
@@ -7040,25 +7048,54 @@ object SparkEntry {
          |  CAST(SUM($discPriceSql) AS DOUBLE) AS revenue,
          |  CAST(SUM(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_disc
          |FROM lineitem WHERE l_shipdate >= TIMESTAMP '1995-01-01'""".stripMargin)),
-    // --- reference-pipeline parity (golden test drives exact compare) ----
-    // Parity oracle: the reference's own checked-in golden output (237
-    // deterministic rows). Verify flattens LocationData via to_json, so
-    // the oracle emits the identical compact JSON text; read_json gets
-    // explicit column types so Timestamp stays VARCHAR like the Spark
-    // side (the reference snapshot's output/sample0-00000-of-00001.jsonl).
+    // --- reference pipeline on the in-repo fan fixture ----------------------
+    // Reads fixtures/fan (FIXTURES.md §A5), not the sf tables. The oracle
+    // replays the reference semantics in DuckDB over the same files: the
+    // `Other` filter, RaceID normalization, the LUT with alias keys only
+    // where the canonical long name is a key, the probe-side alias remap,
+    // a left join, the fallback struct, and LocationData as to_json text
+    // (Verify flattens the struct the same way). The golden-file parity
+    // check against the reference's own output lives only in
+    // FanPipelineSpec.
     // eager: the country CSV is read on the driver on build
     QuerySpec("q_pipeline_parity", (s, _) =>
       FanPipeline.transform(
-        FanPipeline.readEvents(s, "/root/reference/input/*fan_engagement-000-of-001.json"),
-        CountryLut.df(s, "/root/reference/input_side/country_data_v2.csv")), Some(
-      """SELECT FanID, RaceID, Timestamp, DeviceType,
-        |  EngagementMetric_secondswatched, PredictionClicked, MerchandisingClicked,
-        |  to_json(LocationData)::VARCHAR AS LocationData
-        |FROM read_json('/root/reference/output/sample0-00000-of-00001.jsonl',
-        |  format='newline_delimited',
-        |  columns={'FanID':'VARCHAR','RaceID':'VARCHAR','Timestamp':'VARCHAR',
-        |           'DeviceType':'VARCHAR','EngagementMetric_secondswatched':'BIGINT',
-        |           'PredictionClicked':'BOOLEAN','MerchandisingClicked':'BOOLEAN',
-        |           'LocationData':'STRUCT(country VARCHAR, capital VARCHAR, continent VARCHAR, "official language" VARCHAR, currency VARCHAR)'})""".stripMargin), eager = true)
+        FanPipeline.readEvents(s, s"$fanFixture/input/*fan_engagement-000-of-001.json"),
+        CountryLut.df(s, s"$fanFixture/input_side/country_data_v2.csv")), Some(
+      s"""WITH alias(alias, canonical) AS (
+         |  VALUES ('usa', 'united states'), ('us', 'united states'), ('u.s.', 'united states'),
+         |    ('uk', 'united kingdom'), ('uae', 'united arab emirates')),
+         |base AS (
+         |  SELECT lower(country) AS key_norm, * FROM (
+         |    SELECT trim(coalesce(Country, '')) AS country, trim(coalesce(Capital, '')) AS capital,
+         |      trim(coalesce(Continent, '')) AS continent,
+         |      trim(coalesce(Main_Official_Language, '')) AS official_language,
+         |      trim(coalesce(Currency, '')) AS currency
+         |    FROM read_csv('$fanFixture/input_side/country_data_v2.csv',
+         |      header = true, delim = ',', quote = '"', all_varchar = true))
+         |  WHERE country <> ''),
+         |lut AS (
+         |  SELECT * FROM base
+         |  UNION ALL
+         |  SELECT a.alias, b.country, b.capital, b.continent, b.official_language, b.currency
+         |  FROM alias a JOIN base b ON b.key_norm = a.canonical),
+         |ev AS (
+         |  SELECT *, lower(trim(coalesce(ViewerLocationCountry, ''))) AS norm
+         |  FROM read_json('$fanFixture/input/*fan_engagement-000-of-001.json',
+         |    format = 'newline_delimited',
+         |    columns = {'FanID': 'VARCHAR', 'RaceID': 'VARCHAR', 'Timestamp': 'VARCHAR',
+         |               'ViewerLocationCountry': 'VARCHAR', 'DeviceType': 'VARCHAR',
+         |               'EngagementMetric_secondswatched': 'BIGINT',
+         |               'PredictionClicked': 'BOOLEAN', 'MerchandisingClicked': 'BOOLEAN'})
+         |  WHERE trim(coalesce(DeviceType, '')) <> 'Other')
+         |SELECT FanID, ${raceIdSql("RaceID")} AS RaceID, Timestamp, DeviceType,
+         |  EngagementMetric_secondswatched, PredictionClicked, MerchandisingClicked,
+         |  to_json(CASE WHEN l.key_norm IS NOT NULL
+         |    THEN {'country': l.country, 'capital': l.capital, 'continent': l.continent,
+         |          'official language': l.official_language, 'currency': l.currency}
+         |    ELSE {'country': trim(coalesce(ViewerLocationCountry, '')), 'capital': '',
+         |          'continent': '', 'official language': '', 'currency': ''} END)::VARCHAR AS LocationData
+         |FROM ev LEFT JOIN alias a ON a.alias = ev.norm
+         |  LEFT JOIN lut l ON l.key_norm = coalesce(a.canonical, ev.norm)""".stripMargin), eager = true)
   ))
 }

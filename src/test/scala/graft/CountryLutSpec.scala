@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,6 +21,7 @@ class CountryLutSpec extends AnyFunSuite {
   }
 
   test("reference CSV: 25 countries, no alias keys fire (UK/USA literal)") {
+    assume(Files.exists(Paths.get(refCsv)), s"reference snapshot absent: $refCsv")
     val lut = CountryLut.build(refCsv)
     assert(lut.size == 25)
     assert(lut.contains("uk") && lut.contains("usa")) // literal short names
@@ -31,6 +32,7 @@ class CountryLutSpec extends AnyFunSuite {
   }
 
   test("BOM on first header survives (country field resolves)") {
+    assume(Files.exists(Paths.get(refCsv)), s"reference snapshot absent: $refCsv")
     val lut = CountryLut.build(refCsv)
     assert(lut.values.forall(_.country.nonEmpty))
   }
@@ -80,6 +82,7 @@ class CountryLutSpec extends AnyFunSuite {
   }
 
   test("build-side DataFrame has one row per key") {
+    assume(Files.exists(Paths.get(refCsv)), s"reference snapshot absent: $refCsv")
     val spark = TestSpark.spark
     val df = CountryLut.df(spark, refCsv)
     assert(df.count() == 25)
