@@ -275,15 +275,7 @@ object Dedup {
   private[graft] val xxBaseHash: Column => Column = sh => xxhash64(sh)
 
   private[graft] def minhashFlatBase(docs: DataFrame, baseHash: Column => Column): DataFrame = {
-    // Input spread (r15, the minhashSigExact / codec-tier rule): the
-    // testdata parquet is one row group → one scan task, and the ~560×
-    // shingle explode plus one md5 AND 64 affine mul-mods per shingle
-    // would run serially in that task without it — the measured cause of
-    // q_minhash_neardups' load-sensitive pair generation. The shuffled
-    // input is the narrow (doc_id, text) relation, a fraction of the
-    // exploded working set the map stage produces.
-    val spread = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    val hashed = shingles(spread, distinct = false)
+    val hashed = shingles(Tables.spread(docs), distinct = false)
       .select(col("doc_id"),
         pmod(baseHash(col("sh")), lit(MinhashPrime)).as("h"))
     hashed.groupBy(col("doc_id"))
@@ -649,12 +641,7 @@ object Dedup {
     // under the min aggregate — dropping it removes the only wide
     // operation on shingle strings (a |corpus chars|-row shuffle); the
     // KM mins combine map-side and only k longs per doc cross the wire.
-    // The repartition is the r13 source_overlap rule: the testdata
-    // parquet is one row group → one scan task, and the ~560× shingle
-    // explode plus one md5 per shingle would run serially without it.
-    // Measured 3.49 → 0.58 s median at sf0.1 reps=5, same hashes.
-    val sh = shingles(Tables(spark, dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism), distinct = false)
+    val sh = shingles(Tables.spread(Tables(spark, dir, "documents")), distinct = false)
       .withColumn("d", md5(col("sh").cast("binary")))
       .select(col("doc_id"), struct(
         conv(substring(col("d"), 1, 8), 16, 10).cast("long").as("h1"),

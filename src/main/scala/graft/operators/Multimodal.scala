@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -68,6 +68,19 @@ object Multimodal {
       }
       .getOrElse(throw new IllegalStateException("no WAV reader provider"))
     (writer, reader)
+  }
+
+  /** The input of every decode path here: `documents` as
+    * `(doc_id, payload)` rows of at least `minBytes` bytes, spread across
+    * cores by [[graft.sources.Tables.spread]].
+    */
+  private def payloads(spark: SparkSession, dir: String,
+      minBytes: Int = 1): Dataset[(Long, Array[Byte])] = {
+    import spark.implicits._
+    Tables.spread(Tables(spark, dir, "documents")
+      .select(col("doc_id"), col("text").cast("binary").as("payload"))
+      .filter(length(col("payload")) >= minBytes))
+      .as[(Long, Array[Byte])]
   }
 
   /** Binary-column metadata: byte length and SHA-256 of the payload.
@@ -138,22 +151,13 @@ object Multimodal {
     * Executor-local throughout: codecs initialize per partition, each row
     * round-trips in memory, nothing reaches the driver. At 100 TB this is
     * the narrow, embarrassingly-parallel stage you want — scan → decode →
-    * project, no shuffle.
+    * project, with no shuffle on many-file inputs and one input spread
+    * on narrow ones ([[graft.sources.Tables.spread]]).
     */
   def imageDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val W = 16
-    val src = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .filter(length(col("payload")) >= 1)
-      // spread the decode across cores: a small corpus arrives as one
-      // file-partition and would otherwise run the whole per-doc codec
-      // pass in a single task (the audioFeatures/sourceOverlap
-      // precedent — the shuffled input is a fraction of the decoded
-      // working set the closure produces)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Byte])]
-    src.mapPartitions { batch =>
+    payloads(spark, dir).mapPartitions { batch =>
       // per-partition codec setup: ImageIO plugin scan happens once per
       // executor JVM; the digest instance is reused across the batch.
       inMemoryCodecStreams()
@@ -179,7 +183,7 @@ object Multimodal {
         var i = 0
         while (i < decoded.length) { sum += decoded(i) & 0xFF; i += 1 }
         digest.reset()
-        val sha = digest.digest(decoded).map("%02x".format(_)).mkString
+        val sha = java.util.HexFormat.of().formatHex(digest.digest(decoded))
         (docId, bw, bh, decoded.length, sha, sum.toDouble / decoded.length)
       }
     }.toDF("doc_id", "width", "height", "n_pixels", "pixel_sha256", "channel_mean")
@@ -201,21 +205,12 @@ object Multimodal {
     * hash-matched query rides the closed-form fixture.
     *
     * Same 100 TB shape as [[imageDecode]]: scan → encode → decode →
-    * project; executor-local, embarrassingly parallel, no shuffle.
+    * project; executor-local, embarrassingly parallel, input spread by
+    * [[graft.sources.Tables.spread]].
     */
   def jpegDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val src = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .filter(length(col("payload")) >= 1)
-      // spread the decode across cores: a small corpus arrives as one
-      // file-partition and would otherwise run the whole per-doc codec
-      // pass in a single task (the audioFeatures/sourceOverlap
-      // precedent — the shuffled input is a fraction of the decoded
-      // working set the closure produces)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Byte])]
-    src.mapPartitions { batch =>
+    payloads(spark, dir).mapPartitions { batch =>
       val digest = java.security.MessageDigest.getInstance("SHA-256")
       batch.map { case (docId, payload) =>
         val len2 = payload.length + (payload.length % 2)
@@ -233,7 +228,7 @@ object Multimodal {
         var i = 0
         while (i < pix.length) { sum += pix(i) & 0xFF; i += 1 }
         digest.reset()
-        val sha = digest.digest(pix).map("%02x".format(_)).mkString
+        val sha = java.util.HexFormat.of().formatHex(digest.digest(pix))
         (docId, w, h, pix.length, sha, sum.toDouble / pix.length)
       }
     }.toDF("doc_id", "width", "height", "n_pixels", "pixel_sha256", "channel_mean")
@@ -254,21 +249,12 @@ object Multimodal {
     * portable byte-exact encoding both engines hash identically.
     *
     * Same 100 TB shape as [[jpegDecode]]: scan → encode → decode →
-    * project; executor-local, embarrassingly parallel, no shuffle.
+    * project; executor-local, embarrassingly parallel, input spread by
+    * [[graft.sources.Tables.spread]].
     */
   def jpegAcDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val src = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .filter(length(col("payload")) >= 1)
-      // spread the decode across cores: a small corpus arrives as one
-      // file-partition and would otherwise run the whole per-doc codec
-      // pass in a single task (the audioFeatures/sourceOverlap
-      // precedent — the shuffled input is a fraction of the decoded
-      // working set the closure produces)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Byte])]
-    src.mapPartitions { batch =>
+    payloads(spark, dir).mapPartitions { batch =>
       val digest = java.security.MessageDigest.getInstance("MD5")
       batch.map { case (docId, payload) =>
         val len2 = payload.length + (payload.length % 2)
@@ -297,7 +283,7 @@ object Multimodal {
           i += 1
         }
         digest.reset()
-        val md = digest.digest(hexBytes).map("%02x".format(_)).mkString
+        val md = java.util.HexFormat.of().formatHex(digest.digest(hexBytes))
         (docId, w, h, pix.length, md, sum.toDouble / pix.length)
       }
     }.toDF("doc_id", "width", "height", "n_pixels", "pixel_md5", "channel_mean")
@@ -313,22 +299,13 @@ object Multimodal {
     * width) and the PCM stream all come from the DECODER. PCM is
     * lossless, so DuckDB can recompute every output from the text bytes.
     * Same 100 TB shape as the image path: scan → decode → project, one
-    * narrow stage, codec state per partition, no shuffle.
+    * narrow stage, codec state per partition, input spread by
+    * [[graft.sources.Tables.spread]].
     */
   def audioDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val SampleRate = 8000f
-    val src = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .filter(length(col("payload")) >= 1)
-      // spread the decode across cores: a small corpus arrives as one
-      // file-partition and would otherwise run the whole per-doc codec
-      // pass in a single task (the audioFeatures/sourceOverlap
-      // precedent — the shuffled input is a fraction of the decoded
-      // working set the closure produces)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Byte])]
-    src.mapPartitions { batch =>
+    payloads(spark, dir).mapPartitions { batch =>
       inMemoryCodecStreams()
       val (wavWriter, wavReader) = wavCodecs()
       val digest = java.security.MessageDigest.getInstance("SHA-256")
@@ -356,7 +333,7 @@ object Multimodal {
         var i = 0
         while (i < pcm.length) { sum += pcm(i) & 0xFF; i += 1 }
         digest.reset()
-        val sha = digest.digest(pcm).map("%02x".format(_)).mkString
+        val sha = java.util.HexFormat.of().formatHex(digest.digest(pcm))
         (docId, decFmt.getSampleRate.toInt, pcm.length,
           pcm.length / decFmt.getSampleRate.toDouble, sha, sum.toDouble / pcm.length)
       }
@@ -375,22 +352,13 @@ object Multimodal {
     * (rounded via the DataFrame `round`, not in the fold, so the gate
     * contract owns the rounding site).
     *
-    * The decode is CPU-BOUND per byte, so the stage REPARTITIONS to
-    * core count first: byte-based file splits size partitions for IO,
-    * and a compact corpus lands on a handful of tasks that SERIALIZE
-    * the codec (measured 16.7× at 10× data without this — the one
-    * payload shuffle buys full-width decode parallelism, the standard
-    * shape of every decode pipeline).
+    * The decode is CPU-BOUND per byte, so a narrow input is spread
+    * across cores first ([[graft.sources.Tables.spread]]).
     */
   def audioFeatures(spark: SparkSession, dir: String, frame: Int = 256): DataFrame = {
     import spark.implicits._
     val SampleRate = 8000f
-    val src = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .filter(length(col("payload")) >= 1)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Byte])]
-    src.mapPartitions { batch =>
+    payloads(spark, dir).mapPartitions { batch =>
       inMemoryCodecStreams()
       val (wavWriter, wavReader) = wavCodecs()
       val fmt = new javax.sound.sampled.AudioFormat(
@@ -455,19 +423,14 @@ object Multimodal {
     * coefficient tables (max |re| = 256·128·2¹⁵ ≈ 1.1e9 — squares sum
     * under 2.4e18, inside BIGINT), so the gate hash-matches; the
     * normalized magnitude is the one double site. Executor-local
-    * per-row codec + O(bins·frame) integer arithmetic, repartitioned to
-    * cores like the RMS path (same provider-binding fix applies).
+    * per-row codec + O(bins·frame) integer arithmetic, input spread like
+    * the RMS path (same provider-binding fix applies).
     */
   def audioSpectrum(spark: SparkSession, dir: String, frame: Int = 256): DataFrame = {
     import spark.implicits._
     val SampleRate = 8000f
     val tables = SpectrumBins.map(b => (b, q15Tables(b, frame))).toArray
-    val src = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .filter(length(col("payload")) >= 1)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Byte])]
-    src.mapPartitions { batch =>
+    payloads(spark, dir).mapPartitions { batch =>
       inMemoryCodecStreams()
       val (wavWriter, wavReader) = wavCodecs()
       val fmt = new javax.sound.sampled.AudioFormat(
@@ -518,17 +481,7 @@ object Multimodal {
   def imageResize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val W = 16
-    val src = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .filter(length(col("payload")) >= 1)
-      // spread the decode across cores: a small corpus arrives as one
-      // file-partition and would otherwise run the whole per-doc codec
-      // pass in a single task (the audioFeatures/sourceOverlap
-      // precedent — the shuffled input is a fraction of the decoded
-      // working set the closure produces)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Byte])]
-    src.mapPartitions { batch =>
+    payloads(spark, dir).mapPartitions { batch =>
       inMemoryCodecStreams()
       val digest = java.security.MessageDigest.getInstance("SHA-256")
       batch.map { case (docId, payload) =>
@@ -561,7 +514,7 @@ object Multimodal {
           r += 1
         }
         digest.reset()
-        val sha = digest.digest(resized).map("%02x".format(_)).mkString
+        val sha = java.util.HexFormat.of().formatHex(digest.digest(resized))
         (docId, outW, outH, sha, sum)
       }
     }.toDF("doc_id", "out_w", "out_h", "pixel_sha256", "pixel_sum")
@@ -585,7 +538,8 @@ object Multimodal {
     * from the padded text directly.
     *
     * Same 100 TB shape as [[imageDecode]]: scan → demux/decode →
-    * project, executor-local, codec state per partition, no shuffle.
+    * project, executor-local, codec state per partition, input spread by
+    * [[graft.sources.Tables.spread]].
     * For the codegen'd no-decode sampling shape see [[frameSampleStub]].
     */
   def videoFrames(spark: SparkSession, dir: String, stride: Int = 4): DataFrame = {
@@ -593,17 +547,7 @@ object Multimodal {
     val FW = 16
     val FH = 4
     val FrameBytes = FW * FH
-    val src = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .filter(length(col("payload")) >= 1)
-      // spread the decode across cores: a small corpus arrives as one
-      // file-partition and would otherwise run the whole per-doc codec
-      // pass in a single task (the audioFeatures/sourceOverlap
-      // precedent — the shuffled input is a fraction of the decoded
-      // working set the closure produces)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Byte])]
-    src.mapPartitions { batch =>
+    payloads(spark, dir).mapPartitions { batch =>
       inMemoryCodecStreams()
       val digest = java.security.MessageDigest.getInstance("MD5")
       // identity grayscale palette: GIF stores palette INDICES, so with
@@ -666,7 +610,7 @@ object Multimodal {
             y += 1
           }
           digest.reset()
-          val md5hex = digest.digest(px).map("%02x".format(_)).mkString
+          val md5hex = java.util.HexFormat.of().formatHex(digest.digest(px))
           (docId, idx, demuxed, md5hex, sum.toDouble / (w * h))
         }
         reader.dispose()
@@ -721,17 +665,13 @@ object Multimodal {
     * Images narrower than the grid (fewer than 8 pixel rows — docs
     * under 128 chars at the 16-wide layout) have no defined 9×8 pool
     * and are excluded by contract. Same 100 TB shape as every codec
-    * path here: scan → decode → project, no shuffle.
+    * path here: scan → decode → project, input spread by
+    * [[graft.sources.Tables.spread]].
     */
   def imagePhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val W = 16
-    val src = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .filter(length(col("payload")) >= W * 8)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, Array[Byte])]
-    src.mapPartitions { batch =>
+    payloads(spark, dir, W * 8).mapPartitions { batch =>
       inMemoryCodecStreams()
       batch.map { case (docId, payload) =>
         val h = (payload.length + W - 1) / W

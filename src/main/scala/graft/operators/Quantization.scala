@@ -90,8 +90,8 @@ object Quantization {
   def randomProjection(spark: SparkSession, dir: String, outDim: Int = 8): DataFrame = {
     // matches SQL md5() on UTF-8 bytes: first 8 lowercase hex digits → parity
     def sign(i: Int, j: Int): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"${i}_${j}".getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      val hex = java.util.HexFormat.of().formatHex(java.security.MessageDigest
+        .getInstance("MD5").digest(s"${i}_${j}".getBytes("UTF-8")), 0, 4)
       if (java.lang.Long.parseLong(hex, 16) % 2 == 0) 1L else -1L
     }
     // fixed corpus width read once (1-row driver lookup, bounded)

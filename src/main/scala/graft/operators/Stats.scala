@@ -1043,14 +1043,8 @@ object Stats {
     val m = thex.zipWithIndex.foldRight(lit(6): Column) { case ((hx, k), rest) =>
       when(col("u") < hx, k).otherwise(rest)
     }.cast("long")
-    Tables(spark, dir, "events")
-      .select(col("event_id"),
-        round(col("value") * 100d).cast("long").as("cents"))
-      // spread the digest work: the 13 md5s/event are this query's
-      // entire cost and a small corpus arrives as one file-partition —
-      // without the repartition the whole digest pass ran in a single
-      // task (the multimodal-decoder precedent)
-      .repartition(spark.sparkContext.defaultParallelism)
+    Tables.spread(Tables(spark, dir, "events")
+        .select(col("event_id"), round(col("value") * 100d).cast("long").as("cents")))
       .select(col("event_id"), col("cents"),
         explode(sequence(lit(0), lit((b + 3) / 4 - 1))).as("j"))
       .withColumn("hex", md5(concat(col("event_id").cast("string"),

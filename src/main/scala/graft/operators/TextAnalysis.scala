@@ -141,14 +141,8 @@ object TextAnalysis {
   def lmScore(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val t = tokens(col("text"))
-    // spread the tokenize+explode: a small corpus arrives as one
-    // file-partition, and both consumers (c12, the scoring join) run
-    // the pair explode — without the repartition that work was a
-    // single task per consumer (the multimodal-decoder precedent; the
-    // exploded pair relation outweighs the shuffled text)
-    val docPairs = Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism)
+    val docPairs = Tables.spread(Tables(spark, dir, "documents")
+        .select(col("doc_id"), col("text")))
       .select(col("doc_id"), explode(zip_with(
         slice(t, lit(1), greatest(size(t) - 1, lit(0))),
         slice(t, lit(2), greatest(size(t) - 1, lit(0))),
@@ -201,11 +195,8 @@ object TextAnalysis {
   def dsirResample(spark: SparkSession, dir: String, dim: Int = 64): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val isTarget = col("source").isin("src0", "src1")
-    // spread the tokenize+md5 bucketing (single-file-partition corpus;
-    // both consumers re-run the explode — the lmScore precedent)
-    val tok = Tables(spark, dir, "documents")
-      .select(col("doc_id"), isTarget.as("is_target"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism)
+    val tok = Tables.spread(Tables(spark, dir, "documents")
+        .select(col("doc_id"), isTarget.as("is_target"), col("text")))
       .select(col("doc_id"), col("is_target"),
         explode(tokens(col("text"))).as("token"))
       .withColumn("bucket", graft.functions.GraftFunctions.md5Bucket(col("token"), dim))
@@ -390,20 +381,17 @@ object TextAnalysis {
     *
     * Executor-local per-row codec work — the audio-codec class: one
     * Deflater per row (stateless, no JVM-global provider lookup —
-    * verified unlike `AudioSystem`), payloads repartitioned to core
-    * count because the cost is CPU-bound bytes, not splits. Rows-only
-    * by design (the DEFLATE bitstream is a zlib implementation detail
-    * no SQL engine replays); the spec pins determinism, the
-    * worst-case expansion bound, and the more-repetition-compresses-
-    * better direction.
+    * verified unlike `AudioSystem`), input spread by
+    * [[graft.sources.Tables.spread]] because the cost is CPU-bound
+    * bytes, not splits. Rows-only by design (the DEFLATE bitstream is a
+    * zlib implementation detail no SQL engine replays); the spec pins
+    * determinism, the worst-case expansion bound, and the
+    * more-repetition-compresses-better direction.
     */
   def compressionRatio(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cores = spark.sparkContext.defaultParallelism
-    Tables(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
+    Tables.spread(Tables(spark, dir, "documents").select(col("doc_id"), col("text")))
       .as[(Long, String)]
-      .repartition(cores)
       .map { case (id, text) =>
         val raw = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val d = new java.util.zip.Deflater(6, false)
@@ -443,13 +431,8 @@ object TextAnalysis {
       .filter(length(col("text")) >= w)
     // ONE explode pass + ONE shuffle (map-side partial collect_set on
     // the shingle key IS the distinct; both downstream branches read
-    // the same materialization). The explode amplifies ~|text|× per
-    // row, so the input is repartitioned by OUTPUT volume first — a
-    // small corpus arrives as one file-partition and would otherwise
-    // run the whole shingle+md5 pass in a single task (measured: the
-    // entire 5.7 s quiet median was that one serial task at sf0.1)
-    val grouped = docs
-      .repartition(spark.sparkContext.defaultParallelism)
+    // the same materialization)
+    val grouped = Tables.spread(docs)
       .select(col("source"), col("text"),
         explode(sequence(lit(1), length(col("text")) - (w - 1))).as("i"))
       .select(col("source"),

@@ -17,11 +17,8 @@ object CsvSource {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val buf = new Array[Byte](4096)
-    val n = math.max(in.read(buf), 0)
-    in.close()
-    var sample = new String(buf, 0, n, java.nio.charset.StandardCharsets.UTF_8)
+    val head = scala.util.Using.resource(fs.open(p))(_.readNBytes(4096))
+    var sample = new String(head, java.nio.charset.StandardCharsets.UTF_8)
     if (sample.nonEmpty && sample.charAt(0) == '\uFEFF') sample = sample.substring(1)
     CountryLut.sniffDelimiter(sample)
   }

@@ -13,14 +13,32 @@ class PlanShapeSpec extends AnyFunSuite {
   // a build that runs Spark jobs (stream replays, roundtrip writes,
   // iterative training) is covered by its query's own suite; this spec
   // audits every lazily-planned query
-  SparkEntry.registry.filterNot(q => q.eager || SparkEntry.streamTier(q.name)).foreach { q =>
+  private val lazilyPlanned =
+    SparkEntry.registry.filterNot(q => q.eager || SparkEntry.streamTier(q.name))
+
+  // the queries whose operators call Tables.spread: on the one-file
+  // testdata tables each plans a keyless round-robin exchange, and no
+  // other lazily-planned query plans one
+  private val spreads = Set(
+    "q_audio_decode", "q_audio_features", "q_audio_spectrum", "q_bootstrap_ci",
+    "q_compression_ratio", "q_dsir_resample", "q_image_decode", "q_image_resize",
+    "q_jpeg_ac_decode", "q_jpeg_decode", "q_lm_score", "q_minhash_neardups",
+    "q_minhash_sig", "q_phash", "q_source_overlap", "q_video_frames")
+
+  lazilyPlanned.foreach { q =>
     test(s"${q.name} plans without cartesian products") {
       val plan = q.build(TestSpark.spark, TestSpark.sf0001).queryExecution.sparkPlan.toString
       assert(!plan.contains("CartesianProduct"), s"${q.name} plans a CartesianProduct")
       if (!q.bnlj)
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"${q.name} plans an unexpected BroadcastNestedLoopJoin")
+      assert(plan.contains("RoundRobinPartitioning") == spreads(q.name),
+        s"${q.name}: input spread ${if (spreads(q.name)) "missing" else "unexpected"}")
     }
+  }
+
+  test("every pinned input-spread query is lazily planned") {
+    assert(spreads -- lazilyPlanned.map(_.name) == Set.empty)
   }
 
   test("brute-force top-k plans no Window over the scored corpus") {

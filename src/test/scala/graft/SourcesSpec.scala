@@ -172,6 +172,56 @@ class SourcesSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("Tables.spread passes a many-file scan through, deciding without a job") {
+    val sc = spark.sparkContext
+    val cores = sc.defaultParallelism
+    val dir = new java.io.File(sys.props("java.io.tmpdir"), Scratch.uniqueName("graft-spread"))
+    Scratch.using(dir) {
+      Tables(spark, TestSpark.sf0001, "documents").repartition(2 * cores)
+        .write.parquet(s"$dir/documents.parquet")
+      val narrow = Tables(spark, TestSpark.sf0001, "documents")
+      val wide = Tables(spark, dir.toString, "documents")
+      assert(narrow.inputFiles.length == 1)
+      assert(wide.inputFiles.length >= cores)
+
+      val group = Scratch.uniqueName("spread-decision")
+      val sentinel = Scratch.uniqueName("spread-sentinel")
+      val decisionJobs = new AtomicInteger
+      val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`group`) => decisionJobs.incrementAndGet()
+            case Some(`sentinel`) => sentinelSeen.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "input-spread decision")
+        val (spreadWide, spreadNarrow) =
+          try (Tables.spread(wide), Tables.spread(narrow)) finally sc.clearJobGroup()
+        assert(spreadWide eq wide)
+        assert(spreadNarrow.queryExecution.sparkPlan.toString.contains("RoundRobinPartitioning"))
+        // listener events arrive in order: once the sentinel job's start
+        // is seen, any job the decision started has been counted
+        sc.setJobGroup(sentinel, "listener barrier")
+        try spark.range(1).count() finally sc.clearJobGroup()
+        assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        assert(decisionJobs.get == 0)
+      } finally sc.removeSparkListener(listener)
+
+      for (name <- Seq("q_image_decode", "q_minhash_sig")) {
+        val q = SparkEntry.queries(name)
+        val many = q(spark, dir.toString)
+        assert(!many.queryExecution.sparkPlan.toString.contains("RoundRobinPartitioning"),
+          s"$name shuffles a ${wide.inputFiles.length}-file scan")
+        def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+        assert(rows(many) == rows(q(spark, TestSpark.sf0001)), name)
+      }
+    }
+  }
+
   test("binaryFile ingestion: glob prunes at listing, metadata length is exact") {
     import org.apache.spark.sql.functions.col
     val rows = graft.sources.BinaryFiles.ingestDocs(spark, TestSpark.sf0001, docCap = 20)
