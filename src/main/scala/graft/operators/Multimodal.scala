@@ -151,8 +151,8 @@ object Multimodal {
     * Executor-local throughout: codecs initialize per partition, each row
     * round-trips in memory, nothing reaches the driver. At 100 TB this is
     * the narrow, embarrassingly-parallel stage you want — scan → decode →
-    * project, with no shuffle on many-file inputs and one input spread
-    * on narrow ones ([[graft.sources.Tables.spread]]).
+    * project, after one keyless input spread
+    * ([[graft.sources.Tables.spread]]).
     */
   def imageDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -352,8 +352,8 @@ object Multimodal {
     * (rounded via the DataFrame `round`, not in the fold, so the gate
     * contract owns the rounding site).
     *
-    * The decode is CPU-BOUND per byte, so a narrow input is spread
-    * across cores first ([[graft.sources.Tables.spread]]).
+    * The decode is CPU-BOUND per byte, so the input is spread across
+    * cores first ([[graft.sources.Tables.spread]]).
     */
   def audioFeatures(spark: SparkSession, dir: String, frame: Int = 256): DataFrame = {
     import spark.implicits._

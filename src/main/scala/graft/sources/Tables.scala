@@ -71,8 +71,8 @@ object Tables {
   }
 
   /** The engine's one input-spread policy: a keyless round-robin
-    * `repartition(defaultParallelism)` when `df` reads fewer files than
-    * the cluster has cores, `df` unchanged otherwise.
+    * `repartition(defaultParallelism)` of the input of a CPU-heavy
+    * per-row pass.
     *
     * Parquet splits partitions by bytes for IO, and every testdata table
     * is one single-row-group file, so a scan stage there is one task. An
@@ -85,12 +85,13 @@ object Tables {
     * audio decode took 16.7× as long on 10× data; `q_source_overlap`'s
     * 5.7 s sf0.1 median was one serial shingle task.
     *
-    * A many-file input already spreads by its splits, so it passes
-    * through: no shuffle down to `defaultParallelism` at scale. The file
-    * count is known on the driver from the listing the scan already did,
-    * so the decision runs no Spark job. The planned partition count is
-    * not used: a single-row-group file larger than the split size plans
-    * as several partitions, only one of which holds rows.
+    * A many-file input is spread too. Passing scans of at least
+    * `defaultParallelism` files through unshuffled was measured on
+    * ScaleBench's 10-file factor-10 replicas at local[4]: no net gain
+    * (the 12 spread scale targets' medians summed 103.3 s spread, 102.9 s
+    * passed through), with `q_minhash_sig`, `q_dsir_resample`,
+    * `q_lm_score` and `q_bootstrap_ci` 7–16% slower, because 10 file
+    * tasks on 4 cores run in 3 uneven waves.
     *
     * Operators opt in by calling this. The gram-explode text queries
     * (`q_ngram_novelty`, `q_repetition`, `q_ngram_repetition`,
@@ -99,10 +100,8 @@ object Tables {
     * and the keyless repartition adds a sort-before-repartition and a
     * stage.
     */
-  def spread(df: DataFrame): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.inputFiles.length < cores) df.repartition(cores) else df
-  }
+  def spread(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = raw(spark, dir, name)
