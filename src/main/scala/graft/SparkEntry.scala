@@ -96,8 +96,10 @@ object SparkEntry {
 
   /** The committed fan-engagement fixture (FIXTURES.md §A5), resolved once
     * against the working directory (the checkout, under sbt) to an absolute
-    * path, so q_pipeline_parity's oracle SQL reads the same files wherever
-    * `tools/compare_oracle.py` runs.
+    * path, which the engine side of q_pipeline_parity reads. Its oracle SQL
+    * names the same files relative to the checkout (`fixtures/fan/...`),
+    * so the manifest does not depend on where the checkout lives, and
+    * `tools/compare_oracle.py` resolves them against the checkout root.
     */
   private[graft] lazy val fanFixture: String =
     java.nio.file.Paths.get("fixtures/fan").toAbsolutePath.toString
@@ -7071,7 +7073,7 @@ object SparkEntry {
          |      trim(coalesce(Continent, '')) AS continent,
          |      trim(coalesce(Main_Official_Language, '')) AS official_language,
          |      trim(coalesce(Currency, '')) AS currency
-         |    FROM read_csv('$fanFixture/input_side/country_data_v2.csv',
+         |    FROM read_csv('fixtures/fan/input_side/country_data_v2.csv',
          |      header = true, delim = ',', quote = '"', all_varchar = true))
          |  WHERE country <> ''),
          |lut AS (
@@ -7081,7 +7083,7 @@ object SparkEntry {
          |  FROM alias a JOIN base b ON b.key_norm = a.canonical),
          |ev AS (
          |  SELECT *, lower(trim(coalesce(ViewerLocationCountry, ''))) AS norm
-         |  FROM read_json('$fanFixture/input/*fan_engagement-000-of-001.json',
+         |  FROM read_json('fixtures/fan/input/*fan_engagement-000-of-001.json',
          |    format = 'newline_delimited',
          |    columns = {'FanID': 'VARCHAR', 'RaceID': 'VARCHAR', 'Timestamp': 'VARCHAR',
          |               'ViewerLocationCountry': 'VARCHAR', 'DeviceType': 'VARCHAR',

@@ -411,7 +411,7 @@ object Analytics {
   def processEdges(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.raw(spark, dir, "events")
     val ev = raw.select(col("user_id"), col("event_type"),
-      expr(Tables.tsMicrosSql(raw.schema)).as("us"), col("event_id"))
+      Tables.micros(raw).as("us"), col("event_id"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val edges = ev
       .withColumn("next_type", lead(col("event_type"), 1).over(w))
@@ -450,7 +450,7 @@ object Analytics {
   def stickiness(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.raw(spark, dir, "events")
     val ud = raw.select(col("user_id"),
-      expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 86400000000").as("day"))
+      Tables.microsDiv(raw, 86400000000L).as("day"))
       .distinct()
     val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val mau = ud
@@ -868,7 +868,7 @@ object Analytics {
     * (both windows and the aggregate share it), state O(1) per row —
     * where the naive overlap SELF-JOIN explodes quadratically on dense
     * users and cannot merge transitive chains without iteration.
-    * Arithmetic stays on integer MICRO-epoch longs (Tables.tsMicrosSql —
+    * Arithmetic stays on integer MICRO-epoch longs (Tables.micros —
     * µs is the finest resolution both engines' parquet readers preserve,
     * so the oracle's `epoch_us` sees the same integers), making every
     * comparison and sum exact on both engines.
@@ -880,7 +880,7 @@ object Analytics {
     val prev = Window.partitionBy(col("user_id")).orderBy(col("s"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val raw = Tables.raw(spark, dir, "events")
-    val micros = expr(Tables.tsMicrosSql(raw.schema))
+    val micros = Tables.micros(raw)
     raw
       .select(col("user_id"),
         micros.as("s"),
@@ -917,7 +917,7 @@ object Analytics {
   def intervalOverlapJoin(spark: SparkSession, dir: String): DataFrame = {
     val cellUs = 300L * 1000000L // ≥ max interval length (299 s)
     val raw = Tables.raw(spark, dir, "events")
-    val micros = expr(Tables.tsMicrosSql(raw.schema))
+    val micros = Tables.micros(raw)
     val iv = raw
       .filter(col("event_type").isin("view", "click"))
       .select(col("event_type"), col("user_id"), col("event_id"), micros.as("s"))
@@ -1197,7 +1197,7 @@ object Analytics {
   def timeToConvert(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val raw = Tables.raw(spark, dir, "events")
-    val micros = expr(Tables.tsMicrosSql(raw.schema))
+    val micros = Tables.micros(raw)
     val perUser = raw
       .select(col("user_id"), col("event_type"), micros.as("us"))
       .groupBy(col("user_id"))
@@ -1237,7 +1237,7 @@ object Analytics {
     */
   def userPaths(spark: SparkSession, dir: String, k: Int = 3, topN: Int = 10): DataFrame = {
     val raw = Tables.raw(spark, dir, "events")
-    val micros = expr(Tables.tsMicrosSql(raw.schema))
+    val micros = Tables.micros(raw)
     val ev = raw.select(col("user_id"), col("event_type"),
       micros.as("us"), col("event_id"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))

@@ -83,6 +83,35 @@ object Multimodal {
       .as[(Long, Array[Byte])]
   }
 
+  /** Width in pixels of the grayscale images the PNG paths build. */
+  private val PngWidth = 16
+
+  /** The genuine PNG round-trip of the image paths: `payload`, padded
+    * with spaces to whole [[PngWidth]]-pixel rows, becomes a grayscale
+    * image, `ImageIO.write` encodes it as a PNG container and
+    * `ImageIO.read` decodes it back. Returns the decoded raster with its
+    * width and height.
+    */
+  private def pngRoundTrip(docId: Long, payload: Array[Byte]): (Array[Byte], Int, Int) = {
+    val h = (payload.length + PngWidth - 1) / PngWidth
+    val pixels = java.util.Arrays.copyOf(payload, PngWidth * h)
+    java.util.Arrays.fill(pixels, payload.length, PngWidth * h, ' '.toByte)
+    val img = new java.awt.image.BufferedImage(
+      PngWidth, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    img.getRaster.setDataElements(0, 0, PngWidth, h, pixels)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    val png = bos.toByteArray
+    require(png.length > 8 &&
+      (png(0) & 0xFF) == 0x89 && png(1) == 'P' && png(2) == 'N' && png(3) == 'G',
+      s"doc $docId: encoder did not produce a PNG container")
+    val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
+    val (bw, bh) = (back.getWidth, back.getHeight)
+    val decoded = new Array[Byte](bw * bh)
+    back.getRaster.getDataElements(0, 0, bw, bh, decoded)
+    (decoded, bw, bh)
+  }
+
   /** Binary-column metadata: byte length and SHA-256 of the payload.
     * (documents.text standing in as the opaque payload; with real media
     * the source would read `binary` straight from parquet.)
@@ -156,29 +185,13 @@ object Multimodal {
     */
   def imageDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val W = 16
     payloads(spark, dir).mapPartitions { batch =>
       // per-partition codec setup: ImageIO plugin scan happens once per
       // executor JVM; the digest instance is reused across the batch.
       inMemoryCodecStreams()
       val digest = java.security.MessageDigest.getInstance("SHA-256")
       batch.map { case (docId, payload) =>
-        val h = (payload.length + W - 1) / W
-        val pixels = java.util.Arrays.copyOf(payload, W * h)
-        java.util.Arrays.fill(pixels, payload.length, W * h, ' '.toByte)
-        val img = new java.awt.image.BufferedImage(
-          W, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        img.getRaster.setDataElements(0, 0, W, h, pixels)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        val png = bos.toByteArray
-        require(png.length > 8 &&
-          (png(0) & 0xFF) == 0x89 && png(1) == 'P' && png(2) == 'N' && png(3) == 'G',
-          s"doc $docId: encoder did not produce a PNG container")
-        val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(png))
-        val (bw, bh) = (back.getWidth, back.getHeight)
-        val decoded = new Array[Byte](bw * bh)
-        back.getRaster.getDataElements(0, 0, bw, bh, decoded)
+        val (decoded, bw, bh) = pngRoundTrip(docId, payload)
         var sum = 0L
         var i = 0
         while (i < decoded.length) { sum += decoded(i) & 0xFF; i += 1 }
@@ -480,24 +493,11 @@ object Multimodal {
     */
   def imageResize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val W = 16
     payloads(spark, dir).mapPartitions { batch =>
       inMemoryCodecStreams()
       val digest = java.security.MessageDigest.getInstance("SHA-256")
       batch.map { case (docId, payload) =>
-        val h = (payload.length + W - 1) / W
-        val pixels = java.util.Arrays.copyOf(payload, W * h)
-        java.util.Arrays.fill(pixels, payload.length, W * h, ' '.toByte)
-        val img = new java.awt.image.BufferedImage(
-          W, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        img.getRaster.setDataElements(0, 0, W, h, pixels)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        val back = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
-        val (bw, bh) = (back.getWidth, back.getHeight)
-        val decoded = new Array[Byte](bw * bh)
-        back.getRaster.getDataElements(0, 0, bw, bh, decoded)
+        val (decoded, bw, bh) = pngRoundTrip(docId, payload)
         val outW = bw / 2
         val outH = (bh + 1) / 2
         val resized = new Array[Byte](outW * outH)
@@ -670,23 +670,10 @@ object Multimodal {
     */
   def imagePhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val W = 16
-    payloads(spark, dir, W * 8).mapPartitions { batch =>
+    payloads(spark, dir, PngWidth * 8).mapPartitions { batch =>
       inMemoryCodecStreams()
       batch.map { case (docId, payload) =>
-        val h = (payload.length + W - 1) / W
-        val pixels = java.util.Arrays.copyOf(payload, W * h)
-        java.util.Arrays.fill(pixels, payload.length, W * h, ' '.toByte)
-        val img = new java.awt.image.BufferedImage(
-          W, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-        img.getRaster.setDataElements(0, 0, W, h, pixels)
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        val back = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
-        val (bw, bh) = (back.getWidth, back.getHeight)
-        val decoded = new Array[Byte](bw * bh)
-        back.getRaster.getDataElements(0, 0, bw, bh, decoded)
+        val (decoded, bw, bh) = pngRoundTrip(docId, payload)
         // 9×8 average pool in exact integers (sums + counts per cell)
         val sums = Array.ofDim[Long](9, 8)
         val cnts = Array.ofDim[Long](9, 8)

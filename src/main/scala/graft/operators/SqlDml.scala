@@ -50,15 +50,13 @@ object SqlDml {
     GraftVtCatalog.register(spark, name, root, base.schema)
   }
 
-  /** `MERGE INTO` through the parser: a deterministic re-crawl delta —
-    * updates (doc_id % 7 = 0, source-derived replacement text), deletes
-    * (% 11 = 3, disjoint from updates), inserts (% 13 = 0 at key
-    * + 10M) — merged in ONE statement exercising all three WHEN arms.
-    * Returns the final table state as (doc_id, source, digest) so the
-    * oracle pins every surviving row's content.
+  /** The deterministic re-crawl delta — updates (doc_id % 7 = 0,
+    * source-derived replacement text), deletes (% 11 = 3, disjoint from
+    * updates), inserts (% 13 = 0 at key + 10M) — registered as temp view
+    * `view` and merged into `target` in ONE `MERGE INTO` exercising all
+    * three WHEN arms.
     */
-  def sqlMerge(spark: SparkSession, dir: String): DataFrame = {
-    ensureDocsTable(spark, dir, "dml_merge")
+  private def recrawlMerge(spark: SparkSession, dir: String, target: String, view: String): Unit = {
     val base = docsBase(spark, dir)
     base.filter(col("doc_id") % 7 === 0)
       .select(col("doc_id"), concat(upper(col("text")), lit(" M")).as("text"),
@@ -68,15 +66,24 @@ object SqlDml {
       .unionByName(base.filter(col("doc_id") % 13 === 0)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
           lit("inserted").as("source"), lit("upsert").as("op")))
-      .createOrReplaceTempView("graft_merge_updates")
+      .createOrReplaceTempView(view)
     spark.sql(
-      """MERGE INTO graft_vt.dml_merge t
-        |USING graft_merge_updates s
-        |ON t.doc_id = s.doc_id
-        |WHEN MATCHED AND s.op = 'delete' THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET text = s.text, source = s.source
-        |WHEN NOT MATCHED AND s.op <> 'delete' THEN
-        |  INSERT (doc_id, text, source) VALUES (s.doc_id, s.text, s.source)""".stripMargin)
+      s"""MERGE INTO $target t
+         |USING $view s
+         |ON t.doc_id = s.doc_id
+         |WHEN MATCHED AND s.op = 'delete' THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET text = s.text, source = s.source
+         |WHEN NOT MATCHED AND s.op <> 'delete' THEN
+         |  INSERT (doc_id, text, source) VALUES (s.doc_id, s.text, s.source)""".stripMargin): Unit
+  }
+
+  /** `MERGE INTO` through the parser: the re-crawl delta of
+    * [[recrawlMerge]], all three WHEN arms in ONE statement. Returns the final table state as (doc_id, source, digest) so the
+    * oracle pins every surviving row's content.
+    */
+  def sqlMerge(spark: SparkSession, dir: String): DataFrame = {
+    ensureDocsTable(spark, dir, "dml_merge")
+    recrawlMerge(spark, dir, "graft_vt.dml_merge", "graft_merge_updates")
     spark.sql(
       """SELECT doc_id, source, md5(CAST(text AS BINARY)) AS digest
         |FROM graft_vt.dml_merge""".stripMargin)
@@ -167,6 +174,24 @@ object SqlDml {
         |FROM graft_vt.dml_insert""".stripMargin)
   }
 
+  /** Idempotently materialize `documents` as single-version table
+    * `graft_vt.<name>` CLUSTERED BY doc_id — v1 range-partitioned into 8
+    * files, then file-level-ANALYZEd ([[graft.sources.ZoneMap.analyze]])
+    * — and (re-)register it for the given dir.
+    */
+  private def ensureZonedTable(spark: SparkSession, dir: String, name: String): Unit = {
+    val base = docsBase(spark, dir)
+    val root = roots.getOrElseUpdate((dir, name), {
+      val r = VersionedTable.freshRoot(s"$dir#$name")
+      base.repartitionByRange(8, col("doc_id"))
+        .write.mode("overwrite").parquet(s"$r/files/base_v1")
+      VersionedTable.writeManifest(r, 1, Seq("files/base_v1"))
+      ZoneMap.analyze(spark, r, 1, "doc_id"): Unit
+      r
+    })
+    GraftVtCatalog.register(spark, name, root, base.schema, clusterCol = Some("doc_id"))
+  }
+
   /** Idempotently materialize `documents` as a MERGE-ON-READ table
     * (key = doc_id) and register it for the given dir.
     */
@@ -226,24 +251,7 @@ object SqlDml {
     */
   def sqlMergeMor(spark: SparkSession, dir: String): DataFrame = {
     ensureMorTable(spark, dir, "mor_merge")
-    val base = docsBase(spark, dir)
-    base.filter(col("doc_id") % 7 === 0)
-      .select(col("doc_id"), concat(upper(col("text")), lit(" M")).as("text"),
-        lit("recrawl").as("source"), lit("upsert").as("op"))
-      .unionByName(base.filter(col("doc_id") % 11 === 3 && col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"), col("text"), col("source"), lit("delete").as("op")))
-      .unionByName(base.filter(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
-          lit("inserted").as("source"), lit("upsert").as("op")))
-      .createOrReplaceTempView("graft_mor_merge_updates")
-    spark.sql(
-      """MERGE INTO graft_vt.mor_merge t
-        |USING graft_mor_merge_updates s
-        |ON t.doc_id = s.doc_id
-        |WHEN MATCHED AND s.op = 'delete' THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET text = s.text, source = s.source
-        |WHEN NOT MATCHED AND s.op <> 'delete' THEN
-        |  INSERT (doc_id, text, source) VALUES (s.doc_id, s.text, s.source)""".stripMargin)
+    recrawlMerge(spark, dir, "graft_vt.mor_merge", "graft_mor_merge_updates")
     graft.sources.VtMor.compact(spark, "mor_merge"): Unit
     spark.sql(
       """SELECT doc_id, source, md5(CAST(text AS BINARY)) AS digest
@@ -269,24 +277,7 @@ object SqlDml {
     // range it reads exactly like this (tags hold versions against
     // retention), and the feed query below binds the tag, not "latest"
     graft.sources.GraftVtTable.tag(roots((dir, "dml_cdc")), "cdc_base", 1)
-    val base = docsBase(spark, dir)
-    base.filter(col("doc_id") % 7 === 0)
-      .select(col("doc_id"), concat(upper(col("text")), lit(" M")).as("text"),
-        lit("recrawl").as("source"), lit("upsert").as("op"))
-      .unionByName(base.filter(col("doc_id") % 11 === 3 && col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"), col("text"), col("source"), lit("delete").as("op")))
-      .unionByName(base.filter(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
-          lit("inserted").as("source"), lit("upsert").as("op")))
-      .createOrReplaceTempView("graft_cdc_updates")
-    spark.sql(
-      """MERGE INTO graft_vt.dml_cdc t
-        |USING graft_cdc_updates s
-        |ON t.doc_id = s.doc_id
-        |WHEN MATCHED AND s.op = 'delete' THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET text = s.text, source = s.source
-        |WHEN NOT MATCHED AND s.op <> 'delete' THEN
-        |  INSERT (doc_id, text, source) VALUES (s.doc_id, s.text, s.source)""".stripMargin)
+    recrawlMerge(spark, dir, "graft_vt.dml_cdc", "graft_cdc_updates")
     graft.sources.GraftVtTable.tag(roots((dir, "dml_cdc")), "cdc_commit", 2)
     spark.sql(
       """WITH raw AS (
@@ -347,24 +338,7 @@ object SqlDml {
     // same retention pin as sqlCdc: tags hold the fixture's version
     // pair against keep-last-2 retention across bench reps
     graft.sources.GraftVtTable.tag(roots((dir, "dml_cdc_net")), "cdcnet_base", 1)
-    val base = docsBase(spark, dir)
-    base.filter(col("doc_id") % 7 === 0)
-      .select(col("doc_id"), concat(upper(col("text")), lit(" M")).as("text"),
-        lit("recrawl").as("source"), lit("upsert").as("op"))
-      .unionByName(base.filter(col("doc_id") % 11 === 3 && col("doc_id") % 7 =!= 0)
-        .select(col("doc_id"), col("text"), col("source"), lit("delete").as("op")))
-      .unionByName(base.filter(col("doc_id") % 13 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
-          lit("inserted").as("source"), lit("upsert").as("op")))
-      .createOrReplaceTempView("graft_cdcnet_updates")
-    spark.sql(
-      """MERGE INTO graft_vt.dml_cdc_net t
-        |USING graft_cdcnet_updates s
-        |ON t.doc_id = s.doc_id
-        |WHEN MATCHED AND s.op = 'delete' THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET text = s.text, source = s.source
-        |WHEN NOT MATCHED AND s.op <> 'delete' THEN
-        |  INSERT (doc_id, text, source) VALUES (s.doc_id, s.text, s.source)""".stripMargin)
+    recrawlMerge(spark, dir, "graft_vt.dml_cdc_net", "graft_cdcnet_updates")
     graft.sources.GraftVtTable.tag(roots((dir, "dml_cdc_net")), "cdcnet_commit", 2)
     spark.sql(
       """WITH raw AS (
@@ -828,17 +802,7 @@ object SqlDml {
     * a 0.1% key-range query schedule 0.1% of the tasks at 100 TB.
     */
   def sqlZonedTable(spark: SparkSession, dir: String): DataFrame = {
-    val name = "vt_zoned"
-    val base = docsBase(spark, dir)
-    val root = roots.getOrElseUpdate((dir, name), {
-      val r = VersionedTable.freshRoot(s"$dir#$name")
-      base.repartitionByRange(8, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$r/files/base_v1")
-      VersionedTable.writeManifest(r, 1, Seq("files/base_v1"))
-      ZoneMap.analyze(spark, r, 1, "doc_id"): Unit
-      r
-    })
-    GraftVtCatalog.register(spark, name, root, base.schema, clusterCol = Some("doc_id"))
+    ensureZonedTable(spark, dir, "vt_zoned")
     spark.sql(
       """UPDATE graft_vt.vt_zoned
         |SET text = upper(text), source = 'zoned'
@@ -878,16 +842,7 @@ object SqlDml {
     */
   def sqlAggPushdown(spark: SparkSession, dir: String): DataFrame = {
     val name = "vt_aggmeta"
-    val base = docsBase(spark, dir)
-    val root = roots.getOrElseUpdate((dir, name), {
-      val r = VersionedTable.freshRoot(s"$dir#$name")
-      base.repartitionByRange(8, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$r/files/base_v1")
-      VersionedTable.writeManifest(r, 1, Seq("files/base_v1"))
-      ZoneMap.analyze(spark, r, 1, "doc_id"): Unit
-      r
-    })
-    GraftVtCatalog.register(spark, name, root, base.schema, clusterCol = Some("doc_id"))
+    ensureZonedTable(spark, dir, name)
     spark.sql(
       s"""SELECT count(*) AS n_docs, count(doc_id) AS n_keys,
          |  min(doc_id) AS min_id, max(doc_id) AS max_id
@@ -1043,16 +998,7 @@ object SqlDml {
     */
   def sqlNarrowUpdate(spark: SparkSession, dir: String): DataFrame = {
     val name = "vt_narrow"
-    val base = docsBase(spark, dir)
-    val root = roots.getOrElseUpdate((dir, name), {
-      val r = VersionedTable.freshRoot(s"$dir#$name")
-      base.repartitionByRange(8, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$r/files/base_v1")
-      VersionedTable.writeManifest(r, 1, Seq("files/base_v1"))
-      ZoneMap.analyze(spark, r, 1, "doc_id"): Unit
-      r
-    })
-    GraftVtCatalog.register(spark, name, root, base.schema, clusterCol = Some("doc_id"))
+    ensureZonedTable(spark, dir, name)
     spark.sql(
       s"""UPDATE graft_vt.$name
          |SET text = upper(text), source = 'narrow'
@@ -1366,26 +1312,9 @@ object SqlDml {
     val name = "vt_brdml"
     ensureDocsTable(spark, dir, name)
     callResults.getOrElseUpdate((dir, name), {
-      val base = docsBase(spark, dir)
-      val corpusN = base.count()
+      val corpusN = docsBase(spark, dir).count()
       spark.sql(s"CALL graft_vt.create_branch('$name', 'edit')")
-      base.filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), concat(upper(col("text")), lit(" M")).as("text"),
-          lit("recrawl").as("source"), lit("upsert").as("op"))
-        .unionByName(base.filter(col("doc_id") % 11 === 3 && col("doc_id") % 7 =!= 0)
-          .select(col("doc_id"), col("text"), col("source"), lit("delete").as("op")))
-        .unionByName(base.filter(col("doc_id") % 13 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
-            lit("inserted").as("source"), lit("upsert").as("op")))
-        .createOrReplaceTempView("graft_branch_delta")
-      spark.sql(
-        s"""MERGE INTO graft_vt.$name.branch_edit t
-           |USING graft_branch_delta s
-           |ON t.doc_id = s.doc_id
-           |WHEN MATCHED AND s.op = 'delete' THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET text = s.text, source = s.source
-           |WHEN NOT MATCHED AND s.op <> 'delete' THEN
-           |  INSERT (doc_id, text, source) VALUES (s.doc_id, s.text, s.source)""".stripMargin)
+      recrawlMerge(spark, dir, s"graft_vt.$name.branch_edit", "graft_branch_delta")
       // isolation: the merged state lives ONLY on the branch until ff
       val mainN = spark.table(s"graft_vt.$name").count()
       require(mainN == corpusN,
@@ -1413,26 +1342,9 @@ object SqlDml {
     val name = "vt_brmor"
     ensureMorTable(spark, dir, name)
     callResults.getOrElseUpdate((dir, name), {
-      val base = docsBase(spark, dir)
-      val corpusN = base.count()
+      val corpusN = docsBase(spark, dir).count()
       spark.sql(s"CALL graft_vt.create_branch('$name', 'edit')")
-      base.filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), concat(upper(col("text")), lit(" M")).as("text"),
-          lit("recrawl").as("source"), lit("upsert").as("op"))
-        .unionByName(base.filter(col("doc_id") % 11 === 3 && col("doc_id") % 7 =!= 0)
-          .select(col("doc_id"), col("text"), col("source"), lit("delete").as("op")))
-        .unionByName(base.filter(col("doc_id") % 13 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text"),
-            lit("inserted").as("source"), lit("upsert").as("op")))
-        .createOrReplaceTempView("graft_brmor_delta")
-      spark.sql(
-        s"""MERGE INTO graft_vt.$name.branch_edit t
-           |USING graft_brmor_delta s
-           |ON t.doc_id = s.doc_id
-           |WHEN MATCHED AND s.op = 'delete' THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET text = s.text, source = s.source
-           |WHEN NOT MATCHED AND s.op <> 'delete' THEN
-           |  INSERT (doc_id, text, source) VALUES (s.doc_id, s.text, s.source)""".stripMargin)
+      recrawlMerge(spark, dir, s"graft_vt.$name.branch_edit", "graft_brmor_delta")
       // isolation: branch tombstones must not leak into main's reads
       val mainN = spark.table(s"graft_vt.$name").count()
       require(mainN == corpusN,
@@ -1513,7 +1425,7 @@ object SqlDml {
     val DayUs = 86400000000L
     val HourUs = 3600000000L
     val raw = Tables.raw(spark, dir, "events")
-    val micros = expr(Tables.tsMicrosSql(raw.schema))
+    val micros = Tables.micros(raw)
     val ev = raw.select(col("event_id"), col("user_id"), col("event_type"),
       round(col("value") * 100d).cast("long").as("cents"), micros.as("ts_us"))
     // deterministic evolution boundary: the integer midpoint of the

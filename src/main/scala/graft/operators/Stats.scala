@@ -21,6 +21,44 @@ import graft.sources.Tables
 object Stats {
 
   private def dec(c: Column): Column = c.cast(DecimalType(12, 2))
+  private def dd(c: Column): Column = c.cast("double")
+  /** The round-9 → DECIMAL-sum channel's type: exact sums of doubles
+    * rounded to 9 places, whatever the engine's summation order.
+    */
+  private val b9 = DecimalType(38, 9)
+
+  /** Per-(event_type, hour) event counts `(event_type, hr, n)`: the
+    * hourly series the time-series verbs fit, one map-side-combined
+    * aggregate over the events scan.
+    */
+  private def hourlyCounts(spark: SparkSession, dir: String): DataFrame = {
+    val raw = Tables.raw(spark, dir, "events")
+    raw.select(col("event_type"), Tables.microsDiv(raw, 3600000000L).as("hr"))
+      .groupBy(col("event_type"), col("hr"))
+      .agg(count(lit(1)).as("n"))
+  }
+
+  /** One row per user `(user_id, t, ev)` for the survival verbs:
+    * `t` is the whole hours from the user's first event to their first
+    * purchase (`ev` true) or, censored, to their last event (`ev`
+    * false).
+    */
+  private def survivalTimes(spark: SparkSession, dir: String): DataFrame = {
+    val raw = Tables.raw(spark, dir, "events")
+    // exact floor division (subtract the pmod remainder first, so the
+    // double quotient is an exact integer on both engines)
+    def hourOf(c: Column): Column =
+      ((c - pmod(c, lit(3600000000L))) / lit(3600000000L)).cast("long")
+    raw.select(col("user_id"), col("event_type"), Tables.micros(raw).as("us"))
+      .groupBy(col("user_id"))
+      .agg(min(col("us")).as("t0"),
+        min(when(col("event_type") === "purchase", col("us"))).as("tp"),
+        max(col("us")).as("tlast"))
+      .select(col("user_id"),
+        when(col("tp").isNotNull, hourOf(col("tp") - col("t0")))
+          .otherwise(hourOf(col("tlast") - col("t0"))).as("t"),
+        col("tp").isNotNull.as("ev"))
+  }
 
   /** Pearson correlation from the six exact sums, guarded: NULL when
     * either variance term is zero (a constant series has no defined
@@ -35,11 +73,10 @@ object Stats {
     */
   private def pearsonFromSums(cnt: Column, sx: Column, sy: Column,
       sxy: Column, sxx: Column, syy: Column): Column = {
-    def d(c: Column): Column = c.cast("double")
-    val vx = d(cnt) * d(sxx) - d(sx) * d(sx)
-    val vy = d(cnt) * d(syy) - d(sy) * d(sy)
+    val vx = dd(cnt) * dd(sxx) - dd(sx) * dd(sx)
+    val vy = dd(cnt) * dd(syy) - dd(sy) * dd(sy)
     round(when(vx > 0 && vy > 0,
-      (d(cnt) * d(sxy) - d(sx) * d(sy)) / (sqrt(vx) * sqrt(vy))), 6)
+      (dd(cnt) * dd(sxy) - dd(sx) * dd(sy)) / (sqrt(vx) * sqrt(vy))), 6)
   }
 
   /** Spearman rank correlation between `l_quantity` and `l_extendedprice`
@@ -616,10 +653,9 @@ object Stats {
     // products as doubles in a FIXED order (mirrored verbatim by the
     // oracle): exact for any per-category count < 2^26, and immune to
     // the n² bigint overflow a trillion-row corpus would hit
-    def d(c: Column) = c.cast("double")
-    val po = d(col("agree")) / d(col("n"))
-    val pe = (d(col("a0")) * d(col("b0")) + d(col("a1")) * d(col("b1")) +
-      d(col("a2")) * d(col("b2"))) / (d(col("n")) * d(col("n")))
+    val po = dd(col("agree")) / dd(col("n"))
+    val pe = (dd(col("a0")) * dd(col("b0")) + dd(col("a1")) * dd(col("b1")) +
+      dd(col("a2")) * dd(col("b2"))) / (dd(col("n")) * dd(col("n")))
     counts.select(
         col("n"),
         round(po, 6).as("p_observed"),
@@ -644,12 +680,7 @@ object Stats {
     */
   def cusumShifts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
       .as[(String, Long, Long)]
     hourly.groupByKey(_._1).flatMapGroups { (t, it) =>
       val sorted = it.toIndexedSeq.sortBy(_._2)
@@ -678,12 +709,7 @@ object Stats {
   def holtLinear(spark: SparkSession, dir: String,
       alpha: Double = 0.5, beta: Double = 0.3): DataFrame = {
     import spark.implicits._
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
       .as[(String, Long, Long)]
     hourly.groupByKey(_._1).flatMapGroups { (t, it) =>
       val sorted = it.toIndexedSeq.sortBy(_._2)
@@ -737,8 +763,6 @@ object Stats {
     */
   def theilU(spark: SparkSession, dir: String,
       alpha: Double = 0.5, beta: Double = 0.3): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val w = Window.partitionBy(col("event_type")).orderBy(col("hr"))
     holtLinear(spark, dir, alpha, beta)
       .withColumn("f_prev", lag(col("forecast_next"), 1).over(w))
@@ -775,8 +799,6 @@ object Stats {
     */
   def ljungBox(spark: SparkSession, dir: String,
       alpha: Double = 0.5, beta: Double = 0.3): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val w = Window.partitionBy(col("event_type")).orderBy(col("hr"))
     val res = holtLinear(spark, dir, alpha, beta)
       .withColumn("f_prev", lag(col("forecast_next"), 1).over(w))
@@ -823,13 +845,7 @@ object Stats {
     * sufficient statistics with mirrored double expressions.
     */
   def seasonalStrength(spark: SparkSession, dir: String): DataFrame = {
-    def dd(c: Column) = c.cast("double")
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
       .withColumn("slot", pmod(col("hr"), lit(24L)))
     val slots = hourly.groupBy(col("event_type"), col("slot"))
       .agg(count(lit(1)).as("c"), sum(col("n")).as("s"),
@@ -840,7 +856,6 @@ object Stats {
       .filter(col("rk") === 1)
       .select(col("event_type"), col("slot").cast("int").as("peak_slot"),
         round(dd(col("s")) / dd(col("c")), 6).as("peak_mean"))
-    val b9 = DecimalType(38, 9)
     val agg = slots.groupBy(col("event_type"))
       .agg(sum(col("c")).as("h"), sum(col("s")).as("st"), sum(col("ss")).as("sst"),
         sum(round(dd(col("s")) * dd(col("s")) / dd(col("c")), 9).cast(b9)).as("g2n"))
@@ -867,7 +882,6 @@ object Stats {
     */
   def conformalCoverage(spark: SparkSession, dir: String,
       alpha: Double = 0.5, beta: Double = 0.3): DataFrame = {
-    def dd(c: Column) = c.cast("double")
     val w = Window.partitionBy(col("event_type")).orderBy(col("hr"))
     val res = holtLinear(spark, dir, alpha, beta)
       .withColumn("f_prev", lag(col("forecast_next"), 1).over(w))
@@ -1083,23 +1097,7 @@ object Stats {
     */
   def kaplanMeier(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val raw = Tables.raw(spark, dir, "events")
-    val micros = expr(Tables.tsMicrosSql(raw.schema))
-    val perUser = raw
-      .select(col("user_id"), col("event_type"), micros.as("us"))
-      .groupBy(col("user_id"))
-      .agg(min(col("us")).as("t0"),
-        min(when(col("event_type") === "purchase", col("us"))).as("tp"),
-        max(col("us")).as("tlast"))
-    // exact floor division (subtract the pmod remainder first, so the
-    // double quotient is an exact integer on both engines)
-    def hourOf(c: Column): Column =
-      ((c - pmod(c, lit(3600000000L))) / lit(3600000000L)).cast("long")
-    val byTime = perUser
-      .select(
-        when(col("tp").isNotNull, hourOf(col("tp") - col("t0")))
-          .otherwise(hourOf(col("tlast") - col("t0"))).as("t"),
-        col("tp").isNotNull.as("ev"))
+    val byTime = survivalTimes(spark, dir)
       .groupBy(col("t"))
       .agg(sum(when(col("ev"), 1L).otherwise(0L)).as("d"), count(lit(1)).as("c"))
       .as[(Long, Long, Long)]
@@ -1158,19 +1156,18 @@ object Stats {
       sum(col("x")).as("psx"), sum(col("y")).as("psy"),
       sum(col("x") * col("y")).as("psxy"),
       sum(col("x") * col("x")).as("psxx"))
-    def d(c: Column) = c.cast("double")
     val joined = armAgg.crossJoin(broadcast(pooled))
-    val theta = (d(col("pn")) * d(col("psxy")) - d(col("psx")) * d(col("psy"))) /
-      (d(col("pn")) * d(col("psxx")) - d(col("psx")) * d(col("psx")))
-    val meanY = d(col("sy")) / d(col("n"))
-    val meanCuped = meanY - theta * (d(col("sx")) / d(col("n")) - d(col("psx")) / d(col("pn")))
-    val varY = (d(col("syy")) - d(col("sy")) * d(col("sy")) / d(col("n"))) / (d(col("n")) - 1)
-    val covXY = (d(col("sxy")) - d(col("sx")) * d(col("sy")) / d(col("n"))) / (d(col("n")) - 1)
-    val varX = (d(col("sxx")) - d(col("sx")) * d(col("sx")) / d(col("n"))) / (d(col("n")) - 1)
+    val theta = (dd(col("pn")) * dd(col("psxy")) - dd(col("psx")) * dd(col("psy"))) /
+      (dd(col("pn")) * dd(col("psxx")) - dd(col("psx")) * dd(col("psx")))
+    val meanY = dd(col("sy")) / dd(col("n"))
+    val meanCuped = meanY - theta * (dd(col("sx")) / dd(col("n")) - dd(col("psx")) / dd(col("pn")))
+    val varY = (dd(col("syy")) - dd(col("sy")) * dd(col("sy")) / dd(col("n"))) / (dd(col("n")) - 1)
+    val covXY = (dd(col("sxy")) - dd(col("sx")) * dd(col("sy")) / dd(col("n"))) / (dd(col("n")) - 1)
+    val varX = (dd(col("sxx")) - dd(col("sx")) * dd(col("sx")) / dd(col("n"))) / (dd(col("n")) - 1)
     val varCuped = varY - lit(2.0) * theta * covXY + theta * theta * varX
     // guards mirror the ANSI contract: a constant pooled covariate has
     // no θ; a single-user arm has no variance
-    val ok = (d(col("pn")) * d(col("psxx")) - d(col("psx")) * d(col("psx"))) > 0 &&
+    val ok = (dd(col("pn")) * dd(col("psxx")) - dd(col("psx")) * dd(col("psx"))) > 0 &&
       col("n") > 1
     joined.select(
       col("arm_a"), col("n"),
@@ -1216,15 +1213,14 @@ object Stats {
       .withColumn("below", col("base") + coalesce(sum(col("c")).over(
         Window.partitionBy(col("pid")).orderBy(col("s"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    def d(c: Column) = c.cast("double")
     blocks.agg(
         sum(col("p").cast(big) *
           (lit(2L).cast(big) * col("below").cast(big) + col("c").cast(big) + 1)).as("r2"),
         sum(col("p")).as("n1"), sum(col("c")).as("n"))
       .select(col("n1"), (col("n") - col("n1")).as("n0"),
         round(when(col("n1") > 0 && col("n") - col("n1") > 0,
-          (d(col("r2")) - d(col("n1")) * (d(col("n1")) + 1)) /
-            (lit(2.0) * d(col("n1")) * d(col("n") - col("n1")))), 6).as("auc"))
+          (dd(col("r2")) - dd(col("n1")) * (dd(col("n1")) + 1)) /
+            (lit(2.0) * dd(col("n1")) * dd(col("n") - col("n1")))), 6).as("auc"))
   }
 
   /** GINI COEFFICIENT of customer spend per nation — the inequality
@@ -1303,12 +1299,7 @@ object Stats {
   def holtWinters(spark: SparkSession, dir: String, alpha: Double = 0.5,
       beta: Double = 0.3, gamma: Double = 0.2): DataFrame = {
     import spark.implicits._
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
       .as[(String, Long, Long)]
     val (a1, b1, g1) = (1 - alpha, 1 - beta, 1 - gamma)
     hourly.groupByKey(_._1).flatMapGroups { (t, it) =>
@@ -1346,21 +1337,8 @@ object Stats {
     * the bits, and the χ² statistic is one final double expression.
     */
   def logRank(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.raw(spark, dir, "events")
-    val micros = expr(Tables.tsMicrosSql(raw.schema))
-    def hourOf(c: Column): Column =
-      ((c - pmod(c, lit(3600000000L))) / lit(3600000000L)).cast("long")
-    val perUser = raw
-      .select(col("user_id"), col("event_type"), micros.as("us"))
-      .groupBy(col("user_id"))
-      .agg(min(col("us")).as("t0"),
-        min(when(col("event_type") === "purchase", col("us"))).as("tp"),
-        max(col("us")).as("tlast"))
-      .select(
-        when(col("tp").isNotNull, hourOf(col("tp") - col("t0")))
-          .otherwise(hourOf(col("tlast") - col("t0"))).as("t"),
-        col("tp").isNotNull.as("ev"),
-        (pmod(col("user_id"), lit(2)) === 0).as("arm_a"))
+    val perUser = survivalTimes(spark, dir)
+      .select(col("t"), col("ev"), (pmod(col("user_id"), lit(2)) === 0).as("arm_a"))
     val byTime = perUser.groupBy(col("t")).agg(
       sum(when(col("ev") && col("arm_a"), 1L).otherwise(0L)).as("da"),
       sum(when(col("ev") && !col("arm_a"), 1L).otherwise(0L)).as("db"),
@@ -1408,12 +1386,7 @@ object Stats {
     * one final double expression.
     */
   def mannKendall(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
     val a = hourly.select(col("event_type"), col("hr").as("hi"), col("n").as("ni"))
     val b = hourly.select(col("event_type"), col("hr").as("hj"), col("n").as("nj"))
     val s = a.join(b, Seq("event_type"))
@@ -1450,12 +1423,7 @@ object Stats {
     */
   def crossCorrelation(spark: SparkSession, dir: String,
       maxLag: Int = 12): DataFrame = {
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
     val x = hourly.filter(col("event_type") === "view")
       .select(col("hr"), col("n").as("x"))
     val y = hourly.filter(col("event_type") === "purchase")
@@ -1493,12 +1461,7 @@ object Stats {
     */
   def kendallTau(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
     val xy = hourly.filter(col("event_type") === "view")
       .select(col("hr"), col("n").as("x"))
       .join(hourly.filter(col("event_type") === "purchase")
@@ -1576,12 +1539,7 @@ object Stats {
     * middle elements, so no second rounding site.
     */
   def theilSen(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
     val a = hourly.select(col("event_type"), col("hr").as("hi"), col("n").as("ni"))
     val pairs = a.join(
       hourly.select(col("event_type"), col("hr").as("hj"), col("n").as("nj")),
@@ -1611,26 +1569,24 @@ object Stats {
     */
   def anovaF(spark: SparkSession, dir: String): DataFrame = {
     val sq = DecimalType(38, 4)
-    val b9 = DecimalType(38, 9)
     val g = Tables(spark, dir, "events")
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(dec(col("value"))).as("s"),
         sum((dec(col("value")) * dec(col("value"))).cast(sq)).as("ss"))
-    def d(c: Column) = c.cast("double")
     // per-group double terms, order-independent via the decimal bridge
     val terms = g.select(
       col("n"), col("s"), col("ss"),
-      round(d(col("s")) * d(col("s")) / d(col("n")), 9).cast(b9).as("g2n"),
-      round(d(col("ss")) - d(col("s")) * d(col("s")) / d(col("n")), 9).cast(b9).as("w"))
+      round(dd(col("s")) * dd(col("s")) / dd(col("n")), 9).cast(b9).as("g2n"),
+      round(dd(col("ss")) - dd(col("s")) * dd(col("s")) / dd(col("n")), 9).cast(b9).as("w"))
     val agg = terms.agg(
       count(lit(1)).as("k"), sum(col("n")).as("n_total"),
       sum(col("s")).as("s_all"), sum(col("g2n")).as("sum_g2n"),
       sum(col("w")).as("ssw9"))
-    val ssb = d(col("sum_g2n")) - d(col("s_all")) * d(col("s_all")) / d(col("n_total"))
-    val ssw = d(col("ssw9"))
-    val f = (ssb / (d(col("k")) - 1.0)) / (ssw / (d(col("n_total")) - d(col("k"))))
+    val ssb = dd(col("sum_g2n")) - dd(col("s_all")) * dd(col("s_all")) / dd(col("n_total"))
+    val ssw = dd(col("ssw9"))
+    val f = (ssb / (dd(col("k")) - 1.0)) / (ssw / (dd(col("n_total")) - dd(col("k"))))
     agg.select(
       col("k").cast("int").as("k_groups"), col("n_total"),
       round(ssb, 6).as("ss_between"), round(ssw, 6).as("ss_within"),
@@ -1649,8 +1605,6 @@ object Stats {
     */
   def tukeyHsd(spark: SparkSession, dir: String): DataFrame = {
     val sq = DecimalType(38, 4)
-    val b9 = DecimalType(38, 9)
-    def d(c: Column) = c.cast("double")
     val g = Tables(spark, dir, "events")
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"))
@@ -1658,23 +1612,23 @@ object Stats {
         sum(dec(col("value"))).as("s"),
         sum((dec(col("value")) * dec(col("value"))).cast(sq)).as("ss"))
     val msw = g.select(
-      round(d(col("ss")) - d(col("s")) * d(col("s")) / d(col("n")), 9).cast(b9).as("w"),
+      round(dd(col("ss")) - dd(col("s")) * dd(col("s")) / dd(col("n")), 9).cast(b9).as("w"),
       col("n"))
       .agg(sum(col("w")).as("ssw9"), sum(col("n")).as("n_total"),
         count(lit(1)).as("k"))
-      .select((d(col("ssw9")) / (d(col("n_total")) - d(col("k")))).as("msw"),
+      .select((dd(col("ssw9")) / (dd(col("n_total")) - dd(col("k")))).as("msw"),
         col("n_total"), col("k"))
     val a = g.select(col("event_type").as("type_a"), col("n").as("na"), col("s").as("sa"))
     val b = g.select(col("event_type").as("type_b"), col("n").as("nb"), col("s").as("sb"))
     a.join(b, col("type_a") < col("type_b"))
       .crossJoin(broadcast(msw))
       .select(col("type_a"), col("type_b"), col("na"), col("nb"),
-        round(d(col("sa")) / d(col("na")) - d(col("sb")) / d(col("nb")), 6)
+        round(dd(col("sa")) / dd(col("na")) - dd(col("sb")) / dd(col("nb")), 6)
           .as("mean_diff"),
         round(when(col("msw") > 0,
-          abs(d(col("sa")) / d(col("na")) - d(col("sb")) / d(col("nb"))) /
+          abs(dd(col("sa")) / dd(col("na")) - dd(col("sb")) / dd(col("nb"))) /
             sqrt(col("msw") / lit(2.0) *
-              (lit(1.0) / d(col("na")) + lit(1.0) / d(col("nb"))))), 6)
+              (lit(1.0) / dd(col("na")) + lit(1.0) / dd(col("nb"))))), 6)
           .as("q_stat"))
   }
 
@@ -1693,14 +1647,13 @@ object Stats {
     val n = ev.agg(countDistinct(col("user_id")).as("n"))
     val k = ev.select(col("event_type"), col("user_id")).distinct()
       .groupBy(col("event_type")).agg(count(lit(1)).as("k"))
-    def d(c: Column) = c.cast("double")
     k.crossJoin(broadcast(n))
-      .withColumn("p", d(col("k")) / d(col("n")))
-      .withColumn("den", lit(1.0) + z * z / d(col("n")))
-      .withColumn("ctr", (col("p") + z * z / (lit(2.0) * d(col("n")))) / col("den"))
+      .withColumn("p", dd(col("k")) / dd(col("n")))
+      .withColumn("den", lit(1.0) + z * z / dd(col("n")))
+      .withColumn("ctr", (col("p") + z * z / (lit(2.0) * dd(col("n")))) / col("den"))
       .withColumn("half",
-        z * sqrt(col("p") * (lit(1.0) - col("p")) / d(col("n")) +
-          z * z / (lit(4.0) * d(col("n")) * d(col("n")))) / col("den"))
+        z * sqrt(col("p") * (lit(1.0) - col("p")) / dd(col("n")) +
+          z * z / (lit(4.0) * dd(col("n")) * dd(col("n")))) / col("den"))
       .select(col("event_type"), col("k").as("k_users"), col("n").as("n_users"),
         round(col("p"), 6).as("rate"),
         round(col("ctr") - col("half"), 6).as("wilson_lo"),
@@ -1733,10 +1686,9 @@ object Stats {
       sum(col("dose") * col("r_i")).as("a"),
       sum(col("dose") * col("n_i")).as("b"),
       sum(col("dose") * col("dose") * col("n_i")).as("c"))
-    def d(c: Column) = c.cast("double")
-    val p = d(col("r")) / d(col("n"))
-    val num = d(col("a")) - p * d(col("b"))
-    val v = p * (lit(1.0) - p) * (d(col("c")) - d(col("b")) * d(col("b")) / d(col("n")))
+    val p = dd(col("r")) / dd(col("n"))
+    val num = dd(col("a")) - p * dd(col("b"))
+    val v = p * (lit(1.0) - p) * (dd(col("c")) - dd(col("b")) * dd(col("b")) / dd(col("n")))
     m.select(col("n").as("n_users"), col("r").as("n_converted"),
       col("a"), col("b"), col("c"),
       round(when(v > 0, num / sqrt(v)), 6).as("z_trend"))
@@ -1804,21 +1756,7 @@ object Stats {
     */
   def nelsonAalen(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val raw = Tables.raw(spark, dir, "events")
-    val micros = expr(Tables.tsMicrosSql(raw.schema))
-    val perUser = raw
-      .select(col("user_id"), col("event_type"), micros.as("us"))
-      .groupBy(col("user_id"))
-      .agg(min(col("us")).as("t0"),
-        min(when(col("event_type") === "purchase", col("us"))).as("tp"),
-        max(col("us")).as("tlast"))
-    def hourOf(c: Column): Column =
-      ((c - pmod(c, lit(3600000000L))) / lit(3600000000L)).cast("long")
-    val byTime = perUser
-      .select(
-        when(col("tp").isNotNull, hourOf(col("tp") - col("t0")))
-          .otherwise(hourOf(col("tlast") - col("t0"))).as("t"),
-        col("tp").isNotNull.as("ev"))
+    val byTime = survivalTimes(spark, dir)
       .groupBy(col("t"))
       .agg(sum(when(col("ev"), 1L).otherwise(0L)).as("d"), count(lit(1)).as("c"))
       .as[(Long, Long, Long)]
@@ -1863,7 +1801,7 @@ object Stats {
     */
   def wilcoxonSignedRank(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.raw(spark, dir, "events")
-    val us = expr(Tables.tsMicrosSql(raw.schema))
+    val us = Tables.micros(raw)
     val ev = raw.select(col("user_id"), us.as("us"))
     val mid = ev.agg(((min(col("us")) + max(col("us"))) / lit(2L)).cast("long").as("t_mid"))
     val d = ev.crossJoin(broadcast(mid))
@@ -1876,7 +1814,6 @@ object Stats {
       .agg(count(lit(1)).as("c"), sum(when(col("d") > 0, 1L).otherwise(0L)).as("cpos"))
     val w = Window.orderBy(col("ad"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    def dd(c: Column) = c.cast("double")
     val agg = hist
       .withColumn("r2", lit(2L) * coalesce(sum(col("c")).over(w), lit(0L)) + col("c") + 1L)
       .agg(sum(col("c")).as("n"),
@@ -1915,7 +1852,7 @@ object Stats {
     */
   def mcnemar(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.raw(spark, dir, "events")
-    val us = expr(Tables.tsMicrosSql(raw.schema))
+    val us = Tables.micros(raw)
     val day = lit(86400000000L)
     val ev = raw.select(col("user_id"), col("event_type"), us.as("us"))
     val d0 = ev.agg((min(col("us")) - pmod(min(col("us")), day)).as("t0"))
@@ -1926,7 +1863,6 @@ object Stats {
           .otherwise(0L)).as("early"),
         max(when(col("event_type") === "purchase" && col("di") >= 23, 1L)
           .otherwise(0L)).as("late"))
-    def dd(c: Column) = c.cast("double")
     val cells = flags.agg(
       count(lit(1)).as("n_users"),
       sum(when(col("early") === 1 && col("late") === 1, 1L).otherwise(0L)).as("n_both"),
@@ -1969,14 +1905,13 @@ object Stats {
   def changepoint(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.raw(spark, dir, "events")
     val hourly = raw.filter(col("value").isNotNull)
-      .select(expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"),
+      .select(Tables.microsDiv(raw, 3600000000L).as("hr"),
         round(col("value") * 100).cast("long").as("cents"))
       .groupBy(col("hr"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
     val tot = hourly.agg(sum(col("n")).as("nt"), sum(col("s")).as("st"))
     val w = Window.orderBy(col("hr"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def dd(c: Column) = c.cast("double")
     val gains = hourly
       .withColumn("n1", sum(col("n")).over(w))
       .withColumn("s1", sum(col("s")).over(w))
@@ -2013,7 +1948,6 @@ object Stats {
     */
   def effectSize(spark: SparkSession, dir: String): DataFrame = {
     val sq = DecimalType(38, 0)
-    def dd(c: Column) = c.cast("double")
     val ev = Tables(spark, dir, "events").filter(col("value").isNotNull)
       .select(col("event_type"),
         round(col("value") * 100).cast("long").as("cents"),
@@ -2068,13 +2002,12 @@ object Stats {
     val d19 = DecimalType(19, 0)
     val raw = Tables.raw(spark, dir, "events")
     val ev = raw.select(col("user_id"), col("event_type"),
-      expr(Tables.tsMicrosSql(raw.schema)).as("us"), col("event_id"))
+      Tables.micros(raw).as("us"), col("event_id"))
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("us"), col("event_id"))
     val gaps = ev.withColumn("prev", lag(col("us"), 1).over(w))
       .filter(col("prev").isNotNull)
       .select(col("event_type"), expr("(us - prev) div 1000000").as("g"))
-    def dd(c: Column) = c.cast("double")
     val stats = gaps.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("g")).as("s"),
         sum(col("g").cast(d19) * col("g").cast(d19)).as("ss"))
@@ -2101,7 +2034,6 @@ object Stats {
     * per-group terms — order-independent on both engines.
     */
   def brownForsythe(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
     val ev = Tables(spark, dir, "events").filter(col("value").isNotNull)
       .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
     val hist = ev.groupBy(col("event_type"), col("cents")).agg(count(lit(1)).as("c"))
@@ -2113,7 +2045,6 @@ object Stats {
       .filter(col("cum") >= expr("(n + 1) div 2"))
       .groupBy(col("event_type"))
       .agg(min(col("cents")).as("med_cents"))
-    def dd(c: Column) = c.cast("double")
     val g = ev.join(broadcast(med), Seq("event_type"))
       .select(col("event_type"), abs(col("cents") - col("med_cents")).as("z"))
       .groupBy(col("event_type"))
@@ -2152,18 +2083,11 @@ object Stats {
     * |types × hours| rows.
     */
   def durbinWatson(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
-    val raw = Tables.raw(spark, dir, "events")
     // the hourly relation feeds THREE consumers (rebase bounds, the OLS
     // fit, the residual pass) — materialize the |types × hours| rows
     // once so the corpus pays ONE scan, not three (pagerank's
     // localCheckpoint precedent; the relation is calendar-bounded)
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
       .localCheckpoint()
     val base = hourly.groupBy(col("event_type")).agg(min(col("hr")).as("hr0"))
     val xy = hourly.join(broadcast(base), Seq("event_type"))
@@ -2209,8 +2133,6 @@ object Stats {
     * rows, pay the transcendental.
     */
   def mutualInfo(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val grid = Tables(spark, dir, "documents")
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("c"))
     val lx = grid.groupBy(col("lang")).agg(sum(col("c")).as("cx"))
@@ -2254,12 +2176,10 @@ object Stats {
     * smoothed value).
     */
   def woeIv(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val raw = Tables.raw(spark, dir, "events")
     val buckets = raw
       .select(
-        expr(s"pmod((${Tables.tsMicrosSql(raw.schema)}) div 3600000000, 24) div 4")
+        call_function("div", pmod(Tables.microsDiv(raw, 3600000000L), lit(24)), lit(4))
           .as("slot"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("good"))
       .groupBy(col("slot"))
@@ -2298,8 +2218,6 @@ object Stats {
     * approximations, NULL over a silently wrong formula).
     */
   def friedmanTest(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val cell = Tables(spark, dir, "events")
       .filter(col("value").isNotNull)
       .groupBy(col("user_id"), col("event_type"))
@@ -2347,8 +2265,6 @@ object Stats {
     */
   def iccOneWay(spark: SparkSession, dir: String): DataFrame = {
     val sq = DecimalType(38, 4)
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val g = Tables(spark, dir, "events")
       .filter(col("value").isNotNull)
       .groupBy(col("user_id"))
@@ -2389,7 +2305,6 @@ object Stats {
     */
   def cronbachAlpha(spark: SparkSession, dir: String): DataFrame = {
     val sq = DecimalType(38, 4)
-    def dd(c: Column) = c.cast("double")
     val items = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     val li = Tables(spark, dir, "lineitem")
       .select(items.map(c => dec(col(c)).as(c)) :+
@@ -2428,13 +2343,11 @@ object Stats {
     * last-ulp tie), feature name ascending as tie-break.
     */
   def decisionStump(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val raw = Tables.raw(spark, dir, "events")
     val base = raw.filter(col("value").isNotNull).select(
       col("event_type"),
-      expr(s"cast(pmod((${Tables.tsMicrosSql(raw.schema)}) div 3600000000, 24) div 4 as string)")
-        .as("slot"),
+      call_function("div", pmod(Tables.microsDiv(raw, 3600000000L), lit(24)), lit(4))
+        .cast("string").as("slot"),
       pmod(col("user_id"), lit(2L)).cast("string").as("parity"),
       when(col("value") > 50.0, 1L).otherwise(0L).as("y"))
     val long = base.selectExpr(
@@ -2494,15 +2407,8 @@ object Stats {
     * rather than a fabricated coefficient.
     */
   def pacf(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
-    val raw = Tables.raw(spark, dir, "events")
     val w = Window.partitionBy(col("event_type")).orderBy(col("hr"))
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
     val m = hourly.groupBy(col("event_type"))
       .agg(count(lit(1)).as("cnt"), sum(col("n")).as("s"))
       .select(col("event_type"), col("cnt"),
@@ -2565,8 +2471,6 @@ object Stats {
     * closed-form even-df survival.
     */
   def bartlett(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val g = Tables(spark, dir, "events").filter(col("value").isNotNull)
       .select(col("event_type"), round(col("value") * 100).cast("long").as("c"))
       .groupBy(col("event_type"))
@@ -2609,8 +2513,6 @@ object Stats {
     * bridge through round-9 decimals.
     */
   def moodMedian(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val ev = Tables(spark, dir, "events").filter(col("value").isNotNull)
       .select(col("event_type"), round(col("value") * 100).cast("long").as("c"))
     val hist = ev.groupBy(col("c")).agg(count(lit(1)).as("f"))
@@ -2657,13 +2559,7 @@ object Stats {
     * count is one lag window over it.
     */
   def runsTest(spark: SparkSession, dir: String): DataFrame = {
-    def dd(c: Column) = c.cast("double")
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
       .localCheckpoint()
     val hist = hourly.groupBy(col("event_type"), col("n")).agg(count(lit(1)).as("f"))
     val tot = hourly.groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
@@ -2707,8 +2603,6 @@ object Stats {
     * ever sorts the full relation.
     */
   def kruskalWallis(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
     val ev = Tables(spark, dir, "events").filter(col("value").isNotNull)
       .select(col("event_type"), round(col("value") * 100).cast("long").as("c"))
     val hist = ev.groupBy(col("c")).agg(count(lit(1)).as("f"))
@@ -2762,8 +2656,6 @@ object Stats {
     */
   def welchAnova(spark: SparkSession, dir: String): DataFrame = {
     val sq = DecimalType(38, 4)
-    val b9 = DecimalType(38, 9)
-    def d(c: Column) = c.cast("double")
     val g = Tables(spark, dir, "events")
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"))
@@ -2774,30 +2666,30 @@ object Stats {
     // per-group: mean, sample variance, weight — one fixed-order
     // double block, then round-9 decimal terms for the k-row sums
     val w = g
-      .withColumn("m", d(col("s")) / d(col("n")))
+      .withColumn("m", dd(col("s")) / dd(col("n")))
       .withColumn("v",
-        (d(col("ss")) - d(col("s")) * d(col("s")) / d(col("n"))) /
-          (d(col("n")) - 1.0))
+        (dd(col("ss")) - dd(col("s")) * dd(col("s")) / dd(col("n"))) /
+          (dd(col("n")) - 1.0))
       .filter(col("v") > 0)
-      .withColumn("wi", d(col("n")) / col("v"))
+      .withColumn("wi", dd(col("n")) / col("v"))
     val terms = w.select(col("n"),
       round(col("wi"), 9).cast(b9).as("w9"),
       round(col("wi") * col("m"), 9).cast(b9).as("wm9"))
     val tot = terms.agg(count(lit(1)).as("k"), sum(col("w9")).as("sw"),
       sum(col("wm9")).as("swm"))
     val withBar = w.crossJoin(broadcast(tot))
-      .withColumn("mbar", d(col("swm")) / d(col("sw")))
+      .withColumn("mbar", dd(col("swm")) / dd(col("sw")))
       .select(col("k"), col("sw"),
         round(col("wi") * (col("m") - col("mbar")) * (col("m") - col("mbar")), 9)
           .cast(b9).as("num9"),
-        round((lit(1.0) - col("wi") / d(col("sw"))) *
-          (lit(1.0) - col("wi") / d(col("sw"))) / (d(col("n")) - 1.0), 9)
+        round((lit(1.0) - col("wi") / dd(col("sw"))) *
+          (lit(1.0) - col("wi") / dd(col("sw"))) / (dd(col("n")) - 1.0), 9)
           .cast(b9).as("lam9"))
     val agg = withBar.groupBy(col("k"))
       .agg(sum(col("num9")).as("snum"), sum(col("lam9")).as("slam"))
-    val kD = d(col("k"))
-    val lam = d(col("slam"))
-    val wStat = (d(col("snum")) / (kD - 1.0)) /
+    val kD = dd(col("k"))
+    val lam = dd(col("slam"))
+    val wStat = (dd(col("snum")) / (kD - 1.0)) /
       (lit(1.0) + lit(2.0) * (kD - 2.0) / (kD * kD - 1.0) * lam)
     agg.filter(col("k") > 1)
       .select(col("k").cast("int").as("k_groups"),
@@ -2817,7 +2709,6 @@ object Stats {
     * [[bartlett]], [[effectSize]] all lead here).
     */
   def jarqueBera(spark: SparkSession, dir: String): DataFrame = {
-    def dd(c: Column) = c.cast("double")
     // the cube/quartic leave BIGINT range (the 10× sweep found c⁴ of a
     // 560-unit value overflowing long by 7%): square in longs (safe to
     // |c| ≤ 3e9), then multiply in DECIMAL so both engines stay exact —
@@ -2862,7 +2753,6 @@ object Stats {
     * deviation is one double per row off exact integer stats.
     */
   def grubbs(spark: SparkSession, dir: String): DataFrame = {
-    def dd(c: Column) = c.cast("double")
     val ev = Tables(spark, dir, "events").filter(col("value").isNotNull)
       .select(col("event_type"), col("event_id"),
         round(col("value") * 100).cast("long").as("c"))
@@ -2898,9 +2788,7 @@ object Stats {
     * doubles; the outcome axis is corpus-linear and distributed.
     */
   def exactRateTest(spark: SparkSession, dir: String, slice: Int = 4096): DataFrame = {
-    val b9 = DecimalType(38, 9)
     val p15 = DecimalType(38, 15)
-    def dd(c: Column) = c.cast("double")
     def dz = lit(0).cast(b9)
     val ev = Tables(spark, dir, "events")
     // the four margins are ONE row — collect them once and re-enter as
@@ -2995,14 +2883,7 @@ object Stats {
     * on the CALENDAR-BOUNDED axis, never a per-type funnel.
     */
   def hurstExponent(spark: SparkSession, dir: String): DataFrame = {
-    val b9 = DecimalType(38, 9)
-    def dd(c: Column) = c.cast("double")
-    val raw = Tables.raw(spark, dir, "events")
-    val hourly = raw
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("n"))
+    val hourly = hourlyCounts(spark, dir)
     val perType = Window.partitionBy(col("event_type")).orderBy(col("hr"))
     val cnts = hourly.groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
     val ranked = hourly
@@ -3079,9 +2960,7 @@ object Stats {
     * join against F. Everything else is 1-row broadcasts.
     */
   def fisherExact(spark: SparkSession, dir: String, slice: Int = 4096): DataFrame = {
-    val b9 = DecimalType(38, 9)
     val p15 = DecimalType(38, 15)
-    def dd(c: Column) = c.cast("double")
     def dz = lit(0).cast(b9)
     val docs = Tables(spark, dir, "documents")
     // the 2×2 margins are ONE row — collect once and re-enter as a

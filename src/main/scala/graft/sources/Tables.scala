@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{expr, lit, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Parquet table loader for the `/root/testdata/sf*` star schema.
@@ -11,8 +12,9 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * generations: TIMESTAMP(NANOS) (which Spark's reader surfaces as long
   * nanos under `nanosAsLong` — it rejects the logical type otherwise) and
   * plain TIMESTAMP(MICROS) (read natively as TIMESTAMP_NTZ). Everything
-  * downstream is schema-driven via [[tsNtzSql]] / [[tsMicrosSql]] so both
-  * layouts — and any future regeneration — read identically.
+  * downstream reads `ts` through [[ntz]], [[micros]], [[microsDiv]] and
+  * [[storedTs]], the one place that knows the layout, so both layouts —
+  * and any future regeneration — read identically.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -26,27 +28,47 @@ object Tables {
     spark.read.parquet(s"$dir/$name.parquet")
 
   /** True when the on-disk `ts` column is the legacy long-nanos layout. */
-  def tsIsLongNanos(schema: StructType): Boolean =
+  private def tsIsLongNanos(schema: StructType): Boolean =
     schema("ts").dataType == LongType
 
   /** SQL expression normalizing the stored `ts` to TIMESTAMP_NTZ (µs).
     * Long layout: integer DIV, not `/` — double division would lose
     * precision on 1.7e18-scale nanos.
     */
-  def tsNtzSql(schema: StructType): String =
+  private def tsNtzSql(schema: StructType): String =
     if (tsIsLongNanos(schema)) "CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"
     else "CAST(ts AS TIMESTAMP_NTZ)"
 
-  /** SQL expression for `ts` as an exact micro-epoch BIGINT — the integer
-    * domain the sweep-line/interval operators compute in (µs is the finest
-    * resolution both engines preserve, and integer arithmetic is exact
-    * where double epoch math is not). The NTZ branch round-trips through
-    * the session time zone, which GraftSession pins to UTC, so the naive
-    * wall-clock micros come back unshifted.
+  /** SQL expression for `ts` as an exact micro-epoch BIGINT. The NTZ
+    * branch round-trips through the session time zone, which
+    * GraftSession pins to UTC, so the naive wall-clock micros come back
+    * unshifted.
     */
-  def tsMicrosSql(schema: StructType): String =
+  private def tsMicrosSql(schema: StructType): String =
     if (tsIsLongNanos(schema)) "ts DIV 1000"
     else "unix_micros(CAST(ts AS TIMESTAMP))"
+
+  /** The stored `ts` of `df` (a batch or streaming frame with the
+    * table's columns) normalized to TIMESTAMP_NTZ.
+    */
+  def ntz(df: DataFrame): Column = expr(tsNtzSql(df.schema))
+
+  /** The stored `ts` of `df` as an exact micro-epoch BIGINT — the
+    * integer domain the sweep-line/interval operators compute in (µs is
+    * the finest resolution both engines preserve, and integer arithmetic
+    * is exact where double epoch math is not).
+    */
+  def micros(df: DataFrame): Column = expr(tsMicrosSql(df.schema))
+
+  /** [[micros]] integer-divided by `unit` µs: the hour or day index. */
+  def microsDiv(df: DataFrame, unit: Long): Column =
+    expr(s"(${tsMicrosSql(df.schema)}) div $unit")
+
+  /** The micro-epoch `us` as a `ts` value in `df`'s STORAGE layout, so a
+    * row built with it unions by name with the stored rows.
+    */
+  def storedTs(df: DataFrame, us: Long): Column =
+    if (tsIsLongNanos(df.schema)) lit(us * 1000L) else timestamp_micros(lit(us))
 
   /** Content fingerprint of `dir/name.parquet` — (path, length, mtime) of
     * every file under the table dir, hashed. Memoized trained models
@@ -105,8 +127,6 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = raw(spark, dir, name)
-    if (name == "events")
-      df.withColumn("ts", org.apache.spark.sql.functions.expr(tsNtzSql(df.schema)))
-    else df
+    if (name == "events") df.withColumn("ts", ntz(df)) else df
   }
 }

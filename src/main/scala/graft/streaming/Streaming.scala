@@ -58,7 +58,10 @@ object Streaming {
     }
 
     /** [[stored]] with ts normalized to TIMESTAMP_NTZ before windowing. */
-    def stream: DataFrame = stored().withColumn("ts", expr(Tables.tsNtzSql(schema)))
+    def stream: DataFrame = {
+      val df = stored()
+      df.withColumn("ts", Tables.ntz(df))
+    }
   }
 
   /** `$dir/events.parquet` as a replay source of `session`. */
@@ -183,18 +186,14 @@ object Streaming {
       body: (EventsSource, Long) => T): T = {
     val raw = Tables.raw(session, dir, "events")
     // max event time as exact micro-epoch, whatever the storage layout
-    val maxTsMicros = raw.select(expr(Tables.tsMicrosSql(raw.schema)).as("us"))
+    val maxTsMicros = raw.select(Tables.micros(raw).as("us"))
       .agg(max(col("us"))).head().getLong(0)
     val sentinelMicros = maxTsMicros + 10L * 24 * 3600 * 1000000L
-    // sentinel ts in the STORAGE domain so unionByName keeps the schema
-    val sentinelTs =
-      if (Tables.tsIsLongNanos(raw.schema)) lit(sentinelMicros * 1000L)
-      else timestamp_micros(lit(sentinelMicros))
     val sentinels = types.map { tpe =>
       session.range(1).select(raw.schema.fields.toSeq.map { f =>
         (f.name match {
           case "event_id" | "user_id" => lit(-1L)
-          case "ts" => sentinelTs
+          case "ts" => Tables.storedTs(raw, sentinelMicros)
           case "event_type" => lit(tpe)
           case _ => lit(null)
         }).cast(f.dataType).as(f.name)
@@ -528,9 +527,9 @@ object Streaming {
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val ev = events(replaySession(spark), dir)
-    val src = ev.stored(maxFilesPerTrigger)
-      .select(col("event_type"),
-        expr(s"(${Tables.tsMicrosSql(ev.schema)}) div 3600000000").as("hr"))
+    val stored = ev.stored(maxFilesPerTrigger)
+    val src = stored
+      .select(col("event_type"), Tables.microsDiv(stored, 3600000000L).as("hr"))
       .as[(String, Long)]
     val out = src.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
@@ -762,9 +761,9 @@ object Streaming {
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     val ev = events(replaySession(spark, rocksDb = true), dir)
-    val src = ev.stored(maxFilesPerTrigger)
-      .select(col("event_type"), col("user_id"),
-        expr(Tables.tsMicrosSql(ev.schema)).as("us"), col("event_id"))
+    val stored = ev.stored(maxFilesPerTrigger)
+    val src = stored
+      .select(col("event_type"), col("user_id"), Tables.micros(stored).as("us"), col("event_id"))
       .as[(String, Long, Long, Long)]
     val updated = src
       .groupByKey(_._1)

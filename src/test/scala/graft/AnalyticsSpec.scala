@@ -333,7 +333,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // median recompute for the heaviest edge
     val raw = graft.sources.Tables.raw(spark, TestSpark.sf0001, "events")
     val evs = raw.select(col("user_id"), col("event_type"),
-        expr(graft.sources.Tables.tsMicrosSql(raw.schema)).as("us"), col("event_id"))
+        graft.sources.Tables.micros(raw).as("us"), col("event_id"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     val gaps = evs.groupBy(_._1).values.flatMap { es =>
       val s = es.sortBy(e => (e._3, e._4))
@@ -357,7 +357,7 @@ class AnalyticsSpec extends AnyFunSuite {
     }
     val raw = graft.sources.Tables.raw(spark, TestSpark.sf0001, "events")
     val facts = raw.select(col("user_id"),
-        expr(s"(${graft.sources.Tables.tsMicrosSql(raw.schema)}) div 86400000000").as("d"))
+        graft.sources.Tables.microsDiv(raw, 86400000000L).as("d"))
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
     // direct recompute for the LAST day (fullest window)
     val (day, dau, mau, _) = rows.last
@@ -407,7 +407,7 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(counts.sum <= nUsers)
     // direct recompute of the top path from the raw log
     val raw = graft.sources.Tables.raw(spark, sf, "events")
-    val micros = expr(graft.sources.Tables.tsMicrosSql(raw.schema))
+    val micros = graft.sources.Tables.micros(raw)
     val top = raw.select(col("user_id"), col("event_type"),
         micros.as("us"), col("event_id")).collect()
       .groupBy(_.getLong(0)).values

@@ -531,7 +531,7 @@ class BreadthOpsSpec extends AnyFunSuite {
     // recompute the per-type min/max pairwise slope envelope
     val raw = graft.sources.Tables.raw(spark, dir, "events")
     val hourly = raw.select(col("event_type"),
-        expr(s"(${graft.sources.Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
+        graft.sources.Tables.microsDiv(raw, 3600000000L).as("hr"))
       .groupBy("event_type", "hr").agg(count(lit(1)).as("n"))
     val env = hourly.as("a").join(hourly.as("b"),
         col("a.event_type") === col("b.event_type") && col("a.hr") < col("b.hr"))
@@ -571,7 +571,7 @@ class BreadthOpsSpec extends AnyFunSuite {
     assert(got.nonEmpty)
     val raw = graft.sources.Tables.raw(spark, dir, "events")
     val hourly = raw.select(col("event_type"),
-        expr(s"(${graft.sources.Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
+        graft.sources.Tables.microsDiv(raw, 3600000000L).as("hr"))
       .groupBy("event_type", "hr").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val (alpha, beta, gamma) = (0.5, 0.3, 0.2)

@@ -29,7 +29,7 @@ class PartitionEvolveSpec extends AnyFunSuite {
 
   private def mid(): Long = {
     val raw = Tables.raw(spark, dir, "events")
-    val b = raw.select(expr(Tables.tsMicrosSql(raw.schema)).as("ts_us"))
+    val b = raw.select(Tables.micros(raw).as("ts_us"))
       .agg(min(col("ts_us")), max(col("ts_us"))).collect().head
     (b.getLong(0) + b.getLong(1)) / 2
   }

@@ -191,6 +191,38 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("Tables decodes events.ts the same from long nanos and TIMESTAMP(MICROS)") {
+    import spark.implicits._
+    // whole-micro instants, one before the epoch; both layouts hold them exactly
+    val us = Seq(-86400000001L, 0L, 1L, 999999L, 1700000000123456L)
+    val root = new java.io.File(sys.props("java.io.tmpdir"), Scratch.uniqueName("graft-ts"))
+    Scratch.using(root) {
+      val base = us.zipWithIndex.map { case (u, i) => (i.toLong, u) }.toDF("event_id", "us")
+      // EdgeFixtureSpec's layout, then the testdata layout
+      base.select(col("event_id"), (col("us") * 1000L).as("ts"))
+        .write.parquet(s"$root/nanos/events.parquet")
+      base.select(col("event_id"), timestamp_micros(col("us")).cast("timestamp_ntz").as("ts"))
+        .write.parquet(s"$root/micros/events.parquet")
+      def decoded(layout: String) = {
+        val raw = Tables.raw(spark, s"$root/$layout", "events")
+        val ts = Tables(spark, s"$root/$layout", "events").orderBy("event_id")
+          .select(col("ts")).as[java.time.LocalDateTime].collect().toSeq
+        // a row built in the storage layout decodes to the micros it was built from
+        val built = spark.range(1).select(
+          Tables.storedTs(raw, us.last).cast(raw.schema("ts").dataType).as("ts"))
+        (raw.schema("ts").dataType.typeName,
+          raw.orderBy("event_id").select(Tables.micros(raw)).as[Long].collect().toSeq :+
+            built.select(Tables.micros(built)).as[Long].head(), ts)
+      }
+      val (nanosType, nanosUs, nanosTs) = decoded("nanos")
+      val (microsType, microsUs, microsTs) = decoded("micros")
+      assert((nanosType, microsType) == ("long", "timestamp_ntz"))
+      assert(nanosUs == us :+ us.last && microsUs == us :+ us.last)
+      assert(nanosTs == microsTs)
+      assert(microsTs.head == java.time.LocalDateTime.of(1969, 12, 30, 23, 59, 59, 999999000))
+    }
+  }
+
   test("binaryFile ingestion: glob prunes at listing, metadata length is exact") {
     import org.apache.spark.sql.functions.col
     val rows = graft.sources.BinaryFiles.ingestDocs(spark, TestSpark.sf0001, docCap = 20)

@@ -686,7 +686,7 @@ class StatsSpec extends AnyFunSuite {
   test("wilcoxon signed-rank: W+ matches a direct midrank recompute") {
     val r = Stats.wilcoxonSignedRank(spark, sf).collect().head
     val raw = graft.sources.Tables.raw(spark, sf, "events")
-    val us = expr(graft.sources.Tables.tsMicrosSql(raw.schema))
+    val us = graft.sources.Tables.micros(raw)
     val rows = raw.select(col("user_id"), us.as("us")).collect()
       .map(x => (x.getLong(0), x.getLong(1)))
     val tMid = (rows.map(_._2).min + rows.map(_._2).max) / 2
@@ -748,7 +748,7 @@ class StatsSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
     val raw = graft.sources.Tables.raw(spark, sf, "events")
     val hourly = raw.select(col("event_type"),
-        expr(s"(${graft.sources.Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
+        graft.sources.Tables.microsDiv(raw, 3600000000L).as("hr"))
       .groupBy("event_type", "hr").count()
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .groupBy(_._1)
@@ -821,7 +821,7 @@ class StatsSpec extends AnyFunSuite {
     val rows = Stats.burstiness(spark, sf).collect()
     assert(rows.nonEmpty)
     val raw = graft.sources.Tables.raw(spark, sf, "events")
-    val us = expr(graft.sources.Tables.tsMicrosSql(raw.schema))
+    val us = graft.sources.Tables.micros(raw)
     val evs = raw.select(col("user_id"), col("event_type"), us.as("us"), col("event_id"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     val gapsByType = evs.groupBy(e => (e._1, e._2)).toSeq.flatMap { case ((_, t), es) =>
@@ -845,9 +845,9 @@ class StatsSpec extends AnyFunSuite {
   test("changepoint: argmax split matches a direct scan over all boundaries") {
     val r = Stats.changepoint(spark, sf).collect().head
     val raw = graft.sources.Tables.raw(spark, sf, "events")
-    val us = expr(graft.sources.Tables.tsMicrosSql(raw.schema))
+    val us = graft.sources.Tables.micros(raw)
     val hourly = raw.filter(col("value").isNotNull)
-      .select(expr(s"(${graft.sources.Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"),
+      .select(graft.sources.Tables.microsDiv(raw, 3600000000L).as("hr"),
         round(col("value") * 100).cast("long").as("c"))
       .groupBy("hr").agg(count(lit(1)).as("n"), sum(col("c")).as("s"))
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).sortBy(_._1)
@@ -919,9 +919,9 @@ class StatsSpec extends AnyFunSuite {
       assert(dw >= 0.0 && dw <= 4.0 + 1e-9, s"DW out of range: $r")
     }
     // independent recompute for one series from the hourly counts
-    val hourly = graft.sources.Tables.raw(spark, sf, "events")
-      .select(col("event_type"),
-        expr(s"(${graft.sources.Tables.tsMicrosSql(graft.sources.Tables.raw(spark, sf, "events").schema)}) div 3600000000").as("hr"))
+    val raw = graft.sources.Tables.raw(spark, sf, "events")
+    val hourly = raw
+      .select(col("event_type"), graft.sources.Tables.microsDiv(raw, 3600000000L).as("hr"))
       .filter(col("event_type") === "view")
       .groupBy(col("hr")).agg(count(lit(1)).as("n"))
       .orderBy(col("hr")).collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -999,7 +999,7 @@ class StatsSpec extends AnyFunSuite {
     // driver recompute: hourly series -> demeaned acf -> DL recursion
     val raw = graft.sources.Tables.raw(spark, sf, "events")
     val hourly = raw.select(col("event_type"),
-        expr(s"(${graft.sources.Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
+        graft.sources.Tables.microsDiv(raw, 3600000000L).as("hr"))
       .groupBy(col("event_type"), col("hr")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     hourly.groupBy(_._1).foreach { case (t, rs) =>
@@ -1068,7 +1068,7 @@ class StatsSpec extends AnyFunSuite {
     // recompute from the hourly series (median = lower median, ties drop)
     val raw = graft.sources.Tables.raw(spark, sf, "events")
     val hourly = raw.select(col("event_type"),
-        expr(s"(${graft.sources.Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
+        graft.sources.Tables.microsDiv(raw, 3600000000L).as("hr"))
       .groupBy(col("event_type"), col("hr")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     hourly.groupBy(_._1).foreach { case (t, rs) =>
@@ -1216,7 +1216,7 @@ class StatsSpec extends AnyFunSuite {
     // replay window 0 at w=16 for one type straight from the data
     val raw = graft.sources.Tables.raw(spark, sf, "events")
     val series = raw.select(col("event_type"),
-        expr(s"(${graft.sources.Tables.tsMicrosSql(raw.schema)}) div 3600000000").as("hr"))
+        graft.sources.Tables.microsDiv(raw, 3600000000L).as("hr"))
       .filter(col("event_type") === "view")
       .groupBy(col("hr")).agg(count(lit(1)).as("n"))
       .orderBy(col("hr")).collect().map(_.getLong(1))

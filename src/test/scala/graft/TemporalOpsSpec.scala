@@ -114,7 +114,7 @@ class TemporalOpsSpec extends AnyFunSuite {
     val raw = Tables.raw(spark, dir, "events")
     val iv = raw.filter(col("event_type").isin("view", "click"))
       .select(col("event_type"), col("user_id"), col("event_id"),
-        expr(Tables.tsMicrosSql(raw.schema)).as("s"))
+        Tables.micros(raw).as("s"))
       .withColumn("e", col("s") + (pmod(col("event_id"), lit(240)) + 60) * 1000000L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val brute = (for {

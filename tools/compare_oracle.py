@@ -59,6 +59,9 @@ def canon(df):
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
+    # relative paths in the oracle SQL (q_pipeline_parity's fixtures/fan/)
+    # name files in the checkout that holds this script
+    con.execute(f"SET file_search_path = '{Path(__file__).resolve().parent.parent}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
