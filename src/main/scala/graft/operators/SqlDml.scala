@@ -597,7 +597,7 @@ object SqlDml {
     // one readable" (the r11 sweep lesson)
     val root = GraftVtCatalog.rootOf("tr_docs").get
     graft.sources.GraftVtTable.tag(root, "pre-truncate",
-      graft.sources.GraftVtTable.latestVersion(root))
+      graft.sources.VersionedTable.latestVersion(root))
     spark.sql("TRUNCATE TABLE graft_vt.tr_docs")
     val afterTruncate = spark.table("graft_vt.tr_docs").count()
     spark.sql(
@@ -763,17 +763,12 @@ object SqlDml {
       (1 to 3).foreach(v => VersionedTable.writeManifest(r, v,
         Seq("files/cold_v1", s"files/hot_v${if (v == 1) 1 else v}")))
       // space commit instants so "before v3" is unambiguous on fast builds
-      val ms = (1 to 3).map(v => new java.io.File(s"$r/_manifest_v$v.txt"))
-      ms.sliding(2).foreach {
-        case Seq(a, b) if b.lastModified() < a.lastModified() + 2000 =>
-          b.setLastModified(a.lastModified() + 2000): Unit
-        case _ => ()
-      }
+      spaceCommits(r): Unit
       r
     })
     GraftVtCatalog.register(spark, name, root, base.schema)
     val Array(expired, deleted, retained) = callResults.getOrElseUpdate((dir, name), {
-      val cutoffUs = graft.sources.GraftVtTable.versionCommitMicros(root)
+      val cutoffUs = graft.sources.VersionedTable.versionCommitMicros(root)
         .map(_._2).max
       val r = spark.sql(
         s"CALL graft_vt.expire_versions('$name', timestamp_micros(${cutoffUs}L))")
@@ -781,7 +776,7 @@ object SqlDml {
       Array(r.getInt(0), r.getInt(1), r.getInt(2))
     })
     spark.read.parquet(VersionedTable.manifest(root,
-        graft.sources.GraftVtTable.latestVersion(root)).map(g => s"$root/$g"): _*)
+        graft.sources.VersionedTable.latestVersion(root)).map(g => s"$root/$g"): _*)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n"),
         sum(length(col("text"))).cast("long").as("total_chars"))
@@ -860,24 +855,19 @@ object SqlDml {
     */
   def sqlRuntimePrune(spark: SparkSession, dir: String): DataFrame = {
     val name = "vt_rtfact"
-    val base = docsBase(spark, dir)
-    val root = roots.getOrElseUpdate((dir, name), {
-      val r = VersionedTable.freshRoot(s"$dir#$name")
-      base.repartitionByRange(8, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$r/files/base_v1")
-      VersionedTable.writeManifest(r, 1, Seq("files/base_v1"))
-      ZoneMap.analyze(spark, r, 1, "doc_id"): Unit
+    ensureZonedTable(spark, dir, name)
+    val dim = roots.getOrElseUpdate((dir, s"$name#dim"), {
+      val d = s"${roots((dir, name))}/dim"
       // the dim is MATERIALIZED (its flag derivation must not be
       // visible to the optimizer, or predicate inference would hand
       // static pruning the keys first); the selected keys are a FIXED
       // band, so the pruned fact scan reads O(band) files at any SF
-      base.select(col("doc_id"),
+      docsBase(spark, dir).select(col("doc_id"),
           when(col("doc_id").between(300, 399), 0).otherwise(1).cast("int").as("flag"))
-        .write.mode("overwrite").parquet(s"$r/dim")
-      r
+        .write.mode("overwrite").parquet(d)
+      d
     })
-    GraftVtCatalog.register(spark, name, root, base.schema, clusterCol = Some("doc_id"))
-    spark.read.parquet(s"$root/dim").createOrReplaceTempView("graft_rt_dim")
+    spark.read.parquet(dim).createOrReplaceTempView("graft_rt_dim")
     spark.sql(
       s"""SELECT f.doc_id, f.source, md5(CAST(f.text AS BINARY)) AS digest
          |FROM graft_vt.$name f
@@ -1212,6 +1202,22 @@ object SqlDml {
          |FROM graft_vt.$name.branches""".stripMargin)
   }
 
+  /** Space the commit instants of `root`'s versions at least 2 s apart
+    * (each commit instant IS its manifest's mtime): a chain built in one
+    * go can commit every version in the same millisecond on a fast
+    * build. Idempotent — commit ORDER is already right, only the clock
+    * resolution needs help. Returns the manifests in version order.
+    */
+  private def spaceCommits(root: String): Seq[java.io.File] = {
+    val ms = VersionedTable.versions(root).map(VersionedTable.manifestFile(root, _))
+    ms.sliding(2).foreach {
+      case Seq(a, b) if b.lastModified() < a.lastModified() + 2000 =>
+        b.setLastModified(a.lastModified() + 2000): Unit
+      case _ => ()
+    }
+    ms
+  }
+
   /** `TIMESTAMP AS OF` through the parser — the wall-clock spelling of
     * time travel: each commit instant IS its manifest's mtime, and the
     * catalog binds the largest version committed at or before the
@@ -1225,14 +1231,7 @@ object SqlDml {
   def sqlTimeTravelTs(spark: SparkSession, dir: String): DataFrame = {
     val root = VersionedTable.buildChain(spark, dir)
     GraftVtCatalog.register(spark, "vt_documents", root, docsBase(spark, dir).schema)
-    // space the commit instants: v(n) at least 2 s after v(n-1)
-    val manifests = graft.sources.GraftVtTable.versionCommitMicros(root)
-      .map { case (v, _) => new java.io.File(s"$root/_manifest_v$v.txt") }
-    manifests.sliding(2).foreach {
-      case Seq(a, b) if b.lastModified() < a.lastModified() + 2000 =>
-        b.setLastModified(a.lastModified() + 2000): Unit
-      case _ => ()
-    }
+    val manifests = spaceCommits(root)
     def tsLiteral(f: java.io.File): String =
       java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
         .withZone(java.time.ZoneOffset.UTC)

@@ -35,35 +35,116 @@ object VersionedTable {
   private[graft] def freshRoot(key: String): String =
     Scratch.tmpDir(s"graft_vt_${jvmTag}_${Integer.toHexString(key.hashCode)}").getAbsolutePath
 
-  /** One-winner commit of a version that may be racing other writers:
-    * CREATE_NEW, conflict = ConcurrentModificationException (the same
-    * protocol as the DSv2 write paths). Maintenance verbs use this;
-    * [[writeManifest]] stays for fixture construction where the target
-    * version is provably fresh.
+  // The on-disk contract, owned here alone: version `n` of a table is
+  // the manifest `_manifest_v<n>.txt` under its root, a newline-separated
+  // list of file-group or file paths relative to the root. A branch line
+  // keeps its own manifests (`_manifest_b_<branch>_v<k>.txt`) and a
+  // write-audit-publish staging one (`_staged_v<n>.txt`), in the same
+  // format. Per-version sidecars carry the version in their name after
+  // one of [[sidecarPrefixes]].
+
+  private def manifestPath(root: String, version: Int): java.nio.file.Path =
+    java.nio.file.Paths.get(s"$root/_manifest_v$version.txt")
+
+  /** Branch-local manifest for branch-commit `k`; `k = 0` is the fork
+    * snapshot written at create time, so a branch resolves its file list
+    * without depending on main's manifest retention.
     */
-  private[graft] def commitManifest(root: String, version: Int, groups: Seq[String]): Unit =
+  private[sources] def branchManifestPath(root: String, branch: String, k: Int) =
+    java.nio.file.Paths.get(s"$root/_manifest_b_${branch}_v$k.txt")
+
+  private def stagedPath(root: String, version: Int) =
+    java.nio.file.Paths.get(s"$root/_staged_v$version.txt")
+
+  /** The sidecar files a version owns (zone maps, bloom filters, MOR
+    * metadata): `<prefix><version>…`. They are dropped with the
+    * version's manifest and copied by a rollback to it.
+    */
+  private[sources] val sidecarPrefixes = Seq("_zonemap_v", "_bloom_v", "_mor_v")
+
+  /** Manifest `version`'s file, for callers that read its mtime (the
+    * commit instant).
+    */
+  private[graft] def manifestFile(root: String, version: Int): java.io.File =
+    manifestPath(root, version).toFile
+
+  def exists(root: String, version: Int): Boolean =
+    java.nio.file.Files.exists(manifestPath(root, version))
+
+  /** The entries of one manifest-format file. */
+  private[sources] def entries(p: java.nio.file.Path): Seq[String] =
+    java.nio.file.Files.readString(p).split("\n").toSeq.filter(_.nonEmpty)
+
+  /** One-winner write of a manifest-format file: CREATE_NEW, and a file
+    * already there means a concurrent writer committed `what` first —
+    * a ConcurrentModificationException, the conflict every commit path
+    * raises. The loser cleans its own output and the caller re-runs
+    * against the new snapshot.
+    */
+  private[sources] def createNew(p: java.nio.file.Path, entries: Seq[String],
+      what: => String): Unit =
     try
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/_manifest_v$version.txt"),
-        groups.mkString("\n"),
+      java.nio.file.Files.writeString(p, entries.mkString("\n"),
         java.nio.file.StandardOpenOption.CREATE_NEW): Unit
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new java.util.ConcurrentModificationException(
-          s"commit conflict: version $version of $root was committed by " +
-            "a concurrent writer; re-run the maintenance verb")
+          s"commit conflict: $what was committed by a concurrent writer; " +
+            "re-run the statement")
     }
 
+  /** One-winner commit of a version that may be racing other writers
+    * (see [[createNew]]); [[writeManifest]] stays for fixture
+    * construction where the target version is provably fresh.
+    */
+  private[graft] def commitManifest(root: String, version: Int, groups: Seq[String]): Unit =
+    createNew(manifestPath(root, version), groups, s"version $version of $root")
+
   private[graft] def writeManifest(root: String, version: Int, groups: Seq[String]): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/_manifest_v$version.txt"),
-      groups.mkString("\n"))
+    java.nio.file.Files.writeString(manifestPath(root, version), groups.mkString("\n"))
 
   /** File groups named by manifest `version` (relative paths). */
   def manifest(root: String, version: Int): Seq[String] =
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/_manifest_v$version.txt"))
-      .split("\n").toSeq.filter(_.nonEmpty)
+    entries(manifestPath(root, version))
+
+  private def rootFiles(root: String): Seq[String] =
+    Option(new java.io.File(root).list()).getOrElse(Array.empty[String]).toSeq
+
+  /** Every retained version under `root`, ascending. */
+  def versions(root: String): Seq[Int] =
+    rootFiles(root).collect {
+      case n if n.startsWith("_manifest_v") && n.endsWith(".txt") =>
+        n.stripPrefix("_manifest_v").stripSuffix(".txt").toInt
+    }.sorted
+
+  def latestVersion(root: String): Int = {
+    val vs = versions(root)
+    require(vs.nonEmpty, s"no manifests under $root")
+    vs.last
+  }
+
+  /** (version, manifest mtime in micros) for every retained version —
+    * the mtime is the commit instant.
+    */
+  def versionCommitMicros(root: String): Seq[(Int, Long)] =
+    versions(root).map(v => (v, manifestFile(root, v).lastModified() * 1000L))
+
+  /** Zone maps carry forward by file: version `to`'s sidecar on `col`
+    * holds version `from`'s entries (range, null and row counts) for the
+    * files `kept` still names, plus the `fresh` files a commit wrote
+    * with stats. A full rewrite keeps nothing and starts a clean sidecar.
+    */
+  private[sources] def carryZoneMap(root: String, from: Int, to: Int, col: String,
+      kept: String => Boolean, fresh: Seq[VtFile] = Nil): Unit = {
+    val stated = fresh.filter(f => f.zMin <= f.zMax)
+    ZoneMap.write(root, to, col,
+      ZoneMap.read(root, from, col).getOrElse(Map.empty).filter(e => kept(e._1)) ++
+        stated.map(f => f.relPath -> (f.zMin, f.zMax)),
+      ZoneMap.readNullCounts(root, from, col).filter(e => kept(e._1)) ++
+        stated.map(f => f.relPath -> f.zNulls),
+      ZoneMap.readRowCounts(root, from, col).filter(e => kept(e._1)) ++
+        stated.map(f => f.relPath -> f.rows))
+  }
 
   /** Build the deterministic two-version chain over `documents`
     * (idempotent per JVM): v1 = the corpus split into a hot file group
@@ -123,6 +204,33 @@ object VersionedTable {
       .select(col("doc_id"), col("op"), col("old_digest"), col("new_digest"))
   }
 
+  private def groupOf(entry: String): String = entry.split("/").take(2).mkString("/")
+
+  /** The group dirs under `files/` that neither the manifests of
+    * `versions` nor any staged or branch manifest references. STAGED
+    * manifests pin their groups (an in-flight write-audit-publish must
+    * not have its data collected before the publish decision), and
+    * BRANCH manifests pin theirs for as long as the branch lives: a
+    * branch is a readable line of history (see [[VtBranch]]).
+    */
+  private def unreferenced(root: String, versions: Seq[Int]): Seq[String] = {
+    val pinned = rootFiles(root).collect {
+      case n if (n.startsWith("_staged_v") || n.startsWith("_manifest_b_"))
+          && n.endsWith(".txt") => entries(java.nio.file.Paths.get(s"$root/$n"))
+    }.flatten
+    val referenced = (versions.flatMap(manifest(root, _)) ++ pinned).map(groupOf).toSet
+    rootFiles(s"$root/files").map(n => s"files/$n").sorted.filterNot(referenced)
+  }
+
+  /** AUDIT-ONLY twin of [[vacuum]]: the group dirs under `files/` that
+    * NO manifest version, tag, branch, or staged write references —
+    * the debris failed or abandoned writers leave behind (a crashed
+    * task wrote its group, the commit never happened, vacuum keyed on
+    * retained versions never sees it because no manifest ever did).
+    * Lists, NEVER deletes — the operator reads the audit, then decides.
+    */
+  def orphans(root: String): Seq[String] = unreferenced(root, versions(root))
+
   /** Vacuum / retention: delete every file GROUP no retained manifest
     * references, and the manifests outside `keepVersions` themselves.
     * Commits reuse cold groups by reference, so a long-lived table
@@ -137,85 +245,25 @@ object VersionedTable {
     * metadata work: cost scales with the number of groups, never rows.
     * Returns the deleted group paths (relative).
     */
-  /** AUDIT-ONLY twin of [[vacuum]]: the group dirs under `files/` that
-    * NO manifest version, tag, branch, or staged write references —
-    * the debris failed or abandoned writers leave behind (a crashed
-    * task wrote its group, the commit never happened, vacuum keyed on
-    * retained versions never sees it because no manifest ever did).
-    * Lists, NEVER deletes — the operator reads the audit, then decides.
-    */
-  def orphans(root: String): Seq[String] = {
-    def groupOf(entry: String): String = entry.split("/").take(2).mkString("/")
-    val rootFiles = Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-    val versions = rootFiles
-      .filter(n => n.startsWith("_manifest_v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("_manifest_v").stripSuffix(".txt").toInt)
-    val extraEntries = rootFiles
-      .collect { case n if (n.startsWith("_staged_v") || n.startsWith("_manifest_b_"))
-          && n.endsWith(".txt") =>
-        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$root/$n"))
-          .split("\n").toSeq.filter(_.nonEmpty) }
-      .flatten
-    val referenced = (versions.toSeq.flatMap(v => manifest(root, v)) ++ extraEntries)
-      .map(groupOf).toSet
-    Option(new java.io.File(s"$root/files").list()).getOrElse(Array.empty[String])
-      .map(n => s"files/$n").toSeq.sorted
-      .filterNot(referenced)
-  }
-
   def vacuum(root: String, keepVersions: Seq[Int]): Seq[String] = {
-    def groupOf(entry: String): String = entry.split("/").take(2).mkString("/")
-    val rootFiles = Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-    // TAGS pin their versions against any retention policy, and STAGED
-    // manifests pin their groups (an in-flight write-audit-publish must
-    // not have its data collected before the publish decision)
-    val tagged = rootFiles
-      .collect { case n if n.startsWith("_ref_") && n.endsWith(".txt") =>
-        java.nio.file.Files.readString(
-          java.nio.file.Paths.get(s"$root/$n")).trim.toInt }
-    val keepVs = (keepVersions ++ tagged).distinct
-      .filter(v => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/_manifest_v$v.txt")))
-    val stagedEntries = rootFiles
-      .collect { case n if n.startsWith("_staged_v") && n.endsWith(".txt") =>
-        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$root/$n"))
-          .split("\n").toSeq.filter(_.nonEmpty) }
-      .flatten
-    // BRANCH manifests pin their groups for as long as the branch lives:
-    // a branch is a readable line of history, so main-line retention
-    // must never collect data only a branch references (see [[VtBranch]])
-    val branchEntries = rootFiles
-      .collect { case n if n.startsWith("_manifest_b_") && n.endsWith(".txt") =>
-        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$root/$n"))
-          .split("\n").toSeq.filter(_.nonEmpty) }
-      .flatten
-    val referenced = (keepVs.flatMap(v => manifest(root, v)) ++ stagedEntries ++ branchEntries)
-      .map(groupOf).toSet
-    val onDisk = Option(new java.io.File(s"$root/files").list()).getOrElse(Array.empty[String])
-      .map(n => s"files/$n").toSeq.sorted
-    val doomed = onDisk.filterNot(referenced)
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
+    // TAGS pin their versions against any retention policy
+    val tagged = rootFiles(root).collect {
+      case n if n.startsWith("_ref_") && n.endsWith(".txt") =>
+        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$root/$n")).trim.toInt
     }
-    doomed.foreach(g => del(new java.io.File(s"$root/$g")))
+    val keepVs = (keepVersions ++ tagged).distinct.filter(exists(root, _))
+    val doomed = unreferenced(root, keepVs)
+    doomed.foreach(g => Scratch.delete(new java.io.File(s"$root/$g")))
     val keep = keepVs.toSet
-    Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-      .filter(n => n.startsWith("_manifest_v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("_manifest_v").stripSuffix(".txt").toInt)
-      .filterNot(keep)
-      .foreach(v => new java.io.File(s"$root/_manifest_v$v.txt").delete(): Unit)
-    // a dropped version's sidecars (zone maps, MOR metadata) go with
-    // its manifest
-    Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-      .flatMap { n =>
-        Seq("_zonemap_v", "_mor_v").collectFirst {
-          case p if n.startsWith(p) => (n, n.stripPrefix(p))
-        }
+    versions(root).filterNot(keep).foreach(v => manifestFile(root, v).delete(): Unit)
+    // a dropped version's sidecars go with its manifest
+    rootFiles(root)
+      .filter { n =>
+        sidecarPrefixes.find(n.startsWith)
+          .flatMap(p => n.stripPrefix(p).takeWhile(_.isDigit).toIntOption)
+          .exists(!keep(_))
       }
-      .filter { case (_, rest) =>
-        rest.takeWhile(_.isDigit).toIntOption.exists(!keep(_))
-      }
-      .foreach { case (n, _) => new java.io.File(s"$root/$n").delete(): Unit }
+      .foreach(n => new java.io.File(s"$root/$n").delete(): Unit)
     doomed
   }
 
@@ -255,22 +303,13 @@ object VersionedTable {
     * as every other commit (the move fails if the version exists).
     */
   def stage(root: String, version: Int, groups: Seq[String]): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/_staged_v$version.txt"),
-      groups.mkString("\n")): Unit
+    java.nio.file.Files.writeString(stagedPath(root, version), groups.mkString("\n")): Unit
 
-  def readStaged(spark: SparkSession, root: String, version: Int): DataFrame = {
-    val entries = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/_staged_v$version.txt"))
-      .split("\n").toSeq.filter(_.nonEmpty)
-    spark.read.parquet(entries.map(g => s"$root/$g"): _*)
-  }
+  def readStaged(spark: SparkSession, root: String, version: Int): DataFrame =
+    spark.read.parquet(entries(stagedPath(root, version)).map(g => s"$root/$g"): _*)
 
   def publish(root: String, version: Int): Unit =
-    try
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$root/_staged_v$version.txt"),
-        java.nio.file.Paths.get(s"$root/_manifest_v$version.txt")): Unit
+    try java.nio.file.Files.move(stagedPath(root, version), manifestPath(root, version)): Unit
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new java.util.ConcurrentModificationException(
@@ -282,18 +321,11 @@ object VersionedTable {
     * survive (the cold-reuse contract).
     */
   def discardStaged(root: String, version: Int): Unit = {
-    val p = java.nio.file.Paths.get(s"$root/_staged_v$version.txt")
-    val staged = java.nio.file.Files.readString(p).split("\n").toSeq.filter(_.nonEmpty)
-    val published = Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-      .filter(n => n.startsWith("_manifest_v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("_manifest_v").stripSuffix(".txt").toInt)
-      .flatMap(v => manifest(root, v)).map(_.split("/").take(2).mkString("/")).toSet
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-    }
-    staged.map(_.split("/").take(2).mkString("/")).distinct
+    val p = stagedPath(root, version)
+    val published = versions(root).flatMap(manifest(root, _)).map(groupOf).toSet
+    entries(p).map(groupOf).distinct
       .filterNot(published)
-      .foreach(g => del(new java.io.File(s"$root/$g")))
+      .foreach(g => Scratch.delete(new java.io.File(s"$root/$g")))
     java.nio.file.Files.delete(p)
   }
 
@@ -319,7 +351,7 @@ object VersionedTable {
       r
     })
     val audited =
-      if (latestVersionOf(root) >= 2) 0L
+      if (latestVersion(root) >= 2) 0L
       else {
         val base = Tables(spark, dir, "documents")
           .select(col("doc_id"), col("text"), col("source"))
@@ -341,12 +373,6 @@ object VersionedTable {
         sum(length(col("text"))).cast("long").as("total_chars"))
       .withColumn("audit_violations", lit(audited))
   }
-
-  private def latestVersionOf(root: String): Int =
-    Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-      .collect { case n if n.startsWith("_manifest_v") && n.endsWith(".txt") =>
-        n.stripPrefix("_manifest_v").stripSuffix(".txt").toInt }
-      .foldLeft(0)(math.max)
 
   /** Oracle-checkable post-vacuum read: per (version, source) counts and
     * characters for the two RETAINED versions, read through their

@@ -15,8 +15,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * is declared by BASELINE.json's north star, not ported). A branch is a
   * named fork of the table at a version: writes to the branch commit
   * branch-local manifests (`_manifest_b_<name>_v<k>.txt`) that are
-  * INVISIBLE to main readers — [[GraftVtTable.latestVersion]] only sees
-  * the numeric `_manifest_v<n>` line — and a FAST-FORWARD merge promotes
+  * INVISIBLE to main readers — [[VersionedTable.latestVersion]] only
+  * sees the numeric version line — and a FAST-FORWARD merge promotes
   * the branch's commits onto main iff main has not moved since the fork
   * (the git fast-forward contract; a moved main fails loudly with
   * "rebase", never merges content).
@@ -37,16 +37,6 @@ object VtBranch {
 
   private def refPath(root: String, name: String) =
     java.nio.file.Paths.get(s"$root/_branch_$name.txt")
-
-  /** Branch-local manifest file name for branch-commit `k`; `k = 0` is
-    * the fork snapshot written at create time, so a branch resolves its
-    * file list without depending on main's manifest retention. The
-    * `_manifest_b_` prefix keeps these out of [[GraftVtTable
-    * .latestVersion]]'s numeric `_manifest_v` namespace for ANY legal
-    * branch name.
-    */
-  private[sources] def manifestFile(name: String, k: Int): String =
-    s"_manifest_b_${name}_v$k.txt"
 
   def exists(root: String, name: String): Boolean =
     java.nio.file.Files.exists(refPath(root, name))
@@ -77,12 +67,9 @@ object VtBranch {
   def create(root: String, name: String): Ref = {
     require(name.matches("[A-Za-z][A-Za-z0-9_-]*"), s"invalid branch name: $name")
     require(!exists(root, name), s"branch $name already exists under $root")
-    val fork = GraftVtTable.latestVersion(root)
-    val entries = VersionedTable.manifest(root, fork)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/${manifestFile(name, 0)}"),
-      entries.mkString("\n"),
-      java.nio.file.StandardOpenOption.CREATE_NEW): Unit
+    val fork = VersionedTable.latestVersion(root)
+    VersionedTable.createNew(VersionedTable.branchManifestPath(root, name, 0),
+      VersionedTable.manifest(root, fork), s"branch $name of $root")
     // MOR tables: snapshot the fork's file-sequence + tombstone state
     // into branch meta v0, making the branch's merge-on-read reads
     // self-contained exactly like its file list
@@ -95,12 +82,8 @@ object VtBranch {
   /** The branch head's file entries (relative paths) — branch manifest
     * `head` (v0 = the fork snapshot).
     */
-  def entries(root: String, name: String): Seq[String] = {
-    val r = ref(root, name)
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/${manifestFile(name, r.head)}"))
-      .split("\n").toSeq.filter(_.nonEmpty)
-  }
+  def entries(root: String, name: String): Seq[String] =
+    VersionedTable.entries(VersionedTable.branchManifestPath(root, name, ref(root, name).head))
 
   /** Commit a new branch head naming exactly `newEntries`. One-winner:
     * the branch manifest is CREATE_NEW, so two writers racing on the
@@ -129,17 +112,8 @@ object VtBranch {
         s"commit conflict: branch $name of $root moved from head " +
           s"$expectedHead to ${r.head} during this write; re-run the statement")
     val k = expectedHead + 1
-    try
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/${manifestFile(name, k)}"),
-        newEntries.sorted.mkString("\n"),
-        java.nio.file.StandardOpenOption.CREATE_NEW): Unit
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"commit conflict: branch $name head $k of $root was committed " +
-            "by a concurrent writer; re-run the statement")
-    }
+    VersionedTable.createNew(VersionedTable.branchManifestPath(root, name, k),
+      newEntries.sorted, s"branch $name head $k of $root")
     writeRef(root, name, r.copy(head = k))
     k
   }
@@ -155,15 +129,13 @@ object VtBranch {
   def fastForward(root: String, name: String): (Int, Int) = {
     val r = ref(root, name)
     require(r.head > 0, s"branch $name has no commits to fast-forward")
-    val mainHead = GraftVtTable.latestVersion(root)
+    val mainHead = VersionedTable.latestVersion(root)
     require(mainHead == r.fork,
       s"main is at version $mainHead but branch $name forked at ${r.fork}; " +
         "fast-forward requires an unmoved main — rebase the branch")
     (1 to r.head).foreach { k =>
-      val e = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$root/${manifestFile(name, k)}"))
-        .split("\n").toSeq.filter(_.nonEmpty)
-      VersionedTable.commitManifest(root, r.fork + k, e)
+      VersionedTable.commitManifest(root, r.fork + k,
+        VersionedTable.entries(VersionedTable.branchManifestPath(root, name, k)))
       // MOR: branch commit k carries sequence fork+k by construction,
       // so its meta promotes to main version fork+k as a pure copy
       VtMor.readBranchMeta(root, name, k)
@@ -181,8 +153,7 @@ object VtBranch {
   def drop(root: String, name: String): Unit = {
     val r = ref(root, name)
     (0 to r.head).foreach { k =>
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"$root/${manifestFile(name, k)}")): Unit
+      java.nio.file.Files.deleteIfExists(VersionedTable.branchManifestPath(root, name, k)): Unit
       java.nio.file.Files.deleteIfExists(
         VtMor.branchMetaPath(root, name, k)): Unit
     }

@@ -152,7 +152,7 @@ class GraftVtCatalog extends TableCatalog
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val root = rootFor(ident)
-    val vs = GraftVtTable.versionCommitMicros(root)
+    val vs = VersionedTable.versionCommitMicros(root)
     val eligible = vs.collect { case (v, us) if us <= timestamp => v }
     require(eligible.nonEmpty,
       s"no version of ${ident.name()} existed at timestamp $timestamp" +
@@ -216,6 +216,34 @@ class GraftVtCatalog extends TableCatalog
       GraftVtCatalog.morKeys.get(base))
   }
 
+  /** The one partition transform this format speaks: `PARTITIONED BY
+    * (bucket(n, key))` declares the storage-partitioned-join layout as
+    * (key, n); no transform is None, and anything else is rejected
+    * loudly, its message naming `who` and ending in `hint`.
+    */
+  private def bucketOf(partitions: Array[Transform], who: String,
+      hint: String): Option[(String, Int)] = partitions match {
+    case Array() => None
+    case Array(t) if t.name() == "bucket" =>
+      val args = t.arguments()
+      require(args.length == 2, s"bucket takes (n, key), got ${args.toSeq}")
+      val n = args.head match {
+        case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
+          l.value().asInstanceOf[Number].intValue()
+        case other => throw new IllegalArgumentException(
+          s"bucket count must be a literal, got $other")
+      }
+      val key = args(1) match {
+        case r: org.apache.spark.sql.connector.expressions.NamedReference =>
+          r.fieldNames().mkString(".")
+        case other => throw new IllegalArgumentException(
+          s"bucket key must be a column, got $other")
+      }
+      Some((key, n))
+    case other => throw new UnsupportedOperationException(
+      s"$who only PARTITIONED BY (bucket(n, key)), got ${other.toSeq}$hint")
+  }
+
   /** `CREATE TABLE graft_vt.t (…)` and CTAS (`CREATE TABLE … AS
     * SELECT`, which Spark plans as createTable + AppendData through the
     * ordinary [[GraftVtWrite]] commit). The table root is a
@@ -229,31 +257,8 @@ class GraftVtCatalog extends TableCatalog
     */
   override def createTable(ident: Identifier, columns: Array[Column],
       partitions: Array[Transform], properties: JMap[String, String]): Table = {
-    // the ONE transform this format speaks: PARTITIONED BY
-    // (bucket(n, key)) declares the storage-partitioned-join layout;
-    // anything else is rejected loudly
-    val bucketSpec: Option[(String, Int)] = partitions match {
-      case Array() => None
-      case Array(t) if t.name() == "bucket" =>
-        val args = t.arguments()
-        require(args.length == 2, s"bucket takes (n, key), got ${args.toSeq}")
-        val n = args.head match {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-            l.value().asInstanceOf[Number].intValue()
-          case other => throw new IllegalArgumentException(
-            s"bucket count must be a literal, got $other")
-        }
-        val key = args(1) match {
-          case r: org.apache.spark.sql.connector.expressions.NamedReference =>
-            r.fieldNames().mkString(".")
-          case other => throw new IllegalArgumentException(
-            s"bucket key must be a column, got $other")
-        }
-        Some((key, n))
-      case other => throw new UnsupportedOperationException(
-        s"graft_vt supports only PARTITIONED BY (bucket(n, key)), got ${other.toSeq}; " +
-          "use TBLPROPERTIES ('cluster' = '<col>') for the clustered layout")
-    }
+    val bucketSpec = bucketOf(partitions, "graft_vt supports",
+      "; use TBLPROPERTIES ('cluster' = '<col>') for the clustered layout")
     val name = ident.name()
     require(!GraftVtCatalog.registry.contains(name),
       s"table graft_vt.$name already exists")
@@ -291,10 +296,7 @@ class GraftVtCatalog extends TableCatalog
     // never the case for register()ed roots, which the catalog does
     // not own and never deletes
     val root = VersionedTable.freshRoot(s"create#$name")
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-    }
-    del(new java.io.File(root))
+    Scratch.delete(new java.io.File(root))
     new java.io.File(root).mkdirs()
     VersionedTable.writeManifest(root, 1, Nil)
     (bucketSpec, zorder) match {
@@ -324,29 +326,9 @@ class GraftVtCatalog extends TableCatalog
       requireExists: Boolean, requireAbsent: Boolean)
       : org.apache.spark.sql.connector.catalog.StagedTable = {
     val logicalName = ident.name()
-    // PARTITIONED BY (bucket(n, key)) — the one transform this format
-    // speaks, threaded into the staged write like createTable's path
-    val stagedBucket: Option[(String, Int)] = partitions match {
-      case Array() => None
-      case Array(t) if t.name() == "bucket" =>
-        val args = t.arguments()
-        require(args.length == 2, s"bucket takes (n, key), got ${args.toSeq}")
-        val n = args.head match {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-            l.value().asInstanceOf[Number].intValue()
-          case other => throw new IllegalArgumentException(
-            s"bucket count must be a literal, got $other")
-        }
-        val key = args(1) match {
-          case r: org.apache.spark.sql.connector.expressions.NamedReference =>
-            r.fieldNames().mkString(".")
-          case other => throw new IllegalArgumentException(
-            s"bucket key must be a column, got $other")
-        }
-        Some((key, n))
-      case other => throw new UnsupportedOperationException(
-        s"staged CREATE supports only PARTITIONED BY (bucket(n, key)), got ${other.toSeq}")
-    }
+    // PARTITIONED BY (bucket(n, key)), threaded into the staged write
+    // like createTable's path
+    val stagedBucket = bucketOf(partitions, "staged CREATE supports", "")
     require(properties.get("zorder") == null,
       "staged CREATE OR REPLACE does not take TBLPROPERTIES ('zorder')")
     if (requireAbsent) require(!GraftVtCatalog.registry.contains(logicalName),
@@ -393,12 +375,7 @@ class GraftVtCatalog extends TableCatalog
         }
         checkSql.foreach(GraftVtCatalog.registerCheck(logicalName, _))
       }
-      override def abortStagedChanges(): Unit = {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-        }
-        del(new java.io.File(stagedRoot))
-      }
+      override def abortStagedChanges(): Unit = Scratch.delete(new java.io.File(stagedRoot))
     }
   }
 
@@ -752,7 +729,7 @@ object GraftVtProcedures {
           val root = rootOf(input.getUTF8String(0).toString)
           val retain = input.getInt(1)
           require(retain >= 1, s"retain must be >= 1, got $retain")
-          val latest = GraftVtTable.latestVersion(root)
+          val latest = VersionedTable.latestVersion(root)
           val keep = (math.max(1, latest - retain + 1) to latest).toSeq
           val deleted = VersionedTable.vacuum(root, keep)
           resultScan(
@@ -826,7 +803,7 @@ object GraftVtProcedures {
         override def call(input: InternalRow): java.util.Iterator[Scan] = {
           val root = rootOf(input.getUTF8String(0).toString)
           val cutoff = input.getLong(1) // micros
-          val vs = GraftVtTable.versionCommitMicros(root)
+          val vs = VersionedTable.versionCommitMicros(root)
           require(vs.nonEmpty, s"no versions under $root")
           val latest = vs.map(_._1).max
           val keep = vs.collect { case (v, us) if us >= cutoff || v == latest => v }
@@ -871,7 +848,7 @@ object GraftVtProcedures {
           // path (reading raw files here would resurrect deleted rows)
           if (GraftVtCatalog.morKeys.contains(tbl)) {
             val before = VersionedTable
-              .manifest(root, GraftVtTable.latestVersion(root))
+              .manifest(root, VersionedTable.latestVersion(root))
               .flatMap(ZoneMap.leafFiles(root, _)).size
             val newV = VtMor.compact(spark, tbl)
             GraftVtCatalog.bloomCols.getOrElse(tbl, Nil)
@@ -884,7 +861,7 @@ object GraftVtProcedures {
                 StructField("new_version", IntegerType, nullable = false))),
               Array[Any](before, after, newV))
           }
-          val latest = GraftVtTable.latestVersion(root)
+          val latest = VersionedTable.latestVersion(root)
           val entries = VersionedTable.manifest(root, latest)
           val before = entries.flatMap(ZoneMap.leafFiles(root, _))
             .map(f => new java.io.File(s"$root/$f"))
@@ -1037,7 +1014,7 @@ object GraftVtProcedures {
       val (key, oldN) = GraftVtCatalog.bucketSpecs.getOrElse(tbl,
         throw new IllegalArgumentException(s"graft_vt.$tbl is not bucketed"))
       val spark = SparkSession.active
-      val latest = GraftVtTable.latestVersion(root)
+      val latest = VersionedTable.latestVersion(root)
       val files = VersionedTable.manifest(root, latest)
         .flatMap(ZoneMap.leafFiles(root, _)).map(f => s"$root/$f")
       val df = spark.read.parquet(files: _*)
@@ -1082,7 +1059,7 @@ object GraftVtProcedures {
       val old = GraftVtCatalog.partSpecs.getOrElse(tbl,
         throw new IllegalArgumentException(s"graft_vt.$tbl is not unit-partitioned"))
       val root = rootOf(tbl)
-      val since = GraftVtTable.latestVersion(root) + 1
+      val since = VersionedTable.latestVersion(root) + 1
       VtPartSpec.append(root, since, newUnit)
       GraftVtCatalog.partSpecs.put(tbl, newUnit): Unit
       (StructType(Seq(
@@ -1099,16 +1076,15 @@ object GraftVtProcedures {
       val tbl = input.getUTF8String(0).toString
       val target = input.getInt(1)
       val root = rootOf(tbl)
-      require(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/_manifest_v$target.txt")),
+      require(VersionedTable.exists(root, target),
         s"version $target of graft_vt.$tbl is not retained (vacuumed or never existed)")
       val entries = VersionedTable.manifest(root, target)
-      val newV = GraftVtTable.latestVersion(root) + 1
+      val newV = VersionedTable.latestVersion(root) + 1
       VersionedTable.commitManifest(root, newV, entries)
       // the restored version's sidecars are valid verbatim (same files)
       Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
         .foreach { n =>
-          Seq("_zonemap_v", "_bloom_v", "_mor_v").foreach { p =>
+          VersionedTable.sidecarPrefixes.foreach { p =>
             if (n.startsWith(s"$p${target}_") || n == s"$p$target.json") {
               val renamed = n.replaceFirst(
                 s"${p}$target(?=[_.])", s"$p$newV")
@@ -1143,8 +1119,7 @@ object GraftVtProcedures {
       val tbl = input.getUTF8String(0).toString
       val v = input.getInt(1)
       val root = rootOf(tbl)
-      require(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/_manifest_v$v.txt")),
+      require(VersionedTable.exists(root, v),
         s"version $v of graft_vt.$tbl is not retained (vacuumed or never existed)")
       val picked = VersionedTable.manifest(root, v)
       val parent = if (v <= 1) Seq.empty
@@ -1154,7 +1129,7 @@ object GraftVtProcedures {
           "only append-only commits can be cherry-picked")
       val added = picked.filterNot(parent.toSet)
       require(added.nonEmpty, s"version $v of graft_vt.$tbl added no files")
-      val head = GraftVtTable.latestVersion(root)
+      val head = VersionedTable.latestVersion(root)
       val headEntries = VersionedTable.manifest(root, head)
       require(!added.exists(headEntries.contains),
         s"version $v's files are already present at head v$head — " +
@@ -1197,15 +1172,12 @@ object GraftVtProcedures {
           "tombstone sidecars carry sequence state a fresh history can't keep")
       val (root, schema) = GraftVtCatalog.registry.getOrElse(src,
         throw new IllegalArgumentException(s"unknown graft_vt table: $src"))
-      val head = GraftVtTable.latestVersion(root)
+      val head = VersionedTable.latestVersion(root)
       val groups = VersionedTable.manifest(root, head)
       val dstRoot = new java.io.File(new java.io.File(root).getParentFile,
         s"vtclone_$dst").getAbsolutePath
       // an unregistered leftover from a dead JVM is safe to reap
-      def del(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(del)); f.delete(): Unit
-      }
-      del(new java.io.File(dstRoot))
+      Scratch.delete(new java.io.File(dstRoot))
       var nFiles = 0
       groups.foreach { g =>
         val from = java.nio.file.Paths.get(s"$root/$g")
@@ -1362,7 +1334,7 @@ object GraftVtCatalog {
 
   /** table name -> ACTIVE partition unit (in the cluster column's own
     * scale, e.g. micros) for unit-partitioned layouts: INSERTs route one
-    * file per unit ([[UnitRoutingDataWriter]]). Spec history with
+    * file per unit ([[VtRoute]]). Spec history with
     * validity boundaries persists in the root's `_partspec.txt`
     * ([[VtPartSpec]]); `CALL graft_vt.evolve_partition` moves this for
     * FUTURE writes only — existing files keep their old granularity and
@@ -1488,7 +1460,7 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
 
   private def spark = SparkSession.active
 
-  private[sources] def currentVersion: Int = GraftVtTable.latestVersion(root)
+  private[sources] def currentVersion: Int = VersionedTable.latestVersion(root)
 
   private def readVersionN: Int = pinnedVersion.getOrElse(currentVersion)
 
@@ -1683,7 +1655,7 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
     * costs a directory listing, not a 30 TB rewrite.
     */
   private def planMetadataDelete(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Option[Seq[String]] =
+      filters: Array[org.apache.spark.sql.sources.Filter]): Option[(Int, Seq[String])] =
     for {
       zc <- clusterCol
       v = currentVersion
@@ -1706,13 +1678,16 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
       }
       kept <- if (classified.forall(_.isDefined)) Some(classified.flatMap(_.get))
               else None
-    } yield kept
+    } yield (v, kept)
 
-  /** canDeleteWhere's plan, reused by the deleteWhere that follows it —
-    * one sidecar read and directory listing per statement, not two.
+  /** canDeleteWhere's plan — the version it read and the files that
+    * survive — reused by the deleteWhere that follows it: one sidecar
+    * read and directory listing per statement, not two, and the commit
+    * lands on top of the version the plan read, so a commit in between
+    * is a conflict rather than a lost update.
     */
-  @volatile private var plannedDelete
-      : Option[(Seq[org.apache.spark.sql.sources.Filter], Option[Seq[String]])] = None
+  @volatile private var plannedDelete: Option[(Seq[org.apache.spark.sql.sources.Filter],
+      Option[(Int, Seq[String])])] = None
 
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
     val plan = planMetadataDelete(filters)
@@ -1721,44 +1696,30 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
   }
 
   /** `TRUNCATE TABLE` — ALWAYS metadata-only in this format: commit a
-    * new EMPTY manifest (CREATE_NEW = the same optimistic-concurrency
-    * check every writer uses). The default SupportsDelete.truncateTable
-    * routes through canDeleteWhere(AlwaysTrue), which only accepts on
-    * zone-mapped layouts — and Spark treats its `false` as a SILENT
-    * no-op, the worst possible truncate. Old versions stay readable
+    * new EMPTY manifest (the one-winner commit every writer uses). The
+    * default SupportsDelete.truncateTable routes through
+    * canDeleteWhere(AlwaysTrue), which only accepts on zone-mapped
+    * layouts — and Spark treats its `false` as a SILENT no-op, the
+    * worst possible truncate. Old versions stay readable
     * under retention/tags; files are collected by the ordinary
     * retention pass, never here.
     */
   override def truncateTable(): Boolean = {
     require(morKey.isEmpty,
       s"TRUNCATE TABLE on merge-on-read table $tableName is not supported")
-    val v = currentVersion
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/_manifest_v${v + 1}.txt"), "",
-      java.nio.file.StandardOpenOption.CREATE_NEW): Unit
+    VersionedTable.commitManifest(root, currentVersion + 1, Nil)
     true
   }
 
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    val kept = plannedDelete.collect {
+    val (v, kept) = plannedDelete.collect {
       case (fs, plan) if fs == filters.toSeq => plan
     }.getOrElse(planMetadataDelete(filters)).getOrElse(
       throw new IllegalStateException("deleteWhere called without canDeleteWhere"))
-    val v = currentVersion
     val newV = v + 1
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/_manifest_v$newV.txt"),
-      kept.sorted.mkString("\n"),
-      java.nio.file.StandardOpenOption.CREATE_NEW): Unit
-    clusterCol.foreach { zc =>
-      val keptSet = kept.toSet
-      ZoneMap.read(root, v, zc).foreach { stats =>
-        ZoneMap.write(root, newV, zc,
-          stats.filter { case (f, _) => keptSet(f) },
-          ZoneMap.readNullCounts(root, v, zc).filter { case (f, _) => keptSet(f) },
-          ZoneMap.readRowCounts(root, v, zc).filter { case (f, _) => keptSet(f) })
-      }
-    }
+    VersionedTable.commitManifest(root, newV, kept.sorted)
+    // a plan exists only for a clustered table with a sidecar at v
+    clusterCol.foreach(VersionedTable.carryZoneMap(root, v, newV, _, kept.toSet))
     VersionedTable.vacuum(root, Seq(v, newV)): Unit
   }
 }
@@ -1806,23 +1767,6 @@ object GraftVtTable {
     java.nio.file.Files.readString(p).trim.toInt
   }
 
-  /** (version, manifest mtime in micros) for every retained version. */
-  def versionCommitMicros(root: String): Seq[(Int, Long)] =
-    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-      .toSeq
-      .collect {
-        case f if f.getName.startsWith("_manifest_v") && f.getName.endsWith(".txt") =>
-          (f.getName.stripPrefix("_manifest_v").stripSuffix(".txt").toInt,
-            f.lastModified() * 1000L)
-      }.sortBy(_._1)
-
-  def latestVersion(root: String): Int = {
-    val names = Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-    val vs = names.collect { case n if n.startsWith("_manifest_v") && n.endsWith(".txt") =>
-      n.stripPrefix("_manifest_v").stripSuffix(".txt").toInt }
-    require(vs.nonEmpty, s"no manifests under $root")
-    vs.max
-  }
 }
 
 /** Scan builder with FILE-LEVEL data skipping: pushed filters on the
@@ -2447,10 +2391,11 @@ class GraftVtWrite(root: String, newVersion: Int, schema: StructType,
 
   override def toBatch: BatchWrite = new GraftVtBatchWrite(root, newVersion,
     schema, baseEntries, effective.map(c => (c, schema.fieldIndex(c))),
-    effBucket.map { case (k, n) => (schema.fieldIndex(k), n) }, check,
-    branchCommit,
-    // partition-unit routing needs the cluster ordinal (the time column)
-    partUnit.flatMap(u => effective.map(c => (schema.fieldIndex(c), u))))
+    effBucket.map { case (k, n) => VtRoute(schema.fieldIndex(k), bucketed = true, n) }
+      // partition-unit routing needs the cluster ordinal (the time column)
+      .orElse(partUnit.flatMap(u =>
+        effective.map(c => VtRoute(schema.fieldIndex(c), bucketed = false, u)))),
+    check, branchCommit)
   override def description(): String = desc
 }
 
@@ -2462,53 +2407,44 @@ class GraftVtWrite(root: String, newVersion: Int, schema: StructType,
   */
 class GraftVtBatchWrite(root: String, newVersion: Int, schema: StructType,
     baseEntries: () => Seq[String], cluster: Option[(String, Int)] = None,
-    bucketRoute: Option[(Int, Int)] = None,
+    route: Option[VtRoute] = None,
     check: Option[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = None,
-    branchCommit: Option[(String, Seq[String] => Unit)] = None,
-    partRoute: Option[(Int, Long)] = None)
+    branchCommit: Option[(String, Seq[String] => Unit)] = None)
   extends BatchWrite {
 
   // a BRANCH write lands its group under a branch-scoped, uniquified
   // name (a dropped-and-recreated branch must never write into a stale
   // group dir) and commits through the branch's own manifest line
-  // instead of `_manifest_v<n>`
+  // instead of the main version line
   private val groupRel = branchCommit.fold(s"files/dml_v$newVersion") { case (b, _) =>
     s"files/br_${b}_v${newVersion}_${java.util.UUID.randomUUID().toString.take(8)}"
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = SparkSession.active
-    new java.io.File(s"$root/$groupRel").mkdirs()
-    // Spark's own parquet write support, configured exactly as a native
-    // parquet write would be (compression, timestamp rebase, legacy
-    // format flags all land on the job conf) — the conf ships to
-    // executors as a plain entry list, so this works identically on a
-    // real cluster where executors never saw the driver's conf.
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(
-      spark, job, Map.empty[String, String], schema)
-    val confEntries = job.getConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    new GraftVtWriterFactory(s"$root/$groupRel", groupRel, schema, owf, confEntries,
-      cluster.map(_._2), bucketRoute, check, partRoute)
+    // locals only: the factory ships to executors without this BatchWrite
+    val (files, width) = (VtTaskFiles.prepare(root, groupRel, schema), schema.length)
+    val (clusterIdx, rt, chk) = (cluster.map(_._2), route, check)
+    (partitionId: Int, taskId: Long) =>
+      new GraftVtDataWriter(files, partitionId, taskId, width, clusterIdx, rt, chk)
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val (kept, empty) = messages.flatMap {
-      case m: GraftVtCommitMessage => Seq(m)
-      case b: GraftVtBucketedCommitMessage => b.files
+  private def written(messages: Array[WriterCommitMessage]): Seq[VtFile] =
+    messages.toSeq.flatMap {
+      case m: GraftVtCommitMessage => m.files
       case _ => Nil
-    }.partition(_.rows > 0)
-    // zero-row task outputs are dropped from the manifest AND from disk
-    // (ADVICE r09: leaving them leaked a file per empty task forever)
-    empty.foreach(m => new java.io.File(s"$root/${m.relPath}").delete(): Unit)
+    }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    // the task writer opens a file only for a row, so every written
+    // file is non-empty and named by the manifest
+    val kept = written(messages)
     // retained-by-reference entries, resolved NOW: for a narrowed COW
     // rewrite this is "current snapshot minus the files the scan bound"
     val baseEnt = baseEntries()
     // a branch write commits through the branch's own manifest line
-    // (CREATE_NEW one-winner inside VtBranch.commitEntries) and skips
-    // main-line concerns: no zone-map sidecar (sidecars are keyed by
-    // MAIN version numbers) and no main retention pass
+    // (one-winner inside VtBranch.commitEntries) and skips main-line
+    // concerns: no zone-map sidecar (sidecars are keyed by MAIN version
+    // numbers) and no main retention pass
     if (branchCommit.isDefined) {
       try branchCommit.get._2(baseEnt ++ kept.map(_.relPath))
       catch { case e: java.util.ConcurrentModificationException =>
@@ -2518,50 +2454,25 @@ class GraftVtBatchWrite(root: String, newVersion: Int, schema: StructType,
     }
     // commit = atomically CREATE the next manifest naming exactly the
     // files that reported success (empty-result DML still commits a
-    // valid, empty version by naming no files). CREATE_NEW is the
-    // optimistic-concurrency check: two writers that both planned
+    // valid, empty version by naming no files). The one-winner write is
+    // the optimistic-concurrency check: two writers that both planned
     // against version N race to create N+1, exactly one wins, and the
     // loser aborts with a conflict instead of silently overwriting the
     // winner's commit — its files are cleaned by abort(), and the
     // caller re-runs against the new snapshot (the standard
     // table-format retry contract).
-    try
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/_manifest_v$newVersion.txt"),
-        (baseEnt ++ kept.map(_.relPath)).sorted.mkString("\n"),
-        java.nio.file.StandardOpenOption.CREATE_NEW): Unit
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        abort(messages)
-        throw new java.util.ConcurrentModificationException(
-          s"commit conflict: version $newVersion of $root was committed " +
-            "by a concurrent writer; re-run the statement")
+    try VersionedTable.commitManifest(root, newVersion, (baseEnt ++ kept.map(_.relPath)).sorted)
+    catch { case e: java.util.ConcurrentModificationException =>
+      abort(messages); throw e
     }
     // clustered tables get the new version's zone-map sidecar for free:
-    // each writer reported its file's [min, max] in the commit message,
-    // and appended base files inherit the prior version's entries
+    // each writer reported its files' [min, max] in the commit message,
+    // and prior entries carry over ONLY for files this manifest still
+    // references (appends and retained-by-narrowing files); a full COW
+    // rewrite starts a clean sidecar
     cluster.foreach { case (zc, _) =>
-      // prior entries carry over ONLY for files this manifest still
-      // references (appends and retained-by-narrowing files); a full
-      // COW rewrite starts a clean sidecar
       val baseFiles = baseEnt.flatMap(ZoneMap.leafFiles(root, _)).toSet
-      val prior = ZoneMap.read(root, newVersion - 1, zc).getOrElse(Map.empty)
-        .filter { case (f, _) => baseFiles(f) }
-      val priorNulls = ZoneMap.readNullCounts(root, newVersion - 1, zc)
-        .filter { case (f, _) => baseFiles(f) }
-      val priorRows = ZoneMap.readRowCounts(root, newVersion - 1, zc)
-        .filter { case (f, _) => baseFiles(f) }
-      val fresh = kept.collect {
-        case m if m.zMin <= m.zMax => m.relPath -> (m.zMin, m.zMax)
-      }.toMap
-      val freshNulls = kept.collect {
-        case m if m.zMin <= m.zMax => m.relPath -> m.zNulls
-      }.toMap
-      val freshRows = kept.collect {
-        case m if m.zMin <= m.zMax => m.relPath -> m.rows
-      }.toMap
-      ZoneMap.write(root, newVersion, zc, prior ++ fresh, priorNulls ++ freshNulls,
-        priorRows ++ freshRows)
+      VersionedTable.carryZoneMap(root, newVersion - 1, newVersion, zc, baseFiles, kept)
     }
     // Retention: every COW DML rewrites the WHOLE table, so unreferenced
     // old groups grow linearly with statements (one full copy per bench
@@ -2576,121 +2487,126 @@ class GraftVtBatchWrite(root: String, newVersion: Int, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case m: GraftVtCommitMessage =>
-        new java.io.File(s"$root/${m.relPath}").delete(): Unit
-      case b: GraftVtBucketedCommitMessage =>
-        b.files.foreach(m => new java.io.File(s"$root/${m.relPath}").delete(): Unit)
-      case _ => ()
-    }
+    written(messages).foreach(m => new java.io.File(s"$root/${m.relPath}").delete(): Unit)
 }
 
-/** zMin > zMax (the defaults) means "no cluster stats for this file" —
+/** One written file: its root-relative path, its row count and, on a
+  * clustered table, the cluster column's min, max and null count.
+  * zMin > zMax (the defaults) means "no cluster stats for this file" —
   * either the table is unclustered or the file saw only null keys.
   */
-case class GraftVtCommitMessage(relPath: String, rows: Long,
-    zMin: Long = Long.MaxValue, zMax: Long = Long.MinValue,
-    zNulls: Long = 0L) extends WriterCommitMessage
+case class VtFile(relPath: String, rows: Long,
+    zMin: Long = Long.MaxValue, zMax: Long = Long.MinValue, zNulls: Long = 0L)
 
-/** One task's output on a BUCKETED table: one file per bucket the task
-  * actually saw (paths carry the `b=<i>` layer).
+/** One task's output: the files it wrote, in route order. */
+case class GraftVtCommitMessage(files: Seq[VtFile]) extends WriterCommitMessage
+
+/** A write's task-side parquet files under one group dir. Spark's own
+  * parquet write support is configured on the driver exactly as a
+  * native parquet write would be (compression, timestamp rebase, legacy
+  * format flags all land on the job conf), and the conf ships to
+  * executors as a plain entry list, so this works identically on a
+  * real cluster where executors never saw the driver's conf. Executor
+  * tasks write directly to uniquely-named final files — no
+  * rename-based committer is needed: the manifest lists the EXACT files
+  * that committed, so a straggler's orphan output is never read.
   */
-case class GraftVtBucketedCommitMessage(files: Seq[GraftVtCommitMessage])
-  extends WriterCommitMessage
+private[sources] class VtTaskFiles(groupDir: String, groupRel: String, schema: StructType,
+    owf: OutputWriterFactory, confEntries: Array[(String, String)]) extends Serializable {
 
-/** Task-side DYNAMIC BUCKET ROUTING: one parquet writer per bucket the
-  * task actually sees, opened lazily, files under the group's `b=<i>`
-  * layer — the write half of the storage-partitioned-join layout.
-  * Under the clustered-by-bucket distribution the plan requests, each
-  * task sees one bucket and writes one file; under any other
-  * distribution correctness is identical, only file counts grow (the
-  * optimize verb compacts). Null bucket keys are a loud error: a
-  * bucketed table's key is its join identity.
-  */
-private[sources] class BucketRoutingDataWriter(groupDir: String, groupRel: String,
-    schema: StructType, owf: OutputWriterFactory,
-    ctx: org.apache.hadoop.mapreduce.TaskAttemptContext,
-    partitionId: Int, taskId: Long, keyIdx: Int, numBuckets: Int,
-    check: Option[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = None)
-  extends DataWriter[InternalRow] {
-
-  private val writers = scala.collection.mutable.Map.empty[
-    Int, (org.apache.spark.sql.execution.datasources.OutputWriter, String)]
-  private val rowCounts = scala.collection.mutable.Map.empty[Int, Long]
-  private var offset = -1
-  private var shifted: OpShiftedRow = _
-  private lazy val checkPred = check.map { case (sql, e) =>
-    (sql, org.apache.spark.sql.catalyst.expressions.Predicate.create(e))
+  /** Open task file `[<route>/]part-<partition>-<task>.parquet` under
+    * the group dir (`route` empty = the group dir itself); returns the
+    * writer and the file's root-relative path.
+    */
+  def open(partitionId: Int, taskId: Long, route: String)
+      : (org.apache.spark.sql.execution.datasources.OutputWriter, String) = {
+    val conf = new Configuration(false)
+    confEntries.foreach { case (k, v) => conf.set(k, v) }
+    val ctx = new TaskAttemptContextImpl(conf, new TaskAttemptID(
+      new TaskID(new JobID("graft_vt", 0), TaskType.MAP, partitionId),
+      (taskId % Int.MaxValue).toInt))
+    val name = (if (route.isEmpty) "" else s"$route/") +
+      f"part-$partitionId%05d-$taskId.parquet"
+    (owf.newInstance(s"$groupDir/$name", schema, ctx), s"$groupRel/$name")
   }
 
-  override def write(record: InternalRow): Unit = {
-    if (offset < 0) {
-      offset = record.numFields - schema.length
-      require(offset == 0 || offset == 1,
-        s"row arity ${record.numFields} does not match write schema " +
-          s"${schema.length} (+ optional __row_operation)")
-      if (offset == 1) shifted = new OpShiftedRow(1)
-    }
-    val aligned = if (offset == 0) record else shifted.set(record)
-    checkPred.foreach { case (sql, p) =>
-      if (!p.eval(aligned)) throw new IllegalArgumentException(
-        s"CHECK constraint violated by a written row: $sql")
-    }
-    require(!aligned.isNullAt(keyIdx),
-      s"null bucket key (field $keyIdx) on a bucketed table")
-    val b = VtBucket.bucketOf(aligned.getLong(keyIdx), numBuckets)
-    val (w, _) = writers.getOrElseUpdate(b, {
-      val fileName = f"part-$partitionId%05d-$taskId.parquet"
-      (owf.newInstance(s"$groupDir/b=$b/$fileName", schema, ctx),
-        s"$groupRel/b=$b/$fileName")
-    })
-    w.write(aligned)
-    rowCounts(b) = rowCounts.getOrElse(b, 0L) + 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_._1.close())
-    GraftVtBucketedCommitMessage(writers.toSeq.sortBy(_._1).map { case (b, (_, rel)) =>
-      GraftVtCommitMessage(rel, rowCounts.getOrElse(b, 0L))
-    })
-  }
-
-  override def abort(): Unit = {
-    writers.values.foreach { case (w, rel) =>
-      w.close()
-      new java.io.File(s"$groupDir/${rel.stripPrefix(groupRel + "/")}").delete(): Unit
-    }
-  }
-
-  override def close(): Unit = ()
+  /** Delete a file [[open]] returned (a task abort). */
+  def delete(relPath: String): Unit =
+    new java.io.File(s"$groupDir/${relPath.stripPrefix(groupRel + "/")}").delete(): Unit
 }
 
-/** Task-side PARTITION-UNIT ROUTING — the write half of partition-spec
-  * evolution: one parquet writer per time unit (`floorDiv(key, unit)`)
-  * the task actually sees, opened lazily, files under the group's
-  * `u=<unit>` layer. Each file's rows all fall inside one unit, so the
-  * zone-map entry the writer reports is at most one unit wide — which
-  * is exactly what makes a time-range scan over a MIXED-granularity
-  * table (old day files + new hour files) prune each generation at its
-  * own granularity with the one uniform sidecar mechanism, no
-  * spec-aware reader required (Iceberg evolves specs the same way:
-  * per-file partition metadata, readers prune file-by-file). Under the
-  * ordered distribution a clustered table already requests, each task
-  * sees a contiguous time slice and touches few units; under any other
-  * distribution correctness is identical, only file counts grow.
+private[sources] object VtTaskFiles {
+  /** Create group dir `groupRel` under `root` and configure its parquet
+    * writes on the driver.
+    */
+  def prepare(root: String, groupRel: String, schema: StructType): VtTaskFiles = {
+    val spark = SparkSession.active
+    new java.io.File(s"$root/$groupRel").mkdirs()
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val owf = new ParquetFileFormat().prepareWrite(
+      spark, job, Map.empty[String, String], schema)
+    val confEntries = job.getConfiguration.iterator().asScala
+      .map(e => (e.getKey, e.getValue)).toArray
+    new VtTaskFiles(s"$root/$groupRel", groupRel, schema, owf, confEntries)
+  }
+}
+
+/** Where a written row's file lives under the write's group dir, by
+  * its BIGINT key at `keyIdx`: `b=<bucket>` on a BUCKETED table (the
+  * write half of the storage-partitioned-join layout, `width` buckets),
+  * `u=<floorDiv(key, width)>` on a UNIT-PARTITIONED one — the write half
+  * of partition-spec evolution. Each unit file's rows fall inside one
+  * unit, so its zone-map entry is at most one unit wide, which is what
+  * lets a time-range scan over a MIXED-granularity table (old day files
+  * + new hour files) prune each generation at its own granularity with
+  * the one sidecar mechanism (Iceberg evolves specs the same way:
+  * per-file partition metadata, readers prune file-by-file). A null key
+  * is a loud error: it is the layout's identity.
   */
-private[sources] class UnitRoutingDataWriter(groupDir: String, groupRel: String,
-    schema: StructType, owf: OutputWriterFactory,
-    ctx: org.apache.hadoop.mapreduce.TaskAttemptContext,
-    partitionId: Int, taskId: Long, keyIdx: Int, unit: Long,
-    check: Option[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = None)
+private[sources] case class VtRoute(keyIdx: Int, bucketed: Boolean, width: Long) {
+  def of(key: Long): Long =
+    if (bucketed) VtBucket.bucketOf(key, width.toInt).toLong else Math.floorDiv(key, width)
+  def dir(value: Long): String = (if (bucketed) "b=" else "u=") + value
+  def nullKey: String =
+    if (bucketed) s"null bucket key (field $keyIdx) on a bucketed table"
+    else s"null partition key (field $keyIdx) on a unit-partitioned table"
+}
+
+/** The task side of every copy-on-write and append write: one parquet
+  * file per route value the task actually sees (see [[VtRoute]]; the
+  * group dir itself when the table has no route), opened lazily, so a
+  * task that sees no rows writes no file. Each row is realigned past a
+  * leading `__row_operation` column (see [[OpShiftedRow]]) and checked
+  * against the table's CHECK constraint before it is written: a
+  * violation fails the task, the write aborts and no manifest commits.
+  * Per file the writer counts rows and, on a clustered table, tracks the
+  * cluster column's min, max and nulls — zone-map stats for free, one
+  * comparison per row, no second pass over the data.
+  *
+  * Under the distribution the plan requests (ordered for clustered
+  * tables, clustered by bucket for bucketed ones) each task sees one
+  * key range or bucket and writes few files; under any other
+  * distribution correctness is identical, only file counts grow (the
+  * optimize verb compacts).
+  */
+private[sources] class GraftVtDataWriter(files: VtTaskFiles, partitionId: Int, taskId: Long,
+    width: Int, clusterIdx: Option[Int], route: Option[VtRoute],
+    check: Option[(String, org.apache.spark.sql.catalyst.expressions.Expression)])
   extends DataWriter[InternalRow] {
 
-  private case class UnitOut(
-      w: org.apache.spark.sql.execution.datasources.OutputWriter,
-      rel: String, var rows: Long = 0L,
-      var zMin: Long = Long.MaxValue, var zMax: Long = Long.MinValue)
-  private val writers = scala.collection.mutable.Map.empty[Long, UnitOut]
+  private final class Out(val w: org.apache.spark.sql.execution.datasources.OutputWriter,
+      val rel: String) {
+    var rows = 0L
+    var zMin = Long.MaxValue
+    var zMax = Long.MinValue
+    var zNulls = 0L
+  }
+  private val outs = scala.collection.mutable.Map.empty[Long, Out]
+  // -1 = undetermined; fixed by the first record's arity. 0 when the
+  // incoming rows already match the data schema, 1 when Spark's
+  // row-level rewrite left the leading __row_operation column in place
+  // (see OpShiftedRow) — any other shape is a real bug and fails loudly
+  // rather than writing misaligned columns.
   private var offset = -1
   private var shifted: OpShiftedRow = _
   private lazy val checkPred = check.map { case (sql, e) =>
@@ -2699,10 +2615,10 @@ private[sources] class UnitRoutingDataWriter(groupDir: String, groupRel: String,
 
   override def write(record: InternalRow): Unit = {
     if (offset < 0) {
-      offset = record.numFields - schema.length
+      offset = record.numFields - width
       require(offset == 0 || offset == 1,
         s"row arity ${record.numFields} does not match write schema " +
-          s"${schema.length} (+ optional __row_operation)")
+          s"$width (+ optional __row_operation)")
       if (offset == 1) shifted = new OpShiftedRow(1)
     }
     val aligned = if (offset == 0) record else shifted.set(record)
@@ -2710,33 +2626,36 @@ private[sources] class UnitRoutingDataWriter(groupDir: String, groupRel: String,
       if (!p.eval(aligned)) throw new IllegalArgumentException(
         s"CHECK constraint violated by a written row: $sql")
     }
-    require(!aligned.isNullAt(keyIdx),
-      s"null partition key (field $keyIdx) on a unit-partitioned table")
-    val v = aligned.getLong(keyIdx)
-    val u = Math.floorDiv(v, unit)
-    val out = writers.getOrElseUpdate(u, {
-      val fileName = f"part-$partitionId%05d-$taskId.parquet"
-      UnitOut(owf.newInstance(s"$groupDir/u=$u/$fileName", schema, ctx),
-        s"$groupRel/u=$u/$fileName")
+    val key = route.fold(0L) { r =>
+      require(!aligned.isNullAt(r.keyIdx), r.nullKey)
+      r.of(aligned.getLong(r.keyIdx))
+    }
+    val out = outs.getOrElseUpdate(key, {
+      val (w, rel) = files.open(partitionId, taskId, route.fold("")(_.dir(key)))
+      new Out(w, rel)
     })
+    clusterIdx.foreach { i =>
+      if (aligned.isNullAt(i)) out.zNulls += 1
+      else {
+        val v = aligned.getLong(i)
+        if (v < out.zMin) out.zMin = v
+        if (v > out.zMax) out.zMax = v
+      }
+    }
     out.w.write(aligned)
     out.rows += 1
-    if (v < out.zMin) out.zMin = v
-    if (v > out.zMax) out.zMax = v
   }
 
   override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_.w.close())
-    GraftVtBucketedCommitMessage(writers.toSeq.sortBy(_._1).map { case (_, o) =>
-      GraftVtCommitMessage(o.rel, o.rows, o.zMin, o.zMax)
+    outs.values.foreach(_.w.close())
+    GraftVtCommitMessage(outs.toSeq.sortBy(_._1).map { case (_, o) =>
+      VtFile(o.rel, o.rows, o.zMin, o.zMax, o.zNulls)
     })
   }
 
-  override def abort(): Unit = {
-    writers.values.foreach { o =>
-      o.w.close()
-      new java.io.File(s"$groupDir/${o.rel.stripPrefix(groupRel + "/")}").delete(): Unit
-    }
+  override def abort(): Unit = outs.values.foreach { o =>
+    o.w.close()
+    files.delete(o.rel)
   }
 
   override def close(): Unit = ()
@@ -2794,79 +2713,3 @@ private[sources] final class OpShiftedRow(offset: Int) extends InternalRow {
     row.get(i + offset, dt)
 }
 
-class GraftVtWriterFactory(groupDir: String, groupRel: String, schema: StructType,
-    owf: OutputWriterFactory, confEntries: Array[(String, String)],
-    clusterIdx: Option[Int] = None, bucketRoute: Option[(Int, Int)] = None,
-    check: Option[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = None,
-    partRoute: Option[(Int, Long)] = None)
-  extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val conf = new Configuration(false)
-    confEntries.foreach { case (k, v) => conf.set(k, v) }
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID("graft_vt", 0), TaskType.MAP, partitionId), (taskId % Int.MaxValue).toInt)
-    val ctx = new TaskAttemptContextImpl(conf, attempt)
-    bucketRoute.foreach { case (keyIdx, n) =>
-      return new BucketRoutingDataWriter(groupDir, groupRel, schema, owf, ctx,
-        partitionId, taskId, keyIdx, n, check)
-    }
-    partRoute.foreach { case (keyIdx, unit) =>
-      return new UnitRoutingDataWriter(groupDir, groupRel, schema, owf, ctx,
-        partitionId, taskId, keyIdx, unit, check)
-    }
-    val fileName = f"part-$partitionId%05d-$taskId.parquet"
-    val writer = owf.newInstance(s"$groupDir/$fileName", schema, ctx)
-    new DataWriter[InternalRow] {
-      private var n = 0L
-      // -1 = undetermined; fixed by the first record's arity. 0 when the
-      // incoming rows already match the data schema, 1 when Spark's
-      // row-level rewrite left the leading __row_operation column in
-      // place (see OpShiftedRow) — any other shape is a real bug and
-      // fails loudly rather than writing misaligned columns.
-      private var offset = -1
-      private var shifted: OpShiftedRow = _
-      private var zMin = Long.MaxValue
-      private var zMax = Long.MinValue
-      private var zNulls = 0L
-      private lazy val checkPred = check.map { case (sql, e) =>
-        (sql, org.apache.spark.sql.catalyst.expressions.Predicate.create(e))
-      }
-      override def write(record: InternalRow): Unit = {
-        if (offset < 0) {
-          offset = record.numFields - schema.length
-          require(offset == 0 || offset == 1,
-            s"row arity ${record.numFields} does not match write schema " +
-              s"${schema.length} (+ optional __row_operation)")
-          if (offset == 1) shifted = new OpShiftedRow(1)
-        }
-        val aligned = if (offset == 0) record else shifted.set(record)
-        checkPred.foreach { case (sql, p) =>
-          if (!p.eval(aligned)) throw new IllegalArgumentException(
-            s"CHECK constraint violated by a written row: $sql")
-        }
-        // zone-map stats ride along for free — one comparison per row,
-        // no second pass over the data
-        clusterIdx.foreach { i =>
-          if (aligned.isNullAt(i)) zNulls += 1
-          else {
-            val v = aligned.getLong(i)
-            if (v < zMin) zMin = v
-            if (v > zMax) zMax = v
-          }
-        }
-        writer.write(aligned)
-        n += 1
-      }
-      override def commit(): WriterCommitMessage = {
-        writer.close()
-        GraftVtCommitMessage(s"$groupRel/$fileName", n, zMin, zMax, zNulls)
-      }
-      override def abort(): Unit = {
-        writer.close()
-        new java.io.File(s"$groupDir/$fileName").delete(): Unit
-      }
-      override def close(): Unit = ()
-    }
-  }
-}

@@ -1,18 +1,14 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 /** ROW-LEVEL CHANGE DATA CAPTURE through SQL — the `graft_vt.t.changes`
@@ -91,7 +87,7 @@ private[sources] class ChangesScanBuilder(baseName: String, root: String,
   override def pruneColumns(s: StructType): Unit = required = s
 
   override def build(): Scan = {
-    val v = pinnedVersion.getOrElse(GraftVtTable.latestVersion(root))
+    val v = pinnedVersion.getOrElse(VersionedTable.latestVersion(root))
     require(v >= 1, s"no such version $v of graft_vt.$baseName")
 
     val morKey = GraftVtCatalog.morKeys.get(baseName)
@@ -156,8 +152,7 @@ private[sources] object ChangesPlanner {
       tombsPrev: Map[Long, Int], tombsCur: Map[Long, Int], newKeys: Set[Long])
 
   def plan(baseName: String, root: String, v: Int): CommitPlan = {
-    val prevExists = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$root/_manifest_v${v - 1}.txt"))
+    val prevExists = VersionedTable.exists(root, v - 1)
     require(v == 1 || prevExists,
       s"cannot read changes of graft_vt.$baseName version $v: parent " +
         s"version ${v - 1} was expired/vacuumed — change capture needs " +
@@ -233,32 +228,7 @@ private[sources] object ChangesPlanner {
 private[sources] class ChangesMicroBatchStream(baseName: String, root: String,
     readFunc: PartitionedFile => Iterator[InternalRow],
     getters: Array[Int], keyOrd: Int)
-  extends MicroBatchStream with SupportsTriggerAvailableNow {
-
-  private def latest: Int = GraftVtTable.latestVersion(root)
-
-  /** Target pinned at Trigger.AvailableNow start: drain every version
-    * committed before the trigger, one per batch, then stop.
-    */
-  @volatile private var availableNowTarget: Option[Int] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(latest)
-
-  override def initialOffset(): Offset = VtVersionOffset(0)
-  override def latestOffset(): Offset = VtVersionOffset(latest)
-
-  /** One committed version per micro-batch — batch boundaries ARE
-    * commit boundaries, so a downstream transactional sink commits in
-    * lock-step with upstream transactions.
-    */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val cap = availableNowTarget.getOrElse(latest)
-    VtVersionOffset(math.min(start.asInstanceOf[VtVersionOffset].v + 1, cap))
-  }
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-  override def deserializeOffset(json: String): Offset = VtVersionOffset(json.trim.toInt)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
+  extends VersionPerBatchStream(root) {
 
   // per-version reader state for the batch being planned; partitions
   // carry their version, so a range replay (checkpoint recovery handing
@@ -352,8 +322,6 @@ private[sources] case class ChangesReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ChangesFilePartition]
-    val pf = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p.path),
-      0L, p.length, Array.empty[String], 0L, p.length)
     val tag = UTF8String.fromString(
       if (p.kind == ChangesFilePartition.Delete ||
         p.kind == ChangesFilePartition.MorDelete ||
@@ -361,10 +329,7 @@ private[sources] case class ChangesReaderFactory(
     val out = new ChangeRow(getters, tag, version)
     def visible(tombs: Map[Long, Int], r: InternalRow): Boolean =
       r.isNullAt(keyOrd) || tombs.getOrElse(r.getLong(keyOrd), Int.MinValue) <= p.seq
-    val raw = readFunc(pf).flatMap {
-      case b: ColumnarBatch => b.rowIterator().asScala
-      case r => Iterator.single(r)
-    }
+    val raw = FileRows(readFunc, p.path, p.length)
     val rows: Iterator[InternalRow] = (p.kind match {
       case ChangesFilePartition.MorInsert => raw.filter(visible(tombsCur, _))
       case ChangesFilePartition.MorDelete => raw.filter { r =>
@@ -378,12 +343,6 @@ private[sources] case class ChangesReaderFactory(
       case ChangesFilePartition.MorRemovedDelete => raw.filter(visible(tombsPrev, _))
       case _ => raw
     }).map(out.set)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) { current = rows.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    FileRows.reader(rows)
   }
 }

@@ -105,7 +105,7 @@ object GraftVtMetaTable {
       pinned: Option[Int]): Array[InternalRow] = kind match {
 
     case "history" =>
-      GraftVtTable.versionCommitMicros(root).map { case (v, us) =>
+      VersionedTable.versionCommitMicros(root).map { case (v, us) =>
         val entries = VersionedTable.manifest(root, v)
         val files = entries.flatMap(ZoneMap.leafFiles(root, _))
         val abs = files.map(f => s"$root/$f")
@@ -116,7 +116,7 @@ object GraftVtMetaTable {
       }.toArray
 
     case "files" =>
-      val v = pinned.getOrElse(GraftVtTable.latestVersion(root))
+      val v = pinned.getOrElse(VersionedTable.latestVersion(root))
       val zstats = GraftVtCatalog.clusterCols.get(baseName)
         .flatMap(zc => ZoneMap.read(root, v, zc)).getOrElse(Map.empty)
       VersionedTable.manifest(root, v).flatMap { entry =>

@@ -1,11 +1,6 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType, JobID}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -14,7 +9,6 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.JsonText.{quote => q}
 
@@ -126,7 +120,7 @@ object VtMor {
   def compact(spark: SparkSession, tableName: String): Int = {
     val root = GraftVtCatalog.rootOf(tableName).getOrElse(
       throw new IllegalArgumentException(s"unknown table $tableName"))
-    val newV = GraftVtTable.latestVersion(root) + 1
+    val newV = VersionedTable.latestVersion(root) + 1
     val groupRel = s"files/compact_v$newV"
     spark.sql(s"SELECT * FROM graft_vt.$tableName")
       .write.mode("overwrite").parquet(s"$root/$groupRel")
@@ -180,9 +174,9 @@ class MorRowLevelOperation(table: GraftVtTable, cmd: RowLevelOperation.Command,
 
 /** Commit = data file(s) of inserted/replacement rows (if any) + key
   * tombstones, both stamped with the new version as their sequence.
-  * Same CREATE_NEW optimistic-concurrency manifest protocol as the COW
-  * writes. With `branchCommit = Some((branch, k))`, `newVersion` is the
-  * branch commit's SEQUENCE (`fork + k`) and the commit lands on the
+  * Same one-winner manifest commit as the COW writes. With
+  * `branchCommit = Some((branch, k))`, `newVersion` is the branch
+  * commit's SEQUENCE (`fork + k`) and the commit lands on the
   * branch's manifest+meta line instead of main's.
   */
 class MorDeltaBatchWrite(root: String, newVersion: Int, schema: StructType,
@@ -194,27 +188,18 @@ class MorDeltaBatchWrite(root: String, newVersion: Int, schema: StructType,
     case None => s"files/delta_v$newVersion"
   }
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val spark = SparkSession.active
-    new java.io.File(s"$root/$groupRel").mkdirs()
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val owf = new ParquetFileFormat().prepareWrite(
-      spark, job, Map.empty[String, String], schema)
-    val confEntries = job.getConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    new MorDeltaWriterFactory(s"$root/$groupRel", groupRel, schema, owf, confEntries)
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
+    new MorDeltaWriterFactory(VtTaskFiles.prepare(root, groupRel, schema))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val ms = messages.collect { case m: MorCommitMessage => m }
-    val newFiles = ms.collect { case m if m.rows > 0 => m.relPath }
-    ms.collect { case m if m.rows == 0 && m.relPath.nonEmpty => m }
-      .foreach(m => new java.io.File(s"$root/${m.relPath}").delete(): Unit)
+    // the data file is opened only for a row, so every named file is non-empty
+    val newFiles = ms.collect { case m if m.relPath.nonEmpty => m.relPath }
     val newTombs = ms.flatMap(_.deletedKeys).map(_ -> newVersion)
     branchCommit match {
       case Some((b, k)) =>
         // one-winner on the branch line: the ref must still be at k-1
-        // (commitEntries' CREATE_NEW backs this up at the file level)
+        // (commitEntries' one-winner write backs this up at the file level)
         val r = VtBranch.ref(root, b)
         if (r.head != k - 1) {
           abort(messages)
@@ -225,16 +210,13 @@ class MorDeltaBatchWrite(root: String, newVersion: Int, schema: StructType,
         val prev = VtMor.readBranchMeta(root, b, k - 1)
           .getOrElse(VtMor.Meta(Map.empty, Nil))
         val prevEntries = VtBranch.entries(root, b)
-        // the ref-head precheck above can still lose the CREATE_NEW
+        // the ref-head precheck above can still lose the one-winner
         // race inside commitEntries — the loser must clean up its data
         // files like the main-line path does, or they sit orphaned in a
         // group dir the winner's manifest pins (vacuum-proof garbage)
         try VtBranch.commitEntries(root, b, prevEntries ++ newFiles): Unit
-        catch {
-          case e @ (_: java.util.ConcurrentModificationException |
-              _: java.nio.file.FileAlreadyExistsException) =>
-            abort(messages)
-            throw e
+        catch { case e: java.util.ConcurrentModificationException =>
+          abort(messages); throw e
         }
         VtMor.writeBranchMeta(root, b, k, VtMor.Meta(
           prev.files ++ newFiles.map(_ -> newVersion),
@@ -244,17 +226,9 @@ class MorDeltaBatchWrite(root: String, newVersion: Int, schema: StructType,
       case None =>
         val prev = VtMor.readMeta(root, newVersion - 1).getOrElse(VtMor.Meta(Map.empty, Nil))
         val prevEntries = VersionedTable.manifest(root, newVersion - 1)
-        try
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/_manifest_v$newVersion.txt"),
-            (prevEntries ++ newFiles).sorted.mkString("\n"),
-            java.nio.file.StandardOpenOption.CREATE_NEW): Unit
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            abort(messages)
-            throw new java.util.ConcurrentModificationException(
-              s"commit conflict: version $newVersion of $root was committed " +
-                "by a concurrent writer; re-run the statement")
+        try VersionedTable.commitManifest(root, newVersion, (prevEntries ++ newFiles).sorted)
+        catch { case e: java.util.ConcurrentModificationException =>
+          abort(messages); throw e
         }
         VtMor.writeMeta(root, newVersion, VtMor.Meta(
           prev.files ++ newFiles.map(_ -> newVersion),
@@ -273,36 +247,25 @@ class MorDeltaBatchWrite(root: String, newVersion: Int, schema: StructType,
 }
 
 /** relPath empty ⇔ this task wrote no data file (pure-delete tasks). */
-case class MorCommitMessage(relPath: String, rows: Long,
-    deletedKeys: Array[Long]) extends WriterCommitMessage
+case class MorCommitMessage(relPath: String, deletedKeys: Array[Long])
+  extends WriterCommitMessage
 
-class MorDeltaWriterFactory(groupDir: String, groupRel: String, schema: StructType,
-    owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    confEntries: Array[(String, String)])
-  extends DeltaWriterFactory {
+class MorDeltaWriterFactory(files: VtTaskFiles) extends DeltaWriterFactory {
 
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val conf = new Configuration(false)
-    confEntries.foreach { case (k, v) => conf.set(k, v) }
+  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
       private var writer: org.apache.spark.sql.execution.datasources.OutputWriter = _
-      private var fileName: String = ""
-      private var n = 0L
+      private var relPath: String = ""
       private val deleted = scala.collection.mutable.ArrayBuffer.empty[Long]
 
-      // the data file is created lazily: a pure-DELETE task never
-      // touches parquet at all — its entire output is the key list
-      private def ensureWriter(): Unit = if (writer == null) {
-        val attempt = new TaskAttemptID(
-          new TaskID(new JobID("graft_mor", 0), TaskType.MAP, partitionId),
-          (taskId % Int.MaxValue).toInt)
-        val ctx = new TaskAttemptContextImpl(conf, attempt)
-        fileName = f"part-$partitionId%05d-$taskId.parquet"
-        writer = owf.newInstance(s"$groupDir/$fileName", schema, ctx)
-      }
-
       override def insert(row: InternalRow): Unit = {
-        ensureWriter(); writer.write(row); n += 1
+        // the data file is created lazily: a pure-DELETE task never
+        // touches parquet at all — its entire output is the key list
+        if (writer == null) {
+          val (w, rel) = files.open(partitionId, taskId, "")
+          writer = w; relPath = rel
+        }
+        writer.write(row)
       }
       override def delete(metadata: InternalRow, id: InternalRow): Unit =
         deleted += id.getLong(0)
@@ -311,18 +274,14 @@ class MorDeltaWriterFactory(groupDir: String, groupRel: String, schema: StructTy
           "updates are represented as delete+insert (representUpdateAsDeleteAndInsert)")
       override def commit(): WriterCommitMessage = {
         if (writer != null) writer.close()
-        MorCommitMessage(if (fileName.isEmpty) "" else s"$groupRel/$fileName",
-          n, deleted.toArray)
+        MorCommitMessage(relPath, deleted.toArray)
       }
-      override def abort(): Unit = {
-        if (writer != null) {
-          writer.close()
-          new java.io.File(s"$groupDir/$fileName").delete(): Unit
-        }
+      override def abort(): Unit = if (writer != null) {
+        writer.close()
+        files.delete(relPath)
       }
       override def close(): Unit = ()
     }
-  }
 }
 
 /** Merge-on-read scan: one partition per (file, sequence); each task
@@ -450,22 +409,10 @@ case class MorReaderFactory(readFunc: PartitionedFile => Iterator[InternalRow],
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[MorFilePartition]
-    val pf = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p.path),
-      0L, p.length, Array.empty[String], 0L, p.length)
     val mapped = project.map(new OrdinalMappedRow(_))
-    val rows: Iterator[InternalRow] = readFunc(pf).flatMap {
-      case b: ColumnarBatch => b.rowIterator().asScala
-      case r => Iterator.single(r)
-    }.filter { r =>
+    FileRows.reader(FileRows(readFunc, p.path, p.length).filter { r =>
       // MERGE-on-read: drop rows a newer tombstone supersedes
       r.isNullAt(keyOrd) || tombMap.getOrElse(r.getLong(keyOrd), Int.MinValue) <= p.seq
-    }.map(r => mapped.map(_.set(r)).getOrElse(r))
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) { current = rows.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    }.map(r => mapped.map(_.set(r)).getOrElse(r)))
   }
 }

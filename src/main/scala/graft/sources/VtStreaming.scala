@@ -54,10 +54,17 @@ case class VtVersionOffset(v: Int) extends Offset {
   override def json(): String = v.toString
 }
 
-class VtMicroBatchStream(root: String, schema: StructType)
+/** One committed VERSION per micro-batch over the table at `root` —
+  * batch boundaries ARE commit boundaries, which is what makes
+  * per-batch downstream commits line up with upstream transactions.
+  * Offsets are version numbers: restart resumes after the last
+  * committed version, and a replayed batch re-plans the identical
+  * input. Subclasses plan a batch's partitions from its versions.
+  */
+abstract class VersionPerBatchStream(root: String)
   extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  private def latest: Int = GraftVtTable.latestVersion(root)
+  private def latest: Int = VersionedTable.latestVersion(root)
 
   /** Target pinned at Trigger.AvailableNow start: the run drains every
     * version committed BEFORE the trigger, one per batch, then stops —
@@ -71,10 +78,6 @@ class VtMicroBatchStream(root: String, schema: StructType)
   override def initialOffset(): Offset = VtVersionOffset(0)
   override def latestOffset(): Offset = VtVersionOffset(latest)
 
-  /** One committed VERSION per micro-batch — batch boundaries ARE
-    * commit boundaries, which is what makes per-batch downstream
-    * commits line up with upstream transactions.
-    */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val cap = availableNowTarget.getOrElse(latest)
     VtVersionOffset(math.min(start.asInstanceOf[VtVersionOffset].v + 1, cap))
@@ -85,11 +88,14 @@ class VtMicroBatchStream(root: String, schema: StructType)
   override def deserializeOffset(json: String): Offset = VtVersionOffset(json.trim.toInt)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+}
+
+class VtMicroBatchStream(root: String, schema: StructType)
+  extends VersionPerBatchStream(root) {
 
   private def files(v: Int): Set[String] =
     if (v <= 0) Set.empty
-    else if (!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$root/_manifest_v$v.txt")))
+    else if (!VersionedTable.exists(root, v))
       // retention may have vacuumed old manifests: a missing version
       // contributes no files of its own, and its surviving data (files
       // carried forward) enters the stream at the first RETAINED
@@ -131,14 +137,28 @@ case class VtReaderFactory(readFunc: PartitionedFile => Iterator[InternalRow])
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[VtFilePartition]
-    val pf = PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p.path),
-      0L, p.length, Array.empty[String], 0L, p.length)
-    // the vectorized reader smuggles ColumnarBatch through the
-    // InternalRow iterator (the FileScanRDD contract) — flatten it
-    val rows: Iterator[InternalRow] = readFunc(pf).flatMap {
+    FileRows.reader(FileRows(readFunc, p.path, p.length))
+  }
+}
+
+/** Rows of one whole parquet file through a reader function built on the
+  * driver ([[ParquetFileFormat.buildReaderWithPartitionValues]]), for
+  * the custom scans' partition readers.
+  */
+private[sources] object FileRows {
+  /** Every row of the file at `path`, `length` bytes long. The vectorized
+    * reader smuggles ColumnarBatch through the InternalRow iterator (the
+    * FileScanRDD contract) — flattened here.
+    */
+  def apply(readFunc: PartitionedFile => Iterator[InternalRow], path: String,
+      length: Long): Iterator[InternalRow] =
+    readFunc(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
+      0L, length, Array.empty[String], 0L, length)).flatMap {
       case b: ColumnarBatch => b.rowIterator().asScala
       case r => Iterator.single(r)
     }
+
+  def reader(rows: Iterator[InternalRow]): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       override def next(): Boolean =
@@ -146,5 +166,4 @@ case class VtReaderFactory(readFunc: PartitionedFile => Iterator[InternalRow])
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
-  }
 }

@@ -1114,7 +1114,7 @@ object Streaming {
   private[graft] def commitBatchToVt(root: String, batchLatest: DataFrame,
       batchId: Long): Boolean = {
     val version = batchId.toInt + 1
-    if (new File(root, s"_manifest_v$version.txt").exists()) return false
+    if (graft.sources.VersionedTable.exists(root, version)) return false
     val spark = batchLatest.sparkSession
     val current =
       if (version == 1) batchLatest
@@ -1157,7 +1157,7 @@ object Streaming {
     // read the final state back through the SQL face of the table format
     val finalSchema = graft.sources.VersionedTable.readVersion(
       spark, tableRoot.getAbsolutePath,
-      graft.sources.GraftVtTable.latestVersion(tableRoot.getAbsolutePath)).schema
+      graft.sources.VersionedTable.latestVersion(tableRoot.getAbsolutePath)).schema
     graft.sources.GraftVtCatalog.register(spark, "stream_latest",
       tableRoot.getAbsolutePath, finalSchema)
     spark.sql(
@@ -1209,7 +1209,7 @@ object Streaming {
     val base = graft.sources.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     val root = graft.sources.VersionedTable.freshRoot(s"$dir#vtsource")
-    if (!new File(s"$root/_manifest_v3.txt").exists()) {
+    if (!graft.sources.VersionedTable.exists(root, 3)) {
       // append-only chain: v1 ⊂ v2 ⊂ v3, union = the whole corpus
       (0 until 3).foreach { i =>
         base.filter(pmod(col("doc_id"), lit(3)) === i)

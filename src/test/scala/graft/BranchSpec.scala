@@ -56,7 +56,7 @@ class BranchSpec extends AnyFunSuite {
     spark.sql(
       s"""INSERT INTO graft_vt.$name.branch_dev
          |SELECT doc_id + 2000, text, 'b2' FROM branch_spec_src WHERE doc_id < 3""".stripMargin)
-    val before = graft.sources.GraftVtTable.latestVersion(root)
+    val before = graft.sources.VersionedTable.latestVersion(root)
     val r = spark.sql(s"CALL graft_vt.fast_forward('$name', 'dev')").collect().head
     assert(r.getInt(0) == before + 2 && r.getInt(1) == 2)
     assert(spark.table(s"graft_vt.$name").count() == 60 + 5 + 3)
@@ -103,7 +103,7 @@ class BranchSpec extends AnyFunSuite {
       .map(_.split("/").take(2).mkString("/")).distinct
     spark.sql(s"CALL graft_vt.drop_branch('$name', 'keepme')")
     val deleted = VersionedTable.vacuum(root,
-      Seq(graft.sources.GraftVtTable.latestVersion(root)))
+      Seq(graft.sources.VersionedTable.latestVersion(root)))
     assert(branchGroups.exists(deleted.contains),
       s"drop + vacuum must collect the branch-only group (deleted: $deleted)")
   }
@@ -207,7 +207,7 @@ class BranchSpec extends AnyFunSuite {
   test("rollback restores an older file list as a NEW head; history survives") {
     val name = "br_rb"
     val root = mkTable(name)
-    val v1 = graft.sources.GraftVtTable.latestVersion(root)
+    val v1 = graft.sources.VersionedTable.latestVersion(root)
     spark.sql(s"DELETE FROM graft_vt.$name WHERE doc_id % 2 = 0")
     val afterDelete = spark.table(s"graft_vt.$name").count()
     assert(afterDelete < 60)

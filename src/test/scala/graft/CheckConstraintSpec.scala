@@ -1,9 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftVtCatalog, GraftVtTable}
+import graft.sources.{GraftVtCatalog, VersionedTable}
 
 /** CHECK constraints at the table-format write boundary: the oracle
   * gate (q_check_constraint) proves the accepting path; this suite
@@ -27,7 +29,7 @@ class CheckConstraintSpec extends AnyFunSuite {
 
   private def stateOf(name: String): (Int, Long) = {
     val root = GraftVtCatalog.rootOf(name).get
-    (GraftVtTable.latestVersion(root),
+    (VersionedTable.latestVersion(root),
       spark.sql(s"SELECT count(*) FROM graft_vt.$name").collect().head.getLong(0))
   }
 
@@ -43,6 +45,48 @@ class CheckConstraintSpec extends AnyFunSuite {
     // the valid prefix row (3, 30) must NOT have leaked in
     assert(spark.sql("SELECT count(*) FROM graft_vt.chk_ins WHERE doc_id = 3")
       .collect().head.getLong(0) == 0)
+  }
+
+  test("plain-clustered, bucketed and unit-partitioned writes share one task writer") {
+    val layouts = Seq(
+      "clustered" -> "TBLPROPERTIES ('cluster' = 'doc_id', 'check' = 'val >= 0')",
+      "bucketed" -> "PARTITIONED BY (bucket(4, doc_id)) TBLPROPERTIES ('check' = 'val >= 0')",
+      "unit" -> "")
+    layouts.foreach { case (layout, ddl) =>
+      val name = s"chk_layout_$layout"
+      GraftVtCatalog.ensure(spark)
+      spark.sql(s"DROP TABLE IF EXISTS graft_vt.$name")
+      spark.sql(s"CREATE TABLE graft_vt.$name (doc_id BIGINT, val BIGINT) $ddl")
+      val root = GraftVtCatalog.rootOf(name).get
+      if (layout == "unit") {
+        GraftVtCatalog.registerPartitioned(spark, name, root,
+          spark.table(s"graft_vt.$name").schema, "doc_id", 10L)
+        GraftVtCatalog.registerCheck(name, "val >= 0")
+      }
+      // a violating row fails its task and commits no version
+      val before = stateOf(name)
+      intercept[Exception](spark.sql(s"INSERT INTO graft_vt.$name VALUES (1, 1), (2, -1)"))
+      assert(stateOf(name) == before, s"$layout: a violating INSERT must commit nothing")
+      // 3 rows planned over 16 partitions: most tasks see no row and
+      // must write no file; every file the write left is named and non-empty
+      spark.range(3).selectExpr("id * 7 AS doc_id", "id AS val").repartition(16)
+        .createOrReplaceTempView(s"${name}_src")
+      spark.sql(s"INSERT INTO graft_vt.$name SELECT * FROM ${name}_src")
+      assert(stateOf(name) == (before._1 + 1, 3L), layout)
+      assert(VersionedTable.orphans(root).isEmpty, s"$layout: orphan groups")
+      val leaves = VersionedTable.manifest(root, VersionedTable.latestVersion(root))
+        .flatMap(graft.sources.ZoneMap.leafFiles(root, _))
+      assert(leaves.nonEmpty, layout)
+      leaves.foreach { f =>
+        assert(spark.read.parquet(s"$root/$f").count() > 0, s"$layout: zero-row file $f")
+      }
+      val onDisk = scala.util.Using.resource(
+          java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/files"))) {
+        _.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .map(p => java.nio.file.Paths.get(root).relativize(p).toString).toSet
+      }
+      assert(onDisk == leaves.toSet, s"$layout: unnamed files ${onDisk -- leaves}")
+    }
   }
 
   test("a violating UPDATE fails and the table reads back unchanged") {

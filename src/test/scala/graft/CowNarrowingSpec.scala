@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftVtCatalog, GraftVtTable, VersionedTable, ZoneMap}
+import graft.sources.{GraftVtCatalog, VersionedTable, ZoneMap}
 
 /** Group-based COW correctness under PUSHABLE predicates, and the
   * file-narrowing that rides on the fix.
@@ -74,7 +74,7 @@ class CowNarrowingSpec extends AnyFunSuite {
     val total = base.count()
     spark.sql(
       "UPDATE graft_vt.cow_narrow_upd SET source = 'narrow' WHERE doc_id BETWEEN 10 AND 19")
-    val v2 = GraftVtTable.latestVersion(root)
+    val v2 = VersionedTable.latestVersion(root)
     val v2Files = VersionedTable.manifest(root, v2).flatMap(ZoneMap.leafFiles(root, _))
     val retained = v2Files.toSet.intersect(v1Files.toSet)
     val rewritten = v1Files.toSet -- v2Files.toSet
@@ -102,7 +102,7 @@ class CowNarrowingSpec extends AnyFunSuite {
     // blocks full-file drops; doc_id <= 19 is the narrowing conjunct
     spark.sql(
       "DELETE FROM graft_vt.cow_narrow_del WHERE doc_id <= 19 AND length(text) >= 0")
-    val v2 = GraftVtTable.latestVersion(root)
+    val v2 = VersionedTable.latestVersion(root)
     val v2Files = VersionedTable.manifest(root, v2).flatMap(ZoneMap.leafFiles(root, _))
     assert(v2Files.toSet.intersect(v1Files.toSet).nonEmpty,
       s"files above the key range must be retained by reference (v1=$v1Files v2=$v2Files)")
@@ -134,7 +134,7 @@ class CowNarrowingSpec extends AnyFunSuite {
       .exceptAll(expected.select(concat_ws("|", col("doc_id"), col("source")).as("k")))
     assert(diff.count() == 0,
       s"narrowed updates diverged from the logical fold: ${diff.take(5).toSeq}")
-    VersionedTable.manifest(root, graft.sources.GraftVtTable.latestVersion(root)): Unit
+    VersionedTable.manifest(root, graft.sources.VersionedTable.latestVersion(root)): Unit
   }
 
   test("MERGE + NOT MATCHED BY SOURCE with a target-only ON conjunct deletes beyond any pruned range") {
@@ -176,6 +176,6 @@ class CowNarrowingSpec extends AnyFunSuite {
     assert(spark.sql(
       "SELECT COUNT(*) FROM graft_vt.cow_narrow_merge WHERE source = 'merged'")
       .collect().head.getLong(0) == base.filter(col("doc_id") % 50 === 0).count())
-    VersionedTable.manifest(root, GraftVtTable.latestVersion(root)): Unit
+    VersionedTable.manifest(root, VersionedTable.latestVersion(root)): Unit
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftVtCatalog, GraftVtTable, VersionedTable, ZoneMap}
+import graft.sources.{GraftVtCatalog, VersionedTable, ZoneMap}
 
 /** CREATE TABLE / CTAS / DROP TABLE through the parser on the graft_vt
   * catalog: the oracle gate pins q_sql_ctas's end state; this suite
@@ -57,7 +57,7 @@ class CtasSpec extends AnyFunSuite {
       """CREATE TABLE graft_vt.ctas_zoned TBLPROPERTIES ('cluster' = 'doc_id') AS
         |SELECT doc_id, text, source FROM ctas_spec_src_s""".stripMargin)
     val root = GraftVtCatalog.rootOf("ctas_zoned").get
-    val v = GraftVtTable.latestVersion(root)
+    val v = VersionedTable.latestVersion(root)
     val stats = ZoneMap.read(root, v, "doc_id")
       .getOrElse(fail("clustered CTAS must commit a zone-map sidecar"))
     assert(stats.size >= 2, s"expected a multi-file layout, got ${stats.keySet}")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SqlDml
-import graft.sources.{GraftVtCatalog, GraftVtTable, VtMor}
+import graft.sources.{GraftVtCatalog, VersionedTable, VtMor}
 
 /** Merge-on-read physical contract: the oracle gate proves MOR results
   * equal the logical recompute; this suite pins WHAT WAS WRITTEN —
@@ -23,7 +23,7 @@ class MorSpec extends AnyFunSuite {
   test("MOR DELETE writes tombstones only — zero data files") {
     SqlDml.sqlDeleteMor(spark, dir).count(): Unit
     val root = GraftVtCatalog.rootOf("mor_delete").get
-    val v = GraftVtTable.latestVersion(root)
+    val v = VersionedTable.latestVersion(root)
     assert(v >= 2, "the DELETE must commit a version")
     val meta = VtMor.readMeta(root, v).get
     assert(meta.tombs.nonEmpty, "DELETE must write tombstones")
@@ -42,7 +42,7 @@ class MorSpec extends AnyFunSuite {
   test("MOR UPDATE writes only the touched rows") {
     SqlDml.sqlUpdateMor(spark, dir).count(): Unit
     val root = GraftVtCatalog.rootOf("mor_update").get
-    val v = GraftVtTable.latestVersion(root)
+    val v = VersionedTable.latestVersion(root)
     val meta = VtMor.readMeta(root, v).get
     val touched = graft.sources.Tables(spark, dir, "documents")
       .filter("doc_id % 5 = 0").count()

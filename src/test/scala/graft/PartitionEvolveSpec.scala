@@ -5,7 +5,7 @@ import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SqlDml
-import graft.sources.{GraftVtCatalog, GraftVtTable, Tables, VersionedTable, ZoneMap}
+import graft.sources.{GraftVtCatalog, Tables, VersionedTable, ZoneMap}
 
 /** Pins for PARTITION-SPEC EVOLUTION (`CALL graft_vt.evolve_partition`):
   * unit routing produces files at most one unit wide, the evolution is
@@ -23,7 +23,7 @@ class PartitionEvolveSpec extends AnyFunSuite {
   private def fixture(): (String, Int, Map[String, (Long, Long)]) = {
     SqlDml.sqlPartitionEvolve(spark, dir).collect(): Unit
     val root = GraftVtCatalog.rootOf("vt_part_evolve").get
-    val v = GraftVtTable.latestVersion(root)
+    val v = VersionedTable.latestVersion(root)
     (root, v, ZoneMap.read(root, v, "ts_us").get)
   }
 

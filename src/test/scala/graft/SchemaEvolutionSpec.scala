@@ -81,7 +81,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       "SELECT source, COUNT(*) AS n FROM graft_vt.evo_readd GROUP BY source")
       .collect().map(r => (Option(r.getString(0)), r.getLong(1))).toMap
     assert(after.keySet == Set(Some("fresh"), None))
-    val latest = graft.sources.GraftVtTable.latestVersion(root)
+    val latest = graft.sources.VersionedTable.latestVersion(root)
     val physical = spark.read.parquet(
       VersionedTable.manifest(root, latest).map(g => s"$root/$g"): _*)
     assert(physical.schema.fieldNames.contains("source__r2"),

@@ -153,7 +153,7 @@ class SpjSpec extends AnyFunSuite {
     assert(spark.table("graft_vt.spj_w").count() == base.count())
     // every leaf file sits under a b=<i> layer, rows in the right bucket
     val root = GraftVtCatalog.rootOf("spj_w").get
-    val v = graft.sources.GraftVtTable.latestVersion(root)
+    val v = graft.sources.VersionedTable.latestVersion(root)
     val leaves = VersionedTable.manifest(root, v)
       .flatMap(graft.sources.ZoneMap.leafFiles(root, _))
     assert(leaves.nonEmpty && leaves.forall(_.contains("/b=")),

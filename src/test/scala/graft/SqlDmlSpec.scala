@@ -38,7 +38,7 @@ class SqlDmlSpec extends AnyFunSuite {
     }
     graft.sources.GraftVtCatalog.register(spark, "expire_spec", root, base.schema)
     graft.sources.GraftVtTable.tag(root, "keepme", 1)
-    val cutoff = graft.sources.GraftVtTable.versionCommitMicros(root).map(_._2).max
+    val cutoff = graft.sources.VersionedTable.versionCommitMicros(root).map(_._2).max
     val r = spark.sql(
       s"CALL graft_vt.expire_versions('expire_spec', timestamp_micros(${cutoff}L))")
       .collect().head
@@ -133,7 +133,8 @@ class SqlDmlSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(f.toPath, tag): Unit
       (new graft.sources.GraftVtBatchWrite(root, 2, schema, () => Nil),
         Array[org.apache.spark.sql.connector.write.WriterCommitMessage](
-          graft.sources.GraftVtCommitMessage(s"files/dml_v2/$tag.parquet", 1)))
+          graft.sources.GraftVtCommitMessage(
+            Seq(graft.sources.VtFile(s"files/dml_v2/$tag.parquet", 1)))))
     }
     val (w1, m1) = writeOf("winner")
     val (w2, m2) = writeOf("loser")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftVtCatalog, GraftVtTable, VersionedTable, VtMor, ZoneMapScanBuilder}
+import graft.sources.{GraftVtCatalog, VersionedTable, VtMor, ZoneMapScanBuilder}
 
 /** Combined table-format stress (r12 verdict #7): each sidecar tier is
   * pinned solo by its own suite (ZoneMapSpec, BloomSkipSpec, MorSpec,
@@ -31,6 +31,24 @@ class VtLifecycleSpec extends AnyFunSuite {
     val (g, w) = (canon(got), canon(want))
     assert(g == w, s"$where: ${g.length} vs ${w.length} rows; " +
       s"first diff: ${g.diff(w).headOption.orElse(w.diff(g).headOption)}")
+  }
+
+  test("vacuum drops a retired version's bloom sidecars with its manifest") {
+    val base = graft.sources.Tables(spark, dir, "documents").select(col("doc_id"))
+    val root = java.nio.file.Files.createTempDirectory("graft_bloom_vac").toString
+    base.repartition(4, col("doc_id")).write.mode("overwrite").parquet(s"$root/files/base_v1")
+    VersionedTable.writeManifest(root, 1, Seq("files/base_v1"))
+    graft.sources.BloomMap.analyze(spark, root, 1, "doc_id"): Unit
+    GraftVtCatalog.register(spark, "bloom_vac", root, base.schema)
+    GraftVtCatalog.registerBloomCols("bloom_vac", Seq("doc_id"))
+    def bloomV1 = new java.io.File(root).list().toSeq.filter(_.startsWith("_bloom_v1_"))
+    assert(bloomV1.nonEmpty, "the fixture must carry v1 bloom sidecars")
+    // optimize keeps the last two versions: the second one retires v1
+    while (VersionedTable.exists(root, 1))
+      spark.sql("CALL graft_vt.optimize('bloom_vac')").collect(): Unit
+    assert(bloomV1.isEmpty, s"v1 is vacuumed but its bloom sidecars remain: $bloomV1")
+    assert(spark.sql("SELECT count(*) FROM graft_vt.bloom_vac").collect().head.getLong(0)
+      == base.count())
   }
 
   test("MOR lifecycle: main delta, branch delete in isolation, fast-forward, " +
@@ -69,7 +87,7 @@ class VtLifecycleSpec extends AnyFunSuite {
     // optimize on a MOR table = tombstone-aware compaction: the
     // tombstone set folds away, logical rows byte-identical
     spark.sql(s"CALL graft_vt.optimize('$name')").collect()
-    val v = GraftVtTable.latestVersion(root)
+    val v = VersionedTable.latestVersion(root)
     assert(VtMor.readMeta(root, v).forall(_.tombs.isEmpty),
       "optimize must clear the tombstone set")
     assertSame(spark.table(s"graft_vt.$name"), expected, "post-optimize content")
@@ -131,7 +149,7 @@ class VtLifecycleSpec extends AnyFunSuite {
     spark.sql(s"CALL graft_vt.fast_forward('$name', 'dev')")
     expected = expectedBranch
     assertSame(spark.table(s"graft_vt.$name"), expected, "fast-forward")
-    val preOptimizeV = GraftVtTable.latestVersion(GraftVtCatalog.rootOf(name).get)
+    val preOptimizeV = VersionedTable.latestVersion(GraftVtCatalog.rootOf(name).get)
 
     // OPTIMIZE ZORDER: Morton layout + sidecars; the 2-D box now PRUNES
     // at runtime and still counts exactly the straight-line box

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftVtCatalog, GraftVtCommitMessage, VtBranch}
+import graft.sources.{GraftVtCatalog, GraftVtCommitMessage, VtBranch, VtFile}
 
 /** Same-branch two-writer commit races (VERDICT r13 #7). BranchSpec pins
   * the NARROW race (rival claimed the manifest, ref not yet advanced —
@@ -29,6 +29,42 @@ class VtRaceSpec extends AnyFunSuite {
       .createOrReplaceTempView("race_spec_src")
     spark.sql(s"CREATE TABLE graft_vt.$name AS SELECT * FROM race_spec_src")
     GraftVtCatalog.rootOf(name).get
+  }
+
+  test("a metadata-only DELETE or TRUNCATE racing a commit never overwrites it") {
+    // drive the aligned DELETE at its race point: the plan read version
+    // N, a rival committed N+1 before the commit — the commit must
+    // raise the conflict every writer raises and leave the rival's
+    // manifest as it was
+    import org.apache.spark.sql.connector.catalog.{Identifier, SupportsDelete, TableCatalog}
+    import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual}
+    val name = "dml_meta_race"
+    GraftVtCatalog.ensure(spark)
+    spark.sql(s"DROP TABLE IF EXISTS graft_vt.$name")
+    spark.sql(s"CREATE TABLE graft_vt.$name (doc_id BIGINT, val BIGINT) " +
+      "TBLPROPERTIES ('cluster' = 'doc_id')")
+    spark.sql(s"INSERT INTO graft_vt.$name VALUES (1, 1), (2, 2)")
+    spark.sql(s"INSERT INTO graft_vt.$name VALUES (100, 1), (101, 2)")
+    val root = GraftVtCatalog.rootOf(name).get
+    val table = spark.sessionState.catalogManager.catalog("graft_vt")
+      .asInstanceOf[TableCatalog].loadTable(Identifier.of(Array.empty[String], name))
+      .asInstanceOf[SupportsDelete]
+    val filters = Array[Filter](GreaterThanOrEqual("doc_id", 100L))
+    assert(table.canDeleteWhere(filters), "the aligned delete must be metadata-only")
+    val v = graft.sources.VersionedTable.latestVersion(root)
+    val rival = graft.sources.VersionedTable.manifestFile(root, v + 1).toPath
+    java.nio.file.Files.writeString(rival, "files/rival")
+    val e = intercept[java.util.ConcurrentModificationException](table.deleteWhere(filters))
+    assert(e.getMessage.contains("commit conflict"), e.getMessage)
+    assert(java.nio.file.Files.readString(rival) == "files/rival")
+    assert(graft.sources.VersionedTable.latestVersion(root) == v + 1)
+    // TRUNCATE commits through the same one-winner write: on top of the
+    // rival, never over it
+    java.nio.file.Files.writeString(rival, "")
+    spark.sql(s"TRUNCATE TABLE graft_vt.$name")
+    assert(java.nio.file.Files.readString(rival) == "")
+    assert(graft.sources.VersionedTable.latestVersion(root) == v + 2)
+    assert(spark.table(s"graft_vt.$name").count() == 0)
   }
 
   test("COW same-branch: a fully-finished rival fails the stale rewrite loudly") {
@@ -59,7 +95,7 @@ class VtRaceSpec extends AnyFunSuite {
         VtBranch.commitEntriesAt(root, "dev", staleHead, entries): Unit
       })))
     val e = intercept[java.util.ConcurrentModificationException] {
-      w.commit(Array(GraftVtCommitMessage(loserRel, 1)))
+      w.commit(Array(GraftVtCommitMessage(Seq(VtFile(loserRel, 1)))))
     }
     assert(e.getMessage.contains("conflict"))
     // exactly one winner: branch state is the winner's, untouched

@@ -19,7 +19,7 @@ class VtSinkReplaySpec extends AnyFunSuite {
   }
 
   private def state(root: String): Set[(Long, Long, Double)] = {
-    val v = graft.sources.GraftVtTable.latestVersion(root)
+    val v = graft.sources.VersionedTable.latestVersion(root)
     graft.sources.VersionedTable.readVersion(spark, root, v)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
   }
@@ -40,7 +40,7 @@ class VtSinkReplaySpec extends AnyFunSuite {
     assert(!Streaming.commitBatchToVt(root,
       batchDf(Seq((2L, 99L, 9.9, 999L))), 1L), "replay must be a no-op")
     assert(state(root) == committed, "replay must not move the table")
-    assert(graft.sources.GraftVtTable.latestVersion(root) == 2)
+    assert(graft.sources.VersionedTable.latestVersion(root) == 2)
 
     // an orphan group from a crash BETWEEN group write and manifest
     // commit is never referenced — readers see only committed versions

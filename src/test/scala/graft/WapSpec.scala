@@ -25,7 +25,7 @@ class WapSpec extends AnyFunSuite {
     VersionedTable.stage(root, 2, Seq("files/cold_v1", "files/bad_v2"))
 
     // staged is invisible to readers of the table
-    assert(graft.sources.GraftVtTable.latestVersion(root) == 1)
+    assert(graft.sources.VersionedTable.latestVersion(root) == 1)
     // the audit sees the staged rows and fails the gate
     val violations = VersionedTable.readStaged(spark, root, 2)
       .filter("length(text) = 0").count()
@@ -36,7 +36,7 @@ class WapSpec extends AnyFunSuite {
       "staged-only group must be deleted")
     assert(new java.io.File(s"$root/files/cold_v1").exists(),
       "group shared with published v1 must survive")
-    assert(graft.sources.GraftVtTable.latestVersion(root) == 1)
+    assert(graft.sources.VersionedTable.latestVersion(root) == 1)
     assert(VersionedTable.readVersion(spark, root, 1).count() == 2)
   }
 
@@ -49,7 +49,7 @@ class WapSpec extends AnyFunSuite {
     Seq((2L, "b")).toDF("id", "text").write.parquet(s"$root/files/g2")
     VersionedTable.stage(root, 2, Seq("files/g1", "files/g2"))
     VersionedTable.publish(root, 2)
-    assert(graft.sources.GraftVtTable.latestVersion(root) == 2)
+    assert(graft.sources.VersionedTable.latestVersion(root) == 2)
     // a racing writer staged the same target version
     VersionedTable.stage(root, 2, Seq("files/g1"))
     intercept[java.util.ConcurrentModificationException] {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SqlDml
-import graft.sources.{GraftVtCatalog, GraftVtTable, ZoneMap, ZoneMapScanBuilder}
+import graft.sources.{GraftVtCatalog, VersionedTable, ZoneMap, ZoneMapScanBuilder}
 
 /** File-level data skipping on clustered versioned tables: the oracle
   * gate proves pruning never changes RESULTS; this suite pins that it
@@ -52,7 +52,7 @@ class ZoneMapSpec extends AnyFunSuite {
         |SELECT doc_id, text, source FROM parquet.`""".stripMargin.replace("\n", " ")
         + s"$dir/documents.parquet`")
     val root = GraftVtCatalog.rootOf("vt_zoned").get
-    val v = GraftVtTable.latestVersion(root)
+    val v = VersionedTable.latestVersion(root)
     val stats = ZoneMap.read(root, v, "doc_id")
       .getOrElse(fail("clustered write must commit the new version's sidecar"))
     assert(stats.size >= 2, s"expected multiple files, got ${stats.keySet}")
