@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
@@ -44,47 +46,50 @@ object GraftFunctions {
     (conv(substring(md5(key.cast("string").cast("binary")), 1, 8), 16, 10)
       .cast("long") % buckets).cast("int")
 
-  // mirror of GraftExtensions' arity guard: wrong-arity SQL calls get an
-  // invalid-arguments message, not an IndexOutOfBoundsException
-  private def arity[A](name: String, exprs: Seq[A], n: Int): Unit =
+  /** One SQL function of [[sqlFunctions]]: its name, the expression
+    * class the extension route's `ExpressionInfo` names, its arity and
+    * its builder.
+    */
+  private[graft] final case class SqlFunction(name: String, cls: Class[_], n: Int,
+      build: Seq[Expression] => Expression) {
+    /** [[build]] behind the arity guard. */
+    def builder: Seq[Expression] => Expression = exprs => { arity(name, exprs, n); build(exprs) }
+  }
+
+  // explicit arity check: a bare exprs.head/exprs(1) surfaces an
+  // IndexOutOfBoundsException from the resolver where every built-in
+  // gives a clear invalid-arguments analysis error
+  private def arity(name: String, exprs: Seq[Expression], n: Int): Unit =
     if (exprs.length != n)
       throw new IllegalArgumentException(
         s"Invalid number of arguments for function $name: expected $n, got ${exprs.length}")
 
-  /** Register all custom functions for SQL use (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "standardize_race_id",
-      exprs => { arity("standardize_race_id", exprs, 1); StandardizeRaceId(exprs.head) },
-      "scala_udf")
-    spark.udf.register("standardize_race_id_udf", standardizeRaceIdUdf)
+  /** The SQL functions both routes register: [[register]] (per-session
+    * temp functions) and [[graft.plans.GraftExtensions]] (injected into
+    * every session built with the extension).
+    */
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    SqlFunction("standardize_race_id", classOf[StandardizeRaceId], 1,
+      e => StandardizeRaceId(e.head)),
     // SQL text surface for the vector expression: SELECT dot_product(a, b)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      exprs => { arity("dot_product", exprs, 2); DotProduct(exprs.head, exprs(1)) },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      exprs => { arity("jaro_winkler", exprs, 2)
-        JaroWinklerSimilarity(exprs.head, exprs(1)) },
-      "scala_udf")
+    SqlFunction("dot_product", classOf[DotProduct], 2, e => DotProduct(e.head, e(1))),
+    SqlFunction("jaro_winkler", classOf[JaroWinklerSimilarity], 2,
+      e => JaroWinklerSimilarity(e.head, e(1))),
     // Spark's runtime-filter bloom pair, surfaced as SQL text: the engine
     // ships them only as internal expressions (InjectRuntimeFilter plants
     // them), but the explicit semi-join-reduction verb needs them callable —
     // build the filter with one distributed aggregate, probe it map-side
     // via a scalar subquery (BloomFilterMightContain accepts exactly
     // foldables and subqueries, so the probe never needs a driver literal).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => { arity("graft_bloom_agg", exprs, 3)
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs.head, exprs(1), exprs(2)) },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => { arity("graft_might_contain", exprs, 2)
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs.head, exprs(1)) },
-      "scala_udf")
+    SqlFunction("graft_bloom_agg", classOf[BloomFilterAggregate], 3,
+      e => new BloomFilterAggregate(e.head, e(1), e(2))),
+    SqlFunction("graft_might_contain", classOf[BloomFilterMightContain], 2,
+      e => BloomFilterMightContain(e.head, e(1))))
+
+  /** Register all custom functions for SQL use (idempotent). */
+  def register(spark: SparkSession): Unit = {
+    sqlFunctions.foreach(f => spark.sessionState.functionRegistry
+      .createOrReplaceTempFunction(f.name, f.builder, "scala_udf"))
+    spark.udf.register("standardize_race_id_udf", standardizeRaceIdUdf)
   }
 }

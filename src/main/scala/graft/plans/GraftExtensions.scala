@@ -33,49 +33,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-  // explicit arity check: a bare exprs.head/exprs(1) surfaces an
-  // IndexOutOfBoundsException from the resolver where every built-in
-  // gives a clear invalid-arguments analysis error
-  private def arity[A](name: String, exprs: Seq[A], n: Int): Unit =
-    if (exprs.length != n)
-      throw new IllegalArgumentException(
-        s"Invalid number of arguments for function $name: expected $n, got ${exprs.length}")
-
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => CollapseStandardizeRaceId)
     // whole-operator extension tier: plans the native AsOfJoin node
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    e.injectFunction((
-      FunctionIdentifier("standardize_race_id"),
-      new ExpressionInfo(classOf[StandardizeRaceId].getName, "standardize_race_id"),
-      exprs => { arity("standardize_race_id", exprs, 1); StandardizeRaceId(exprs.head) }))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "dot_product"),
-      exprs => { arity("dot_product", exprs, 2)
-        graft.functions.DotProduct(exprs.head, exprs(1)) }))
-    e.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[graft.functions.JaroWinklerSimilarity].getName, "jaro_winkler"),
-      exprs => { arity("jaro_winkler", exprs, 2)
-        graft.functions.JaroWinklerSimilarity(exprs.head, exprs(1)) }))
-    // the runtime-filter bloom pair, for the explicit semi-join-reduction
-    // verb (see GraftFunctions.register for the rationale)
-    e.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      exprs => { arity("graft_bloom_agg", exprs, 3)
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs.head, exprs(1), exprs(2)) }))
-    e.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      exprs => { arity("graft_might_contain", exprs, 2)
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs.head, exprs(1)) }))
+    graft.functions.GraftFunctions.sqlFunctions.foreach(f => e.injectFunction((
+      FunctionIdentifier(f.name), new ExpressionInfo(f.cls.getName, f.name), f.builder)))
   }
 }

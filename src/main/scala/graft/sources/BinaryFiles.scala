@@ -23,7 +23,7 @@ object BinaryFiles {
   // per-JVM stable staging (Roundtrip's pattern): bench reps overwrite
   // instead of accumulating; cleared from the tmpdir at JVM exit
   private[graft] lazy val stageDir: java.io.File =
-    Scratch.tmpDir(s"graft_binfiles_${java.util.UUID.randomUUID().toString.take(8)}")
+    Scratch.tmpDir(s"graft_binfiles_${Scratch.jvmTag}")
 
   /** One staging subtree per (corpus, cap): different-cap calls in one
     * JVM (the smoke suites run the default; SourcesSpec runs a small

@@ -28,13 +28,8 @@ object BucketedParquetSink {
       sortKeys: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val dir = java.nio.file.Paths.get(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    if (java.nio.file.Files.exists(dir)) {
-      scala.util.Using.resource(java.nio.file.Files.walk(dir))(
-        _.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p)))
-    }
+    Scratch.delete(new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table))
     val sorts = if (sortKeys.nonEmpty) sortKeys else Seq(bucketKey)
     // Pre-shuffle onto the bucket hash (repartition and bucketBy share
     // Murmur3 HashPartitioning semantics) so every task holds exactly

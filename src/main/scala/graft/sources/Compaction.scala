@@ -54,8 +54,7 @@ object Compaction {
   // truncates across Bench reps instead of accumulating copies; cleared
   // from the (often tmpfs) tmpdir at JVM exit.
   private lazy val tempBase: String =
-    Scratch.tmpDir(s"graft_compact_${java.util.UUID.randomUUID().toString.take(8)}")
-      .getAbsolutePath
+    Scratch.tmpDir(s"graft_compact_${Scratch.jvmTag}").getAbsolutePath
 
   /** The oracle query: fragment `events` into many tiny files (the
     * streaming-sink pathology, simulated), compact to a byte target,

@@ -22,9 +22,8 @@ object ParquetSink {
   // JVM-unique so concurrent processes can't clobber each other's files
   // mid-read; deleted at JVM exit so repeated Verify/Bench/test JVMs don't
   // accumulate full event-table copies in the (often tmpfs) tmpdir.
-  private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
-  private lazy val partDir: String = Scratch.tmpDir(s"graft_part_$jvmTag").getAbsolutePath
-  private lazy val dimDir: String = Scratch.tmpDir(s"graft_partdim_$jvmTag").getAbsolutePath
+  private lazy val partDir: String = Scratch.tmpDir(s"graft_part_${Scratch.jvmTag}").getAbsolutePath
+  private lazy val dimDir: String = Scratch.tmpDir(s"graft_partdim_${Scratch.jvmTag}").getAbsolutePath
 
   /** Engine query for the partitioned layout: write events partitioned
     * by event_type, read back filtered to ONE partition value, and

@@ -25,9 +25,8 @@ object Roundtrip {
     * deleted at JVM exit so repeated JVMs don't accumulate table copies
     * in the (often tmpfs) tmpdir.
     */
-  private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
   private def tempDir(tag: String): String =
-    Scratch.tmpDir(s"graft_rt_${jvmTag}_$tag").getAbsolutePath
+    Scratch.tmpDir(s"graft_rt_${Scratch.jvmTag}_$tag").getAbsolutePath
 
   /** lineitem → ORC → read → pricing-style aggregate. */
   def orcLineitem(spark: SparkSession, dir: String): DataFrame = {

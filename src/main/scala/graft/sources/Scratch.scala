@@ -16,6 +16,11 @@ import java.io.File
   */
 private[graft] object Scratch {
 
+  /** This JVM's tag, 8 hex digits: names the per-JVM directories, so
+    * concurrent processes never share one.
+    */
+  val jvmTag: String = java.util.UUID.randomUUID().toString.take(8)
+
   private val atExit = java.util.concurrent.ConcurrentHashMap.newKeySet[File]()
   private lazy val hook = sys.addShutdownHook(atExit.forEach(f => delete(f)))
 

@@ -22,7 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object VersionedTable {
 
-  private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
   // keyed by source dir: a second fixture (another scale factor, an edge
   // corpus) in the same JVM must get its own chain, not the first dir's
   // (mirrors the BinaryFiles.stageFor per-dir staging precedent)
@@ -33,7 +32,7 @@ object VersionedTable {
     * exit.
     */
   private[graft] def freshRoot(key: String): String =
-    Scratch.tmpDir(s"graft_vt_${jvmTag}_${Integer.toHexString(key.hashCode)}").getAbsolutePath
+    Scratch.tmpDir(s"graft_vt_${Scratch.jvmTag}_${Integer.toHexString(key.hashCode)}").getAbsolutePath
 
   // The on-disk contract, owned here alone: version `n` of a table is
   // the manifest `_manifest_v<n>.txt` under its root, a newline-separated
@@ -61,6 +60,21 @@ object VersionedTable {
     * version's manifest and copied by a rollback to it.
     */
   private[sources] val sidecarPrefixes = Seq("_zonemap_v", "_bloom_v", "_mor_v")
+
+  /** Copy version `from`'s sidecars under `root` to version `to` under
+    * `dstRoot`: they describe the same files, so they stay valid
+    * verbatim. Matches `<prefix><from>_…` and `<prefix><from>.json`
+    * only, so version 1 never picks up version 10's.
+    */
+  private[sources] def copySidecars(root: String, from: Int, dstRoot: String, to: Int): Unit =
+    Option(new java.io.File(root).list()).getOrElse(Array.empty[String]).foreach { n =>
+      sidecarPrefixes.find(p => n.startsWith(s"$p${from}_") || n == s"$p$from.json")
+        .foreach { p =>
+          java.nio.file.Files.copy(java.nio.file.Paths.get(s"$root/$n"),
+            java.nio.file.Paths.get(s"$dstRoot/$p$to${n.stripPrefix(s"$p$from")}"),
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+        }
+    }
 
   /** Manifest `version`'s file, for callers that read its mtime (the
     * commit instant).

@@ -28,7 +28,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * economics as WAP ([[VersionedTable.stage]]) but with a full multi-
   * commit lineage instead of a single staged version. All state lives in
   * the table root, so branches survive table RENAME (the root moves with
-  * the registry entry) and die with DROP TABLE (the root is the
+  * the catalog record) and die with DROP TABLE (the root is the
   * lifecycle) — no driver-side map to leak or orphan.
   */
 object VtBranch {
@@ -186,11 +186,12 @@ object VtBranch {
   * never sees intermediate states, and the whole edited lineage
   * promotes atomically-per-version on fast-forward.
   */
-private[sources] class GraftVtBranchTable(baseName: String, root: String,
-    tableSchema: StructType, branch: String, base: GraftVtTable,
-    morKey: Option[String] = None)
+private[sources] class GraftVtBranchTable(baseName: String, branch: String,
+    base: GraftVtTable)
   extends Table with SupportsRead with SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
+
+  private val (root, tableSchema, morKey) = (base.root, base.meta.schema, base.meta.morKey)
 
   private def spark = SparkSession.active
 
@@ -219,9 +220,9 @@ private[sources] class GraftVtBranchTable(baseName: String, root: String,
     }
     val paths = VtBranch.entries(root, branch).map(g => s"$root/$g")
     val inner = ParquetTable(name(), spark, CaseInsensitiveStringMap.empty(), paths,
-      Some(base.physify(tableSchema)), classOf[ParquetFileFormat])
+      Some(base.meta.physify(tableSchema)), classOf[ParquetFileFormat])
       .newScanBuilder(options)
-    if (base.colMap.isEmpty) inner else new ColMapScanBuilder(inner, base.colMap)
+    if (base.meta.colMap.isEmpty) inner else new ColMapScanBuilder(inner, base.meta.colMap)
   }
 
   override def newRowLevelOperationBuilder(
@@ -241,7 +242,7 @@ private[sources] class GraftVtBranchTable(baseName: String, root: String,
       override def truncate(): WriteBuilder = { baseEntries = () => Nil; this }
       override def build(): Write = {
         val nextK = VtBranch.ref(root, branch).head + 1
-        new GraftVtWrite(root, nextK, base.physify(info.schema()), baseEntries,
+        new GraftVtWrite(root, nextK, base.meta.physify(info.schema()), baseEntries,
           // no cluster/bucket routing on a branch: layout sidecars are
           // keyed by MAIN versions; OPTIMIZE after fast-forward restores
           // the layout tiers

@@ -122,7 +122,7 @@ class GraftVtCatalog extends TableCatalog
     Array(Identifier.of(Array.empty[String], "bucket"))
 
   override def listTables(namespace: Array[String]): Array[Identifier] =
-    GraftVtCatalog.registry.keys.map(Identifier.of(Array.empty[String], _)).toArray
+    GraftVtCatalog.tables.keys.map(Identifier.of(Array.empty[String], _)).toArray
 
   override def loadTable(ident: Identifier): Table = lookup(ident, None)
 
@@ -138,7 +138,7 @@ class GraftVtCatalog extends TableCatalog
       // then TAG (pinned version) — same precedence as Iceberg refs.
       // Only base-table identifiers have a branch face; a metadata
       // table's VERSION AS OF keeps resolving through tags.
-      case None if GraftVtCatalog.registry.contains(ident.name()) &&
+      case None if GraftVtCatalog.tables.contains(ident.name()) &&
           VtBranch.exists(rootFor(ident), version) =>
         branchTable(ident.name(), version)
       case None =>
@@ -169,8 +169,8 @@ class GraftVtCatalog extends TableCatalog
         ident.name() == "changes" => b
       case _ => ident.name()
     }
-    GraftVtCatalog.registry.get(base) match {
-      case Some((r, _)) => r
+    GraftVtCatalog.tables.get(base) match {
+      case Some(m) => m.root
       case None => throw new NoSuchTableException(ident)
     }
   }
@@ -180,40 +180,36 @@ class GraftVtCatalog extends TableCatalog
       // Iceberg-style metadata tables: `graft_vt.<table>.<kind>` —
       // the base table name rides in the identifier's namespace
       case Array(base) if GraftVtMetaTable.kinds(ident.name()) &&
-          GraftVtCatalog.registry.contains(base) =>
-        new GraftVtMetaTable(base, GraftVtCatalog.registry(base)._1,
-          ident.name(), version)
+          GraftVtCatalog.tables.contains(base) =>
+        new GraftVtMetaTable(base, GraftVtCatalog.tables(base), ident.name(), version)
       // row-level CDC face: `graft_vt.<table>.changes [VERSION AS OF v]`
       // — the changes committed BY version v (default: the latest), as
       // insert/delete rows from the commit's file diff / new tombstones
       case Array(base) if ident.name() == "changes" &&
-          GraftVtCatalog.registry.contains(base) =>
-        new GraftVtChangesTable(base, GraftVtCatalog.registry(base)._1,
-          GraftVtCatalog.registry(base)._2, version)
+          GraftVtCatalog.tables.contains(base) =>
+        new GraftVtChangesTable(base, GraftVtCatalog.tables(base), version)
       // branch face: `graft_vt.<table>.branch_<name>` — reads the
       // branch head, INSERTs commit onto the branch line
       case Array(base) if ident.name().startsWith("branch_") &&
-          GraftVtCatalog.registry.contains(base) =>
+          GraftVtCatalog.tables.contains(base) =>
         branchTable(base, ident.name().stripPrefix("branch_"))
       case _ =>
-        GraftVtCatalog.registry.get(ident.name()) match {
-          case Some((root, schema)) => new GraftVtTable(ident.name(), root, schema, version)
+        GraftVtCatalog.tables.get(ident.name()) match {
+          case Some(m) => new GraftVtTable(ident.name(), m, version)
           case None => throw new NoSuchTableException(ident)
         }
     }
 
   private def branchTable(base: String, branch: String): Table = {
-    val (root, schema) = GraftVtCatalog.registry(base)
-    require(VtBranch.exists(root, branch),
+    val m = GraftVtCatalog.tables(base)
+    require(VtBranch.exists(m.root, branch),
       s"no such branch '$branch' on graft_vt.$base")
     // a bucket-routed branch write would break the layout invariant on
     // fast-forward — refused at the door. MOR branches are supported:
     // reads/DML bind the branch's own manifest + tombstone sidecar line
-    require(!GraftVtCatalog.bucketSpecs.contains(base),
+    require(m.bucket.isEmpty,
       s"branches on bucketed table graft_vt.$base are not supported")
-    new GraftVtBranchTable(base, root, schema, branch,
-      new GraftVtTable(base, root, schema, None),
-      GraftVtCatalog.morKeys.get(base))
+    new GraftVtBranchTable(base, branch, new GraftVtTable(base, m, None))
   }
 
   /** The one partition transform this format speaks: `PARTITIONED BY
@@ -260,7 +256,7 @@ class GraftVtCatalog extends TableCatalog
     val bucketSpec = bucketOf(partitions, "graft_vt supports",
       "; use TBLPROPERTIES ('cluster' = '<col>') for the clustered layout")
     val name = ident.name()
-    require(!GraftVtCatalog.registry.contains(name),
+    require(!GraftVtCatalog.tables.contains(name),
       s"table graft_vt.$name already exists")
     val schema = GraftVtCatalog.v2ToStructType(columns)
     bucketSpec.foreach { case (k, _) =>
@@ -287,7 +283,7 @@ class GraftVtCatalog extends TableCatalog
       }
     }
     // TBLPROPERTIES ('check' = '<boolean expr>') — the write-boundary
-    // data contract; validated HERE, before any directory or registry
+    // data contract; validated HERE, before any directory or catalog
     // mutation, so a typo fails the CREATE and leaves the name free
     val checkSql = Option(properties.get("check"))
     checkSql.foreach(GraftVtTable.bindCheck(SparkSession.active, schema, _): Unit)
@@ -299,24 +295,22 @@ class GraftVtCatalog extends TableCatalog
     Scratch.delete(new java.io.File(root))
     new java.io.File(root).mkdirs()
     VersionedTable.writeManifest(root, 1, Nil)
-    (bucketSpec, zorder) match {
-      case (Some((k, n)), _) =>
-        GraftVtCatalog.registerBucketed(SparkSession.active, name, root, schema, k, n)
-      case (None, Some(cols)) =>
-        GraftVtCatalog.registerZOrdered(SparkSession.active, name, root, schema, cols)
-      case _ =>
-        GraftVtCatalog.register(SparkSession.active, name, root, schema, clusterCol)
-    }
-    checkSql.foreach(GraftVtCatalog.registerCheck(name, _))
-    new GraftVtTable(name, root, schema, None)
+    val meta = ((bucketSpec, zorder) match {
+      case (Some((k, n)), _) => GraftVtCatalog.bucketed(root, schema, k, n)
+      case (None, Some(cols)) => GraftVtCatalog.zOrdered(root, schema, cols)
+      case _ => VtTableMeta(root, schema, clusterCol)
+    }).copy(check = checkSql.map(VtCheck(_)))
+    GraftVtCatalog.put(SparkSession.active, name, meta)
+    new GraftVtTable(name, meta, None)
   }
 
   /** ATOMIC `CREATE OR REPLACE TABLE ... AS` — the staged-root swap:
-    * the CTAS write lands in a PRIVATE fresh root under a name no
-    * registry keys (so no old mode — MOR key, cluster column, bucket
-    * spec, CHECK — can leak onto the new data); readers of the old
-    * binding keep working until [[StagedTable.commitStagedChanges]]
-    * swaps it in one registry put. A failed or aborted write deletes
+    * the CTAS write lands in a PRIVATE fresh root through a record
+    * built up front from the new definition alone (so no old mode — MOR
+    * key, cluster column, bucket spec, CHECK — can leak onto the new
+    * data); readers of the old binding keep working until
+    * [[StagedTable.commitStagedChanges]] puts that record under the
+    * name in one catalog put. A failed or aborted write deletes
     * the staged root and the old table is untouched — the atomicity a
     * bare drop+create REPLACE cannot give (a crash between drop and
     * create loses the table).
@@ -331,9 +325,9 @@ class GraftVtCatalog extends TableCatalog
     val stagedBucket = bucketOf(partitions, "staged CREATE supports", "")
     require(properties.get("zorder") == null,
       "staged CREATE OR REPLACE does not take TBLPROPERTIES ('zorder')")
-    if (requireAbsent) require(!GraftVtCatalog.registry.contains(logicalName),
+    if (requireAbsent) require(!GraftVtCatalog.tables.contains(logicalName),
       s"table graft_vt.$logicalName already exists")
-    if (requireExists) require(GraftVtCatalog.registry.contains(logicalName),
+    if (requireExists) require(GraftVtCatalog.tables.contains(logicalName),
       s"no such table to replace: graft_vt.$logicalName")
     val schema = GraftVtCatalog.v2ToStructType(columns)
     val stagedCluster = Option(properties.get("cluster"))
@@ -349,32 +343,18 @@ class GraftVtCatalog extends TableCatalog
     checkSql.foreach(GraftVtTable.bindCheck(SparkSession.active, schema, _): Unit)
     val stagedRoot = VersionedTable.freshRoot(
       s"staged#$logicalName#${java.util.UUID.randomUUID().toString.take(8)}")
+    val staged = (stagedBucket match {
+      case Some((k, n)) => GraftVtCatalog.bucketed(stagedRoot, schema, k, n)
+      case None => VtTableMeta(stagedRoot, schema, stagedCluster)
+    }).copy(check = checkSql.map(VtCheck(_)))
     new java.io.File(stagedRoot).mkdirs()
     VersionedTable.writeManifest(stagedRoot, 1, Nil)
-    // the staged instance carries an UNREGISTERED name: every
-    // per-table mode lookup (MOR key, cluster, bucket, check, part
-    // spec) misses, which is exactly a fresh table's write semantics —
-    // except the declared cluster layout, threaded in explicitly
-    new GraftVtTable(s"${logicalName}__staged", stagedRoot, schema, None)
+    // the staged instance writes under the new record and an
+    // UNREGISTERED name; the commit binds the logical name to it
+    new GraftVtTable(s"${logicalName}__staged", staged, None)
       with org.apache.spark.sql.connector.catalog.StagedTable {
-      override private[sources] def clusterCol: Option[String] = stagedCluster
-      override private[sources] def bucketSpec: Option[(String, Int)] = stagedBucket
-      override def commitStagedChanges(): Unit = {
-        Seq(GraftVtCatalog.clusterCols, GraftVtCatalog.morKeys,
-          GraftVtCatalog.statsCols, GraftVtCatalog.checks,
-          GraftVtCatalog.checkNames).foreach(_.remove(logicalName): Unit)
-        GraftVtCatalog.bucketSpecs.remove(logicalName): Unit
-        GraftVtCatalog.bucketSince.remove(logicalName): Unit
-        GraftVtCatalog.bloomCols.remove(logicalName): Unit
-        GraftVtCatalog.colMaps.remove(logicalName): Unit
-        stagedBucket match {
-          case Some((k, n)) => GraftVtCatalog.registerBucketed(
-            SparkSession.active, logicalName, stagedRoot, schema, k, n)
-          case None => GraftVtCatalog.register(SparkSession.active, logicalName,
-            stagedRoot, schema, stagedCluster)
-        }
-        checkSql.foreach(GraftVtCatalog.registerCheck(logicalName, _))
-      }
+      override def commitStagedChanges(): Unit =
+        GraftVtCatalog.put(SparkSession.active, logicalName, staged)
       override def abortStagedChanges(): Unit = Scratch.delete(new java.io.File(stagedRoot))
     }
   }
@@ -420,16 +400,14 @@ class GraftVtCatalog extends TableCatalog
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val name = ident.name()
-    val (root, schema) = GraftVtCatalog.registry.get(name) match {
-      case Some(rs) => rs
-      case None => throw new NoSuchTableException(ident)
-    }
-    require(!GraftVtCatalog.morKeys.contains(name),
+    val entry = GraftVtCatalog.tables.getOrElse(name, throw new NoSuchTableException(ident))
+    require(entry.morKey.isEmpty,
       s"ALTER TABLE on merge-on-read table $name is not supported")
-    var mapping = GraftVtCatalog.colMaps.getOrElse(name, GraftVtCatalog.ColMapping())
+    var mapping = entry.colMapping
+    var check = entry.check
     def physInUse(s: StructType, phys: String): Boolean =
       s.fields.exists(f => mapping.l2p.getOrElse(f.name, f.name) == phys)
-    val newSchema = changes.foldLeft(schema) {
+    val newSchema = changes.foldLeft(entry.schema) {
       case (s, add: TableChange.AddColumn) =>
         require(add.fieldNames().length == 1,
           "nested column additions not supported")
@@ -472,11 +450,11 @@ class GraftVtCatalog extends TableCatalog
         val to = rn.newName()
         require(s.fieldNames.contains(from), s"no such column: $from")
         require(!s.fieldNames.contains(to), s"column already exists: $to")
-        require(!GraftVtCatalog.clusterCols.get(name).contains(from),
+        require(!entry.clusterCol.contains(from),
           s"renaming the cluster column $from is not supported")
-        require(!GraftVtCatalog.statsCols.get(name).exists(_.contains(from)),
+        require(!entry.statsCols.contains(from),
           s"renaming the z-order stats column $from is not supported")
-        require(!GraftVtCatalog.bucketSpecs.contains(name),
+        require(entry.bucket.isEmpty,
           s"RENAME COLUMN on bucketed table $name is not supported")
         val phys = mapping.l2p.getOrElse(from, from)
         mapping = mapping.copy(l2p = mapping.l2p - from + (to -> phys))
@@ -485,11 +463,11 @@ class GraftVtCatalog extends TableCatalog
         require(del.fieldNames().length == 1, "nested column drops not supported")
         val from = del.fieldNames().head
         require(s.fieldNames.contains(from), s"no such column: $from")
-        require(!GraftVtCatalog.clusterCols.get(name).contains(from),
+        require(!entry.clusterCol.contains(from),
           s"dropping the cluster column $from is not supported")
-        require(!GraftVtCatalog.statsCols.get(name).exists(_.contains(from)),
+        require(!entry.statsCols.contains(from),
           s"dropping the z-order stats column $from is not supported")
-        require(!GraftVtCatalog.bucketSpecs.get(name).exists(_._1 == from),
+        require(!entry.bucket.exists(_._1 == from),
           s"dropping the bucket key $from is not supported")
         require(s.fields.length > 1, "cannot drop the last column")
         val phys = mapping.l2p.getOrElse(from, from)
@@ -536,7 +514,7 @@ class GraftVtCatalog extends TableCatalog
         // the bucket hash is type-sensitive: widening the bucket key
         // would route identical keys to different buckets across
         // generations, silently breaking the zero-exchange join layout
-        require(!GraftVtCatalog.bucketSpecs.get(name).exists(_._1 == colName),
+        require(!entry.bucket.exists(_._1 == colName),
           s"widening the bucket key $colName would re-route rows across " +
             "buckets; rebucket the table instead")
         StructType(s.fields.map(f =>
@@ -567,7 +545,7 @@ class GraftVtCatalog extends TableCatalog
           }
         })
       // `ALTER TABLE ... ADD CONSTRAINT <n> CHECK (<pred>)` — the SQL
-      // face of the write-boundary contract ([[GraftVtCatalog.checks]]):
+      // face of the write-boundary contract ([[VtTableMeta.check]]):
       // bind the predicate against the current schema (loud failure),
       // VALIDATE the existing snapshot when the constraint is ENFORCED
       // (an engine must not admit a contract the table already
@@ -575,9 +553,9 @@ class GraftVtCatalog extends TableCatalog
       case (s, ac: TableChange.AddConstraint) =>
         ac.constraint() match {
           case ck: org.apache.spark.sql.connector.catalog.constraints.Check =>
-            require(!GraftVtCatalog.checks.contains(name),
+            require(check.isEmpty,
               s"table $name already has CHECK constraint " +
-                s"'${GraftVtCatalog.checkNames.getOrElse(name, "check")}' — drop it first")
+                s"'${check.flatMap(_.name).getOrElse("check")}' — drop it first")
             val sql = ck.predicateSql()
             GraftVtTable.bindCheck(SparkSession.active, s, sql): Unit
             if (ck.enforced()) {
@@ -586,21 +564,15 @@ class GraftVtCatalog extends TableCatalog
               require(violations == 0,
                 s"cannot ADD CHECK ($sql): $violations existing rows violate it")
             }
-            GraftVtCatalog.registerCheck(name, sql)
-            GraftVtCatalog.checkNames.put(name, ck.name()): Unit
+            check = Some(VtCheck(sql, Option(ck.name())))
             s
           case other => throw new UnsupportedOperationException(
             s"only CHECK constraints are supported, got: ${other.toDDL}")
         }
       case (s, dc: TableChange.DropConstraint) =>
-        val known = GraftVtCatalog.checkNames.get(name)
-        if (known.contains(dc.name())) {
-          GraftVtCatalog.checks.remove(name): Unit
-          GraftVtCatalog.checkNames.remove(name): Unit
-        } else if (!dc.ifExists()) {
-          throw new IllegalArgumentException(
-            s"no such constraint on $name: ${dc.name()}")
-        }
+        if (check.exists(_.name.contains(dc.name()))) check = None
+        else if (!dc.ifExists())
+          throw new IllegalArgumentException(s"no such constraint on $name: ${dc.name()}")
         s
       case (_, other) =>
         throw new UnsupportedOperationException(
@@ -611,44 +583,29 @@ class GraftVtCatalog extends TableCatalog
     // drop of a referenced column would make every later write fail at
     // boundCheck with no SQL path to unset the contract — reject the
     // ALTER instead, loudly
-    GraftVtCatalog.checks.get(name).foreach { exprSql =>
-      try GraftVtTable.bindCheck(SparkSession.active, newSchema, exprSql): Unit
+    check.foreach { c =>
+      try GraftVtTable.bindCheck(SparkSession.active, newSchema, c.sql): Unit
       catch {
         case e: Exception => throw new IllegalArgumentException(
-          s"this change would break the table's CHECK constraint ($exprSql); " +
+          s"this change would break the table's CHECK constraint (${c.sql}); " +
             "drop or adjust the constraint first", e)
       }
     }
-    GraftVtCatalog.colMaps.put(name, mapping): Unit
-    GraftVtCatalog.registry.put(name, (root, newSchema)): Unit
-    new GraftVtTable(name, root, newSchema, None)
+    val altered = entry.copy(schema = newSchema, colMapping = mapping, check = check)
+    GraftVtCatalog.tables.put(name, altered): Unit
+    new GraftVtTable(name, altered, None)
   }
 
-  /** DROP clears EVERY per-table registry, not just the name binding —
-    * a later CREATE or RENAME binding the same name must start with no
-    * modes, or it would inherit the dropped table's MOR key / CHECK /
-    * layout registrations (stale-mode resurrection).
+  /** DROP removes the table's whole record, so a later CREATE or
+    * RENAME binding the same name starts with no modes.
     */
-  override def dropTable(ident: Identifier): Boolean = {
-    val name = ident.name()
-    val existed = GraftVtCatalog.registry.remove(name).isDefined
-    GraftVtCatalog.clusterCols.remove(name): Unit
-    GraftVtCatalog.colMaps.remove(name): Unit
-    GraftVtCatalog.morKeys.remove(name): Unit
-    GraftVtCatalog.bucketSpecs.remove(name): Unit
-    GraftVtCatalog.bucketSince.remove(name): Unit
-    GraftVtCatalog.statsCols.remove(name): Unit
-    GraftVtCatalog.checks.remove(name): Unit
-    GraftVtCatalog.checkNames.remove(name): Unit
-    GraftVtCatalog.bloomCols.remove(name): Unit
-    existed
-  }
+  override def dropTable(ident: Identifier): Boolean =
+    GraftVtCatalog.tables.remove(ident.name()).isDefined
 
   /** `ALTER TABLE graft_vt.a RENAME TO graft_vt.b` — pure catalog
     * metadata: the root directory, every manifest, sidecar, and data
-    * file stay byte-identical; only the name→root binding and the
-    * per-table mode registries (cluster column, rename mappings, MOR
-    * key, bucket spec) move. Time travel, tags, and metadata tables
+    * file stay byte-identical; only the record (root and every mode)
+    * moves to the new name. Time travel, tags, and metadata tables
     * keep working under the new name because they all key off the
     * ROOT, which is unchanged.
     */
@@ -665,22 +622,11 @@ class GraftVtCatalog extends TableCatalog
     }
     val from = bare(oldIdent)
     val to = bare(newIdent)
-    val entry = GraftVtCatalog.registry.get(from) match {
-      case Some(e) => e
-      case None => throw new NoSuchTableException(oldIdent)
-    }
-    if (GraftVtCatalog.registry.contains(to))
+    val meta = GraftVtCatalog.tables.getOrElse(from, throw new NoSuchTableException(oldIdent))
+    if (GraftVtCatalog.tables.contains(to))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(newIdent)
-    GraftVtCatalog.registry.put(to, entry): Unit
-    GraftVtCatalog.clusterCols.remove(from).foreach(GraftVtCatalog.clusterCols.put(to, _))
-    GraftVtCatalog.colMaps.remove(from).foreach(GraftVtCatalog.colMaps.put(to, _))
-    GraftVtCatalog.morKeys.remove(from).foreach(GraftVtCatalog.morKeys.put(to, _))
-    GraftVtCatalog.bucketSpecs.remove(from).foreach(GraftVtCatalog.bucketSpecs.put(to, _))
-    GraftVtCatalog.bucketSince.remove(from).foreach(GraftVtCatalog.bucketSince.put(to, _))
-    GraftVtCatalog.statsCols.remove(from).foreach(GraftVtCatalog.statsCols.put(to, _))
-    GraftVtCatalog.checks.remove(from).foreach(GraftVtCatalog.checks.put(to, _))
-    GraftVtCatalog.bloomCols.remove(from).foreach(GraftVtCatalog.bloomCols.put(to, _))
-    GraftVtCatalog.registry.remove(from): Unit
+    GraftVtCatalog.tables.put(to, meta): Unit
+    GraftVtCatalog.tables.remove(from): Unit
   }
 }
 
@@ -696,11 +642,7 @@ object GraftVtProcedures {
   import org.apache.spark.sql.types.{IntegerType, StringType, StructField}
   import org.apache.spark.unsafe.types.UTF8String
 
-  private def rootOf(table: String): String =
-    GraftVtCatalog.registry.get(table) match {
-      case Some((root, _)) => root
-      case None => throw new IllegalArgumentException(s"unknown graft_vt table: $table")
-    }
+  private def rootOf(table: String): String = GraftVtCatalog.meta(table).root
 
   private def resultScan(schema: StructType, values: Array[Any]): java.util.Iterator[Scan] =
     java.util.List.of[Scan](new LocalScan {
@@ -843,16 +785,16 @@ object GraftVtProcedures {
           val spark = SparkSession.active
           val tbl = input.getUTF8String(0).toString
           val targetBytes = math.max(1L, input.getLong(1))
-          val root = rootOf(tbl)
+          val meta = GraftVtCatalog.meta(tbl)
+          val root = meta.root
           // merge-on-read tables compact through the tombstone-aware
           // path (reading raw files here would resurrect deleted rows)
-          if (GraftVtCatalog.morKeys.contains(tbl)) {
+          if (meta.morKey.isDefined) {
             val before = VersionedTable
               .manifest(root, VersionedTable.latestVersion(root))
               .flatMap(ZoneMap.leafFiles(root, _)).size
             val newV = VtMor.compact(spark, tbl)
-            GraftVtCatalog.bloomCols.getOrElse(tbl, Nil)
-              .foreach(BloomMap.analyze(spark, root, newV, _): Unit)
+            meta.bloomCols.foreach(BloomMap.analyze(spark, root, newV, _): Unit)
             val after = VersionedTable.manifest(root, newV)
               .flatMap(ZoneMap.leafFiles(root, _)).size
             return resultScan(
@@ -875,8 +817,9 @@ object GraftVtProcedures {
           // re-ANALYZE both sidecars — this is also how DML-degraded
           // pruning is restored, since COW versions ship without
           // multi-column stats
-          GraftVtCatalog.statsCols.get(tbl) match {
-            case Some(Seq(xc, yc)) =>
+          meta.statsCols match {
+            case Seq() => ()
+            case Seq(xc, yc) =>
               import org.apache.spark.sql.functions.col
               val raw = spark.read.parquet(before.map(_.getAbsolutePath): _*)
                 .drop("zval") // re-optimizing a laid-out group recomputes it
@@ -888,17 +831,15 @@ object GraftVtProcedures {
               ZoneMap.analyze(spark, root, newV, yc): Unit
               // optimize must not silently disable ANY sidecar tier:
               // bloom-indexed columns get fresh filters too
-              GraftVtCatalog.bloomCols.getOrElse(tbl, Nil)
-                .foreach(BloomMap.analyze(spark, root, newV, _): Unit)
+              meta.bloomCols.foreach(BloomMap.analyze(spark, root, newV, _): Unit)
               VersionedTable.vacuum(root, Seq(newV - 1, newV).filter(_ >= 1)): Unit
               return resultScan(
                 StructType(Seq(StructField("files_before", IntegerType, nullable = false),
                   StructField("files_after", IntegerType, nullable = false),
                   StructField("new_version", IntegerType, nullable = false))),
                 Array[Any](before.size, ZoneMap.leafFiles(root, groupRel).size, newV))
-            case Some(other) => throw new IllegalStateException(
+            case other => throw new IllegalStateException(
               s"z-ordered table $tbl must declare exactly two dimensions, has $other")
-            case None => ()
           }
           spark.read.parquet(before.map(_.getAbsolutePath): _*)
             .coalesce(targetFiles)
@@ -907,11 +848,8 @@ object GraftVtProcedures {
           // clustered tables — compaction must not silently disable
           // pruning and metadata deletes for every later version
           VersionedTable.commitManifest(root, newV, Seq(groupRel))
-          GraftVtCatalog.clusterCols.get(tbl).foreach { zc =>
-            ZoneMap.analyze(spark, root, newV, zc): Unit
-          }
-          GraftVtCatalog.bloomCols.getOrElse(tbl, Nil)
-            .foreach(BloomMap.analyze(spark, root, newV, _): Unit)
+          meta.clusterCol.foreach(ZoneMap.analyze(spark, root, newV, _): Unit)
+          meta.bloomCols.foreach(BloomMap.analyze(spark, root, newV, _): Unit)
           VersionedTable.vacuum(root, Seq(newV - 1, newV).filter(_ >= 1)): Unit
           val after = ZoneMap.leafFiles(root, groupRel).size
           resultScan(
@@ -952,9 +890,10 @@ object GraftVtProcedures {
     { input =>
       val tbl = input.getUTF8String(0).toString
       val name = input.getUTF8String(1).toString
-      require(!GraftVtCatalog.bucketSpecs.contains(tbl),
+      val meta = GraftVtCatalog.meta(tbl)
+      require(meta.bucket.isEmpty,
         s"branches on bucketed table graft_vt.$tbl are not supported")
-      val r = VtBranch.create(rootOf(tbl), name)
+      val r = VtBranch.create(meta.root, name)
       (StructType(Seq(StructField("branch", StringType, nullable = false),
         StructField("fork_version", IntegerType, nullable = false))),
         Array[Any](UTF8String.fromString(name), r.fork))
@@ -996,7 +935,7 @@ object GraftVtProcedures {
   /** `CALL graft_vt.rebucket(tbl, num_buckets)` — BUCKET-COUNT
     * EVOLUTION: rewrite the current snapshot into a `b=<i>` layout with
     * a new modulus as a NEW version, then move the table's bucket spec
-    * and its validity boundary ([[GraftVtCatalog.bucketSince]]). One
+    * and its validity boundary ([[VtTableMeta.bucketSince]]). One
     * distributed read + one bucket-routed distributed write — the same
     * cost class as OPTIMIZE — after which joins against `num_buckets`-
     * bucketed (or ReducibleFunction-compatible) tables are shuffle-free
@@ -1011,7 +950,7 @@ object GraftVtProcedures {
       val newN = input.getInt(1)
       require(newN > 0, s"num_buckets must be positive, got $newN")
       val root = rootOf(tbl)
-      val (key, oldN) = GraftVtCatalog.bucketSpecs.getOrElse(tbl,
+      val (key, oldN) = GraftVtCatalog.meta(tbl).bucket.getOrElse(
         throw new IllegalArgumentException(s"graft_vt.$tbl is not bucketed"))
       val spark = SparkSession.active
       val latest = VersionedTable.latestVersion(root)
@@ -1022,8 +961,7 @@ object GraftVtProcedures {
       val groupRel = s"files/rebucket_v$newV"
       VtBucket.writeBucketed(df, key, newN, s"$root/$groupRel")
       VersionedTable.commitManifest(root, newV, Seq(groupRel))
-      GraftVtCatalog.bucketSpecs.put(tbl, (key, newN)): Unit
-      GraftVtCatalog.bucketSince.put(tbl, newV): Unit
+      GraftVtCatalog.update(tbl)(_.copy(bucket = Some((key, newN)), bucketSince = newV))
       (StructType(Seq(StructField("old_buckets", IntegerType, nullable = false),
         StructField("new_buckets", IntegerType, nullable = false),
         StructField("new_version", IntegerType, nullable = false))),
@@ -1056,12 +994,12 @@ object GraftVtProcedures {
       val tbl = input.getUTF8String(0).toString
       val newUnit = input.getLong(1)
       require(newUnit > 0, s"unit must be positive, got $newUnit")
-      val old = GraftVtCatalog.partSpecs.getOrElse(tbl,
+      val old = GraftVtCatalog.tables.get(tbl).flatMap(_.partUnit).getOrElse(
         throw new IllegalArgumentException(s"graft_vt.$tbl is not unit-partitioned"))
       val root = rootOf(tbl)
       val since = VersionedTable.latestVersion(root) + 1
       VtPartSpec.append(root, since, newUnit)
-      GraftVtCatalog.partSpecs.put(tbl, newUnit): Unit
+      GraftVtCatalog.update(tbl)(_.copy(partUnit = Some(newUnit)))
       (StructType(Seq(
         StructField("old_unit", org.apache.spark.sql.types.LongType, nullable = false),
         StructField("new_unit", org.apache.spark.sql.types.LongType, nullable = false),
@@ -1082,19 +1020,7 @@ object GraftVtProcedures {
       val newV = VersionedTable.latestVersion(root) + 1
       VersionedTable.commitManifest(root, newV, entries)
       // the restored version's sidecars are valid verbatim (same files)
-      Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
-        .foreach { n =>
-          VersionedTable.sidecarPrefixes.foreach { p =>
-            if (n.startsWith(s"$p${target}_") || n == s"$p$target.json") {
-              val renamed = n.replaceFirst(
-                s"${p}$target(?=[_.])", s"$p$newV")
-              java.nio.file.Files.copy(
-                java.nio.file.Paths.get(s"$root/$n"),
-                java.nio.file.Paths.get(s"$root/$renamed"),
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-            }
-          }
-        }
+      VersionedTable.copySidecars(root, target, root, newV)
       (StructType(Seq(StructField("restored_from", IntegerType, nullable = false),
         StructField("new_version", IntegerType, nullable = false))),
         Array[Any](target, newV))
@@ -1145,9 +1071,10 @@ object GraftVtProcedures {
   /** `CALL graft_vt.clone(src, dst)` — ZERO-COPY clone of the source's
     * current snapshot as a new, fully independent table (Delta's
     * `CREATE TABLE … SHALLOW CLONE` verb): the destination gets its own
-    * root, manifest history starting at v1, and copies of the tiny
-    * per-table metadata (cluster column, column mapping, zone-map
-    * sidecar), while every DATA file is HARD-LINKED — same inodes, zero
+    * root, manifest history starting at v1, the source's record with
+    * every mode (bucket validity restarting at v1, the partition unit
+    * as the clone's first spec line) and copies of the head's sidecars,
+    * while every DATA file is HARD-LINKED — same inodes, zero
     * data bytes moved, cost ∝ number of files. Future commits on
     * either side are invisible to the other, and because links are
     * reference-counted by the filesystem, a `vacuum` on the source
@@ -1165,19 +1092,22 @@ object GraftVtProcedures {
     { input =>
       val src = input.getUTF8String(0).toString
       val dst = input.getUTF8String(1).toString
-      require(!GraftVtCatalog.registry.contains(dst),
+      require(!GraftVtCatalog.tables.contains(dst),
         s"graft_vt.$dst already exists")
-      require(!GraftVtCatalog.morKeys.contains(src),
+      val meta = GraftVtCatalog.meta(src)
+      require(meta.morKey.isEmpty,
         s"graft_vt.$src is merge-on-read; CALL graft_vt.optimize first — " +
           "tombstone sidecars carry sequence state a fresh history can't keep")
-      val (root, schema) = GraftVtCatalog.registry.getOrElse(src,
-        throw new IllegalArgumentException(s"unknown graft_vt table: $src"))
+      val root = meta.root
       val head = VersionedTable.latestVersion(root)
       val groups = VersionedTable.manifest(root, head)
-      val dstRoot = new java.io.File(new java.io.File(root).getParentFile,
-        s"vtclone_$dst").getAbsolutePath
-      // an unregistered leftover from a dead JVM is safe to reap
-      Scratch.delete(new java.io.File(dstRoot))
+      // a sibling of the source (hard links need one filesystem), named
+      // per call: no other JVM's clone, nor this JVM's earlier clone of
+      // the same name since renamed, can share it
+      val dstDir = new java.io.File(new java.io.File(root).getParentFile,
+        Scratch.uniqueName(s"vtclone_$dst"))
+      Scratch.deleteAtExit(dstDir).mkdirs()
+      val dstRoot = dstDir.getAbsolutePath
       var nFiles = 0
       groups.foreach { g =>
         val from = java.nio.file.Paths.get(s"$root/$g")
@@ -1199,20 +1129,9 @@ object GraftVtProcedures {
         }
       }
       VersionedTable.writeManifest(dstRoot, 1, groups)
-      GraftVtCatalog.clusterCols.get(src).foreach { c =>
-        val sc = java.nio.file.Paths.get(s"$root/_zonemap_v${head}_$c.json")
-        if (java.nio.file.Files.exists(sc))
-          java.nio.file.Files.copy(sc,
-            java.nio.file.Paths.get(s"$dstRoot/_zonemap_v1_$c.json")): Unit
-        GraftVtCatalog.clusterCols.put(dst, c): Unit
-      }
-      GraftVtCatalog.colMaps.get(src)
-        .foreach(m => GraftVtCatalog.colMaps.put(dst, m): Unit)
-      GraftVtCatalog.bucketSpecs.get(src)
-        .foreach(b => GraftVtCatalog.bucketSpecs.put(dst, b): Unit)
-      GraftVtCatalog.checks.get(src)
-        .foreach(c => GraftVtCatalog.checks.put(dst, c): Unit)
-      GraftVtCatalog.registry.put(dst, (dstRoot, schema)): Unit
+      VersionedTable.copySidecars(root, head, dstRoot, 1)
+      meta.partUnit.foreach(VtPartSpec.append(dstRoot, 1, _))
+      GraftVtCatalog.tables.put(dst, meta.copy(root = dstRoot, bucketSince = 1)): Unit
       (StructType(Seq(StructField("cloned_version", IntegerType, nullable = false),
         StructField("groups", IntegerType, nullable = false),
         StructField("files_linked", IntegerType, nullable = false),
@@ -1221,23 +1140,91 @@ object GraftVtProcedures {
     })
 }
 
-object GraftVtCatalog {
-  /** table name -> (versioned root, schema). Mutable on purpose: a
-    * re-register for a different source dir swaps the mapping (tables
-    * are resolved at loadTable time, so the next query sees the new
-    * root — no per-JVM staleness; ADVICE r08 on the buildChain cache).
+/** One `graft_vt` table's catalog record: its root, its schema and every
+  * per-table mode. The lifecycle moves it as one value — a register puts
+  * a fresh record (so a re-register resets every mode), DROP removes
+  * it, RENAME moves it, clone copies it onto the clone's root, and a
+  * staged CREATE OR REPLACE commits a record built up front — and a
+  * [[GraftVtTable]] reads the record it was loaded with.
+  *
+  * @param clusterCol long cluster column: zone-map pruning on reads,
+  *   ordered-distribution requirement + stats capture on writes.
+  * @param colMapping RENAME/DROP COLUMN state (see [[GraftVtCatalog
+  *   .ColMapping]]).
+  * @param morKey long KEY column of a MERGE-ON-READ table: row-level ops
+  *   write key tombstones + delta files instead of rewriting groups, and
+  *   reads merge them (see [[VtMor]]).
+  * @param check the CHECK constraint, enforced at the WRITE boundary by
+  *   every COW/INSERT writer task: a violating row fails the task, the
+  *   write aborts, and the manifest never commits.
+  * @param bloomCols BLOOM-INDEXED columns: per-file bloom sidecars
+  *   ([[BloomMap]]) give point-lookup file skipping on columns the layout
+  *   does NOT order — orthogonal to the cluster/z-order range stats.
+  * @param statsCols EXTRA file-skipping stats columns (beyond the cluster
+  *   column): the Z-ORDERED layout's two interleaved dimensions, so scans
+  *   prune on predicates against EITHER. Versions written later without
+  *   fresh sidecars stop pruning until re-analyzed or optimized.
+  * @param bucket (long key column, bucket count) of a BUCKETED layout:
+  *   scans report KeyGroupedPartitioning over bucket(n, key) and
+  *   storage-partitioned joins skip the shuffle (see [[VtBucket]]).
+  * @param bucketSince first version the CURRENT bucket spec describes.
+  *   `CALL graft_vt.rebucket` rewrites the layout as a new version and
+  *   moves this boundary: a time-travel read BELOW it must not claim the
+  *   new KeyGroupedPartitioning (its `b=<i>` dirs encode the OLD modulus
+  *   — an aligned SPJ against them would join wrong rows), so
+  *   pre-boundary snapshots read as plain file scans.
+  * @param partUnit ACTIVE partition unit (in the cluster column's own
+  *   scale, e.g. micros) of a unit-partitioned layout: INSERTs route one
+  *   file per unit ([[VtRoute]]). Spec history with validity boundaries
+  *   persists in the root's `_partspec.txt` ([[VtPartSpec]]); `CALL
+  *   graft_vt.evolve_partition` moves it for FUTURE writes only —
+  *   existing files keep their old granularity and zone maps prune both
+  *   generations uniformly.
+  */
+private[sources] final case class VtTableMeta(root: String, schema: StructType,
+    clusterCol: Option[String] = None,
+    colMapping: GraftVtCatalog.ColMapping = GraftVtCatalog.ColMapping(),
+    morKey: Option[String] = None,
+    check: Option[VtCheck] = None,
+    bloomCols: Seq[String] = Nil,
+    statsCols: Seq[String] = Nil,
+    bucket: Option[(String, Int)] = None,
+    bucketSince: Int = 1,
+    partUnit: Option[Long] = None) {
+
+  /** Logical→physical column renames in force (identity omitted) —
+    * empty for tables that never saw RENAME COLUMN.
     */
-  private[sources] val registry = TrieMap.empty[String, (String, StructType)]
+  lazy val colMap: Map[String, String] = colMapping.l2p.filter { case (l, p) => l != p }
+
+  /** Rename a logical-schema struct to the PHYSICAL names files store —
+    * positional identity, only labels change.
+    */
+  def physify(s: StructType): StructType =
+    if (colMap.isEmpty) s
+    else StructType(s.fields.map(f => f.copy(name = colMap.getOrElse(f.name, f.name))))
+}
+
+/** A CHECK constraint: a boolean SQL expression over the table's
+  * columns, SQL-standard semantics (a row violates only when it is
+  * FALSE — NULL passes), and the constraint NAME when it was added by
+  * `ALTER TABLE ... ADD CONSTRAINT` (`DROP CONSTRAINT` resolves against
+  * it; property-registered checks have none).
+  */
+private[sources] final case class VtCheck(sql: String, name: Option[String] = None)
+
+object GraftVtCatalog {
+  /** table name -> its record. Mutable on purpose: a re-register for a
+    * different source dir swaps the record (tables are resolved at
+    * loadTable time, so the next query sees the new root — no per-JVM
+    * staleness; ADVICE r08 on the buildChain cache).
+    */
+  private[sources] val tables = TrieMap.empty[String, VtTableMeta]
 
   /** Idempotently expose the catalog on the session as `graft_vt`. */
   def ensure(spark: SparkSession): Unit =
     if (!spark.conf.getOption("spark.sql.catalog.graft_vt").contains(classOf[GraftVtCatalog].getName))
       spark.conf.set("spark.sql.catalog.graft_vt", classOf[GraftVtCatalog].getName)
-
-  /** table name -> long cluster column: zone-map pruning on reads,
-    * ordered-distribution requirement + stats capture on writes.
-    */
-  private[sources] val clusterCols = TrieMap.empty[String, String]
 
   /** Per-table RENAME/DROP state: `l2p` maps logical column names to
     * the physical names stored in files (identity entries omitted);
@@ -1247,65 +1234,40 @@ object GraftVtCatalog {
     */
   private[sources] case class ColMapping(l2p: Map[String, String] = Map.empty,
       retired: Set[String] = Set.empty)
-  private[sources] val colMaps = TrieMap.empty[String, ColMapping]
 
-  /** table name -> long KEY column for MERGE-ON-READ tables: row-level
-    * ops write key tombstones + delta files instead of rewriting groups,
-    * and reads merge them (see [[VtMor]]).
-    */
-  private[sources] val morKeys = TrieMap.empty[String, String]
+  /** The record registered under `name`. */
+  private[sources] def meta(name: String): VtTableMeta =
+    tables.getOrElse(name, throw new IllegalArgumentException(s"unknown graft_vt table: $name"))
 
-  /** table name -> CHECK constraint (a boolean SQL expression over the
-    * table's columns, SQL-standard semantics: a write row violates only
-    * when the expression is FALSE — NULL passes). Enforced at the WRITE
-    * boundary by every COW/INSERT writer task: a violating row fails
-    * the task, the write aborts, and the manifest never commits — the
-    * table is contract-clean by construction, not by audit.
-    */
-  private[sources] val checks = TrieMap.empty[String, String]
+  /** Bind `name` to `meta`, replacing any earlier record whole. */
+  private[sources] def put(spark: SparkSession, name: String, meta: VtTableMeta): Unit = {
+    ensure(spark)
+    tables.put(name, meta): Unit
+  }
 
-  /** table name -> the SQL constraint NAME of its CHECK (when it was
-    * added via `ALTER TABLE ... ADD CONSTRAINT`; property-registered
-    * checks have no name) — `DROP CONSTRAINT` resolves against this.
-    */
-  private[sources] val checkNames = TrieMap.empty[String, String]
+  /** Replace the record registered under `name` by `f` of it. */
+  private[sources] def update(name: String)(f: VtTableMeta => VtTableMeta): Unit = {
+    require(tables.contains(name), s"unknown graft_vt table: $name")
+    tables.put(name, f(tables(name))): Unit
+  }
 
   /** Attach a CHECK constraint to a registered table (`TBLPROPERTIES
     * ('check' = '<expr>')` is the DDL face). Takes effect on the next
     * write; existing data is not re-validated (re-validate by running
     * the expression as a query).
     */
-  def registerCheck(name: String, exprSql: String): Unit = {
-    require(registry.contains(name), s"unknown graft_vt table: $name")
-    checks.put(name, exprSql): Unit
-  }
-
-  /** table name -> BLOOM-INDEXED columns: per-file bloom sidecars
-    * ([[BloomMap]]) give point-lookup file skipping on columns the
-    * layout does NOT order — orthogonal to (and freely combined with)
-    * the cluster/z-order range stats.
-    */
-  private[sources] val bloomCols = TrieMap.empty[String, Seq[String]]
+  def registerCheck(name: String, exprSql: String): Unit =
+    update(name)(_.copy(check = Some(VtCheck(exprSql))))
 
   /** Declare bloom-indexed columns for a registered table. Callers run
     * [[BloomMap.analyze]] per column to build the current version's
     * sidecars; versions without sidecars read unpruned.
     */
-  def registerBloomCols(name: String, cols: Seq[String]): Unit = {
-    require(registry.contains(name), s"unknown graft_vt table: $name")
-    val schema = registry(name)._2
-    cols.foreach(c => require(schema.fieldNames.contains(c), s"no such column: $c"))
-    bloomCols.put(name, cols): Unit
-  }
-
-  /** table name -> EXTRA file-skipping stats columns (beyond the
-    * cluster column): the Z-ORDERED layout registers both interleaved
-    * dimensions here, so scans prune on predicates against EITHER.
-    * Stats enter via [[ZoneMap.analyze]] per column; versions written
-    * later without fresh sidecars simply stop pruning (conservative)
-    * until re-analyzed or optimized.
-    */
-  private[sources] val statsCols = TrieMap.empty[String, Seq[String]]
+  def registerBloomCols(name: String, cols: Seq[String]): Unit =
+    update(name) { m =>
+      cols.foreach(c => require(m.schema.fieldNames.contains(c), s"no such column: $c"))
+      m.copy(bloomCols = cols)
+    }
 
   /** Register a Z-ORDERED table: the files were laid out along a
     * Morton curve over `cols` (see [[graft.operators.ZOrder]]), so each
@@ -1315,53 +1277,34 @@ object GraftVtCatalog {
     * for the registered version.
     */
   def registerZOrdered(spark: SparkSession, name: String, root: String,
-      schema: StructType, cols: Seq[String]): Unit = {
+      schema: StructType, cols: Seq[String]): Unit =
+    put(spark, name, zOrdered(root, schema, cols))
+
+  private[sources] def zOrdered(root: String, schema: StructType,
+      cols: Seq[String]): VtTableMeta = {
     require(cols.nonEmpty, "z-ordered registration needs at least one stats column")
     cols.foreach { c =>
       require(schema.fieldNames.contains(c), s"no such column: $c")
       require(schema(c).dataType == org.apache.spark.sql.types.LongType,
         s"stats column $c must be BIGINT, got ${schema(c).dataType}")
     }
-    register(spark, name, root, schema)
-    statsCols.put(name, cols): Unit
+    VtTableMeta(root, schema, statsCols = cols)
   }
-
-  /** table name -> (long key column, bucket count) for BUCKETED
-    * layouts: scans report KeyGroupedPartitioning over bucket(n, key)
-    * and storage-partitioned joins skip the shuffle (see [[VtBucket]]).
-    */
-  private[sources] val bucketSpecs = TrieMap.empty[String, (String, Int)]
-
-  /** table name -> ACTIVE partition unit (in the cluster column's own
-    * scale, e.g. micros) for unit-partitioned layouts: INSERTs route one
-    * file per unit ([[VtRoute]]). Spec history with
-    * validity boundaries persists in the root's `_partspec.txt`
-    * ([[VtPartSpec]]); `CALL graft_vt.evolve_partition` moves this for
-    * FUTURE writes only — existing files keep their old granularity and
-    * zone maps prune both generations uniformly.
-    */
-  private[sources] val partSpecs = TrieMap.empty[String, Long]
-
-  /** table name -> first version the CURRENT bucket spec describes
-    * (default 1). `CALL graft_vt.rebucket` rewrites the layout as a new
-    * version and moves this boundary: a time-travel read BELOW it must
-    * not claim the new KeyGroupedPartitioning (its `b=<i>` dirs encode
-    * the OLD modulus — an aligned SPJ against them would join wrong
-    * rows), so pre-boundary snapshots read as plain file scans.
-    */
-  private[sources] val bucketSince = TrieMap.empty[String, Int]
 
   /** Register a bucketed table (every file group under the root must
     * use the `b=<i>` layout written by [[VtBucket.writeBucketed]]).
     */
   def registerBucketed(spark: SparkSession, name: String, root: String,
-      schema: StructType, keyCol: String, numBuckets: Int): Unit = {
+      schema: StructType, keyCol: String, numBuckets: Int): Unit =
+    put(spark, name, bucketed(root, schema, keyCol, numBuckets))
+
+  private[sources] def bucketed(root: String, schema: StructType, keyCol: String,
+      numBuckets: Int): VtTableMeta = {
     require(schema.fieldNames.contains(keyCol), s"no such column: $keyCol")
     require(schema(keyCol).dataType == org.apache.spark.sql.types.LongType,
       s"bucket key $keyCol must be BIGINT, got ${schema(keyCol).dataType}")
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    register(spark, name, root, schema)
-    bucketSpecs.put(name, (keyCol, numBuckets)): Unit
+    VtTableMeta(root, schema, bucket = Some((keyCol, numBuckets)))
   }
 
   /** Register a TIME-PARTITIONED table: INSERTs route one file per
@@ -1378,49 +1321,31 @@ object GraftVtCatalog {
     require(schema(tsCol).dataType == org.apache.spark.sql.types.LongType,
       s"partition column $tsCol must be BIGINT, got ${schema(tsCol).dataType}")
     require(unit > 0, s"unit must be positive, got $unit")
-    register(spark, name, root, schema, clusterCol = Some(tsCol))
     // re-registration must not reset an evolved table to its birth unit
     // — the persisted spec line wins over the argument
     val active = VtPartSpec.active(root).getOrElse {
       VtPartSpec.append(root, 1, unit); unit
     }
-    partSpecs.put(name, active): Unit
+    put(spark, name, VtTableMeta(root, schema, Some(tsCol), partUnit = Some(active)))
   }
 
   /** Register a merge-on-read table (root must hold a `_mor_v1.json`
     * built by [[VtMor.createVersion1]]).
     */
   def registerMor(spark: SparkSession, name: String, root: String,
-      schema: StructType, keyCol: String): Unit = {
-    register(spark, name, root, schema)
-    morKeys.put(name, keyCol): Unit
-  }
+      schema: StructType, keyCol: String): Unit =
+    put(spark, name, VtTableMeta(root, schema, morKey = Some(keyCol)))
 
+  /** Register a plain (or, with `clusterCol`, clustered) table; like
+    * every `register*`, it replaces the name's whole record, so no mode
+    * of an earlier registration survives.
+    */
   def register(spark: SparkSession, name: String, root: String, schema: StructType,
-      clusterCol: Option[String] = None): Unit = {
-    ensure(spark)
-    registry.put(name, (root, schema)): Unit
-    clusterCol match {
-      case Some(c) => clusterCols.put(name, c): Unit
-      case None => clusterCols.remove(name): Unit
-    }
-    // a plain re-register resets ALL per-table modes — a stale MOR key
-    // would route the new root through tombstone machinery it lacks
-    // (registerMor re-adds its key after delegating here), a stale
-    // column mapping would mistranslate the fresh schema's names, and
-    // a stale bucket spec would misreport partitioning
-    morKeys.remove(name): Unit
-    colMaps.remove(name): Unit
-    bucketSpecs.remove(name): Unit
-    bucketSince.remove(name): Unit
-    partSpecs.remove(name): Unit
-    statsCols.remove(name): Unit
-    checks.remove(name): Unit
-    bloomCols.remove(name): Unit
-  }
+      clusterCol: Option[String] = None): Unit =
+    put(spark, name, VtTableMeta(root, schema, clusterCol))
 
   /** The registered root for a table, if any (test/inspection hook). */
-  def rootOf(name: String): Option[String] = registry.get(name).map(_._1)
+  def rootOf(name: String): Option[String] = tables.get(name).map(_.root)
 
   /** v2 Column[] → StructType KEEPING column defaults (a hand-rolled
     * StructField drops them): `CURRENT_DEFAULT` carries the original
@@ -1450,13 +1375,16 @@ object GraftVtCatalog {
 }
 
 /** One versioned table, optionally pinned to a manifest version (time
-  * travel). Reads resolve the manifest at scan-build time; the DML write
-  * commits `current + 1`.
+  * travel), over the catalog record it was loaded with. Reads resolve
+  * the manifest at scan-build time; the DML write commits `current + 1`.
   */
-class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
-    pinnedVersion: Option[Int])
+class GraftVtTable private[sources] (tableName: String,
+    private[sources] val meta: VtTableMeta, pinnedVersion: Option[Int])
   extends Table with SupportsRead with SupportsWrite with SupportsRowLevelOperations
   with SupportsDelete {
+
+  val root: String = meta.root
+  private def tableSchema = meta.schema
 
   private def spark = SparkSession.active
 
@@ -1484,42 +1412,24 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
     val m = new java.util.HashMap[String, String]()
     m.put("format", "graft_vt")
     m.put("current_version", currentVersion.toString)
-    GraftVtCatalog.clusterCols.get(tableName).foreach(m.put("cluster", _))
-    GraftVtCatalog.statsCols.get(tableName).foreach(cs => m.put("zorder", cs.mkString(",")))
-    GraftVtCatalog.checks.get(tableName).foreach(m.put("check", _))
-    GraftVtCatalog.bloomCols.get(tableName).foreach(cs =>
-      m.put("bloom_columns", cs.mkString(",")))
-    GraftVtCatalog.morKeys.get(tableName).foreach(m.put("merge_on_read_key", _))
-    GraftVtCatalog.bucketSpecs.get(tableName).foreach { case (k, n) =>
+    meta.clusterCol.foreach(m.put("cluster", _))
+    if (meta.statsCols.nonEmpty) m.put("zorder", meta.statsCols.mkString(","))
+    meta.check.foreach(c => m.put("check", c.sql))
+    if (meta.bloomCols.nonEmpty) m.put("bloom_columns", meta.bloomCols.mkString(","))
+    meta.morKey.foreach(m.put("merge_on_read_key", _))
+    meta.bucket.foreach { case (k, n) =>
       m.put("bucket_key", k); m.put("num_buckets", n.toString): Unit
     }
     m
   }
 
-  private[sources] def bucketSpec: Option[(String, Int)] =
-    GraftVtCatalog.bucketSpecs.get(tableName)
-
   /** Bucketed tables DECLARE their layout — `DESCRIBE` shows it, and
     * the scan's KeyGroupedPartitioning reports the matching transform.
     */
   override def partitioning(): Array[Transform] =
-    bucketSpec.map { case (k, n) =>
+    meta.bucket.map { case (k, n) =>
       org.apache.spark.sql.connector.expressions.Expressions.bucket(n, k)
     }.toArray
-
-  /** Logical→physical column renames in force (identity omitted) —
-    * empty for tables that never saw RENAME COLUMN.
-    */
-  private[sources] def colMap: Map[String, String] =
-    GraftVtCatalog.colMaps.get(tableName)
-      .map(_.l2p.filter { case (l, p) => l != p }).getOrElse(Map.empty)
-
-  /** Rename a logical-schema struct to the PHYSICAL names files store —
-    * positional identity, only labels change.
-    */
-  private[sources] def physify(s: StructType): StructType =
-    if (colMap.isEmpty) s
-    else StructType(s.fields.map(f => f.copy(name = colMap.getOrElse(f.name, f.name))))
 
   /** Delegate to Spark's parquet DSv2 table over the manifest's files —
     * vectorized scan + pushdown + pruning, bound to one snapshot. Reads
@@ -1529,34 +1439,25 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
   private[sources] def parquetTable(version: Int): ParquetTable = {
     val paths = VersionedTable.manifest(root, version).map(g => s"$root/$g")
     ParquetTable(name(), spark, CaseInsensitiveStringMap.empty(), paths,
-      Some(physify(tableSchema)), classOf[ParquetFileFormat])
+      Some(meta.physify(tableSchema)), classOf[ParquetFileFormat])
   }
-
-  private[sources] def clusterCol: Option[String] =
-    GraftVtCatalog.clusterCols.get(tableName)
-
-  private[sources] def clusterIdx: Option[Int] =
-    clusterCol.map(tableSchema.fieldIndex)
 
   /** Zone-map-pruned when the table has a cluster column AND the bound
     * version has a stats sidecar; the plain full-manifest parquet scan
     * otherwise. Pruning never changes semantics — every filter stays
     * residual, the sidecar only shrinks the FILE LIST the scan binds.
     */
-  private[sources] def morKey: Option[String] =
-    GraftVtCatalog.morKeys.get(tableName)
-
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // streaming read (one micro-batch per committed version) is opt-in
     // so the batch path keeps Spark's parquet scan — and its stats/DPP
     // integration — completely untouched
     if (options.getBoolean("graft.stream", false)) {
-      require(colMap.isEmpty,
+      require(meta.colMap.isEmpty,
         s"streaming read of $tableName after RENAME COLUMN is not supported")
       return new VtStreamScanBuilder(root, tableSchema)
     }
     // merge-on-read tables merge tombstones in a custom scan
-    morKey.foreach { k =>
+    meta.morKey.foreach { k =>
       return new MorScanBuilder(root, tableSchema, k, readVersionN)
     }
     // bucketed tables report KeyGroupedPartitioning for shuffle-free
@@ -1564,14 +1465,14 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
     // pre-rebucket snapshot's b=<i> dirs encode the old modulus, so
     // claiming the new partitioning would align an SPJ on wrong keys.
     // Those snapshots read as plain (leaf-file) parquet scans.
-    bucketSpec.foreach { case (k, n) =>
-      if (readVersionN >= GraftVtCatalog.bucketSince.getOrElse(tableName, 1))
-        return new BucketedScanBuilder(name(), root, physify(tableSchema),
+    meta.bucket.foreach { case (k, n) =>
+      if (readVersionN >= meta.bucketSince)
+        return new BucketedScanBuilder(name(), root, meta.physify(tableSchema),
           readVersionN, k, n, options)
       val files = VersionedTable.manifest(root, readVersionN)
         .flatMap(ZoneMap.leafFiles(root, _)).sorted.map(f => s"$root/$f")
       return ParquetTable(name(), spark, CaseInsensitiveStringMap.empty(), files,
-        Some(physify(tableSchema)), classOf[ParquetFileFormat]).newScanBuilder(options)
+        Some(meta.physify(tableSchema)), classOf[ParquetFileFormat]).newScanBuilder(options)
     }
     batchScanBuilder(readVersionN, options)
   }
@@ -1585,17 +1486,16 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
     // every stats-bearing column with a sidecar for THIS version prunes:
     // the cluster column (single-dimension layout) and/or the z-order
     // dimensions (multi-dimension layout)
-    val statsByCol = (clusterCol.toSeq ++
-        GraftVtCatalog.statsCols.getOrElse(tableName, Nil)).distinct
+    val statsByCol = (meta.clusterCol.toSeq ++ meta.statsCols).distinct
       .flatMap(c => ZoneMap.read(root, version, c).map(c -> _))
-    val bloomByCol = GraftVtCatalog.bloomCols.getOrElse(tableName, Nil)
+    val bloomByCol = meta.bloomCols
       .flatMap(c => BloomMap.read(root, version, c).map(c -> _))
     val inner =
       if (statsByCol.nonEmpty || bloomByCol.nonEmpty)
-        new ZoneMapScanBuilder(name(), root, physify(tableSchema), version,
+        new ZoneMapScanBuilder(name(), root, meta.physify(tableSchema), version,
           statsByCol, options, bloomByCol)
       else parquetTable(version).newScanBuilder(options)
-    if (colMap.isEmpty) inner else new ColMapScanBuilder(inner, colMap)
+    if (meta.colMap.isEmpty) inner else new ColMapScanBuilder(inner, meta.colMap)
   }
 
   /** The table's CHECK constraint, analyzed and BOUND BY POSITION to
@@ -1608,8 +1508,7 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
     */
   private[sources] def boundCheck
       : Option[(String, org.apache.spark.sql.catalyst.expressions.Expression)] =
-    GraftVtCatalog.checks.get(tableName).map(exprSql =>
-      exprSql -> GraftVtTable.bindCheck(spark, tableSchema, exprSql))
+    meta.check.map(c => c.sql -> GraftVtTable.bindCheck(spark, tableSchema, c.sql))
 
   /** `INSERT INTO` (append: new manifest = current entries + new group)
     * and `INSERT OVERWRITE` (truncate: new manifest = new group only).
@@ -1622,21 +1521,21 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
     // tombstones could swallow its rows. Refuse loudly; MOR tables
     // mutate through MERGE (insert arm) until the append path learns
     // to stamp sequences.
-    require(morKey.isEmpty,
+    require(meta.morKey.isEmpty,
       s"INSERT INTO merge-on-read table $tableName is not supported; use MERGE")
     new WriteBuilder with SupportsTruncate {
       private var base: () => Seq[String] =
         () => VersionedTable.manifest(root, currentVersion)
       override def truncate(): WriteBuilder = { base = () => Nil; this }
       override def build(): Write = new GraftVtWrite(root, currentVersion + 1,
-        physify(info.schema()), base, clusterCol, s"graft_vt INSERT", bucketSpec,
-        boundCheck, partUnit = GraftVtCatalog.partSpecs.get(tableName))
+        meta.physify(info.schema()), base, meta.clusterCol, s"graft_vt INSERT", meta.bucket,
+        boundCheck, partUnit = meta.partUnit)
     }
   }
 
   override def newRowLevelOperationBuilder(info: RowLevelOperationInfo): RowLevelOperationBuilder =
     new RowLevelOperationBuilder {
-      override def build(): RowLevelOperation = morKey match {
+      override def build(): RowLevelOperation = meta.morKey match {
         case Some(k) => new MorRowLevelOperation(GraftVtTable.this, info.command(), k)
         case None => new GraftVtRowLevelOperation(GraftVtTable.this, info.command())
       }
@@ -1657,7 +1556,7 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
   private def planMetadataDelete(
       filters: Array[org.apache.spark.sql.sources.Filter]): Option[(Int, Seq[String])] =
     for {
-      zc <- clusterCol
+      zc <- meta.clusterCol
       v = currentVersion
       stats <- ZoneMap.read(root, v, zc)
       nulls = ZoneMap.readNullCounts(root, v, zc)
@@ -1705,7 +1604,7 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
     * retention pass, never here.
     */
   override def truncateTable(): Boolean = {
-    require(morKey.isEmpty,
+    require(meta.morKey.isEmpty,
       s"TRUNCATE TABLE on merge-on-read table $tableName is not supported")
     VersionedTable.commitManifest(root, currentVersion + 1, Nil)
     true
@@ -1719,7 +1618,7 @@ class GraftVtTable(tableName: String, val root: String, tableSchema: StructType,
     val newV = v + 1
     VersionedTable.commitManifest(root, newV, kept.sorted)
     // a plan exists only for a clustered table with a sidecar at v
-    clusterCol.foreach(VersionedTable.carryZoneMap(root, v, newV, _, kept.toSet))
+    meta.clusterCol.foreach(VersionedTable.carryZoneMap(root, v, newV, _, kept.toSet))
     VersionedTable.vacuum(root, Seq(v, newV)): Unit
   }
 }
@@ -2132,7 +2031,7 @@ object ZoneMapRuntimeScan {
   * `since_version unit` lines in the root's `_partspec.txt`; the ACTIVE
   * spec is the last line. The `since` boundary records which commits
   * each spec governs — the same versioned-validity design as
-  * `rebucket`'s [[GraftVtCatalog.bucketSince]], except no rewrite ever
+  * `rebucket`'s [[VtTableMeta.bucketSince]], except no rewrite ever
   * happens: old files keep their granularity and prune through the
   * same zone maps as new ones.
   */
@@ -2251,7 +2150,7 @@ class GraftVtRowLevelOperation(table: GraftVtTable, cmd: RowLevelOperation.Comma
     // conservative, never wrong; main rewrites keep file narrowing
     val inner = new GraftVtRowLevelScanBuilder(this, table, table.currentVersion,
       options, branchFiles = branch.map(b => () => allLeafFiles))
-    if (table.colMap.isEmpty) inner else new ColMapScanBuilder(inner, table.colMap)
+    if (table.meta.colMap.isEmpty) inner else new ColMapScanBuilder(inner, table.meta.colMap)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -2264,7 +2163,7 @@ class GraftVtRowLevelOperation(table: GraftVtTable, cmd: RowLevelOperation.Comma
           // land as head+2 (the MOR delta path prechecks identically)
           val expectedHead = VtBranch.ref(table.root, b).head
           new GraftVtWrite(table.root, expectedHead + 1,
-            table.physify(info.schema()),
+            table.meta.physify(info.schema()),
             () => {
               val replaced = boundFiles.getOrElse(allLeafFiles).toSet
               allLeafFiles.filterNot(replaced)
@@ -2278,13 +2177,13 @@ class GraftVtRowLevelOperation(table: GraftVtTable, cmd: RowLevelOperation.Comma
             })))
         case None =>
           new GraftVtWrite(table.root,
-            table.currentVersion + 1, table.physify(info.schema()),
+            table.currentVersion + 1, table.meta.physify(info.schema()),
             // evaluated at COMMIT time: retained files = snapshot − replaced
             () => {
               val replaced = boundFiles.getOrElse(allLeafFiles).toSet
               allLeafFiles.filterNot(replaced)
             },
-            table.clusterCol, s"graft_vt COW ${cmd.name()}", table.bucketSpec,
+            table.meta.clusterCol, s"graft_vt COW ${cmd.name()}", table.meta.bucket,
             table.boundCheck)
       }
     }
@@ -2312,7 +2211,7 @@ class GraftVtRowLevelScanBuilder(op: GraftVtRowLevelOperation, table: GraftVtTab
 
   import org.apache.spark.sql.catalyst.expressions.Expression
 
-  private val physSchema = table.physify(table.schema())
+  private val physSchema = table.meta.physify(table.schema())
   private var pushed: Seq[Expression] = Nil
   private var required: StructType = physSchema
 
@@ -2331,7 +2230,7 @@ class GraftVtRowLevelScanBuilder(op: GraftVtRowLevelOperation, table: GraftVtTab
     // a branch snapshot has no sidecar — bind everything (conservative)
     val bound = (for {
       _ <- Option.when(branchFiles.isEmpty)(())
-      zc <- table.clusterCol
+      zc <- table.meta.clusterCol
       stats <- ZoneMap.read(table.root, version, zc)
     } yield ZoneMap.prune(stats, zc, pushed.flatMap(ZoneMap.toV1Filter), all))
       .getOrElse(all)

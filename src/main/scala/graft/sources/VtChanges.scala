@@ -47,17 +47,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * before the parent snapshot are not part of its logical content and
   * emit nothing), so the pairing is exact.
   */
-class GraftVtChangesTable(baseName: String, root: String,
-    dataSchema: StructType, pinnedVersion: Option[Int])
+class GraftVtChangesTable private[sources] (baseName: String, meta: VtTableMeta,
+    pinnedVersion: Option[Int])
   extends Table with SupportsRead {
 
   override def name(): String = s"graft_vt.$baseName.changes"
-  override def schema(): StructType = GraftVtChangesTable.changesSchema(dataSchema)
+  override def schema(): StructType = GraftVtChangesTable.changesSchema(meta.schema)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ChangesScanBuilder(baseName, root, dataSchema, pinnedVersion)
+    new ChangesScanBuilder(baseName, meta, pinnedVersion)
 }
 
 object GraftVtChangesTable {
@@ -77,10 +77,11 @@ object GraftVtChangesTable {
   * projected away if unrequested); filters stay residual above — the
   * scan never changes semantics.
   */
-private[sources] class ChangesScanBuilder(baseName: String, root: String,
-    dataSchema: StructType, pinnedVersion: Option[Int])
+private[sources] class ChangesScanBuilder(baseName: String, meta: VtTableMeta,
+    pinnedVersion: Option[Int])
   extends ScanBuilder with SupportsPushDownRequiredColumns {
 
+  private val (root, dataSchema, morKey) = (meta.root, meta.schema, meta.morKey)
   private val fullSchema = GraftVtChangesTable.changesSchema(dataSchema)
   private var required: StructType = fullSchema
 
@@ -90,7 +91,6 @@ private[sources] class ChangesScanBuilder(baseName: String, root: String,
     val v = pinnedVersion.getOrElse(VersionedTable.latestVersion(root))
     require(v >= 1, s"no such version $v of graft_vt.$baseName")
 
-    val morKey = GraftVtCatalog.morKeys.get(baseName)
     // read schema: requested DATA columns, key force-included for MOR
     val requestedData = dataSchema.fields.filter(f => required.fieldNames.contains(f.name))
     val readSchema = morKey match {
@@ -110,14 +110,9 @@ private[sources] class ChangesScanBuilder(baseName: String, root: String,
     // ColMapScanBuilder for ordinary scans) speaks logical — hand the
     // parquet reader physified structs; getters/keyOrd are positional,
     // so logical-schema ordinals carry over unchanged
-    val l2p = GraftVtCatalog.colMaps.get(baseName)
-      .map(_.l2p.filter { case (l, p) => l != p }).getOrElse(Map.empty[String, String])
-    def physify(s: StructType): StructType =
-      if (l2p.isEmpty) s
-      else StructType(s.fields.map(f => f.copy(name = l2p.getOrElse(f.name, f.name))))
     val spark = SparkSession.active
     val readFunc = new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark, physify(dataSchema), new StructType(), physify(readSchema), Nil,
+      spark, meta.physify(dataSchema), new StructType(), meta.physify(readSchema), Nil,
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       new org.apache.hadoop.conf.Configuration(spark.sessionState.newHadoopConf()))
 
@@ -126,7 +121,7 @@ private[sources] class ChangesScanBuilder(baseName: String, root: String,
       override def readSchema(): StructType = requiredOut
       override def description(): String = s"GraftVtChanges($baseName v$v)"
       override def toBatch: Batch = {
-        val plan = ChangesPlanner.plan(baseName, root, v)
+        val plan = ChangesPlanner.plan(baseName, root, morKey, v)
         new Batch {
           override def planInputPartitions(): Array[InputPartition] =
             plan.partitions
@@ -136,7 +131,7 @@ private[sources] class ChangesScanBuilder(baseName: String, root: String,
         }
       }
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new ChangesMicroBatchStream(baseName, root, readFunc, getters, keyOrd)
+        new ChangesMicroBatchStream(baseName, root, morKey, readFunc, getters, keyOrd)
     }
   }
 }
@@ -151,7 +146,7 @@ private[sources] object ChangesPlanner {
   case class CommitPlan(partitions: Array[InputPartition],
       tombsPrev: Map[Long, Int], tombsCur: Map[Long, Int], newKeys: Set[Long])
 
-  def plan(baseName: String, root: String, v: Int): CommitPlan = {
+  def plan(baseName: String, root: String, morKey: Option[String], v: Int): CommitPlan = {
     val prevExists = VersionedTable.exists(root, v - 1)
     require(v == 1 || prevExists,
       s"cannot read changes of graft_vt.$baseName version $v: parent " +
@@ -167,7 +162,6 @@ private[sources] object ChangesPlanner {
     val removed = prev.filterNot(curSet)
     val carried = cur.filter(prevSet)
 
-    val morKey = GraftVtCatalog.morKeys.get(baseName)
     // MOR visibility state at both snapshots: file → commit sequence
     // (stable across versions) and key → newest tombstone sequence
     val morPrev = morKey.flatMap(_ => VtMor.readMeta(root, v - 1))
@@ -226,7 +220,7 @@ private[sources] object ChangesPlanner {
   * capture cannot silently skip history.
   */
 private[sources] class ChangesMicroBatchStream(baseName: String, root: String,
-    readFunc: PartitionedFile => Iterator[InternalRow],
+    morKey: Option[String], readFunc: PartitionedFile => Iterator[InternalRow],
     getters: Array[Int], keyOrd: Int)
   extends VersionPerBatchStream(root) {
 
@@ -239,7 +233,7 @@ private[sources] class ChangesMicroBatchStream(baseName: String, root: String,
     val s = start.asInstanceOf[VtVersionOffset].v
     val e = end.asInstanceOf[VtVersionOffset].v
     val planned = ((s + 1) to e).map { v =>
-      val p = ChangesPlanner.plan(baseName, root, v)
+      val p = ChangesPlanner.plan(baseName, root, morKey, v)
       v -> (p, ChangesReaderFactory(readFunc, getters, v, keyOrd,
         p.tombsPrev, p.tombsCur, p.newKeys))
     }

@@ -30,8 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * rows in their commit messages); the footer read is the universal
   * fallback that also covers externally-written fixture groups.
   */
-class GraftVtMetaTable(baseName: String, root: String, kind: String,
-    pinnedVersion: Option[Int])
+class GraftVtMetaTable private[sources] (baseName: String, meta: VtTableMeta,
+    kind: String, pinnedVersion: Option[Int])
   extends Table with SupportsRead {
 
   override def name(): String = s"graft_vt.$baseName.$kind"
@@ -44,7 +44,7 @@ class GraftVtMetaTable(baseName: String, root: String, kind: String,
       override def build(): Scan = new LocalScan {
         override def readSchema(): StructType = schema()
         override def rows(): Array[InternalRow] =
-          GraftVtMetaTable.rowsOf(kind, baseName, root, pinnedVersion)
+          GraftVtMetaTable.rowsOf(kind, meta.root, meta.clusterCol, pinnedVersion)
       }
     }
 }
@@ -101,7 +101,7 @@ object GraftVtMetaTable {
 
   private def groupOf(entry: String): String = entry.split("/").take(2).mkString("/")
 
-  def rowsOf(kind: String, baseName: String, root: String,
+  def rowsOf(kind: String, root: String, clusterCol: Option[String],
       pinned: Option[Int]): Array[InternalRow] = kind match {
 
     case "history" =>
@@ -117,7 +117,7 @@ object GraftVtMetaTable {
 
     case "files" =>
       val v = pinned.getOrElse(VersionedTable.latestVersion(root))
-      val zstats = GraftVtCatalog.clusterCols.get(baseName)
+      val zstats = clusterCol
         .flatMap(zc => ZoneMap.read(root, v, zc)).getOrElse(Map.empty)
       VersionedTable.manifest(root, v).flatMap { entry =>
         ZoneMap.leafFiles(root, entry).map { f =>

@@ -182,4 +182,32 @@ class CheckConstraintSpec extends AnyFunSuite {
     intercept[Exception](
       spark.sql("UPDATE graft_vt.dml_checked SET n_chars = -1 WHERE doc_id = 0"))
   }
+
+  test("a named constraint can still be dropped after a table rename") {
+    GraftVtCatalog.ensure(spark)
+    Seq("chk_nm_a", "chk_nm_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_vt.$t"))
+    spark.sql("CREATE TABLE graft_vt.chk_nm_a (doc_id BIGINT, val BIGINT)")
+    spark.sql("ALTER TABLE graft_vt.chk_nm_a ADD CONSTRAINT pos CHECK (val >= 0)")
+    spark.sql("ALTER TABLE graft_vt.chk_nm_a RENAME TO graft_vt.chk_nm_b")
+    intercept[Exception](spark.sql("INSERT INTO graft_vt.chk_nm_b VALUES (1, -5)"))
+    spark.sql("ALTER TABLE graft_vt.chk_nm_b DROP CONSTRAINT pos")
+    spark.sql("INSERT INTO graft_vt.chk_nm_b VALUES (1, -5)")
+    assert(stateOf("chk_nm_b")._2 == 1)
+  }
+
+  test("a re-register drops the constraint name with the constraint") {
+    GraftVtCatalog.ensure(spark)
+    spark.sql("DROP TABLE IF EXISTS graft_vt.chk_rereg")
+    spark.sql("CREATE TABLE graft_vt.chk_rereg (doc_id BIGINT, val BIGINT)")
+    spark.sql("ALTER TABLE graft_vt.chk_rereg ADD CONSTRAINT pos CHECK (val >= 0)")
+    GraftVtCatalog.register(spark, "chk_rereg", GraftVtCatalog.rootOf("chk_rereg").get,
+      spark.table("graft_vt.chk_rereg").schema)
+    GraftVtCatalog.registerCheck("chk_rereg", "val < 100")
+    // the new check has no name: `pos` names nothing any more
+    val e = intercept[Exception](
+      spark.sql("ALTER TABLE graft_vt.chk_rereg DROP CONSTRAINT pos"))
+    assert(e.getMessage.contains("no such constraint"))
+    intercept[Exception](spark.sql("INSERT INTO graft_vt.chk_rereg VALUES (1, 500)"))
+    assert(stateOf("chk_rereg")._2 == 0)
+  }
 }

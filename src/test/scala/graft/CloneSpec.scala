@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.sources.{GraftVtCatalog, VersionedTable}
 
@@ -104,6 +105,66 @@ class CloneSpec extends AnyFunSuite {
       spark.sql("CALL graft_vt.clone('no_such_table', 'clone_spec_x')").collect())
     assert(missing.getMessage.contains("unknown") ||
       missing.getMessage.contains("no_such_table"))
+  }
+
+  test("clone carries the constraint name and the partition unit") {
+    GraftVtCatalog.ensure(spark)
+    val k = CloneSpec.seq.incrementAndGet()
+    val (src, dst) = (s"clone_ck_src_$k", s"clone_ck_dst_$k")
+    val root = VersionedTable.freshRoot(s"$sf#$src")
+    new java.io.File(root).mkdirs()
+    VersionedTable.writeManifest(root, 1, Seq.empty)
+    GraftVtCatalog.registerPartitioned(spark, src, root,
+      StructType(Seq(StructField("doc_id", LongType), StructField("val", LongType))),
+      "doc_id", 10L)
+    spark.sql(s"ALTER TABLE graft_vt.$src ADD CONSTRAINT pos CHECK (val >= 0)")
+    spark.sql(s"INSERT INTO graft_vt.$src VALUES (1, 1), (11, 2)")
+    spark.sql(s"CALL graft_vt.clone('$src', '$dst')").collect()
+    val dstRoot = GraftVtCatalog.rootOf(dst).get
+    spark.sql(s"INSERT INTO graft_vt.$dst VALUES (3, 3), (21, 4), (31, 5)")
+    val added = VersionedTable.manifest(dstRoot, 2)
+      .filterNot(VersionedTable.manifest(dstRoot, 1).toSet)
+      .flatMap(graft.sources.ZoneMap.leafFiles(dstRoot, _))
+    assert(added.nonEmpty && added.forall(_.contains("/u=")),
+      s"the clone stopped routing by unit: $added")
+    intercept[Exception](spark.sql(s"INSERT INTO graft_vt.$dst VALUES (4, -1)"))
+    spark.sql(s"ALTER TABLE graft_vt.$dst DROP CONSTRAINT pos")
+    spark.sql(s"INSERT INTO graft_vt.$dst VALUES (4, -1)")
+    assert(spark.table(s"graft_vt.$dst").count() == 6)
+    // the source keeps its own constraint
+    intercept[Exception](spark.sql(s"INSERT INTO graft_vt.$src VALUES (4, -1)"))
+  }
+
+  test("clone of a table with no data groups is an empty table") {
+    GraftVtCatalog.ensure(spark)
+    val k = CloneSpec.seq.incrementAndGet()
+    val (src, dst) = (s"clone_empty_src_$k", s"clone_empty_dst_$k")
+    spark.sql(s"CREATE TABLE graft_vt.$src (doc_id BIGINT, val BIGINT)")
+    spark.sql(s"CALL graft_vt.clone('$src', '$dst')").collect()
+    assert(spark.table(s"graft_vt.$dst").count() == 0)
+  }
+
+  test("clone copies the head's bloom sidecars") {
+    val (src, dst) = freshPair()
+    val root = GraftVtCatalog.rootOf(src).get
+    graft.sources.BloomMap.analyze(spark, root, 1, "doc_id"): Unit
+    GraftVtCatalog.registerBloomCols(src, Seq("doc_id"))
+    spark.sql(s"CALL graft_vt.clone('$src', '$dst')").collect()
+    val sidecars = new java.io.File(GraftVtCatalog.rootOf(dst).get).list().toSeq
+    assert(sidecars.exists(_.startsWith("_bloom_v1_")), s"no bloom sidecar in $sidecars")
+    assert(spark.sql(s"SHOW TBLPROPERTIES graft_vt.$dst").collect()
+      .exists(r => r.getString(0) == "bloom_columns" && r.getString(1) == "doc_id"))
+  }
+
+  test("a second clone under a renamed clone's old name leaves the renamed one intact") {
+    val (src, dst) = freshPair()
+    spark.sql(s"CALL graft_vt.clone('$src', '$dst')").collect()
+    spark.sql(s"INSERT INTO graft_vt.$dst VALUES (900001, 'only in the clone', 'clone')")
+    val want = spark.table(s"graft_vt.$dst").count()
+    spark.sql(s"ALTER TABLE graft_vt.$dst RENAME TO graft_vt.${dst}_kept")
+    spark.sql(s"CALL graft_vt.clone('$src', '$dst')").collect()
+    assert(spark.table(s"graft_vt.${dst}_kept").count() == want)
+    assert(spark.table(s"graft_vt.$dst").count() == want - 1)
   }
 }
 

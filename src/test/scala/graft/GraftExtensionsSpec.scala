@@ -70,4 +70,30 @@ class GraftExtensionsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("both routes register the one function table behind the arity guard") {
+    def wrongArity(spark: SparkSession, route: String): Unit =
+      GraftFunctions.sqlFunctions.foreach { f =>
+        val args = Seq.fill(f.n + 1)("1").mkString(", ")
+        val e = intercept[Exception](spark.sql(s"SELECT ${f.name}($args)").collect())
+        assert(e.getMessage.contains(
+          s"Invalid number of arguments for function ${f.name}: expected ${f.n}"),
+          s"$route route, ${f.name}: ${e.getMessage}")
+      }
+    GraftFunctions.register(TestSpark.spark)
+    wrongArity(TestSpark.spark, "register")
+    val prior = SparkSession.getActiveSession.orElse(Some(TestSpark.spark))
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val spark = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    try wrongArity(spark, "extension")
+    finally prior.foreach { s =>
+      SparkSession.setActiveSession(s)
+      SparkSession.setDefaultSession(s)
+    }
+  }
 }

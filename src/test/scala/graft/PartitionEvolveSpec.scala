@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SqlDml
-import graft.sources.{GraftVtCatalog, Tables, VersionedTable, ZoneMap}
+import graft.sources.{GraftVtCatalog, Scratch, Tables, VersionedTable, ZoneMap}
 
 /** Pins for PARTITION-SPEC EVOLUTION (`CALL graft_vt.evolve_partition`):
   * unit routing produces files at most one unit wide, the evolution is
@@ -93,6 +94,32 @@ class PartitionEvolveSpec extends AnyFunSuite {
     assert(stats.size === 6, s"expected one file per hour, got ${stats.keySet}")
   }
 
+
+  test("a table RENAME keeps the partition unit") {
+    GraftVtCatalog.ensure(spark)
+    Seq("pe_rn_a", "pe_rn_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS graft_vt.$t"))
+    val root = VersionedTable.freshRoot(s"$dir#pe_rn")
+    Scratch.delete(new java.io.File(root))
+    new java.io.File(root).mkdirs()
+    VersionedTable.writeManifest(root, 1, Seq.empty)
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("val", LongType)))
+    GraftVtCatalog.registerPartitioned(spark, "pe_rn_a", root, schema, "doc_id", 10L)
+    // 6 rows over the units [0, 10), [10, 20), [20, 30) and [30, 40)
+    val rows = "(1, 1), (2, 2), (11, 3), (12, 4), (21, 5), (31, 6)"
+    def insertedUnits(t: String): Seq[String] = {
+      spark.sql(s"INSERT INTO graft_vt.$t VALUES $rows")
+      val v = VersionedTable.latestVersion(root)
+      val before = VersionedTable.manifest(root, v - 1).toSet
+      VersionedTable.manifest(root, v).filterNot(before).flatMap(ZoneMap.leafFiles(root, _))
+    }
+    val routed = insertedUnits("pe_rn_a")
+    assert(routed.forall(_.contains("/u=")) &&
+      routed.map(_.split("/u=")(1).takeWhile(_ != '/')).distinct.size == 4, s"$routed")
+    spark.sql("ALTER TABLE graft_vt.pe_rn_a RENAME TO graft_vt.pe_rn_b")
+    val renamed = insertedUnits("pe_rn_b")
+    assert(renamed.forall(_.contains("/u=")) && renamed.size == routed.size,
+      s"the renamed table stopped routing by unit: $renamed")
+  }
   test("evolve on an unpartitioned table fails loudly") {
     val e = intercept[Exception] {
       spark.sql(s"CALL graft_vt.evolve_partition('no_such_pe_table', ${HourUs}L)").collect()
